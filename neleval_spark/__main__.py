@@ -601,8 +601,7 @@ def cmd_run_pipeline(args):
         return
     pages = spark.read.parquet(args.corpus)
     res = run_pipeline(pages, kb_table(spark), out_dir=args.out,
-                       n_buckets=args.buckets,
-                       resume=not args.no_resume, markup=args.markup)
+                       n_buckets=args.buckets, markup=args.markup)
     n = res["triples"].count()
     print(json.dumps({"triples": n, "out": args.out}))
 
@@ -788,9 +787,9 @@ def cmd_filtered_track_eval(args):
 
 
 def cmd_compact_sink(args):
-    """Compact an accumulated streaming triple sink (many run_id
-    partitions of small files) into the batch layout — the
-    operational analogue of Iceberg's rewrite_data_files; ends the
+    """Compact the committed runs of a triple sink (e.g. many
+    streaming batches of small files) into one ``compact-<ts>`` run —
+    the operational analogue of Iceberg's rewrite_data_files; ends the
     sink's streaming lifecycle."""
     from pyspark.sql import functions as F
 
@@ -1507,7 +1506,7 @@ def cmd_frontier(args):
     robots.txt compliance filter → politeness schedule → fetch-plan
     parquet (url, host, slot, fetch_ts).  The plan is deterministic
     (salted-hash slot order), so a re-run schedules identically —
-    the dispatch analogue of the pipeline's checkpoint-resume."""
+    the dispatch analogue of the pipeline's replayable sink runs."""
     from pyspark.sql import functions as F
 
     from .functions.discovery import extract_sitemap_urls
@@ -1740,7 +1739,6 @@ def main(argv=None):
         sp.add_argument("corpus"),
         sp.add_argument("-o", "--out", required=True),
         sp.add_argument("--buckets", type=int, default=64),
-        sp.add_argument("--no-resume", action="store_true"),
         sp.add_argument("--markup", action="store_true",
                         help="also flatten publisher JSON-LD into "
                              "the triple sink (the second entrance "
@@ -1758,7 +1756,7 @@ def main(argv=None):
         sp.add_argument("--top", type=int, default=20)))
     add("compact-sink", cmd_compact_sink, lambda sp: (
         sp.add_argument("triples",
-                        help="streaming triple sink dir to compact"),
+                        help="triple sink dir to compact into one run"),
         sp.add_argument("--buckets", type=int, default=64)))
     add("curate", cmd_curate, lambda sp: (
         sp.add_argument("docs",

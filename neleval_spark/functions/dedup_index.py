@@ -24,8 +24,8 @@ Scale shape:
   hot-bucket guard (functions/textops.py:132), and is applied as a
   TWO-PHASE partial top-k (the ``cap_per_domain`` shape) so no
   single task ever sorts a whole boilerplate bucket.
-* Index updates reuse the run_id dynamic-partition-overwrite
-  idempotence of the triple sink (pipeline/triples.py write_triples):
+* Index updates are run_id-partitioned and replaced on replay, like
+  the triple sink's runs (pipeline/triples.py write_triples):
   replaying a crashed or duplicated increment converges to exactly
   one copy of its signatures.
 
@@ -165,8 +165,8 @@ def update_index(docs: DataFrame, index_dir: str,
 
     Idempotent per ``run_id``: signatures land under a run_id
     partition via dynamic partition overwrite, so replaying the same
-    increment replaces rather than appends (the write_triples
-    pattern).  Returns the verdict DataFrame of
+    increment replaces rather than appends (like a write_triples
+    run).  Returns the verdict DataFrame of
     :func:`check_increment`, materialized before the write so the
     verdicts the caller acts on are the verdicts the index update
     used."""

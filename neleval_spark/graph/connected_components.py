@@ -137,13 +137,15 @@ def connected_components(
             return edges.sparkSession.createDataFrame(
                 rows, "vertex string, component string")
     # distributed path: LAZY checkpoints throughout (the r6
-    # one-job-per-round discipline, see pagerank.py) — the first
-    # round's signature collect materializes the deduped edge list,
-    # each later round's signature materializes that round's edges,
-    # and the vertex table is computed from the e0 checkpoint blocks
-    # by the caller's final action.  Halves the job count per round;
-    # blocks, lineage truncation and the convergence contract are
-    # identical.
+    # one-job-per-round discipline, see pagerank.py).  Only the
+    # topmost marked RDD of an action is checkpoint-finalized, so e0's
+    # and vertices' checkpoints never truncate lineage; what they buy
+    # is localCheckpoint's implicit MEMORY_AND_DISK persist — the
+    # first round's signature collect caches the deduped edge list,
+    # and the caller's final action computes the vertex table from
+    # those cached blocks instead of re-deduping the input.  Each later round's
+    # signature finalizes that round's edges.  Halves the job count
+    # per round; the convergence contract is unchanged.
     e0 = e0.localCheckpoint(eager=False)
     vertices = (
         e0.select(F.col("a").alias("vertex"))

@@ -214,17 +214,16 @@ def gazetteer_from_kb(kb: DataFrame) -> Gazetteer:
     (``detect_mentions`` with an empty gazetteer) — the alias dict is
     a recall booster, not a correctness requirement."""
     aliases = kb.select("alias").distinct()
-    # ONE bounded job: a root-level limit collects incrementally, so
+    # ONE bounded query: a root-level limit collects incrementally, so
     # the size guard and the data arrive in the same driver round trip
-    # (the former count()-then-collect() shape paid two jobs per
+    # (the former count()-then-collect() shape paid two queries per
     # pipeline run); limit+1 rows prove the overflow without ever
-    # collecting more than the cap.
+    # collecting more than the cap, and the message needs no count.
     rows = aliases.limit(MAX_GAZETTEER_ALIASES + 1).collect()
     if len(rows) > MAX_GAZETTEER_ALIASES:
-        n = aliases.count()
         raise ValueError(
-            f"KB has {n:,} distinct aliases > MAX_GAZETTEER_ALIASES="
-            f"{MAX_GAZETTEER_ALIASES:,}; a driver-side gazetteer this "
+            f"KB has more than {MAX_GAZETTEER_ALIASES:,} distinct aliases "
+            "(MAX_GAZETTEER_ALIASES); a driver-side gazetteer this "
             "large would exhaust driver memory. Run the tagger with a "
             "truncated/curated alias list, or with an empty gazetteer "
             "(casing evidence only) and let the candidate-generation "

@@ -192,7 +192,6 @@ def run_pipeline(
     kb: DataFrame,
     out_dir: str | None = None,
     n_buckets: int = 64,
-    resume: bool = True,
     markup: bool = False,
 ) -> dict:
     """Run construction end-to-end; optionally materialize triples.
@@ -235,7 +234,7 @@ def run_pipeline(
     if out_dir is not None:
         from .triples import read_triples, write_triples
 
-        manifest = write_triples(triples, out_dir, resume=resume)
+        manifest = write_triples(triples, out_dir)
         triples = read_triples(pages.sparkSession, out_dir)
     return {"mentions": mentions, "triples": triples, "manifest": manifest}
 

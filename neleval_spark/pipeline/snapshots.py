@@ -133,8 +133,8 @@ def commit_snapshot(out_dir: str, run_id: str | None = None,
     """Record the current write as a new snapshot and flip the
     pointer.  ``operation='append'``: ``added`` (default: every live
     data file not referenced by the parent chain) joins the table;
-    ``removed`` marks files the write physically replaced (the
-    dynamic-partition-overwrite replay), mirroring Iceberg's
+    ``removed`` marks files the write physically replaced (a
+    replayed run), mirroring Iceberg's
     overwrite commits.  ``operation='replace'``: the live listing
     REPLACES the parent file set (the compaction/rewrite commit).
     Returns the snapshot dict.  Optimistic concurrency: the snapshot
@@ -303,8 +303,8 @@ def merge_commit(spark: SparkSession, out_dir: str, delta: DataFrame,
     3. write the merged table under ``run_id=gen-{generation:06d}``
        partitions, bucketed by ``pmod(xxhash64(subj), n_buckets)``
        (the subj key, not url — KG rows are witness-aggregated).
-       Dynamic partition overwrite makes a REPLAY of the same failed
-       generation converge to one copy;
+       :func:`~.triples.write_triples` replaces the run, so a REPLAY
+       of the same failed generation converges to one copy;
     4. commit a ``replace`` snapshot whose file set is exactly this
        generation's files.
 
@@ -356,7 +356,7 @@ def merge_commit(spark: SparkSession, out_dir: str, delta: DataFrame,
         merged = merge_kg(base, delta, mode=mode)
     merged = merged.withColumn(
         "part_id", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)))
-    write_triples(merged, out_dir, run_id=run_id, overwrite_run=True)
+    write_triples(merged, out_dir, run_id=run_id)
 
     prefix = f"run_id={run_id}/"
     gen_files = [f for f in _list_data_files(out_dir)

@@ -1,5 +1,5 @@
 """(subj, pred, obj) triple materialization with per-partition lineage
-manifests and checkpoint-resume.
+manifests.
 
 Triples emitted from linked+canonicalized mentions:
 
@@ -7,17 +7,19 @@ Triples emitted from linked+canonicalized mentions:
 * ``(eid_a, cooccurs_with, eid_b)`` — per distinct within-sentence
   entity pair, ordered a < b.
 
-Physical layout: parquet partitioned by ``part_id =
-pmod(xxhash64(url), n_buckets)`` (the Iceberg mapping would be
-``bucket(n, url)`` as the partition transform; this environment has no
-Iceberg runtime, so the layout + manifest are expressed directly).
-Each completed partition gets a manifest row
+Physical layout: parquet under ``triples/run_id=<id>/part_id=<n>/``
+with ``part_id = pmod(xxhash64(url), n_buckets)`` (the Iceberg mapping
+would be ``bucket(n, url)`` as the partition transform; this
+environment has no Iceberg runtime, so the layout + manifest are
+expressed directly).  Every write is one run, and its manifest
+partition ``manifest/run_id=<id>/`` with one row per bucket
 
-    (part_id, n_rows, checksum, run_id)
+    (part_id, n_rows, checksum)
 
-and a resumed run anti-joins the manifest to skip completed partitions
-— the bucket function is a pure function of the row, so work lost in a
-crash is re-derived exactly.
+is written last as the run's commit record.  Readers see only
+committed runs, so a crashed write is invisible and re-running it
+replaces the run — the bucket function is a pure function of the row,
+so the re-run re-derives exactly the same partitions.
 """
 
 from __future__ import annotations
@@ -111,42 +113,48 @@ def emit_triples(mentions: DataFrame, n_buckets: int = 64) -> DataFrame:
         "part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
 
 
-def _manifest(triples: DataFrame, run_id: str) -> DataFrame:
-    return (
-        triples.groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.expr("bit_xor(xxhash64(subj, pred, obj))").alias("checksum"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-    )
+_MANIFEST_SCHEMA = "part_id long, n_rows long, checksum long, run_id string"
 
 
-def _empty_manifest(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "part_id long, n_rows long, checksum long, run_id string")
+def _manifest(triples: DataFrame) -> DataFrame:
+    return triples.groupBy(F.col("part_id").cast("long").alias("part_id")) \
+        .agg(F.count(F.lit(1)).alias("n_rows"),
+             F.expr("bit_xor(xxhash64(subj, pred, obj))").alias("checksum"))
+
+
+def _read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The committed runs' manifest rows; ``run_id`` comes from the
+    partition path, typed by the explicit schema."""
+    manifest_dir = os.path.join(out_dir, "manifest")
+    if not _exists(spark, manifest_dir):
+        return spark.createDataFrame([], _MANIFEST_SCHEMA)
+    return spark.read.schema(_MANIFEST_SCHEMA).parquet(manifest_dir)
 
 
 def write_triples(
     triples: DataFrame,
     out_dir: str,
-    resume: bool = True,
-    run_id: str | None = None,
-    overwrite_run: bool = False,
+    run_id: str = "run",
+    overwrite_run: bool = True,
 ) -> DataFrame:
-    """Write triples partitioned by part_id; skip partitions already
-    recorded in the manifest (checkpoint-resume). Returns the manifest
-    DataFrame for the completed state (empty if nothing has ever been
-    written).
+    """Write ``triples`` as run ``run_id`` of the sink and commit it.
+    Returns the manifest of every committed run.
 
-    ``overwrite_run=True`` is the idempotent-writer mode used by the
-    streaming ingest: data lands under run_id/part_id partitions via
-    dynamic partition overwrite, so re-running the SAME run_id
-    replaces that run's partitions instead of appending — a crashed or
-    replayed write converges to exactly one copy regardless of where
-    the previous attempt stopped.  Idempotence IS the resume story in
-    this mode, so the part_id-keyed resume anti-join (whose done-set
-    would wrongly cover every later run's part_ids) is disabled.
+    Three steps, in this order:
+
+    1. un-commit: delete ``manifest/run_id=<id>/``, so readers skip
+       the run from here on;
+    2. replace ``triples/run_id=<id>/`` with ``part_id=*`` partitions
+       (the input plan is evaluated once, by this write);
+    3. commit: write ``manifest/run_id=<id>/`` as one file, aggregated
+       from the files step 2 wrote.
+
+    A crash at any point leaves the run uncommitted and invisible to
+    :func:`read_triples`, and re-running the same call converges to
+    exactly one copy — re-running a crashed run is the whole resume
+    story.  Writing the same ``run_id`` again replaces that run.
+    ``overwrite_run`` is accepted for callers that spell out this
+    behaviour; ``False`` is refused.
 
     The frame is repartitioned ON part_id before the partitionBy
     write: without it every upstream task opens one file per bucket
@@ -157,66 +165,62 @@ def write_triples(
     run == occupied buckets, and file SIZE is steered by the
     ``n_buckets`` chosen at part_id derivation (raise it at scale so
     one bucket ~ one ideal parquet file)."""
+    if not overwrite_run:
+        raise ValueError(
+            "write_triples always replaces its run; overwrite_run=False "
+            "is not supported")
     spark = triples.sparkSession
-    run_id = run_id or f"run-{int(time.time() * 1000)}"
-    data_dir = os.path.join(out_dir, "triples")
-    manifest_dir = os.path.join(out_dir, "manifest")
+    run_data = os.path.join(out_dir, "triples", f"run_id={run_id}")
+    run_manifest = os.path.join(out_dir, "manifest", f"run_id={run_id}")
 
-    done = None
-    if resume and not overwrite_run and _exists(spark, manifest_dir):
-        done = spark.read.parquet(manifest_dir).select("part_id").distinct()
+    fs, path = _fs_path(spark, run_manifest)
+    fs.delete(path, True)
 
-    todo = triples
-    if done is not None:
-        todo = triples.join(F.broadcast(done), "part_id", "left_anti")
+    data = triples.drop("run_id")
+    # static overwrite replaces the whole run directory, whatever the
+    # session's partitionOverwriteMode, so no bucket of an earlier
+    # attempt survives
+    (data.repartition("part_id").write.mode("overwrite")
+     .option("partitionOverwriteMode", "static")
+     .partitionBy("part_id").parquet(run_data))
 
-    if not todo.isEmpty():
-        # one writer task per bucket -> one file per (run, part_id)
-        todo = todo.repartition("part_id")
-        if overwrite_run:
-            todo = todo.withColumn("run_id", F.lit(run_id))
-            (todo.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("run_id", "part_id").parquet(data_dir))
-            todo = todo.drop("run_id")
-            # manifest is replay-idempotent the same way: the run's
-            # partition is replaced, never appended twice
-            (_manifest(todo, run_id).write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("run_id").parquet(manifest_dir))
-        else:
-            todo.write.mode("append").partitionBy("part_id") \
-                .parquet(data_dir)
-            _manifest(todo, run_id).write.mode("append") \
-                .parquet(manifest_dir)
-
-    if not _exists(spark, manifest_dir):
-        return _empty_manifest(spark)
-    return spark.read.parquet(manifest_dir)
+    written = spark.read.schema(data.schema).parquet(run_data)
+    # one file, so the commit is a single rename
+    _manifest(written).coalesce(1).write.mode("overwrite") \
+        .parquet(run_manifest)
+    return _read_manifest(spark, out_dir)
 
 
 def read_triples(spark: SparkSession, out_dir: str,
                  up_to_run: str | None = None) -> DataFrame:
-    """Read the triple sink; ``up_to_run`` is snapshot-style time
-    travel over the streaming layout (run_id partitions are
-    zero-padded batch ordinals, so the lexicographic filter prunes
+    """Read the committed runs of the triple sink: rows of a run
+    without a manifest partition (crashed or being rewritten) are
+    left out by a broadcast semi-join on the manifest's run ids.
+
+    ``up_to_run`` is snapshot-style time travel (streaming run_ids
+    are zero-padded batch ordinals, so the lexicographic filter prunes
     whole partitions at the scan — the parquet analogue of reading an
     earlier Iceberg snapshot)."""
     df = spark.read.parquet(os.path.join(out_dir, "triples"))
     if up_to_run is not None:
-        if "run_id" not in df.columns:
-            raise ValueError(
-                "up_to_run requires the run_id-partitioned layout "
-                "(streaming/overwrite_run sink)")
         df = df.where(F.col("run_id") <= up_to_run)
-    return df
+    runs = _read_manifest(spark, out_dir).select(
+        F.col("run_id").alias("_run"))
+    return df.join(F.broadcast(runs),
+                   F.col("run_id").cast("string") == F.col("_run"),
+                   "left_semi")
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
+def _fs_path(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    return p.getFileSystem(conf), p
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_path(spark, path)
+    return fs.exists(p)
 
 
 def compact_recover(out_dir: str) -> None:
@@ -257,26 +261,22 @@ def compact_recover(out_dir: str) -> None:
 
 def compact_triples(spark: SparkSession, out_dir: str,
                     n_buckets: int = 64) -> DataFrame:
-    """Compact an accumulated streaming sink (many run_id partitions
-    of small files) into the batch layout (part_id only) — the
-    operational analogue of Iceberg's rewrite_data_files.
+    """Compact the committed runs of a sink (e.g. many streaming
+    batches of small files) into ONE run, ``run_id=compact-<ts>`` —
+    the operational analogue of Iceberg's rewrite_data_files.
 
-    Converting to the batch layout ENDS the streaming lifecycle of
-    this directory (the run_id partitions that snapshot reads and the
-    checkpoint-ownership guard key on are merged away).  The
-    compacted directory is a finished artifact: its manifest records
-    every part_id, so a later batch ``write_triples`` with the
-    default ``resume=True`` would skip everything — append to a
-    compacted sink with ``resume=False``, or start a fresh directory.
+    The earlier runs are merged away, so ``up_to_run`` time travel
+    over them ends here, and a stream's checkpoint-ownership guard
+    refuses further ``batch-*`` runs (``compact-`` sorts after them).
 
     Crash safety (LOCAL filesystems only — raises on remote URIs; on
     object stores use the engine-level rewrite of your table format):
-    the compacted data+manifest are staged, a ``_COMMIT`` marker is
-    written last, and the swap parks the old dirs in ``_pre_compact``
-    before renaming the staged ones in.  :func:`compact_recover`
-    (called automatically on entry) finishes a committed swap or
-    rolls back an uncommitted one, so no crash point loses the sink.
-    Returns the new manifest."""
+    the compacted run is written by :func:`write_triples` into a
+    staging sink, a ``_COMMIT`` marker is written last, and the swap
+    parks the old dirs in ``_pre_compact`` before renaming the staged
+    ones in.  :func:`compact_recover` (called automatically on entry)
+    finishes a committed swap or rolls back an uncommitted one, so no
+    crash point loses the sink.  Returns the new manifest."""
     import shutil
 
     if "://" in out_dir and not out_dir.startswith("file:"):
@@ -284,32 +284,15 @@ def compact_triples(spark: SparkSession, out_dir: str,
             "compact_triples swaps directories with local renames; "
             f"non-local sink: {out_dir}")
 
-    data_dir = os.path.join(out_dir, "triples")
-    manifest_dir = os.path.join(out_dir, "manifest")
     staging = os.path.join(out_dir, "_compacting")
-    run_id = f"compact-{int(time.time() * 1000)}"
-
     compact_recover(out_dir)
 
-    triples = spark.read.parquet(data_dir)
-    if "run_id" in triples.columns:
-        triples = triples.drop("run_id")
     # re-derive part_id (a pure row function) so a changed bucket
     # count re-buckets correctly
-    triples = triples.drop("part_id").withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
-
-    # the whole point of compaction is FEWER files: cluster each
-    # bucket into one writer task (see write_triples)
-    triples.repartition("part_id").write.mode("overwrite") \
-        .partitionBy("part_id") \
-        .parquet(os.path.join(staging, "triples"))
-    # partition-column inference types directory-derived part_id as
-    # int32 — cast back so manifest files keep one schema (long)
-    staged = spark.read.parquet(os.path.join(staging, "triples")) \
-        .withColumn("part_id", F.col("part_id").cast("long"))
-    _manifest(staged, run_id).write.mode("overwrite") \
-        .parquet(os.path.join(staging, "manifest"))
+    triples = read_triples(spark, out_dir).drop("run_id", "part_id") \
+        .withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
+    write_triples(triples, staging,
+                  run_id=f"compact-{int(time.time() * 1000)}")
     open(os.path.join(staging, "_COMMIT"), "w").close()
 
     pre = os.path.join(out_dir, "_pre_compact")
@@ -322,7 +305,7 @@ def compact_triples(spark: SparkSession, out_dir: str,
         os.rename(os.path.join(staging, name), final)
     shutil.rmtree(pre, ignore_errors=True)
     shutil.rmtree(staging, ignore_errors=True)
-    return spark.read.parquet(manifest_dir)
+    return _read_manifest(spark, out_dir)
 
 
 # ---------------------------------------------------------------------------

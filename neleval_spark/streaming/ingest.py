@@ -16,11 +16,11 @@ Design:
   (scored-mention materialization feeds the NIL branch, the linked
   branch and the key graph), which a single streaming plan cannot
   express — ``foreachBatch`` is the idiomatic escape hatch.
-  Exactly-once: each micro-batch writes under run_id = f(batch_id)
-  partitions via dynamic partition OVERWRITE (data and manifest both),
-  so a replayed batch — restart anywhere between the first sink byte
-  and the checkpoint commit — replaces its own partitions and
-  converges to exactly one copy; compute is at-least-once, the sink
+  Exactly-once: each micro-batch writes the sink run run_id =
+  f(batch_id), which ``write_triples`` replaces (data, then the
+  manifest commit), so a replayed batch — restart anywhere between
+  the first sink byte and the checkpoint commit — replaces its own
+  run and converges to exactly one copy; compute is at-least-once, the sink
   is exactly-once.  The checkpoint directory is the stream's
   identity: pair each sink directory with exactly one checkpoint
   (deleting the checkpoint but keeping the sink re-numbers batches,
@@ -81,7 +81,7 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
 
         spark = batch_df.sparkSession
         run_id = f"batch-{batch_id:09d}"
-        # fail fast on the one misuse dynamic overwrite cannot heal:
+        # fail fast on the one misuse a run overwrite cannot heal:
         # a FRESH checkpoint pointed at a sink that already holds
         # later batches (batch numbering restarted, so batch 0 would
         # overwrite only its own partition and leave stale later runs
@@ -114,12 +114,10 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
                                   F.pmod(F.xxhash64("url"),
                                          F.lit(64))))
                 triples = triples.unionByName(mk)
-            # overwrite_run: a replayed batch REPLACES its own run_id
-            # partitions (data + manifest) — idempotent without reading
-            # the sink, correct even if the previous attempt died
-            # mid-write
-            write_triples(triples, out_dir, resume=False, run_id=run_id,
-                          overwrite_run=True)
+            # a replayed batch REPLACES its own run (data + manifest) —
+            # idempotent without reading the sink, correct even if the
+            # previous attempt died mid-write
+            write_triples(triples, out_dir, run_id=run_id)
         finally:
             # release exactly the frames build_mentions materialized
             # for this batch (scratch parquet or persist) — NOT

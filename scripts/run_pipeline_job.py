@@ -3,9 +3,10 @@
 Ships with scripts/submit_pipeline.sh (the library reaches executors
 via --py-files). The input is any table with the BASELINE.json shape
 (url:string, warc_ts:timestamp, html:binary, text:string, lang:string);
-the output directory receives partitioned triples plus per-partition
-lineage manifests, and a re-run with the same out_dir resumes from the
-manifest (skips completed partitions).
+the output directory receives one run of partitioned triples plus its
+per-partition lineage manifest, written last as the run's commit
+record.  A re-run with the same out_dir replaces that run, so
+re-running a crashed job is the recovery.
 """
 import sys
 

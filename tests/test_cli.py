@@ -385,7 +385,7 @@ def test_cli_entity_salience(spark, capsys, tmp_path):
 
 def test_cli_compact_sink(spark, capsys, tmp_path):
     """Full operational lifecycle from the CLI: stream-ingest into a
-    run_id-partitioned sink, compact to the batch layout, then rank
+    run_id-partitioned sink, compact it into one run, then rank
     salience over the compacted sink."""
     from neleval_spark.pipeline import synth_corpus
 
@@ -397,7 +397,9 @@ def test_cli_compact_sink(spark, capsys, tmp_path):
     compacted = json.loads(_run(capsys, "compact-sink", out))
     assert compacted["triples"] == streamed["triples"]
     triples = spark.read.parquet(os.path.join(out, "triples"))
-    assert "run_id" not in triples.columns  # batch layout now
+    runs = [r["run_id"] for r in
+            triples.select("run_id").distinct().collect()]
+    assert len(runs) == 1 and runs[0].startswith("compact-")
     ranked = _run(capsys, "entity-salience", out, "--top", "3")
     assert ranked.startswith("entity\tsalience")
 

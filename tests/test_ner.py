@@ -116,6 +116,18 @@ def test_tagger_exactly_matches_corpus_gold_driverside(n_docs):
         assert got == exp, (i, got, exp)
 
 
+def _jobs_in_group(spark, group, fn):
+    """Number of Spark jobs ``fn`` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_gazetteer_collect_is_bounded(spark, monkeypatch):
     """gazetteer_from_kb must refuse a KB whose alias set would OOM
     the driver, with a pointer at the casing-only fallback."""
@@ -124,8 +136,18 @@ def test_gazetteer_collect_is_bounded(spark, monkeypatch):
     kb = spark.createDataFrame(
         [(f"a{i}",) for i in range(10)], "alias string")
     monkeypatch.setattr(ner_mod, "MAX_GAZETTEER_ALIASES", 5)
-    with pytest.raises(ValueError, match="casing evidence"):
-        ner_mod.gazetteer_from_kb(kb)
+
+    def overflow():
+        with pytest.raises(ValueError, match="casing evidence"):
+            ner_mod.gazetteer_from_kb(kb)
+
+    # the overflow path runs its one bounded collect and nothing more:
+    # the same jobs as that query alone (under AQE a shuffle query is a
+    # map-stage job plus a result job), no re-count for the message
+    collect_jobs = _jobs_in_group(
+        spark, "gaz-collect",
+        lambda: kb.select("alias").distinct().limit(6).collect())
+    assert _jobs_in_group(spark, "gaz-overflow", overflow) == collect_jobs
     monkeypatch.setattr(ner_mod, "MAX_GAZETTEER_ALIASES", 100)
     gaz = ner_mod.gazetteer_from_kb(kb)
     assert gaz is not None

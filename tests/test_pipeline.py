@@ -1,7 +1,7 @@
 """Construction pipeline (BASELINE.json north_rule): extraction
 byte-identity, end-to-end triple P/R ≥ 0.95 vs the constructed gold,
-neleval-measure agreement, NIL canonicalization stability, and
-checkpoint-resume."""
+neleval-measure agreement, NIL canonicalization stability, and the
+crash-safe triple sink."""
 
 import os
 
@@ -125,31 +125,152 @@ def test_nil_ids_match_gold_labels(spark, built, gold):
         | (F.col("eid") != F.col("gold_eid"))).count() == 0
 
 
-def test_write_resume(spark, built, tmp_path):
-    """Checkpoint-resume: a partial write (half the partitions'
-    manifests) resumed to completion equals a single-shot write."""
-    from neleval_spark.pipeline.triples import (
-        emit_triples, read_triples, write_triples)
+def _fold(df):
+    """(rows, bit_xor(xxhash64(subj, pred, obj))) of a triple frame."""
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.expr(
+        "bit_xor(xxhash64(subj, pred, obj))").alias("x")).first()
+    return r["n"], r["x"]
 
-    triples = emit_triples(built, n_buckets=8).cache()
 
-    full_dir = str(tmp_path / "full")
-    write_triples(triples, full_dir, resume=False)
-    full = read_triples(spark, full_dir)
+def _sink_state(spark, out):
+    """The committed sink's fold, and its manifest's sum(n_rows)."""
+    from neleval_spark.pipeline.triples import read_triples
 
-    part_dir = str(tmp_path / "partial")
-    first_half = triples.where(F.col("part_id") < 4)
-    write_triples(first_half, part_dir, resume=False)
-    # resume with the complete dataset: parts 0-3 must be skipped
-    manifest = write_triples(triples, part_dir, resume=True)
-    resumed = read_triples(spark, part_dir)
+    manifest = spark.read.parquet(os.path.join(out, "manifest"))
+    return (_fold(read_triples(spark, out)),
+            manifest.agg(F.sum("n_rows")).first()[0])
 
-    assert resumed.count() == full.count()
-    assert resumed.exceptAll(full).count() == 0
-    # manifest covers every bucket exactly once
+
+@pytest.fixture(scope="module")
+def sink_triples(built):
+    from neleval_spark.pipeline.triples import emit_triples
+
+    return emit_triples(built, n_buckets=8).cache()
+
+
+@pytest.fixture(scope="module")
+def clean_fold(spark, sink_triples, tmp_path_factory):
+    """Fold of one clean write of ``sink_triples``."""
+    from neleval_spark.pipeline.triples import write_triples
+
+    out = str(tmp_path_factory.mktemp("clean"))
+    write_triples(sink_triples, out)
+    fold, manifest_rows = _sink_state(spark, out)
+    assert fold[0] == manifest_rows == sink_triples.count()
+    return fold
+
+
+def test_sink_crash_after_data_commit(spark, sink_triples, clean_fold,
+                                     tmp_path, monkeypatch):
+    """Fault (a): the manifest write raises after the data write
+    committed; re-running the same call must not duplicate rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from neleval_spark.pipeline.triples import write_triples
+
+    out = str(tmp_path / "sink")
+    real = DataFrameWriter.parquet
+
+    def crash_on_manifest(self, path, *args, **kwargs):
+        if f"{os.sep}manifest" in path:
+            raise RuntimeError("injected crash before the manifest")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+    with pytest.raises(RuntimeError, match="injected"):
+        write_triples(sink_triples, out)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+
+    write_triples(sink_triples, out)
+    fold, manifest_rows = _sink_state(spark, out)
+    assert fold == clean_fold
+    assert manifest_rows == fold[0]
+
+
+def test_sink_replay_crash_mid_write(spark, sink_triples, clean_fold,
+                                    tmp_path):
+    """Fault (b): a replay of a committed run dies mid data write (one
+    bucket's task raises).  Until it is re-run the sink shows none of
+    that run's rows — never a partial run — and the re-run restores
+    the clean fold."""
+    from neleval_spark.pipeline.triples import read_triples, write_triples
+
+    out = str(tmp_path / "sink")
+    prev = sink_triples.where(F.col("part_id") < 4)
+    write_triples(prev, out, run_id="gen-000001")
+    write_triples(sink_triples, out, run_id="gen-000002")
+
+    @F.udf("string")
+    def crash_on_bucket(subj, part_id):
+        if part_id == 5:
+            raise RuntimeError("injected crash in bucket 5")
+        return subj
+
+    poisoned = sink_triples.withColumn(
+        "subj", crash_on_bucket("subj", "part_id"))
+    with pytest.raises(Exception, match="injected crash"):
+        write_triples(poisoned, out, run_id="gen-000002")
+
+    visible = read_triples(spark, out)
+    assert visible.where(F.col("run_id") == "gen-000002").count() == 0
+    assert _fold(visible) == _fold(prev)
+
+    write_triples(sink_triples, out, run_id="gen-000002")
+    fold, manifest_rows = _sink_state(spark, out)
+    prev_n, prev_x = _fold(prev)
+    assert fold == (prev_n + clean_fold[0], prev_x ^ clean_fold[1])
+    assert manifest_rows == fold[0]
+
+
+def test_sink_same_run_twice(spark, sink_triples, clean_fold, tmp_path):
+    """Fault (c): writing the same run twice keeps exactly one copy,
+    with one manifest row per occupied bucket."""
+    from neleval_spark.pipeline.triples import write_triples
+
+    out = str(tmp_path / "sink")
+    write_triples(sink_triples, out)
+    manifest = write_triples(sink_triples, out)
+    fold, manifest_rows = _sink_state(spark, out)
+    assert fold == clean_fold
+    assert manifest_rows == fold[0]
     counts = manifest.groupBy("part_id").count().collect()
     assert all(r["count"] == 1 for r in counts)
-    assert len(counts) == triples.select("part_id").distinct().count()
+    assert len(counts) == sink_triples.select("part_id").distinct().count()
+
+
+def test_write_evaluates_input_once(spark, tmp_path):
+    """The writer evaluates its lazy input plan exactly once: an
+    accumulator ticked by a Python UDF on the input counts each row
+    one time."""
+    from neleval_spark.pipeline.triples import write_triples
+
+    ticks = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tick(s):
+        ticks.add(1)
+        return s
+
+    n = 500
+    triples = spark.range(n).select(
+        tick(F.concat(F.lit("e"), F.col("id").cast("string")))
+        .alias("subj"),
+        F.lit("mentioned_in").alias("pred"),
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("obj"),
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 8).alias("part_id"))
+    manifest = write_triples(triples, str(tmp_path / "sink"))
+    assert manifest.agg(F.sum("n_rows")).first()[0] == n
+    assert ticks.value == n
+
+
+def test_write_refuses_overwrite_run_false(spark, sink_triples, tmp_path):
+    from neleval_spark.pipeline.triples import write_triples
+
+    with pytest.raises(ValueError, match="overwrite_run"):
+        write_triples(sink_triples, str(tmp_path / "sink"),
+                      overwrite_run=False)
+    assert not os.path.exists(tmp_path / "sink")
 
 
 def test_write_one_file_per_bucket(spark, built, tmp_path):
@@ -165,16 +286,12 @@ def test_write_one_file_per_bucket(spark, built, tmp_path):
 
     triples = emit_triples(built, n_buckets=8).repartition(16)
 
-    out = str(tmp_path / "batch")
-    write_triples(triples, out, resume=False)
-    for d in glob.glob(f"{out}/triples/part_id=*"):
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, (d, files)
-
-    out2 = str(tmp_path / "run")
-    write_triples(triples, out2, resume=False, run_id="gen-000001",
+    out = str(tmp_path / "run")
+    write_triples(triples, out, run_id="gen-000001",
                   overwrite_run=True)
-    for d in glob.glob(f"{out2}/triples/run_id=*/part_id=*"):
+    dirs = glob.glob(f"{out}/triples/run_id=*/part_id=*")
+    assert dirs
+    for d in dirs:
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(files) == 1, (d, files)
 

@@ -31,11 +31,9 @@ def _mk_triples(spark, lo, hi, part_mod=4):
 @pytest.fixture()
 def sink(spark, tmp_path):
     out = str(tmp_path / "sink")
-    write_triples(_mk_triples(spark, 0, 40), out, resume=False,
-                  run_id="r1")
+    write_triples(_mk_triples(spark, 0, 40), out, run_id="r1")
     s1 = commit_snapshot(out, run_id="r1", timestamp=100.0)
-    write_triples(_mk_triples(spark, 40, 100), out, resume=False,
-                  run_id="r2")
+    write_triples(_mk_triples(spark, 40, 100), out, run_id="r2")
     s2 = commit_snapshot(out, run_id="r2", timestamp=200.0)
     return out, s1, s2
 
@@ -72,7 +70,7 @@ def test_uncommitted_write_is_invisible(spark, sink):
     """Iceberg orphan semantics: a write whose commit never ran (a
     crashed writer) is invisible to every snapshot reader."""
     out, _s1, _s2 = sink
-    write_triples(_mk_triples(spark, 100, 130), out, resume=False,
+    write_triples(_mk_triples(spark, 100, 130), out,
                   run_id="crashed")  # no commit_snapshot
     assert read_snapshot(spark, out).count() == 100
     # the next proper commit adopts the stray files (they are live
@@ -137,7 +135,7 @@ def test_orphan_removal_after_replace(spark, sink):
     from neleval_spark.pipeline.snapshots import _list_data_files
     before = set(_list_data_files(out))
     write_triples(read_snapshot(spark, out).repartition(1), out,
-                  resume=False, run_id="compact")
+                  run_id="compact")
     new = sorted(set(_list_data_files(out)) - before)
     assert new
     s3 = commit_snapshot(out, operation="replace", added=new,

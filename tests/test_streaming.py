@@ -126,16 +126,16 @@ def test_stream_replay_idempotent(spark, dirs):
      .parquet(os.path.join(dirs["out2"], "triples")))
 
     # replay of the same batch id runs the full writer
-    write_triples(triples, dirs["out2"], resume=False,
-                  run_id="batch-000000007", overwrite_run=True)
+    write_triples(triples, dirs["out2"], run_id="batch-000000007",
+                  overwrite_run=True)
     n1 = spark.read.parquet(
         os.path.join(dirs["out2"], "triples")).count()
     m1 = spark.read.parquet(
         os.path.join(dirs["out2"], "manifest")).count()
 
     # a second full replay changes nothing
-    write_triples(triples, dirs["out2"], resume=False,
-                  run_id="batch-000000007", overwrite_run=True)
+    write_triples(triples, dirs["out2"], run_id="batch-000000007",
+                  overwrite_run=True)
     assert spark.read.parquet(
         os.path.join(dirs["out2"], "triples")).count() == n1
     assert spark.read.parquet(
@@ -162,7 +162,7 @@ def test_stream_doc_rates(spark, dirs):
 
 
 def test_compact_streaming_sink(spark, dirs):
-    """Compaction merges run_id partitions into the batch layout with
+    """Compaction merges the sink's runs into one compact-* run with
     identical triples and a single-run manifest."""
     import glob
 
@@ -178,7 +178,10 @@ def test_compact_streaming_sink(spark, dirs):
         os.path.join(dirs["out"], "triples", "*", "*", "*.parquet")))
     manifest = compact_triples(spark, dirs["out"])
     after_df = read_triples(spark, dirs["out"])
-    assert "run_id" not in after_df.columns  # batch layout now
+    after_runs = {r["run_id"] for r in
+                  after_df.select("run_id").distinct().collect()}
+    assert len(after_runs) == 1
+    assert next(iter(after_runs)).startswith("compact-")
     after = {
         (r["subj"], r["pred"], r["obj"])
         for r in after_df.select("subj", "pred", "obj").collect()
@@ -187,7 +190,7 @@ def test_compact_streaming_sink(spark, dirs):
     runs = {r["run_id"] for r in manifest.select("run_id").collect()}
     assert len(runs) == 1 and next(iter(runs)).startswith("compact-")
     n_files_after = len(glob.glob(
-        os.path.join(dirs["out"], "triples", "*", "*.parquet")))
+        os.path.join(dirs["out"], "triples", "*", "*", "*.parquet")))
     assert 0 < n_files_after <= n_files_before
 
 
@@ -204,8 +207,7 @@ def test_compact_recover_states(spark, tmp_path):
     out = str(tmp_path / "sink")
     t = emit_triples(build_mentions(synth_corpus(spark, 100),
                                     kb_table(spark)))
-    write_triples(t, out, resume=False, run_id="batch-000000000",
-                  overwrite_run=True)
+    write_triples(t, out, run_id="batch-000000000", overwrite_run=True)
     n = read_triples(spark, out).count()
 
     # crash AFTER staging committed, BEFORE any rename: recovery must
