@@ -7844,8 +7844,9 @@ def q_permutation_pvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents.parquet, 200 trials, hash_mode='poly' (the
     engine-agnostic polynomial doc hash).  The oracle replays the
     ENTIRE trial loop in DuckDB: identical doc hashes, identical
-    ((h*(t+seed+1)) %% (2^31-1)) %% 2 flip bits, the same
-    zero-denominator P/R/F rule, the same (better+1)/(n+1) p-value.
+    x = (h*(t+seed+1)) %% (2^31-1), (x*x %% (2^31-1)) %% 2 flip bits,
+    the same zero-denominator P/R/F rule, the same (better+1)/(n+1)
+    p-value.
     All trial sums are integer-valued doubles, so the cross-engine
     comparison is exact (CLAUDE.md integer-weights convention)."""
     from neleval_spark.stats.significance import permutation_test
@@ -7894,7 +7895,9 @@ h AS (
 tr AS (SELECT UNNEST(range(200)) AS t),
 flips AS (
   SELECT h.*, tr.t,
-         ((h.h * (tr.t + 7 + 1)) % 2147483647) % 2 AS flip
+         (((h.h * (tr.t + 7 + 1)) % 2147483647)
+          * ((h.h * (tr.t + 7 + 1)) % 2147483647)) % 2147483647 % 2
+           AS flip
   FROM h CROSS JOIN tr),
 psum AS (
   SELECT t,

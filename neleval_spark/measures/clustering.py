@@ -39,6 +39,8 @@ same plans.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,46 +55,22 @@ def _grouped(df: DataFrame, gcols: list[str], exprs: list) -> DataFrame:
     return df.agg(*exprs)
 
 
-def _outer_zip(p_side: DataFrame, r_side: DataFrame,
-               gcols: list[str]) -> DataFrame:
-    """Combine per-group precision and recall halves, zero-filling."""
-    if not gcols:
-        return p_side.crossJoin(r_side)
-    return (
-        p_side.join(r_side, gcols, "full_outer")
-        .select(
-            *gcols,
-            *[
-                F.coalesce(F.col(c), F.lit(0.0)).alias(c)
-                for c in ("p_num", "p_den", "r_num", "r_den")
-            ],
-        )
-    )
-
-
-def _fill_zero(df: DataFrame) -> DataFrame:
-    return df.na.fill(
-        {c: 0.0 for c in ("p_num", "p_den", "r_num", "r_den")})
-
-
-def intersections(gold: DataFrame, pred: DataFrame, key: list[str],
-                  gcols: list[str]) -> DataFrame:
-    """I(gcols, eid_g, eid_s) = intersection sizes of cluster pairs
-    (standalone helper over pre-deduped membership frames; the
-    clustering fns below use the shared ``_dedup_pairs`` frames
-    instead)."""
-    g = gold.withColumnRenamed("eid", "eid_g")
-    s = pred.withColumnRenamed("eid", "eid_s")
-    return (
-        ns_join(g, s, gcols + key, "inner")
-        .groupBy(*(gcols + ["eid_g", "eid_s"]))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-
-
-def cluster_sizes(side: DataFrame, gcols: list[str]) -> DataFrame:
-    return side.groupBy(*(gcols + ["eid"])).agg(
-        F.count(F.lit(1)).alias("n"))
+def _combine(parts: list[DataFrame], gcols: list[str]) -> DataFrame:
+    """Per-group partial tables → one row per group.  Each part holds
+    ``gcols`` and some value columns; the parts are aligned (0.0 where
+    a part lacks a column, or where a global aggregate of no rows
+    gives NULL), unioned and summed per group.  Adding 0.0 is exact,
+    and the group-by treats a NULL group value as an ordinary group,
+    where an outer join on ``gcols`` would split it."""
+    cols = list(dict.fromkeys(
+        c for p in parts for c in p.columns if c not in gcols))
+    aligned = [
+        p.select(*gcols, *[
+            F.coalesce(F.col(c).cast("double"), F.lit(0.0)).alias(c)
+            if c in p.columns else F.lit(0.0).alias(c) for c in cols])
+        for p in parts]
+    return _grouped(reduce(DataFrame.union, aligned), gcols,
+                    [F.sum(c).alias(c) for c in cols])
 
 
 def _dedup_pairs(side: DataFrame, key: list[str],
@@ -150,28 +128,14 @@ def muc(gold: DataFrame, pred: DataFrame, key: list[str],
     sdp = _dedup_pairs(pred, key, gcols)
     I = _intersections_dp(gdp, sdp, gcols)
     num = _grouped(
-        I, gcols,
-        [(F.sum("i") - F.count(F.lit(1))).cast("double").alias("num")])
+        I, gcols, [(F.sum("i") - F.count(F.lit(1))).alias("num")])
     p_den = _grouped(_sizes_dp(sdp, gcols), gcols,
-                     [F.sum(F.col("n") - 1).cast("double").alias("p_den")])
+                     [F.sum(F.col("n") - 1).alias("p_den")])
     r_den = _grouped(_sizes_dp(gdp, gcols), gcols,
-                     [F.sum(F.col("n") - 1).cast("double").alias("r_den")])
-    if gcols:
-        out = (
-            p_den.join(r_den, gcols, "full_outer")
-            .join(num, gcols, "left")
-        )
-    else:
-        out = p_den.crossJoin(r_den).crossJoin(num)
-    return _fill_zero(
-        out.select(
-            *gcols,
-            F.coalesce("num", F.lit(0.0)).alias("p_num"),
-            F.col("p_den"),
-            F.coalesce("num", F.lit(0.0)).alias("r_num"),
-            F.col("r_den"),
-        )
-    )
+                     [F.sum(F.col("n") - 1).alias("r_den")])
+    return _combine([p_den, r_den, num], gcols).select(
+        *gcols, F.col("num").alias("p_num"), "p_den",
+        F.col("num").alias("r_num"), "r_den")
 
 
 def b_cubed(gold: DataFrame, pred: DataFrame, key: list[str],
@@ -192,21 +156,10 @@ def b_cubed(gold: DataFrame, pred: DataFrame, key: list[str],
             F.sum(F.col("i") * F.col("i") / F.col("ng")).alias("r_num"),
         ],
     )
-    p_den = _grouped(ns, gcols, [F.sum("ns").cast("double").alias("p_den")])
-    r_den = _grouped(ng, gcols, [F.sum("ng").cast("double").alias("r_den")])
-    if gcols:
-        out = p_den.join(r_den, gcols, "full_outer").join(nums, gcols, "left")
-    else:
-        out = p_den.crossJoin(r_den).crossJoin(nums)
-    return _fill_zero(
-        out.select(
-            *gcols,
-            F.coalesce("p_num", F.lit(0.0)).alias("p_num"),
-            "p_den",
-            F.coalesce("r_num", F.lit(0.0)).alias("r_num"),
-            "r_den",
-        )
-    )
+    p_den = _grouped(ns, gcols, [F.sum("ns").alias("p_den")])
+    r_den = _grouped(ng, gcols, [F.sum("ng").alias("r_den")])
+    return _combine([p_den, r_den, nums], gcols).select(
+        *gcols, "p_num", "p_den", "r_num", "r_den")
 
 
 def pairwise(gold: DataFrame, pred: DataFrame, key: list[str],
@@ -221,19 +174,9 @@ def pairwise(gold: DataFrame, pred: DataFrame, key: list[str],
                      gcols, [F.sum("t").alias("p_den")])
     r_den = _grouped(_sizes_dp(gdp, gcols).withColumn("t", tri("n")),
                      gcols, [F.sum("t").alias("r_den")])
-    if gcols:
-        out = p_den.join(r_den, gcols, "full_outer").join(num, gcols, "left")
-    else:
-        out = p_den.crossJoin(r_den).crossJoin(num)
-    return _fill_zero(
-        out.select(
-            *gcols,
-            F.coalesce("num", F.lit(0.0)).alias("p_num"),
-            "p_den",
-            F.coalesce("num", F.lit(0.0)).alias("r_num"),
-            "r_den",
-        )
-    )
+    return _combine([p_den, r_den, num], gcols).select(
+        *gcols, F.col("num").alias("p_num"), "p_den",
+        F.col("num").alias("r_num"), "r_den")
 
 
 def pairwise_negative(gold: DataFrame, pred: DataFrame, key: list[str],
@@ -261,15 +204,12 @@ def pairwise_negative(gold: DataFrame, pred: DataFrame, key: list[str],
 
     cg = I.groupBy(*(gcols + ["eid_g"])).agg(F.sum("i").alias("c"))
     cs = I.groupBy(*(gcols + ["eid_s"])).agg(F.sum("i").alias("c"))
-    pieces = [
-        (I, F.sum(tri(F.col("i"))), "A"),
-        (cg, F.sum(tri(F.col("c"))), "PG"),
-        (cs, F.sum(tri(F.col("c"))), "PS"),
-        (I, F.sum("i").cast("double"), "M"),
+    parts = [
+        _grouped(I, gcols, [F.sum(tri(F.col("i"))).alias("A"),
+                            F.sum("i").alias("M")]),
+        _grouped(cg, gcols, [F.sum(tri(F.col("c"))).alias("PG")]),
+        _grouped(cs, gcols, [F.sum(tri(F.col("c"))).alias("PS")]),
     ]
-    parts = {}
-    for df, agg, label in pieces:
-        parts[label] = _grouped(df, gcols, [agg.alias(label)])
 
     def side_den(dp, name):
         sizes = _sizes_dp(dp, gcols)
@@ -277,27 +217,11 @@ def pairwise_negative(gold: DataFrame, pred: DataFrame, key: list[str],
             sizes, gcols,
             [(tri(F.sum("n")) - F.sum(tri(F.col("n")))).alias(name)])
 
-    p_den = side_den(sdp, "p_den")
-    r_den = side_den(gdp, "r_den")
-
-    if gcols:
-        out = p_den.join(r_den, gcols, "full_outer")
-        for label in ("A", "PG", "PS", "M"):
-            out = out.join(parts[label], gcols, "left")
-    else:
-        out = p_den.crossJoin(r_den)
-        for label in ("A", "PG", "PS", "M"):
-            out = out.crossJoin(parts[label])
-
-    z = lambda c: F.coalesce(F.col(c), F.lit(0.0))  # noqa: E731
-    num = tri(z("M")) - z("PG") - z("PS") + z("A")
-    return _fill_zero(
-        out.select(
-            *gcols,
-            num.alias("p_num"), F.col("p_den").cast("double").alias("p_den"),
-            num.alias("r_num"), F.col("r_den").cast("double").alias("r_den"),
-        )
-    )
+    out = _combine([side_den(sdp, "p_den"), side_den(gdp, "r_den"),
+                    *parts], gcols)
+    num = tri(F.col("M")) - F.col("PG") - F.col("PS") + F.col("A")
+    return out.select(*gcols, num.alias("p_num"), "p_den",
+                      num.alias("r_num"), "r_den")
 
 
 # Below this many similarity edges the whole assignment problem is
@@ -360,7 +284,9 @@ def _solve_components_pandas(pdf: "pd.DataFrame",
         total = _solve_edge_list(
             grp["eid_g"].tolist(), grp["eid_s"].tolist(),
             grp["sim"].tolist())
-        out.append({**dict(zip(gcols, gvals)), "num": total})
+        # a NULL group value comes back from dropna=False as NaN
+        out.append({**{c: None if pd.isna(v) else v
+                       for c, v in zip(gcols, gvals)}, "num": total})
     return pd.DataFrame(out, columns=[*gcols, "num"])
 
 
@@ -377,8 +303,9 @@ def _assignment_totals(sim: DataFrame, gcols: list[str]) -> DataFrame:
     iterative distributed CC and solve on the driver.
     """
     spark = sim.sparkSession
+    types = dict(sim.dtypes)
     schema = ", ".join(
-        [f"`{c}` string" for c in gcols] + ["num double"])
+        [f"`{c}` {types[c]}" for c in gcols] + ["num double"])
     # ONE action decides the path AND delivers the edges: a limited
     # toPandas collects up to the driver-solve cap + 1 rows.  If the
     # cap is not hit, those rows ARE the whole problem — no persist,
@@ -482,8 +409,10 @@ def _assignment_totals_distributed(sim: DataFrame,
         return pd.DataFrame(out,
                             columns=[*gcols, "comp", "total"])
 
+    types = dict(sim.dtypes)
     schema_cols = ", ".join(
-        [f"`{c}` string" for c in gcols] + ["comp string", "total double"])
+        [f"`{c}` {types[c]}" for c in gcols]
+        + ["comp string", "total double"])
     solved = rest.groupBy("comp").applyInPandas(solve, schema=schema_cols)
 
     per_comp = triv.select(*gcols, "comp", "total").union(
@@ -504,39 +433,24 @@ def ceaf(gold: DataFrame, pred: DataFrame, key: list[str],
 
     if similarity == "overlap":
         sim = I.withColumn("sim", F.col("i").cast("double"))
-        p_den = _grouped(ns, gcols,
-                         [F.sum("ns").cast("double").alias("p_den")])
-        r_den = _grouped(ng, gcols,
-                         [F.sum("ng").cast("double").alias("r_den")])
+        p_den = _grouped(ns, gcols, [F.sum("ns").alias("p_den")])
+        r_den = _grouped(ng, gcols, [F.sum("ng").alias("r_den")])
     elif similarity == "dice":
         sim = ns_join(ns_join(I, ns, gcols + ["eid_s"]), ng,
                       gcols + ["eid_g"]).withColumn(
             "sim", 2 * F.col("i") / (F.col("ng") + F.col("ns")))
         # dice(C, C) = 1 → denominators are cluster counts
         # (reference vectorized path: coref_metrics.py:465-466)
-        p_den = _grouped(ns, gcols,
-                         [F.count(F.lit(1)).cast("double").alias("p_den")])
-        r_den = _grouped(ng, gcols,
-                         [F.count(F.lit(1)).cast("double").alias("r_den")])
+        p_den = _grouped(ns, gcols, [F.count(F.lit(1)).alias("p_den")])
+        r_den = _grouped(ng, gcols, [F.count(F.lit(1)).alias("r_den")])
     else:
         raise ValueError(f"unknown similarity {similarity!r}")
 
     num = _assignment_totals(
         sim.select(*gcols, "eid_g", "eid_s", "sim"), gcols)
-
-    if gcols:
-        out = p_den.join(r_den, gcols, "full_outer").join(num, gcols, "left")
-    else:
-        out = p_den.crossJoin(r_den).crossJoin(num)
-    return _fill_zero(
-        out.select(
-            *gcols,
-            F.coalesce("num", F.lit(0.0)).alias("p_num"),
-            "p_den",
-            F.coalesce("num", F.lit(0.0)).alias("r_num"),
-            "r_den",
-        )
-    )
+    return _combine([p_den, r_den, num], gcols).select(
+        *gcols, F.col("num").alias("p_num"), "p_den",
+        F.col("num").alias("r_num"), "r_den")
 
 
 def mention_ceaf(gold, pred, key, gcols):

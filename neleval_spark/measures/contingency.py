@@ -8,8 +8,15 @@ clustering; ``Matrix`` (neleval/evaluate.py:233-292) is the additive
 (neleval/evaluate.py:70-140) adds group-by with per-field macro/micro
 averages (:122-138).
 
-The heavy lifting happens in generated DataFrame plans; only the tiny
-per-(measure, group) result table is collected.
+Like ``Evaluate``, which scores every measure over one load of the
+annotations, ``evaluate`` caches the columns its measures read once
+and runs ONE plan and one collect per aggregation family (sets, each
+clustering aggregate, each overlap mode): the family's measures are
+stacked row-wise under a measure id ``_m`` and the family's function
+groups by it (:func:`family_contingency`).  tac14 is three plans, not
+ten.  A single measure (:func:`contingency_df`, the per-doc tables of
+the stats) is a family of one.  Only the tiny per-(measure, group)
+result tables are collected.
 """
 
 from __future__ import annotations
@@ -20,18 +27,21 @@ from collections import OrderedDict, defaultdict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .catalog import MeasureSpec, get_measure, parse_measures
 from .clustering import CLUSTERING_FNS
 from .overlap import overlap_contingency
-from .sets import project_measure, sets_contingency, expand_key
+from .sets import (expand_key, measure_col, project_measure,
+                   sets_contingency)
 
 
 class StrictMetricWarning(Warning):
     pass
 
 
-METRICS = ["ptp", "fp", "rtp", "fn", "precision", "recall", "fscore"]
+COUNTS = ["ptp", "fp", "rtp", "fn"]
+METRICS = [*COUNTS, "precision", "recall", "fscore"]
 
 
 @dataclass
@@ -99,60 +109,147 @@ def prf(p_num, p_den, r_num, r_den):
     return p, r, f
 
 
+def family_contingency(
+    sys_df: DataFrame,
+    gold_df: DataFrame,
+    specs: dict,
+    gcols: list[str] | None = None,
+) -> DataFrame:
+    """→ (gcols..., _m, ptp, fp, rtp, fn) for every measure of one
+    aggregation family ({name: spec}, all sharing ``spec.agg``) in ONE
+    plan.
+
+    Each side stacks the measures' projections: every measure's rows
+    carry its position in ``specs`` as the integer literal ``_m`` (a
+    name string would ride in every shuffled row, twice in the
+    clustering key), the union of the family's key fields (a field the
+    measure lacks is a typed NULL) and its filter as the boolean
+    ``_f``.  The family's function then runs once, filtered on ``_f``
+    and grouped by ``gcols + ["_m"]``; the tiny result maps ``_m``
+    back to the measure name.  That is exact: the sets group-by treats
+    NULL as an ordinary group, the clustering ``_dedup_pairs`` struct
+    key compares NULL fields as equal, and a padding column is
+    constant within its measure.  The overlap denominators count
+    unfiltered rows, which ``_f`` (rather than dropping rows before
+    the stack) keeps visible to them.
+
+    A family of one groups by ``gcols`` alone (its ``_m`` is a
+    constant), so its plan is the measure's own: one row without
+    ``gcols``, and a per-doc table partitioned by ``docid`` alone,
+    ready for the stats join."""
+    gcols = list(gcols or [])
+    first = next(iter(specs.values()))
+    agg = first.agg
+    if first.is_clustering and agg not in CLUSTERING_FNS:
+        raise ValueError(f"Invalid aggregation: {agg!r}")
+    tokens = tuple(dict.fromkeys(f for s in specs.values() for f in s.key))
+    spec = MeasureSpec(tokens, "_f", agg, first.weighting)
+    extra = _extra_fields(spec)
+    cols = list(dict.fromkeys(gcols + expand_key(tokens) + extra))
+    sys_st = _stack(sys_df, specs, cols, gcols + extra)
+    gold_st = _stack(gold_df, specs, cols, gcols + extra)
+
+    names = F.array(*[F.lit(n) for n in specs])
+    if len(specs) > 1:
+        out = _family_plan(sys_st, gold_st, spec, gcols + ["_m"])
+        name = F.element_at(names, F.col("_m") + 1)
+    else:
+        out = _family_plan(sys_st, gold_st, spec, gcols)
+        name = names[0]
+    return out.select(*gcols, name.alias("_m"), *COUNTS)
+
+
+def _extra_fields(spec: MeasureSpec) -> list[str]:
+    """Fields a family's function reads besides key and filter: the
+    cluster id, or the span that overlap measures always join on."""
+    if spec.is_clustering:
+        return ["eid"]
+    return [] if spec.agg == "sets" else ["docid", "start", "end"]
+
+
+def _family_plan(sys_st: DataFrame, gold_st: DataFrame, spec: MeasureSpec,
+                 gcols: list[str]) -> DataFrame:
+    """The family's function over the stacked sides →
+    (gcols..., ptp, fp, rtp, fn)."""
+    if spec.agg == "sets":
+        return sets_contingency(sys_st, gold_st, spec, gcols)
+    if not spec.is_clustering:
+        return overlap_contingency(sys_st, gold_st, spec, gcols)
+    key = [k for k in expand_key(spec.key) if k not in gcols]
+    # clusters = distinct (eid, key) pairs after filter
+    # (neleval/annotation.py:317-331).  Deduplication happens INSIDE
+    # the clustering fns (_dedup_pairs: one repartition on the packed
+    # key struct, then in-partition dedup and an exchange-free
+    # intersection join) — no dropDuplicates here, or the fns would
+    # pay an extra full exchange per side.  _dedup_pairs is kept under
+    # stacking: ``_m`` and the NULL padding simply join the packed
+    # struct key.  A shared union+flags dedup of gold and pred (the
+    # sets_contingency shape) was A/B'd in r6 and LOST: the clustering
+    # fns read gold/pred from 3-4 consumer subtrees, so the single
+    # bigger union aggregate re-executes per consumer past the reused
+    # exchange (bench: b_cubed 5.4→6.9 s, reverted).  The measure
+    # stack sits BELOW the reused repartition, so it runs once.
+    gold = project_measure(gold_st, spec, gcols, extra=["eid"])
+    pred = project_measure(sys_st, spec, gcols, extra=["eid"])
+    out = CLUSTERING_FNS[spec.agg](gold, pred, key, gcols)
+    return out.select(
+        *gcols,
+        F.col("p_num").alias("ptp"),
+        (F.col("p_den") - F.col("p_num")).alias("fp"),
+        F.col("r_num").alias("rtp"),
+        (F.col("r_den") - F.col("r_num")).alias("fn"),
+    )
+
+
+def _stack(df: DataFrame, specs: dict, cols: list[str],
+           shared: list[str]) -> DataFrame:
+    """One row per (input row, measure): ``(_m, cols..., _f)`` with
+    ``_m`` the measure's position in ``specs``.  ``shared`` columns are
+    real for every measure; the others only where the measure's key
+    has them, typed NULL elsewhere.
+
+    ONE select per side: ``inline`` over an array of per-measure
+    structs, not a union of per-measure projections — every union
+    branch would repeat the input plan, and each later DataFrame step
+    re-analyzes all the copies (a TSV-parse plan costs about a second
+    per family to build that way)."""
+    types = dict(df.dtypes)
+
+    def fields(i, spec):
+        own = set(shared) | set(expand_key(spec.key))
+        flag = (measure_col(df, spec.filter).cast("boolean")
+                if spec.filter is not None else F.lit(True))
+        return [F.lit(i).alias("_m"),
+                *[measure_col(df, c).alias(c) if c in own
+                  else F.lit(None).cast(types.get(c, "string")).alias(c)
+                  for c in cols],
+                flag.alias("_f")]
+
+    rows = [fields(i, s) for i, s in enumerate(specs.values())]
+    if len(rows) == 1:
+        return df.select(*rows[0])
+    return df.select(F.inline(F.array(*[F.struct(*r) for r in rows])))
+
+
 def contingency_df(
     sys_df: DataFrame,
     gold_df: DataFrame,
     spec: MeasureSpec,
     gcols: list[str] | None = None,
 ) -> DataFrame:
-    """→ (gcols..., ptp, fp, rtp, fn) — the measure's generated plan."""
-    gcols = list(gcols or [])
-    if spec.is_clustering:
-        try:
-            fn = CLUSTERING_FNS[spec.agg]
-        except KeyError:
-            raise ValueError(f"Invalid aggregation: {spec.agg!r}")
-        from pyspark.sql import functions as F
-
-        key = [k for k in expand_key(spec.key) if k not in gcols]
-        # clusters = distinct (eid, key) pairs after filter
-        # (neleval/annotation.py:317-331).  Deduplication happens
-        # INSIDE the clustering fns (_dedup_pairs: one repartition on
-        # the packed key struct, then in-partition dedup and an
-        # exchange-free intersection join) — no dropDuplicates here,
-        # or the fns would pay an extra full exchange per side.  A
-        # shared union+flags dedup (the sets_contingency shape) was
-        # also A/B'd in r6 and LOST: the clustering fns read gold/pred
-        # from 3-4 consumer subtrees, so the single bigger union
-        # aggregate re-executes per consumer past the reused exchange
-        # (bench: b_cubed 5.4→6.9 s, reverted).
-        gold = project_measure(gold_df, spec, gcols, extra=["eid"])
-        pred = project_measure(sys_df, spec, gcols, extra=["eid"])
-        out = fn(gold, pred, key, gcols)
-
-        return out.select(
-            *gcols,
-            F.col("p_num").alias("ptp"),
-            (F.col("p_den") - F.col("p_num")).alias("fp"),
-            F.col("r_num").alias("rtp"),
-            (F.col("r_den") - F.col("r_num")).alias("fn"),
-        )
-    elif spec.agg == "sets":
-        return sets_contingency(sys_df, gold_df, spec, gcols)
-    elif spec.agg.startswith("overlap-"):
-        return overlap_contingency(sys_df, gold_df, spec, gcols)
-    raise ValueError(f"Unexpected value for agg: {spec.agg!r}")
+    """→ (gcols..., ptp, fp, rtp, fn) — the measure's generated plan:
+    :func:`family_contingency` over a family of one."""
+    return family_contingency(
+        sys_df, gold_df, {str(spec): spec}, gcols).drop("_m")
 
 
 def _group_values(df: DataFrame, fields: list[str]) -> list[list]:
     """Sorted distinct values per group field from GOLD annotations
     (reference uses the gold side only, neleval/evaluate.py:100-103)."""
-    from ..operators.normalize import field_col
-
     out = []
     for f in fields:
         vals = [r[0] for r in
-                df.select(field_col(f).alias(f)).distinct().collect()]
+                df.select(measure_col(df, f).alias(f)).distinct().collect()]
         out.append(sorted(vals, key=lambda v: (v is None, v)))
     return out
 
@@ -187,47 +284,71 @@ def evaluate(
     names = parse_measures(measures)
     results: "OrderedDict[str, dict]" = OrderedDict()
     gcols = list(group_by or [])
+    specs = {str_name(n): get_measure(n, weighting=weighting)
+             for n in names}
 
     # Materialize both mention tables once for the whole run (the
     # reference loads annotations into lists the same way).  Without
-    # this, every measure re-derives the frames AND — the expensive
+    # this, every family re-derives the frames AND — the expensive
     # part — measure FILTERS (is_linked/is_nil) get substituted
     # through the projections by predicate pushdown, inlining the
     # full TSV parse tree dozens of times into one predicate
     # (measured 11× the cost of evaluating the column once).  A
     # cached table makes the derived columns physical, so filters
-    # evaluate on columnar data.
+    # evaluate on columnar data.  Only the columns the measures read
+    # are cached: the reader's ``is_first`` window (its own exchange)
+    # and the candidate arrays are pruned unless a measure asks.
     to_unpersist = []
+    sides = []
     for df in (sys_df, gold_df):
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            continue
-        df.persist()
-        to_unpersist.append(df)
+        if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
+            df = df.select(*_needed_columns(df, specs.values(), gcols))
+            df.persist()
+            to_unpersist.append(df)
+        sides.append(df)
 
     try:
-        return _evaluate_measures(sys_df, gold_df, names, gcols,
-                                  overall, weighting, results)
+        return _evaluate_measures(*sides, specs, gcols, overall, results)
     finally:
         for df in to_unpersist:
             df.unpersist()
 
 
-def _evaluate_measures(sys_df, gold_df, names, gcols, overall,
-                       weighting, results):
+def _needed_columns(df: DataFrame, specs, gcols: list[str]) -> list[str]:
+    """The columns of ``df`` that ``specs`` grouped by ``gcols`` read:
+    key, filter and group fields, ``eid`` for clustering and the span
+    for overlap measures; ``attrs`` stands in for any field that is
+    not a column."""
+    fields = list(gcols)
+    for spec in specs:
+        fields += expand_key(spec.key) + _extra_fields(spec)
+        fields += [spec.filter] if spec.filter is not None else []
+    return list(dict.fromkeys(
+        f if f in df.columns else "attrs" for f in fields))
+
+
+def _evaluate_measures(sys_df, gold_df, specs, gcols, overall, results):
     if gcols:
         group_vals = _group_values(gold_df, gcols)
         product = list(itertools.product(*group_vals))
 
-    for name in names:
-        spec = get_measure(name, weighting=weighting)
-        cdf = contingency_df(sys_df, gold_df, spec, gcols)
-        rows = cdf.collect()
+    # one plan and one collect per aggregation family
+    families: dict = defaultdict(dict)
+    for name, spec in specs.items():
+        families[spec.agg][name] = spec
+    rows_by_measure: dict = defaultdict(list)
+    for family in families.values():
+        for r in family_contingency(sys_df, gold_df, family,
+                                    gcols).collect():
+            rows_by_measure[r["_m"]].append(r)
 
+    for name in specs:
+        rows = rows_by_measure[name]
         if not gcols:
             row = rows[0] if rows else None
             mat = (Matrix(row["ptp"], row["fp"], row["rtp"], row["fn"])
                    if row is not None else Matrix())
-            results[str_name(name)] = mat.results
+            results[name] = mat.results
             continue
 
         by_group = {
@@ -235,7 +356,7 @@ def _evaluate_measures(sys_df, gold_df, names, gcols, overall,
                 Matrix(r["ptp"], r["fp"], r["rtp"], r["fn"])
             for r in rows
         }
-        name_fmt = str_name(name) + "".join(
+        name_fmt = name + "".join(
             ";{}={{group[{}]}}".format(f, i) for i, f in enumerate(gcols))
 
         measure_mats = []

@@ -48,6 +48,14 @@ def expand_key(key: tuple[str, ...]) -> list[str]:
     return out
 
 
+def measure_col(df: DataFrame, name: str):
+    """A measure field of ``df``: its column when ``df`` has one (the
+    stacked frames of ``contingency.family_contingency`` carry every
+    field, ``_m`` and the ``_f`` filter flag physically), else
+    :func:`field_col`'s attrs lookup."""
+    return F.col(name) if name in df.columns else field_col(name)
+
+
 def project_measure(df: DataFrame, spec: MeasureSpec,
                     gcols: list[str] | None = None,
                     extra: list[str] | None = None) -> DataFrame:
@@ -57,15 +65,9 @@ def project_measure(df: DataFrame, spec: MeasureSpec,
     gcols = gcols or []
     out = df
     if spec.filter is not None:
-        out = out.filter(field_col(spec.filter).cast("boolean"))
-    cols = []
-    seen = set()
-    for f in gcols + expand_key(spec.key) + (extra or []):
-        if f in seen:
-            continue
-        seen.add(f)
-        cols.append(field_col(f).alias(f))
-    return out.select(*cols)
+        out = out.filter(measure_col(df, spec.filter).cast("boolean"))
+    cols = dict.fromkeys(gcols + expand_key(spec.key) + (extra or []))
+    return out.select(*[measure_col(df, f).alias(f) for f in cols])
 
 
 def sets_contingency(
@@ -148,9 +150,12 @@ def _weighted_sets_contingency(
         )
         return df.withColumn(
             "__w",
+            # int(gold == sys) with Python's None == None: a field
+            # both sides lack (NULL, or a stacked measure's padding)
+            # weighs 1
             F.coalesce(
                 F.col("__w"),
-                (F.col(gold_col) == F.col(sys_col)).cast("double"),
+                F.col(gold_col).eqNullSafe(F.col(sys_col)).cast("double"),
             ),
         ).drop("__wg", "__ws")
 

@@ -18,11 +18,15 @@ reason the measures distribute, SURVEY.md §1.1 'Matrix'), and the
 trial loop is ONE ``mapInPandas`` pass over doc partitions: each
 partition computes, vectorized in numpy, its partial contribution to
 every trial's pseudo-sums simultaneously (O(docs × trials) flops, no
-driver materialization of the doc table). Randomness is a
-deterministic mix of (doc hash, trial id) — reproducible regardless of
-partitioning or executor count. The per-trial resampling is the
-Poisson bootstrap (the standard bootstrap-at-scale construction) for
-CIs, and multiply-shift hash bits for permutation flips.
+driver materialization of the doc table), plus its plain column sums
+— the observed matrix, a weight-1 trial.  So ``bootstrap_confidence``,
+``permutation_test`` and ``calibrate_trials`` each run one action and
+evaluate their per-doc input (a whole contingency plan) once.
+Randomness is a deterministic mix of (doc hash, trial id) —
+reproducible regardless of partitioning or executor count. The
+per-trial resampling is the Poisson bootstrap (the standard
+bootstrap-at-scale construction) for CIs, and multiply-shift hash bits
+for permutation flips.
 """
 
 from __future__ import annotations
@@ -52,9 +56,12 @@ MIX_PRIME = 2147483647  # 2^31-1, the shared polynomial-hash modulus
 
 def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
                     mode: str, hash_mode: str = "xxhash64",
-                    ) -> np.ndarray:
+                    ) -> tuple[np.ndarray, np.ndarray]:
     """One distributed pass: per partition, vectorized partial sums for
-    all trials. Returns [n_trials, 8] (sys1 ptp,fp,rtp,fn, sys2 ...).
+    all trials plus the plain column sums (the observed matrix, a
+    weight-1 "trial").  Returns ``(trials, observed)``: [n_trials, 8]
+    and [8] (sys1 ptp,fp,rtp,fn, sys2 ...) — one job, so callers never
+    evaluate the per-doc input a second time for the observed score.
 
     Per-doc randomness seeds from a JVM-side doc hash — no per-row
     (let alone per-byte) Python anywhere in the stats path;
@@ -63,11 +70,16 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
     ``hash_mode="xxhash64"`` (default): 64-bit multiply-shift mixing —
     the production path.  ``hash_mode="poly"``: the engine-agnostic
     polynomial doc hash (textops.token_hash, mod 2^31-1) mixed as
-    ``((h * (t + seed + 1)) % (2^31-1))`` — every intermediate fits
-    int64 EXACTLY, so a DuckDB oracle replays the identical trial
-    flips bit-for-bit (the ``permutation_pvalue`` gate).  Weaker
-    mixing than xxhash64; meant for cross-engine verification, not to
-    replace the default.
+    ``x = (h * (t + seed + 1)) % P; x * x % P`` with P = 2^31-1 —
+    every intermediate fits int64 EXACTLY, so a DuckDB oracle replays
+    the identical trial flips bit-for-bit (the ``permutation_pvalue``
+    gate).  The squaring matters: docids with sequential suffixes
+    hash to an arithmetic progression, so the linear ``x`` alone
+    steps by a constant from doc to doc — parity agreeing across
+    every doc in about a quarter of the trials (no flips at all), and
+    Poisson uniforms all but equal.  Weaker mixing than xxhash64;
+    meant for cross-engine verification, not to replace the
+    default.
     """
     cols = ["ptp1", "fp1", "rtp1", "fn1", "ptp2", "fp2", "rtp2", "fn2"]
     tseed = np.uint64(seed)
@@ -89,9 +101,10 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
             if hash_mode == "poly":
                 hp = pdf["doc_hash"].to_numpy(dtype=np.int64)
                 ti = np.arange(n_trials, dtype=np.int64)
-                # exact in int64: h < 2^31, (t+seed+1) small
+                # exact in int64: h < 2^31, (t+seed+1) small, x < 2^31
                 mixed_i = (hp[:, None] * (ti[None, :] + seed + 1)) \
                     % MIX_PRIME
+                mixed_i = mixed_i * mixed_i % MIX_PRIME
                 if mode == "permute":
                     flip = (mixed_i % 2).astype(bool)
                 elif mode == "poisson":
@@ -126,15 +139,15 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
                 w = _poisson_icdf(u).astype(np.float64)
                 p1 = np.einsum("dt,dk->tk", w, m1)
                 p2 = np.einsum("dt,dk->tk", w, m2)
-            out = np.hstack([p1, p2]).reshape(n_trials * 8)
+            out = np.concatenate([np.hstack([p1, p2]).reshape(n_trials * 8),
+                                  m1.sum(axis=0), m2.sum(axis=0)])
             yield pd.DataFrame({"partial": [out.tolist()]})
 
     parts = joined.mapInPandas(gen, schema="partial array<double>")
-    rows = parts.collect()
-    total = np.zeros(n_trials * 8)
-    for r in rows:
+    total = np.zeros(n_trials * 8 + 8)
+    for r in parts.collect():
         total += np.asarray(r["partial"])
-    return total.reshape(n_trials, 8)
+    return total[:-8].reshape(n_trials, 8), total[-8:]
 
 
 _POISSON_CDF = None
@@ -164,6 +177,17 @@ def _metrics_from(mat: np.ndarray) -> dict[str, np.ndarray]:
             "ptp": ptp, "fp": fp, "rtp": rtp, "fn": fn}
 
 
+def _one_system(per_doc: DataFrame) -> DataFrame:
+    """One system's per-doc table in the two-system trial layout, the
+    second system all zeros."""
+    return per_doc.select(
+        "docid",
+        F.col("ptp").alias("ptp1"), F.col("fp").alias("fp1"),
+        F.col("rtp").alias("rtp1"), F.col("fn").alias("fn1"),
+    ).withColumns({"ptp2": F.lit(0.0), "fp2": F.lit(0.0),
+                   "rtp2": F.lit(0.0), "fn2": F.lit(0.0)})
+
+
 def _join_per_doc(pd1: DataFrame, pd2: DataFrame) -> DataFrame:
     a = pd1.select(
         "docid", F.col("ptp").alias("ptp1"), F.col("fp").alias("fp1"),
@@ -190,22 +214,13 @@ def permutation_test(
     :func:`_trial_partials`) so the whole test is replayable in a
     DuckDB oracle; the default xxhash64 mixing is the production
     path."""
-    joined = _join_per_doc(per_doc1, per_doc2)
-
-    base = joined.agg(
-        *[F.sum(c).alias(c)
-          for c in ("ptp1", "fp1", "rtp1", "fn1",
-                    "ptp2", "fp2", "rtp2", "fn2")]).collect()[0]
-    b1 = np.array([[base["ptp1"], base["fp1"], base["rtp1"], base["fn1"]]],
-                  dtype=float)
-    b2 = np.array([[base["ptp2"], base["fp2"], base["rtp2"], base["fn2"]]],
-                  dtype=float)
-    base1 = _metrics_from(b1)
-    base2 = _metrics_from(b2)
+    partials, observed = _trial_partials(
+        _join_per_doc(per_doc1, per_doc2), n_trials, seed, "permute",
+        hash_mode)
+    base1 = _metrics_from(observed[None, :4])
+    base2 = _metrics_from(observed[None, 4:])
     base_diff = {m: float(base1[m][0] - base2[m][0]) for m in metrics}
 
-    partials = _trial_partials(joined, n_trials, seed, "permute",
-                               hash_mode)
     t1 = _metrics_from(partials[:, :4])
     t2 = _metrics_from(partials[:, 4:])
 
@@ -254,13 +269,8 @@ def calibrate_trials(
 
     Returns rows {metric, pct, trials, stdev}.
     """
-    joined = per_doc.select(
-        "docid",
-        F.col("ptp").alias("ptp1"), F.col("fp").alias("fp1"),
-        F.col("rtp").alias("rtp1"), F.col("fn").alias("fn1"),
-    ).withColumns({"ptp2": F.lit(0.0), "fp2": F.lit(0.0),
-                   "rtp2": F.lit(0.0), "fn2": F.lit(0.0)})
-    partials = _trial_partials(joined, max_trials, seed, "poisson")
+    partials, _ = _trial_partials(_one_system(per_doc), max_trials, seed,
+                                  "poisson")
     history = _metrics_from(partials[:, :4])
 
     rng = np.random.default_rng(seed)
@@ -290,32 +300,37 @@ MULTINOMIAL_MAX_DOCS = 1_000_000
 
 
 def _multinomial_trials(joined: DataFrame, n_trials: int,
-                        seed: int) -> np.ndarray:
+                        seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Exact multinomial document resampling (the reference's
     bootstrap: N uniform draws of doc indices with replacement,
     significance.py:224-234) — driver-side, for fixture-parity runs.
 
-    Per-doc matrices collect to the driver sorted by docid (seeded rng
-    ⇒ deterministic results regardless of partitioning), then chunks
-    of trials draw Multinomial(N, 1/N) count vectors and matrix-
-    multiply them into per-trial sums. Use the default Poisson mode at
-    scale — it never materializes the doc table; this path is BOUNDED
-    at ``MULTINOMIAL_MAX_DOCS`` per-doc rows (≈32 MB of float64 at the
-    bound) and raises beyond it rather than OOMing the driver."""
-    n_docs_actual = joined.count()
-    if n_docs_actual > MULTINOMIAL_MAX_DOCS:
+    Per-doc matrices collect to the driver in ONE bounded action and
+    are sorted by docid there (seeded rng ⇒ deterministic results
+    regardless of partitioning), then chunks of trials draw
+    Multinomial(N, 1/N) count vectors and matrix-multiply them into
+    per-trial sums; the observed sums come from the same table.
+    Returns ``(trials, observed)`` like :func:`_trial_partials`.  Use
+    the default Poisson mode at scale — it never materializes the doc
+    table; this path is BOUNDED at ``MULTINOMIAL_MAX_DOCS`` per-doc
+    rows (≈32 MB of float64 at the bound): it collects at most one row
+    past the bound and raises rather than OOMing the driver."""
+    cols = ["ptp1", "fp1", "rtp1", "fn1"]
+    pdf = joined.select("docid", *cols) \
+        .limit(MULTINOMIAL_MAX_DOCS + 1).toPandas()
+    if len(pdf) > MULTINOMIAL_MAX_DOCS:
         raise ValueError(
             f"method='multinomial' collects the per-doc table to the "
-            f"driver and is bounded at {MULTINOMIAL_MAX_DOCS:,} docs "
-            f"(got {n_docs_actual:,}); use the distributed "
-            f"method='poisson' (the default) at this scale")
-    pdf = joined.select("docid", "ptp1", "fp1", "rtp1", "fn1") \
-        .orderBy("docid").toPandas()
-    m = pdf[["ptp1", "fp1", "rtp1", "fn1"]].to_numpy(dtype=np.float64)
+            f"driver and is bounded at {MULTINOMIAL_MAX_DOCS:,} docs; "
+            f"use the distributed method='poisson' (the default) at "
+            f"this scale")
+    m = pdf.sort_values("docid", na_position="first")[cols] \
+        .to_numpy(dtype=np.float64)
     n_docs = len(m)
     out = np.zeros((n_trials, 8))
+    observed = np.concatenate([m.sum(axis=0), np.zeros(4)])
     if n_docs == 0:
-        return out
+        return out, observed
     rng = np.random.default_rng(seed)
     chunk = max(1, int(2e7 / max(n_docs, 1)))
     pvals = np.full(n_docs, 1.0 / n_docs)
@@ -323,7 +338,7 @@ def _multinomial_trials(joined: DataFrame, n_trials: int,
         k = min(chunk, n_trials - lo)
         counts = rng.multinomial(n_docs, pvals, size=k)
         out[lo:lo + k, :4] = counts.astype(np.float64) @ m
-    return out
+    return out, observed
 
 
 def bootstrap_confidence(
@@ -345,24 +360,18 @@ def bootstrap_confidence(
     ``method="multinomial"``: the reference's exact resampling
     protocol (N docs drawn uniformly with replacement per trial,
     significance.py:224-234), driver-side — use when cross-checking
-    CI bounds against the reference on fixture-sized inputs."""
-    joined = per_doc.select(
-        "docid",
-        F.col("ptp").alias("ptp1"), F.col("fp").alias("fp1"),
-        F.col("rtp").alias("rtp1"), F.col("fn").alias("fn1"),
-    ).withColumns({"ptp2": F.lit(0.0), "fp2": F.lit(0.0),
-                   "rtp2": F.lit(0.0), "fn2": F.lit(0.0)})
+    CI bounds against the reference on fixture-sized inputs.  Either
+    way the per-doc input is evaluated once: the observed score comes
+    from the same pass as the trials."""
+    joined = _one_system(per_doc)
     if method == "multinomial":
-        partials = _multinomial_trials(joined, n_trials, seed)
+        partials, sums = _multinomial_trials(joined, n_trials, seed)
     elif method == "poisson":
-        partials = _trial_partials(joined, n_trials, seed, "poisson")
+        partials, sums = _trial_partials(joined, n_trials, seed, "poisson")
     else:
         raise ValueError(f"unknown bootstrap method: {method!r}")
     t = _metrics_from(partials[:, :4])
-
-    observed = _metrics_from(np.asarray(
-        joined.groupBy().sum("ptp1", "fp1", "rtp1", "fn1").collect(),
-        dtype=float))
+    observed = _metrics_from(sums[None, :4])
     out = {}
     for m in metrics:
         values = sorted(t[m].tolist())

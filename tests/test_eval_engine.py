@@ -1,0 +1,166 @@
+"""The evaluation engine's shape: one plan per measure family,
+null-safe grouped clustering measures and single-pass trials.
+
+Inputs come from the benchmark's annotation generator plus rows the
+generator never writes: bare spans (no candidate), NIL-only rows
+(NULL ``kbid``) and type-less rows (NULL ``type``).
+"""
+
+import json
+import os
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from neleval_spark.measures import evaluate, get_measure, parse_measures
+from neleval_spark.measures.contingency import Matrix, contingency_df
+from neleval_spark.sources.tsv import read_annotations_tsv
+from neleval_spark.stats import (bootstrap_confidence, per_doc_contingency,
+                                 permutation_test)
+
+COMPOSED = ["sets:is_first:docid+kbid", "overlap-maxmax:is_linked:span"]
+COUNTS = ("ptp", "fp", "rtp", "fn")
+
+
+def _write_tsvs(d, n_docs, seed):
+    from perfbench.inputs import write_annotations
+
+    write_annotations(str(d), n_docs, seed)
+    rng = random.Random(seed)
+    for name in ("gold.tsv", "system.tsv"):
+        with open(os.path.join(d, name), "a") as f:
+            for _ in range(3 * n_docs // 5):
+                doc = f"doc{rng.randrange(n_docs):07d}"
+                start = 5000 + rng.randrange(40)
+                kind = rng.random()
+                if kind < 0.4:  # bare span
+                    f.write(f"{doc}\t{start}\t{start + 3}\n")
+                elif kind < 0.8:  # no type
+                    f.write(f"{doc}\t{start}\t{start + 3}\t"
+                            f"E{rng.randrange(5):05d}\t1.0\n")
+                else:  # NIL id only
+                    f.write(f"{doc}\t{start}\t{start + 3}\t"
+                            f"NIL{rng.randrange(5):05d}\n")
+
+
+@pytest.fixture(scope="module")
+def sides(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("eval_engine")
+    _write_tsvs(d, 20, seed=3)
+    return (read_annotations_tsv(spark, str(d / "system.tsv")),
+            read_annotations_tsv(spark, str(d / "gold.tsv")))
+
+
+def _close(got: dict, exp: dict) -> bool:
+    return all(abs(got[k] - exp[k]) <= 1e-9 * max(1.0, abs(exp[k]))
+               for k in COUNTS)
+
+
+def _matrix(row) -> dict:
+    return (Matrix(*(row[k] for k in COUNTS)) if row is not None
+            else Matrix()).results
+
+
+def test_stacked_evaluate_equals_per_measure(sides):
+    """Every family evaluated in one stacked plan gives exactly what
+    the measure's own plan gives, NULL keys, NULL groups and bare
+    spans included."""
+    s, g = sides
+    assert g.where(F.col("type").isNull()).limit(1).count() == 1
+    names = parse_measures(["all", *COMPOSED])
+    flat = evaluate(s, g, measures=names)
+    grouped = evaluate(s, g, measures=names, group_by=["type"])
+    types = {r[0] for r in g.select("type").distinct().collect()}
+    for name in names:
+        spec = get_measure(name)
+        assert _close(flat[name],
+                      _matrix(contingency_df(s, g, spec).first())), name
+        rows = {r["type"]: r for r in
+                contingency_df(s, g, spec, ["type"]).collect()}
+        for t in types:
+            label = f"{name};type={json.dumps(t)}"
+            assert _close(grouped[label], _matrix(rows.get(t))), label
+
+
+def test_grouped_clustering_matches_group_subsets(sides):
+    """Grouped clustering measures (self-joins of one dedup frame in
+    ``ns_join``) equal evaluating each group's rows alone."""
+    s, g = sides
+    names = ["b_cubed", "b_cubed_plus", "entity_ceaf"]
+    grouped = evaluate(s, g, measures=names, group_by=["type"])
+    for t in ("PER", "ORG", None):
+        c = F.col("type").eqNullSafe(F.lit(t))
+        alone = evaluate(s.where(c), g.where(c), measures=names)
+        for name in names:
+            label = f"{name};type={json.dumps(t)}"
+            assert _close(grouped[label], alone[name]), label
+
+
+def test_bootstrap_on_clustering_per_doc(sides):
+    s, g = sides
+    ci = bootstrap_confidence(per_doc_contingency(s, g, "b_cubed"),
+                              n_trials=50)
+    # clusters split at document borders: the per-doc sums are the
+    # docid-grouped micro average, not the corpus-wide b_cubed
+    f = evaluate(s, g, measures="b_cubed", group_by=["docid"])[
+        "b_cubed;docid=<micro>"]["fscore"]
+    assert ci["fscore"]["score"] == pytest.approx(f, rel=1e-12)
+    assert ci["fscore"][90][0] <= f <= ci["fscore"][90][1]
+
+
+def _ticking_per_doc(spark, n, seed):
+    """A per-doc table whose every evaluation ticks an accumulator
+    once per row (on ``ptp``, which the observed sums read too)."""
+    ticks = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def tick(v):
+        ticks.add(1)
+        return v
+
+    rng = random.Random(seed)
+    rows = [(f"d{i}", float(rng.randrange(5)), float(rng.randrange(3)),
+             float(rng.randrange(5)), float(rng.randrange(3)))
+            for i in range(n)]
+    df = spark.createDataFrame(rows, "docid string, ptp double, "
+                                     "fp double, rtp double, fn double")
+    return df.withColumn("ptp", tick("ptp")), ticks
+
+
+@pytest.mark.parametrize("method", ["poisson", "multinomial"])
+def test_bootstrap_evaluates_per_doc_input_once(spark, method):
+    per_doc, ticks = _ticking_per_doc(spark, 200, seed=1)
+    ci = bootstrap_confidence(per_doc, n_trials=30, method=method)
+    assert ticks.value == 200
+    sums = per_doc.agg(*[F.sum(c).alias(c) for c in COUNTS]).first()
+    assert ci["fscore"]["score"] == Matrix(*sums).results["fscore"]
+
+
+def test_permutation_evaluates_each_input_once(spark):
+    pd1, ticks1 = _ticking_per_doc(spark, 150, seed=2)
+    pd2, ticks2 = _ticking_per_doc(spark, 150, seed=3)
+    res = permutation_test(pd1, pd2, n_trials=40)
+    assert (ticks1.value, ticks2.value) == (150, 150)
+    m1 = Matrix(*pd1.agg(*[F.sum(c) for c in COUNTS]).first()).results
+    m2 = Matrix(*pd2.agg(*[F.sum(c) for c in COUNTS]).first()).results
+    assert res["fscore"]["diff"] == pytest.approx(
+        m1["fscore"] - m2["fscore"], rel=1e-12)
+
+
+def test_evaluate_tac14_jobs(spark, tmp_path):
+    """tac14 runs one plan per family: 90 jobs when every measure was
+    its own action, far fewer now."""
+    from perfbench.inputs import write_annotations
+
+    write_annotations(str(tmp_path), 200, seed=5)
+    s = read_annotations_tsv(spark, str(tmp_path / "system.tsv"))
+    g = read_annotations_tsv(spark, str(tmp_path / "gold.tsv"))
+    sc = spark.sparkContext
+    sc.setJobGroup("tac14_jobs", "evaluate(tac14)")
+    try:
+        evaluate(s, g, measures="tac14")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("tac14_jobs")
+    assert len(jobs) < 60, len(jobs)

@@ -19,6 +19,17 @@ def _read(spark, path):
     return read_annotations_tsv(spark, path)
 
 
+@pytest.fixture(scope="module")
+def annotations(tmp_path_factory):
+    """Generated gold and perturbed system TSVs (the benchmark's
+    annotation generator): 60 docs, ~10 mentions each."""
+    from perfbench.inputs import write_annotations
+
+    d = tmp_path_factory.mktemp("annotations")
+    write_annotations(str(d), 60, seed=11)
+    return {"gold": str(d / "gold.tsv"), "system": str(d / "system.tsv")}
+
+
 # --- analyze ----------------------------------------------------------------
 
 def test_error_summary_tac(spark):
@@ -56,11 +67,11 @@ def test_nist_percentile():
     assert nist_percentile(vals, 99) == 4.0
 
 
-def test_permutation_identical_systems(spark):
+def test_permutation_identical_systems(spark, annotations):
     from neleval_spark.stats import per_doc_contingency, permutation_test
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    sys_ = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    sys_ = _read(spark, annotations["gold"])
     pd1 = per_doc_contingency(sys_, gold, "strong_all_match")
     res = permutation_test(pd1, pd1, n_trials=200)
     for m, r in res.items():
@@ -68,11 +79,11 @@ def test_permutation_identical_systems(spark):
         assert r["p"] == 1.0  # zero diff: every trial is "as extreme"
 
 
-def test_permutation_detects_difference(spark):
+def test_permutation_detects_difference(spark, annotations):
     from neleval_spark.stats import per_doc_contingency, permutation_test
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    good = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    good = _read(spark, annotations["gold"])
     # a clearly worse system: every mention's span shifted
     bad = good.withColumn("start", F.col("start") + 1000) \
         .withColumn("end", F.col("end") + 1000)
@@ -83,7 +94,7 @@ def test_permutation_detects_difference(spark):
     assert res["fscore"]["p"] < 0.05
 
 
-def test_permutation_poly_hash_mode(spark):
+def test_permutation_poly_hash_mode(spark, annotations):
     """hash_mode='poly' (the DuckDB-replayable flip derivation behind
     the permutation_pvalue driver oracle) must behave like a real
     permutation test: deterministic, p=1 on identical systems, small
@@ -91,8 +102,8 @@ def test_permutation_poly_hash_mode(spark):
     a same-ish pair would fail if all flips were constant)."""
     from neleval_spark.stats import per_doc_contingency, permutation_test
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    good = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    good = _read(spark, annotations["gold"])
     bad = good.withColumn("start", F.col("start") + 1000) \
         .withColumn("end", F.col("end") + 1000)
     pd1 = per_doc_contingency(good, gold, "strong_all_match")
@@ -109,11 +120,11 @@ def test_permutation_poly_hash_mode(spark):
     assert res1["fscore"]["p"] < 0.05
 
 
-def test_bootstrap_ci_contains_point(spark):
+def test_bootstrap_ci_contains_point(spark, annotations):
     from neleval_spark.stats import bootstrap_confidence, per_doc_contingency
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    sys_ = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    sys_ = _read(spark, annotations["gold"])
     pdc = per_doc_contingency(sys_, gold, "strong_all_match")
     cis = bootstrap_confidence(pdc, n_trials=300)
     for metric in ("precision", "recall", "fscore"):
@@ -122,7 +133,7 @@ def test_bootstrap_ci_contains_point(spark):
         assert lo > 0.5
 
 
-def test_multinomial_bootstrap_doc_bound(spark, monkeypatch):
+def test_multinomial_bootstrap_doc_bound(spark, annotations, monkeypatch):
     """method='multinomial' collects per-doc rows to the driver; above
     MULTINOMIAL_MAX_DOCS it must refuse with a pointer to the
     distributed Poisson default, not OOM."""
@@ -132,8 +143,8 @@ def test_multinomial_bootstrap_doc_bound(spark, monkeypatch):
                                      per_doc_contingency)
     from neleval_spark.stats import significance as sig
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    sys_ = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    sys_ = _read(spark, annotations["system"])
     pdc = per_doc_contingency(sys_, gold, "strong_all_match")
     monkeypatch.setattr(sig, "MULTINOMIAL_MAX_DOCS", 1)
     with pytest.raises(ValueError, match="poisson"):
@@ -335,7 +346,7 @@ def test_conll_coref_matches_reference(spark):
     assert {str(k): v for k, v in ref.items()} == ours
 
 
-def test_calibrate_trials(spark):
+def test_calibrate_trials(spark, annotations):
     """R3 (reference significance.py:272-288): stdev of the CI bound
     shrinks with trial count; values recompute exactly from the trial
     history with plain numpy."""
@@ -346,8 +357,8 @@ def test_calibrate_trials(spark):
         _metrics_from, _trial_partials, nist_percentile)
     import pyspark.sql.functions as F
 
-    gold = _read(spark, f"{EXAMPLES}/tac_gold.combined.tsv")
-    sys_ = _read(spark, f"{EXAMPLES}/tac_system.combined.tsv")
+    gold = _read(spark, annotations["gold"])
+    sys_ = _read(spark, annotations["system"])
     pdc = per_doc_contingency(sys_, gold, "strong_all_match")
 
     rows = calibrate_trials(pdc, trials=(50, 200, 800), max_trials=1000,
@@ -364,8 +375,8 @@ def test_calibrate_trials(spark):
         F.col("rtp").alias("rtp1"), F.col("fn").alias("fn1"),
     ).withColumns({"ptp2": F.lit(0.0), "fp2": F.lit(0.0),
                    "rtp2": F.lit(0.0), "fn2": F.lit(0.0)})
-    X = _metrics_from(_trial_partials(joined, 1000, 7, "poisson")[:, :4])[
-        "fscore"]
+    trials, _ = _trial_partials(joined, 1000, 7, "poisson")
+    X = _metrics_from(trials[:, :4])["fscore"]
     rng = np.random.default_rng(7)
     exp = {}
     for n in (50, 200, 800):
