@@ -1738,7 +1738,11 @@ def main(argv=None):
     add("run-pipeline", cmd_run_pipeline, lambda sp: (
         sp.add_argument("corpus"),
         sp.add_argument("-o", "--out", required=True),
-        sp.add_argument("--buckets", type=int, default=64),
+        sp.add_argument("--buckets", type=int, default=None,
+                        help="triple-sink buckets (part_id values); "
+                             "default: derived from the mention "
+                             "table's size, ~128 MB per bucket, at "
+                             "most 64"),
         sp.add_argument("--markup", action="store_true",
                         help="also flatten publisher JSON-LD into "
                              "the triple sink (the second entrance "
@@ -1757,7 +1761,10 @@ def main(argv=None):
     add("compact-sink", cmd_compact_sink, lambda sp: (
         sp.add_argument("triples",
                         help="triple sink dir to compact into one run"),
-        sp.add_argument("--buckets", type=int, default=64)))
+        sp.add_argument("--buckets", type=int, default=None,
+                        help="buckets of the compacted run; default: "
+                             "derived from the sink's size, ~128 MB "
+                             "per bucket, at most 64")))
     add("curate", cmd_curate, lambda sp: (
         sp.add_argument("docs",
                         help="parquet documents table "

@@ -74,8 +74,12 @@ def _signature(e: DataFrame):
 
 # Edge lists at or below this size are solved on the driver with
 # union-find (one collect instead of ~3 log-n shuffle rounds) — the
-# same hybrid the CEAF solver uses. The distributed star-contraction
-# engages automatically beyond it (e.g. 10^12-doc NIL key graphs).
+# same hybrid the CEAF solver uses. The result is bounded by the same
+# cap, so it is returned with a broadcast hint: a local-rows frame
+# otherwise plans with an unknown (Long.MaxValue) size, and every
+# consumer would join it with a sort-merge join, shuffling its own
+# side to do so. The distributed star-contraction engages
+# automatically beyond the cap (e.g. 10^12-doc NIL key graphs).
 DRIVER_CC_MAX_EDGES = 100_000
 
 
@@ -102,7 +106,9 @@ def connected_components(
     -------
     DataFrame (vertex: string, component: string) covering every vertex
     appearing in ``edges``; ``component`` is the minimum vertex id of
-    the component.
+    the component.  On the driver path (at most ``driver_max_edges``
+    edges) the frame is marked for broadcast, so joins against it
+    never shuffle the other side.
     """
     e0 = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -134,8 +140,8 @@ def connected_components(
                 if root not in comp_min or v < comp_min[root]:
                     comp_min[root] = v
             rows = [(v, comp_min[uf.find(v)]) for v in uf.parent]
-            return edges.sparkSession.createDataFrame(
-                rows, "vertex string, component string")
+            return F.broadcast(edges.sparkSession.createDataFrame(
+                rows, "vertex string, component string"))
     # distributed path: LAZY checkpoints throughout (the r6
     # one-job-per-round discipline, see pagerank.py).  Only the
     # topmost marked RDD of an action is checkpoint-finalized, so e0's

@@ -15,10 +15,18 @@ for hub surfaces.
 
 The emitted label is ``NIL`` + sha1(min normalized surface of the
 component) — a pure function of the cluster contents, stable across
-runs, partitionings and executor counts.
+runs, partitionings and executor counts.  It is read straight off the
+CC component id: key vertices are tagged by key POSITION
+(``"0\x01<surface>"``, ``"1\x01<acronym>"``), so first-kind keys
+sort lowest; every vertex is chained to its mention's first-kind key,
+so each component holds one and its id (the minimum vertex) is the
+component's minimum surface key.  Labelling is then one projection of
+the CC result — no per-component aggregate, no join back onto it.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,59 +60,47 @@ def canonicalize_nils(
     Input: mentions with (url, start, end, surface, eid, ...) where
     eid IS NULL marks the NIL path. Output: same rows with eid
     replaced by the cluster label and type/score defaulted.
+
+    ``key_fns`` is a sequence of ``(kind, fn)`` blocking keys; the
+    label is derived from the FIRST key (the minimum first-kind key of
+    the component), so a custom ``key_fns`` is labelled by its first
+    key kind.
     """
     # The input fans out (nil branch, linked branch, key graph);
-    # callers must pass a MATERIALIZED table (build_mentions
-    # localCheckpoints the scored mentions) — re-caching here through
+    # callers must pass a MATERIALIZED table (build_mentions writes
+    # the scored mentions to scratch parquet) — re-caching here through
     # the columnar InMemoryRelation is prohibitively expensive for
     # rows with nested candidate arrays.
     nils = mentions.where(F.col("eid").isNull())
     linked = mentions.where(F.col("eid").isNotNull())
 
+    # vertex = "<key position>\x01<key>": first-kind keys sort lowest
     kinds = list(key_fns)
     vertex_cols = [
-        F.concat_ws("\x01", F.lit(kind), fn(F.col("surface")))
+        F.concat_ws("\x01", F.lit(str(i)), fn(F.col("surface")))
         .alias(f"_k_{kind}")
-        for kind, fn in kinds
+        for i, (kind, fn) in enumerate(kinds)
     ]
     keyed = nils.select(*vertex_cols).distinct()
 
-    # key graph: chain the keys of each mention (k0-k1, k1-k2, ...)
-    first = f"_k_{kinds[0][0]}"
-    edge_parts = []
-    for (kind, _), (nkind, _) in zip(kinds, kinds[1:]):
-        edge_parts.append(
-            keyed.select(F.col(f"_k_{kind}").alias("src"),
-                         F.col(f"_k_{nkind}").alias("dst")))
-    if edge_parts:
-        edges = edge_parts[0]
-        for e in edge_parts[1:]:
-            edges = edges.union(e)
-    else:
-        # single key: degenerate self-edges, CC is a no-op pass-through
-        edges = keyed.select(F.col(first).alias("src"),
-                             F.col(first).alias("dst"))
+    # key graph: chain the keys of each mention (k0-k1, k1-k2, ...);
+    # a single key gives self-edges, which CC passes through
+    cols = [f"_k_{kind}" for kind, _ in kinds]
+    first = cols[0]
+    edges = reduce(DataFrame.union, [
+        keyed.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        for a, b in list(zip(cols, cols[1:])) or [(first, first)]])
 
     comps = connected_components(edges)
 
-    # component label = sha1 of the minimum normalized *surface* key
-    surf_prefix = "s\x01"
-    labels = (
-        comps.where(F.col("vertex").startswith(surf_prefix))
-        .groupBy("component")
-        .agg(F.min(F.expr(f"substring(vertex, {len(surf_prefix) + 1})"))
-             .alias("min_sk"))
-        .select(
-            "component",
-            F.concat(F.lit("NIL"),
-                     F.substring(F.sha1(F.col("min_sk")), 1, 10))
-            .alias("nil_id"),
-        )
-    )
-    key_to_nil = (
-        comps.join(labels, "component")
-        .select(F.col("vertex").alias(first), "nil_id")
-    )
+    # every vertex is chained to its mention's first-kind key, so the
+    # component id (the minimum vertex) is the minimum first-kind key:
+    # the label is one projection of it — sha1 of the key text after
+    # the 2-character "0\x01" position tag
+    key_to_nil = comps.select(
+        F.col("vertex").alias(first),
+        F.concat(F.lit("NIL"), F.substring(F.sha1(F.substring(
+            F.col("component"), 3, 1 << 30)), 1, 10)).alias("nil_id"))
 
     nils_labelled = (
         nils.withColumn(first, vertex_cols[0])

@@ -22,7 +22,10 @@ url set; only changed+added pages enter the mapInPandas stages.  At
 crawl scale the changed fraction per generation is typically a few
 percent — this converts the dominant Python-stage cost to
 O(churn), while the relational tail (canonicalize + triple sink)
-stays O(corpus) but cheap.  Pair with
+stays O(corpus) but cheap: below the driver-CC cap the NIL labels are
+one projection of a broadcast CC result (no shuffle of the mention
+side), and the sink bucket count is sized from the merged mention
+scans, so a small generation writes one file.  Pair with
 :func:`~neleval_spark.pipeline.triples.merge_kg` when maintaining
 the aggregated KG instead of re-emitting witness triples.
 """
@@ -35,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions.corpusops import crawl_diff
 from .canonicalize import canonicalize_nils
 from .run import build_mentions
-from .triples import emit_triples
+from .triples import emit_triples, sink_buckets
 
 __all__ = ["page_diff", "incremental_linked", "incremental_triples"]
 
@@ -78,13 +81,18 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
 
 def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
                         prev_linked: DataFrame, kb: DataFrame,
-                        n_buckets: int = 64,
+                        n_buckets: int | None = None,
                         **build_kw) -> DataFrame:
     """Full incremental step: reuse + recompute linked mentions, then
     re-run the two global (cheap, relational) stages — NIL
     canonicalization and the triple sink — over the merged set.
-    Output is EXACTLY the full rebuild's triple table."""
+    Output is EXACTLY the full rebuild's (subj, pred, obj, url) rows.
+
+    ``n_buckets`` defaults to :func:`~.triples.sink_buckets` of the
+    merged PRE-canonicalization mentions, whose estimate is the
+    ``prev_linked`` scan plus the fresh snapshot (the canonicalized
+    plan joins a local-rows CC result of unknown size)."""
     linked = incremental_linked(pages_prev, pages_new, prev_linked,
                                 kb, **build_kw)
     return emit_triples(canonicalize_nils(linked),
-                        n_buckets=n_buckets)
+                        n_buckets=n_buckets or sink_buckets(linked))

@@ -370,3 +370,17 @@ def markup_as_triples(flat: DataFrame) -> DataFrame:
     ``merge_kg`` directly; object/array payloads stay as JSON text."""
     return flat.where(F.col("kind") != "null") \
         .select("subj", "pred", "obj")
+
+
+def markup_sink_rows(pages: DataFrame, n_buckets: int) -> DataFrame:
+    """The publisher JSON-LD of ``pages`` as triple-sink rows:
+    :func:`markup_as_triples`' projection with the url kept, one row
+    per distinct (subj, pred, obj, url), bucketed by url exactly as
+    ``emit_triples`` buckets the NER rows."""
+    from .triples import bucket_of
+
+    return (jsonld_triples(pages)
+            .where(F.col("kind") != "null")
+            .select("subj", "pred", "obj", "url")
+            .distinct()
+            .withColumn("part_id", bucket_of(F.col("url"), n_buckets)))

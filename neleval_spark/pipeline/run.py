@@ -22,7 +22,7 @@ from .candidates import generate_candidates, score_and_select
 from .canonicalize import canonicalize_nils
 from .extract import with_extracted_text
 from .ner import detect_mentions
-from .triples import emit_triples
+from .triples import emit_triples, sink_buckets
 
 
 def build_mentions(pages: DataFrame, kb: DataFrame,
@@ -74,8 +74,7 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     cands = cands.repartition(F.col("url"))
     # materialize the scored mention table once (canonicalization fans
     # out into ≥3 consumers — nil branch, linked branch, key graph —
-    # and a live plan with Python stages would re-run per consumer);
-    # see _materialize for the scratch-parquet-vs-persist strategies
+    # and a live plan with Python stages would re-run per consumer)
     linked = _materialize(score_and_select(cands))
     if not canonicalize:
         # pre-canonicalization linked mentions: the PER-PAGE-pure
@@ -95,36 +94,22 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
 
 
 def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a multi-consumer frame once.
+    """Materialize a multi-consumer frame once: write it to a scratch
+    parquet table and re-read it.
 
-    Two strategies (``spark.neleval.materialize`` conf):
-
-    * ``parquet`` (default): write to a scratch parquet table and
-      re-read.  Each downstream consumer then scans a COLUMNAR,
-      column-pruned snapshot — the triple sink reads 3 narrow columns
-      instead of deserializing whole nested-candidate rows, and the
-      nested ``candidates`` array is only decoded by the consumer
-      that actually outputs it.  On a cluster this is a staging table
-      (point ``spark.neleval.scratchDir`` at shared storage); the
-      returned frame carries ``_scratch_dir`` so lifetime managers
-      (streaming ingest) can delete it per batch.
-    * ``persist``: DISK_ONLY serialized cache (the pre-round-3
-      behavior) — kept for comparison; every consumer pays full-row
-      Java deserialization.
+    Each downstream consumer then scans a COLUMNAR, column-pruned
+    snapshot — the triple sink reads 3 narrow columns instead of
+    deserializing whole nested-candidate rows, and the nested
+    ``candidates`` array is only decoded by the consumer that actually
+    outputs it.  On a cluster this is a staging table (point
+    ``spark.neleval.scratchDir`` at shared storage); the returned
+    frame carries ``_scratch_dir`` so lifetime managers (streaming
+    ingest) can delete it per batch.
     """
     import os
     import uuid
 
     spark = df.sparkSession
-    mode = spark.conf.get(
-        "spark.neleval.materialize",
-        os.environ.get("SPARK_NELEVAL_MATERIALIZE", "parquet"))
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        df = df.persist(StorageLevel.DISK_ONLY)
-        df.count()
-        return df
     base = spark.conf.get("spark.neleval.scratchDir", None) \
         or _process_scratch_root()
     path = os.path.join(base, f"neleval_mat_{uuid.uuid4().hex}")
@@ -156,14 +141,10 @@ def _process_scratch_root() -> str:
 
 
 def release_materialized(df: DataFrame) -> None:
-    """Free one _materialize result: unpersist or delete scratch."""
-    scratch = getattr(df, "_scratch_dir", None)
-    if scratch is not None:
-        import shutil
+    """Free one _materialize result: delete its scratch snapshot."""
+    import shutil
 
-        shutil.rmtree(scratch, ignore_errors=True)
-    else:
-        df.unpersist()
+    shutil.rmtree(df._scratch_dir, ignore_errors=True)
 
 
 def to_neleval_mentions(mentions: DataFrame) -> DataFrame:
@@ -191,10 +172,14 @@ def run_pipeline(
     pages: DataFrame,
     kb: DataFrame,
     out_dir: str | None = None,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     markup: bool = False,
 ) -> dict:
     """Run construction end-to-end; optionally materialize triples.
+
+    ``n_buckets`` defaults to :func:`~.triples.sink_buckets` of the
+    materialized mentions; the NER and markup rows share that one
+    count.
 
     ``markup=True`` opens the SECOND entrance into the same KG:
     publisher-embedded JSON-LD (pipeline/markup.jsonld_triples →
@@ -216,20 +201,12 @@ def run_pipeline(
     mentions = _materialize(built)
     for h in getattr(built, "_materialized_deps", ()):
         release_materialized(h)
-    triples = emit_triples(mentions, n_buckets=n_buckets)
+    n = n_buckets or sink_buckets(mentions)
+    triples = emit_triples(mentions, n_buckets=n)
     if markup:
-        from .markup import jsonld_triples
+        from .markup import markup_sink_rows
 
-        # markup_as_triples' projection with the url kept for the
-        # shared part_id scheme
-        mk = (jsonld_triples(pages)
-              .where(F.col("kind") != "null")
-              .select("subj", "pred", "obj", "url")
-              .distinct()
-              .withColumn("part_id",
-                          F.pmod(F.xxhash64("url"),
-                                 F.lit(n_buckets))))
-        triples = triples.unionByName(mk)
+        triples = triples.unionByName(markup_sink_rows(pages, n))
     manifest = None
     if out_dir is not None:
         from .triples import read_triples, write_triples
@@ -265,7 +242,7 @@ def triple_prf(sys_triples: DataFrame, gold_triples: DataFrame) -> dict:
 
 
 def gold_triples_from_mentions(gold_mentions: DataFrame,
-                               n_buckets: int = 64) -> DataFrame:
+                               n_buckets: int | None = None) -> DataFrame:
     """Derive the reference triple set from gold mentions with the
     same emission rules."""
     return emit_triples(gold_mentions, n_buckets=n_buckets)

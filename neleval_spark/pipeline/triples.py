@@ -20,6 +20,11 @@ is written last as the run's commit record.  Readers see only
 committed runs, so a crashed write is invisible and re-running it
 replaces the run — the bucket function is a pure function of the row,
 so the re-run re-derives exactly the same partitions.
+
+The bucket count is derived from the input size (:func:`sink_buckets`:
+about one 128 MB file per bucket, at most 64), so a small run writes
+one file instead of 64 near-empty ones; callers may still pass an
+explicit ``n_buckets``.
 """
 
 from __future__ import annotations
@@ -31,8 +36,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def emit_triples(mentions: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """Mentions (url, sent_uid, eid) → triple rows with part_id.
+MAX_BUCKETS = 64
+BUCKET_BYTES = 128 * 1024 * 1024
+
+
+def sink_buckets(df: DataFrame) -> int:
+    """Sink bucket count for a run whose input plan is ``df``: about
+    one ``BUCKET_BYTES`` parquet file per bucket, between 1 and
+    ``MAX_BUCKETS``.
+
+    The size is the optimizer's estimate for ``df`` — reading it runs
+    no job, and for a parquet scan it is the size of the files.  Pass
+    a plan of scans (the mentions as read, not a plan joined against
+    a local-rows frame, whose unknown size saturates the estimate at
+    ``MAX_BUCKETS``)."""
+    # a Scala BigInt; str() covers py4j's int or JavaObject forms
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+    return max(1, min(MAX_BUCKETS, -(-size // BUCKET_BYTES)))
+
+
+def emit_triples(mentions: DataFrame,
+                 n_buckets: int | None = None) -> DataFrame:
+    """Mentions (url, sent_uid, eid) → triple rows with part_id
+    ``pmod(xxhash64(url), n_buckets)``; ``n_buckets`` defaults to
+    :func:`sink_buckets` of ``mentions``.
 
     Plan shape (this is the hot sink of the pipeline): ONE aggregation
     per granularity, no self-join —
@@ -109,8 +137,14 @@ def emit_triples(mentions: DataFrame, n_buckets: int = 64) -> DataFrame:
                    F.col("url")).alias("obj"),
         F.col("url"),
     )
-    return out.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
+    if n_buckets is None:
+        n_buckets = sink_buckets(mentions)
+    return out.withColumn("part_id", bucket_of(F.col("url"), n_buckets))
+
+
+def bucket_of(url, n_buckets: int):
+    """The sink's bucket function: ``pmod(xxhash64(url), n)``."""
+    return F.pmod(F.xxhash64(url), F.lit(n_buckets))
 
 
 _MANIFEST_SCHEMA = "part_id long, n_rows long, checksum long, run_id string"
@@ -163,8 +197,8 @@ def write_triples(
     generation — the classic partitionBy small-files explosion).
     With it each bucket is written by exactly one task: files per
     run == occupied buckets, and file SIZE is steered by the
-    ``n_buckets`` chosen at part_id derivation (raise it at scale so
-    one bucket ~ one ideal parquet file)."""
+    ``n_buckets`` chosen at part_id derivation (by default
+    :func:`sink_buckets`, so one bucket ~ one 128 MB parquet file)."""
     if not overwrite_run:
         raise ValueError(
             "write_triples always replaces its run; overwrite_run=False "
@@ -260,10 +294,12 @@ def compact_recover(out_dir: str) -> None:
 
 
 def compact_triples(spark: SparkSession, out_dir: str,
-                    n_buckets: int = 64) -> DataFrame:
+                    n_buckets: int | None = None) -> DataFrame:
     """Compact the committed runs of a sink (e.g. many streaming
     batches of small files) into ONE run, ``run_id=compact-<ts>`` —
     the operational analogue of Iceberg's rewrite_data_files.
+    ``n_buckets`` defaults to :func:`sink_buckets` of the committed
+    runs.
 
     The earlier runs are merged away, so ``up_to_run`` time travel
     over them ends here, and a stream's checkpoint-ownership guard
@@ -288,9 +324,11 @@ def compact_triples(spark: SparkSession, out_dir: str,
     compact_recover(out_dir)
 
     # re-derive part_id (a pure row function) so a changed bucket
-    # count re-buckets correctly
-    triples = read_triples(spark, out_dir).drop("run_id", "part_id") \
-        .withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
+    # count re-buckets correctly; by default the count is sized from
+    # the committed runs' files
+    triples = read_triples(spark, out_dir).drop("run_id", "part_id")
+    triples = triples.withColumn("part_id", bucket_of(
+        F.col("url"), n_buckets or sink_buckets(triples)))
     write_triples(triples, staging,
                   run_id=f"compact-{int(time.time() * 1000)}")
     open(os.path.join(staging, "_COMMIT"), "w").close()

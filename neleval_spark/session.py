@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults(env=os.environ) -> tuple[str, str]:
+    """(core count, driver heap) that fit the host: the cores this
+    process may run on, and a quarter of physical memory (the JVM's
+    own default heap share; at least 1g).  ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_MEM`` in ``env`` override them."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return (env.get("SPARK_GRAFT_CPUS",
+                    str(len(os.sched_getaffinity(0)))),
+            env.get("SPARK_GRAFT_MEM", f"{max(1, phys // 4 >> 30)}g"))
+
+
 def get_spark(
     app_name: str = "neleval_spark",
     master: str | None = None,
@@ -22,10 +33,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    Parameters default from env vars used by the bench harness:
-    ``SPARK_GRAFT_CPUS`` (core count) and ``SPARK_GRAFT_MEM``.
+    ``master`` and ``driver_memory`` default to :func:`host_defaults`
+    (``local[<cores>]`` and a quarter of physical memory).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, mem = host_defaults()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
@@ -43,8 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory
-                or os.environ.get("SPARK_GRAFT_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory or mem)
         .config("spark.ui.enabled", "false")
         # broadcast dims (alias dict, type weights, mappings) aggressively;
         # at 100 TB the fact side never fits but dims stay small

@@ -71,8 +71,9 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
     JSON-LD is flattened and unioned into the same run_id partition
     as the batch's NER triples, so replay idempotence covers both
     streams at once."""
-    from ..pipeline.run import build_mentions
-    from ..pipeline.triples import emit_triples, write_triples
+    from ..pipeline.canonicalize import canonicalize_nils
+    from ..pipeline.run import build_mentions, release_materialized
+    from ..pipeline.triples import emit_triples, sink_buckets, write_triples
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
@@ -100,33 +101,27 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
                     "original checkpoint directory or a fresh out_dir.")
         if batch_df.isEmpty():
             return
-        mentions = build_mentions(batch_df, kb)
+        # the bucket count is sized from the scored-mention snapshot
+        # (a scan), as incremental_triples does, and shared by the NER
+        # and markup rows
+        linked = build_mentions(batch_df, kb, canonicalize=False)
         try:
-            triples = emit_triples(mentions)
+            n = sink_buckets(linked)
+            triples = emit_triples(canonicalize_nils(linked), n_buckets=n)
             if markup:
-                from ..pipeline.markup import jsonld_triples
+                from ..pipeline.markup import markup_sink_rows
 
-                mk = (jsonld_triples(batch_df)
-                      .where(F.col("kind") != "null")
-                      .select("subj", "pred", "obj", "url")
-                      .distinct()
-                      .withColumn("part_id",
-                                  F.pmod(F.xxhash64("url"),
-                                         F.lit(64))))
-                triples = triples.unionByName(mk)
+                triples = triples.unionByName(markup_sink_rows(batch_df, n))
             # a replayed batch REPLACES its own run (data + manifest) —
             # idempotent without reading the sink, correct even if the
             # previous attempt died mid-write
             write_triples(triples, out_dir, run_id=run_id)
         finally:
-            # release exactly the frames build_mentions materialized
-            # for this batch (scratch parquet or persist) — NOT
-            # catalog.clearCache(), which would also evict frames the
-            # caller cached (e.g. a persisted kb dim)
-            from ..pipeline.run import release_materialized
-
-            for h in getattr(mentions, "_materialized_deps", ()):
-                release_materialized(h)
+            # delete exactly the scratch snapshot build_mentions wrote
+            # for this batch — NOT catalog.clearCache(), which would
+            # also evict frames the caller cached (e.g. a persisted kb
+            # dim)
+            release_materialized(linked)
 
     writer = (
         pages_stream.writeStream

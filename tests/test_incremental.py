@@ -102,3 +102,25 @@ def test_incremental_only_recomputes_churn(spark, gen1, gen2, kb):
     gen2_urls = {r["url"] for r in
                  gen2.select("url").distinct().collect()}
     assert kept_urls <= gen2_urls
+
+
+def test_incremental_sink_job_count(spark, gen1, gen2, kb, tmp_path):
+    """The construction tail's fixed cost, counted in jobs: one
+    incremental step plus its sink write runs at most 35 Spark jobs
+    here (39 before the NIL labels were read off the broadcast CC
+    result and the sink was sized to one bucket)."""
+    from neleval_spark.pipeline.incremental import incremental_triples
+    from neleval_spark.pipeline.run import build_mentions
+    from neleval_spark.pipeline.triples import write_triples
+
+    prev_linked = build_mentions(gen1, kb, canonicalize=False)
+    sc = spark.sparkContext
+    sc.setJobGroup("incremental-sink-jobs", "job count")
+    try:
+        t = incremental_triples(gen1, gen2, prev_linked, kb)
+        write_triples(t, str(tmp_path / "sink"), run_id="gen-000002")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("incremental-sink-jobs")
+    assert len(jobs) <= 35, len(jobs)

@@ -296,6 +296,44 @@ def test_write_one_file_per_bucket(spark, built, tmp_path):
         assert len(files) == 1, (d, files)
 
 
+def test_sink_buckets_sized_from_input(spark, tmp_path):
+    """The sink bucket count is derived from the input size: a small
+    run (NER and JSON-LD markup rows) lands in ONE bucket and one file,
+    every part_id falls in range(sink_buckets(mentions)), and the
+    manifest counts the rows read back.  An explicit n_buckets still
+    wins."""
+    import glob
+
+    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.run import run_pipeline
+    from neleval_spark.pipeline.triples import read_triples, sink_buckets
+
+    block = ('<script type="application/ld+json">'
+             '{"@id":"m1","@type":"Org"}</script>')
+    corpus = synth_corpus(spark, 30)
+    pages = corpus.withColumn("html", F.when(
+        F.col("url").endswith("0"),
+        F.concat(F.col("html").cast("string"), F.lit(block))
+        .cast("binary")).otherwise(F.col("html")))
+    for n_buckets, max_dirs in ((None, 1), (8, 8)):
+        out = str(tmp_path / f"sink{n_buckets}")
+        res = run_pipeline(pages, kb_table(spark), out_dir=out,
+                           n_buckets=n_buckets, markup=True)
+        dirs = glob.glob(f"{out}/triples/run_id=*/part_id=*")
+        assert 1 <= len(dirs) <= max_dirs
+        n = n_buckets or sink_buckets(res["mentions"])
+        assert n == (n_buckets or 1)
+        back = read_triples(spark, out)
+        assert {r["part_id"] for r in back.select("part_id").distinct()
+                .collect()} <= set(range(n))
+        assert back.where(F.col("subj") == "m1").count() > 0
+        assert res["manifest"].agg(F.sum("n_rows")).first()[0] \
+            == back.count()
+        if n_buckets is None:
+            files = glob.glob(f"{out}/triples/run_id=*/part_id=*/*.parquet")
+            assert len(files) == 1, files
+
+
 def test_canonicalize_hub_surface_skew(spark):
     """Hub-entity skew (north_rule): one NIL surface appearing in a
     large share of all documents must not blow up canonicalization.
@@ -336,6 +374,98 @@ def test_canonicalize_hub_surface_skew(spark):
         acronym_key(F.col("surface")).alias("a")).distinct()
     assert keys.count() <= 51  # 51 distinct surfaces, whatever the skew
     spark.catalog.clearCache()
+
+
+def _nil_frame(spark, surfaces):
+    """One NIL mention per surface, plus one linked mention."""
+    rows = [(f"u{i}", 0, len(s), s, None) for i, s in enumerate(surfaces)]
+    rows.append(("linked", 0, 4, "Acme", "E1"))
+    return spark.createDataFrame(
+        rows, "url string, start int, end int, surface string, eid string"
+    ).withColumn("score", F.lit(None).cast("double")) \
+     .withColumn("type", F.lit(None).cast("string"))
+
+
+def _union_find_labels(surfaces, keys):
+    """Pure-Python reference: union the keys of each surface, label a
+    component "NIL" + sha1(min first-kind key)[:10]."""
+    import hashlib
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s in surfaces:
+        ks = [(i, k(s)) for i, k in enumerate(keys)]
+        for a, b in zip(ks, ks[1:]):
+            parent[find(a)] = find(b)
+        find(ks[0])
+    min_first = {}
+    for v in parent:
+        if v[0] == 0:
+            r = find(v)
+            min_first[r] = min(min_first.get(r, v[1]), v[1])
+    return {s: "NIL" + hashlib.sha1(
+        min_first[find((0, keys[0](s)))].encode()).hexdigest()[:10]
+        for s in surfaces}
+
+
+def test_nil_labels_match_union_find_reference(spark):
+    """NIL labels are read off the CC component id.  Pinned against a
+    pure-Python union-find on surfaces whose acronym keys sort BELOW
+    their surface keys ("za" < "zeta_able") and whose components hold
+    several surfaces each, for the default keys and for a single key."""
+    import random
+
+    from neleval_spark.pipeline.canonicalize import (
+        canonicalize_nils, surface_key)
+
+    words = ["zeta", "zulu", "able", "alpha", "yard", "york", "bravo"]
+    rng = random.Random(5)
+    surfaces = sorted({" ".join(w.capitalize() for w in
+                                rng.sample(words, rng.randint(1, 3)))
+                       for _ in range(60)})
+    norm = lambda s: s.strip().lower().replace(" ", "_")  # noqa: E731
+    acro = lambda s: "".join(  # noqa: E731
+        w[:1] for w in s.strip().split(" ")).lower()
+    df = _nil_frame(spark, surfaces)
+
+    def labels(**kw):
+        out = canonicalize_nils(df, **kw).collect()
+        assert {r["eid"] for r in out if r["url"] == "linked"} == {"E1"}
+        return {r["surface"]: r["eid"] for r in out if r["url"] != "linked"}
+
+    want = _union_find_labels(surfaces, (norm, acro))
+    # the fixture exercises the ordering hazard: a component with
+    # several surfaces whose shared acronym sorts below all of them
+    by_label = {}
+    for s, label in want.items():
+        by_label.setdefault(label, []).append(s)
+    assert any(len(ss) > 1 and all(acro(s) < norm(s) for s in ss)
+               for ss in by_label.values())
+    assert labels() == want
+    assert labels(key_fns=(("surface", surface_key),)) == \
+        _union_find_labels(surfaces, (norm,))
+
+
+def test_canonicalize_driver_path_plan_has_no_shuffle(spark):
+    """Below the driver-CC cap the CC result is broadcast: labelling
+    the NIL mentions is a broadcast hash join, with no sort-merge join
+    and no shuffle of the mention side."""
+    from neleval_spark.pipeline.canonicalize import canonicalize_nils
+
+    df = _nil_frame(spark, ["Red Sable Group", "Rsg", "Zeta Able", "Za"])
+    out = canonicalize_nils(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert out.count() == 5
 
 
 def test_dedupe_snapshots_drops_recrawls(spark, corpus, built):
