@@ -7,10 +7,22 @@ one of them decomposes over the *cluster intersection-size table*
 
     I(eid_g, eid_s) = |gold cluster ∩ pred cluster|
 
-which relationally is just ``gold ⋈ pred on mention-key → groupBy
-(eid_g, eid_s) → count`` — the distributed analogue of the reference's
-scipy CSR sparse-matrix multiply (neleval/coref_metrics.py:310-338,
-379-382). Derivations:
+(relationally ``gold ⋈ pred on mention-key → groupBy (eid_g, eid_s) →
+count``, the distributed analogue of the reference's scipy CSR
+sparse-matrix multiply, neleval/coref_metrics.py:310-338, 379-382) and
+the cluster sizes.  One plan computes those once (:func:`clustering_plan`):
+
+* each side's distinct (key, eid) membership pairs (``_dedup_pairs``);
+* I, by an exchange-free join of the two;
+* per cluster, one aggregate over both sides: its size ``n``, its
+  common mentions ``c = Σ I``, ``q = Σ I²`` and ``e``, the number of
+  clusters of the other side it meets (``_clusters``);
+* per group, the sums every aggregate is a formula over (``_totals``):
+  per side ``n`` (mentions), ``k`` (clusters), ``t = Σ C(n,2)``,
+  ``b = Σ q/n`` and ``cp = Σ C(c,2)``, and shared ``e = |rows(I)|``,
+  ``m = Σ I``, ``q = Σ I²`` (``_s``/``_g`` suffixes name the side).
+
+Derivations (``_formulas``):
 
 * MUC (neleval/coref_metrics.py:640-666): per Vilain et al. (1995),
   ``num = Σ I − |rows(I)|`` on both sides,
@@ -19,26 +31,31 @@ scipy CSR sparse-matrix multiply (neleval/coref_metrics.py:310-338,
   ``p_num = Σ I²/|pred C|``, ``r_num = Σ I²/|gold C|``,
   dens = mention counts.
 * pairwise (neleval/coref_metrics.py:605-611):
-  ``num = Σ C(I,2)``, dens = ``Σ C(|C|,2)``.
-* CEAF (neleval/coref_metrics.py:443-492): optimal 1:1 cluster
-  alignment — intersection table → connected components (distributed)
-  → per-component Hungarian solve in an Arrow-batched applyInPandas
-  (scipy.optimize.linear_sum_assignment), mirroring the reference's
-  component decomposition (:392-440) with its 1×1-component shortcut
-  (:434-438). ``mention_ceaf`` uses overlap similarity (φ3),
-  ``entity_ceaf`` dice (φ4).
+  ``num = Σ C(I,2) = (Σ I² − Σ I)/2``, dens = ``Σ C(|C|,2)``.
+* pairwise_negative (BLANC's negative half, coref_metrics.py:574-602):
+  ``num = C(Σ I,2) − Σ_g C(c_g,2) − Σ_s C(c_s,2) + Σ C(I,2)`` (the
+  reference's C(M,2) − A − disagreements), ``p_den = C(|sys
+  mentions|,2) − Σ_s C(n_s,2)``, ``r_den`` likewise for gold.
+* CEAF (neleval/coref_metrics.py:443-492): dens are mention counts
+  (``mention_ceaf``, similarity φ3 = I) or cluster counts
+  (``entity_ceaf``, dice φ4 = 2I/(n_g + n_s)); the numerator is an
+  optimal 1:1 cluster alignment over the similarity edge list, solved
+  per connected component with the reference's 1×1-component shortcut
+  (:392-440) — on the driver when the edges fit, else distributed
+  (:func:`solve_assignments`).  The plan gives CEAF a zero numerator
+  and the edge list; the solved totals are added afterwards.
 
-Every function takes gold/pred as DataFrames of ``(gcols..., eid,
-key...)`` membership pairs — duplicates tolerated; each side is
-deduplicated internally by ``_dedup_pairs`` (one repartition on the
-packed key struct, in-partition dedup, exchange-free intersection
-join) — and returns a DataFrame ``(gcols..., p_num, p_den, r_num,
-r_den)`` — additive per group, so micro/macro/significance reuse the
-same plans.
+Membership frames are ``(gcols..., key..., eid)`` rows, duplicates
+tolerated.  Several measures over different keys or filters share one
+plan when the frames are stacked: each (key, filter) "stack" is an
+integer ``_m`` column and ``aggs`` names each measure's stack.  Results
+are additive per group, so micro/macro/significance reuse the same
+plans.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from functools import reduce
 
 import pandas as pd
@@ -48,29 +65,13 @@ from pyspark.sql import functions as F
 from ..graph import connected_components
 from ._join import ns_join
 
+SCORES = ["p_num", "p_den", "r_num", "r_den"]
+
 
 def _grouped(df: DataFrame, gcols: list[str], exprs: list) -> DataFrame:
     if gcols:
         return df.groupBy(*gcols).agg(*exprs)
     return df.agg(*exprs)
-
-
-def _combine(parts: list[DataFrame], gcols: list[str]) -> DataFrame:
-    """Per-group partial tables → one row per group.  Each part holds
-    ``gcols`` and some value columns; the parts are aligned (0.0 where
-    a part lacks a column, or where a global aggregate of no rows
-    gives NULL), unioned and summed per group.  Adding 0.0 is exact,
-    and the group-by treats a NULL group value as an ordinary group,
-    where an outer join on ``gcols`` would split it."""
-    cols = list(dict.fromkeys(
-        c for p in parts for c in p.columns if c not in gcols))
-    aligned = [
-        p.select(*gcols, *[
-            F.coalesce(F.col(c).cast("double"), F.lit(0.0)).alias(c)
-            if c in p.columns else F.lit(0.0).alias(c) for c in cols])
-        for p in parts]
-    return _grouped(reduce(DataFrame.union, aligned), gcols,
-                    [F.sum(c).alias(c) for c in cols])
 
 
 def _dedup_pairs(side: DataFrame, key: list[str],
@@ -93,11 +94,18 @@ def _dedup_pairs(side: DataFrame, key: list[str],
       exchanges and 10-expression sorts — is not needed.
 
     The former shape (per-side dropDuplicates + eqNullSafe join) cost
-    4 full-data exchanges; this costs 2 (plans/r06/b_cubed_*.txt)."""
+    4 full-data exchanges; this costs 2 (plans/r06/b_cubed_*.txt).
+
+    The pairs feed several consumers of one plan (I and the cluster
+    sizes), whose exchanges are reused only if their subtrees match.
+    The analyzer re-aliases a repeated subtree's plain columns in one
+    copy only, which breaks the match; packing every carried column
+    into ``_v`` (as ``_k`` already is) keeps the copies identical."""
     kcols = list(dict.fromkeys(list(gcols) + list(key)))
-    packed = side.select(
-        F.struct(*kcols).alias("_k"), *gcols, F.col("eid"))
-    return packed.repartition(F.col("_k")).dropDuplicates()
+    packed = side.select(F.struct(*kcols).alias("_k"),
+                         F.struct(*gcols, "eid").alias("_v"))
+    return (packed.repartition(F.col("_k")).dropDuplicates()
+            .select("_k", "_v.*"))
 
 
 def _intersections_dp(gdp: DataFrame, sdp: DataFrame,
@@ -116,112 +124,137 @@ def _intersections_dp(gdp: DataFrame, sdp: DataFrame,
     )
 
 
-def _sizes_dp(dp: DataFrame, gcols: list[str]) -> DataFrame:
-    """cluster_sizes over a ``_dedup_pairs`` frame."""
-    return dp.groupBy(*(gcols + ["eid"])).agg(
-        F.count(F.lit(1)).alias("n"))
+def _clusters(gdp: DataFrame, sdp: DataFrame, I: DataFrame,
+              gcols: list[str]) -> DataFrame:
+    """One row per cluster of either side: (gcols..., _side, eid, n,
+    c, q, e) with ``_side`` 1 for gold, 2 for pred.  One aggregate over
+    the members of both sides (size ``n``, from the distinct pairs, so
+    a key in two clusters counts in both) and I's cells seen from each
+    side (``c = Σ I``, ``q = Σ I²``, ``e`` = cells).  The group-by
+    treats a NULL eid or group value as an ordinary group."""
+    def members(dp, side):
+        return dp.select(*gcols, F.lit(side).alias("_side"), "eid",
+                         F.lit(1).alias("n"),
+                         F.lit(None).cast("long").alias("i"))
+
+    cells = I.select(*gcols, F.inline(F.array(*[
+        F.struct(F.lit(side).alias("_side"), F.col(eid).alias("eid"),
+                 F.lit(0).alias("n"), F.col("i").alias("i"))
+        for side, eid in ((1, "eid_g"), (2, "eid_s"))])))
+    i = F.col("i")
+    return (members(gdp, 1).unionByName(members(sdp, 2))
+            .unionByName(cells)
+            .groupBy(*gcols, "_side", "eid")
+            .agg(F.sum("n").alias("n"), F.sum(i).alias("c"),
+                 F.sum(i * i).alias("q"), F.count(i).alias("e")))
 
 
-def muc(gold: DataFrame, pred: DataFrame, key: list[str],
-        gcols: list[str]) -> DataFrame:
-    gdp = _dedup_pairs(gold, key, gcols)
-    sdp = _dedup_pairs(pred, key, gcols)
-    I = _intersections_dp(gdp, sdp, gcols)
-    num = _grouped(
-        I, gcols, [(F.sum("i") - F.count(F.lit(1))).alias("num")])
-    p_den = _grouped(_sizes_dp(sdp, gcols), gcols,
-                     [F.sum(F.col("n") - 1).alias("p_den")])
-    r_den = _grouped(_sizes_dp(gdp, gcols), gcols,
-                     [F.sum(F.col("n") - 1).alias("r_den")])
-    return _combine([p_den, r_den, num], gcols).select(
-        *gcols, F.col("num").alias("p_num"), "p_den",
-        F.col("num").alias("r_num"), "r_den")
+def _tri(c):
+    """C(c, 2) as a double."""
+    return c * (c - 1) / 2
 
 
-def b_cubed(gold: DataFrame, pred: DataFrame, key: list[str],
-            gcols: list[str]) -> DataFrame:
-    gdp = _dedup_pairs(gold, key, gcols)
-    sdp = _dedup_pairs(pred, key, gcols)
-    I = _intersections_dp(gdp, sdp, gcols)
-    ns = _sizes_dp(sdp, gcols).withColumnRenamed("eid", "eid_s") \
-        .withColumnRenamed("n", "ns")
-    ng = _sizes_dp(gdp, gcols).withColumnRenamed("eid", "eid_g") \
-        .withColumnRenamed("n", "ng")
-    Ij = ns_join(ns_join(I, ns, gcols + ["eid_s"]), ng,
-                 gcols + ["eid_g"])
-    nums = _grouped(
-        Ij, gcols,
-        [
-            F.sum(F.col("i") * F.col("i") / F.col("ns")).alias("p_num"),
-            F.sum(F.col("i") * F.col("i") / F.col("ng")).alias("r_num"),
-        ],
-    )
-    p_den = _grouped(ns, gcols, [F.sum("ns").alias("p_den")])
-    r_den = _grouped(ng, gcols, [F.sum("ng").alias("r_den")])
-    return _combine([p_den, r_den, nums], gcols).select(
-        *gcols, "p_num", "p_den", "r_num", "r_den")
+def _totals(clusters: DataFrame, gcols: list[str]) -> DataFrame:
+    """Per-group sums of the ``_clusters`` table (module docstring),
+    all doubles, 0.0 where a group has no such cluster."""
+    def on(side, expr):
+        return F.when(F.col("_side") == side, expr)
+
+    n, c, q = F.col("n"), F.col("c"), F.col("q")
+    exprs = []
+    for side, x in ((1, "g"), (2, "s")):
+        exprs += [F.sum(on(side, n)).alias(f"n_{x}"),
+                  F.count(on(side, n)).alias(f"k_{x}"),
+                  F.sum(on(side, _tri(n))).alias(f"t_{x}"),
+                  F.sum(on(side, q / n)).alias(f"b_{x}"),
+                  F.sum(on(side, _tri(c))).alias(f"cp_{x}")]
+    # every cell of I is seen once from the pred side
+    exprs += [F.sum(on(2, F.col(src))).alias(name)
+              for src, name in (("e", "e"), ("c", "m"), ("q", "q"))]
+    out = _grouped(clusters, gcols, exprs)
+    return out.select(*gcols, *[
+        F.coalesce(F.col(c).cast("double"), F.lit(0.0)).alias(c)
+        for c in out.columns if c not in gcols])
 
 
-def pairwise(gold: DataFrame, pred: DataFrame, key: list[str],
-             gcols: list[str]) -> DataFrame:
-    gdp = _dedup_pairs(gold, key, gcols)
-    sdp = _dedup_pairs(pred, key, gcols)
-    I = _intersections_dp(gdp, sdp, gcols)
-    tri = lambda c: (F.col(c) * (F.col(c) - 1) / 2)  # noqa: E731
-    num = _grouped(I.withColumn("t", tri("i")), gcols,
-                   [F.sum("t").alias("num")])
-    p_den = _grouped(_sizes_dp(sdp, gcols).withColumn("t", tri("n")),
-                     gcols, [F.sum("t").alias("p_den")])
-    r_den = _grouped(_sizes_dp(gdp, gcols).withColumn("t", tri("n")),
-                     gcols, [F.sum("t").alias("r_den")])
-    return _combine([p_den, r_den, num], gcols).select(
-        *gcols, F.col("num").alias("p_num"), "p_den",
-        F.col("num").alias("r_num"), "r_den")
+def _formulas():
+    """{agg: (p_num, p_den, r_num, r_den)} over ``_totals`` columns;
+    CEAF's numerator is the assignment total, added later."""
+    col = F.col
+    muc = col("m") - col("e")
+    pw = (col("q") - col("m")) / 2
+    pn = _tri(col("m")) - col("cp_g") - col("cp_s") + pw
+    zero = F.lit(0.0)
+    return {
+        "muc": (muc, col("n_s") - col("k_s"), muc, col("n_g") - col("k_g")),
+        "b_cubed": (col("b_s"), col("n_s"), col("b_g"), col("n_g")),
+        "pairwise": (pw, col("t_s"), pw, col("t_g")),
+        "pairwise_negative": (pn, _tri(col("n_s")) - col("t_s"),
+                              pn, _tri(col("n_g")) - col("t_g")),
+        "mention_ceaf": (zero, col("n_s"), zero, col("n_g")),
+        "entity_ceaf": (zero, col("k_s"), zero, col("k_g")),
+    }
 
 
-def pairwise_negative(gold: DataFrame, pred: DataFrame, key: list[str],
-                      gcols: list[str]) -> DataFrame:
-    """Agreement over NON-coreferent mention pairs (BLANC's negative
-    half; reference coref_metrics.py:574-602).
+# CEAF similarity φ per aggregate, over I joined to the cluster sizes
+SIMILARITY = {
+    "mention_ceaf": lambda: F.col("i").cast("double"),
+    "entity_ceaf": lambda: 2 * F.col("i") / (F.col("ng") + F.col("ns")),
+}
 
-    Relational form from the same intersection table:
 
-        A  = Σ_I C(i,2)                 positive agreements
-        PG = Σ_g C(Σ_s i, 2)            common-mention pairs co-gold
-        PS = Σ_s C(Σ_g i, 2)            common-mention pairs co-sys
-        M  = Σ_I i                      common mention count
-        p_num = r_num = C(M,2) − PG − PS + A
-        p_den = C(|sys mentions|,2) − Σ_s C(n_s,2)
-        r_den = C(|gold mentions|,2) − Σ_g C(n_g,2)
+def _per_measure(df: DataFrame, gcols: list[str], measures: list,
+                 stacked: bool, fields) -> DataFrame:
+    """One output row per input row and measure of ``measures``, a
+    list of (position, aggregate, stack id), whose stack the row
+    belongs to: (gcols..., _m, fields(agg)...) with ``_m`` the
+    measure's position."""
+    rows = F.array(*[
+        F.struct(F.lit(j).alias("_m"), F.lit(stack).alias("_st"),
+                 *fields(agg))
+        for j, agg, stack in measures])
+    if stacked:
+        # ``_m`` outside the lambda is the input row's stack id
+        rows = F.filter(rows, lambda r: r["_st"] == F.col("_m"))
+    return df.select(*gcols, F.inline(rows)).drop("_st")
 
-    (the C(M,2) − A − disagreements form of the reference, with
-    disagreements = (PG − A) + (PS − A).)
-    """
-    gdp = _dedup_pairs(gold, key, gcols)
-    sdp = _dedup_pairs(pred, key, gcols)
-    I = _intersections_dp(gdp, sdp, gcols)
-    tri = lambda c: (c * (c - 1) / 2)  # noqa: E731
 
-    cg = I.groupBy(*(gcols + ["eid_g"])).agg(F.sum("i").alias("c"))
-    cs = I.groupBy(*(gcols + ["eid_s"])).agg(F.sum("i").alias("c"))
-    parts = [
-        _grouped(I, gcols, [F.sum(tri(F.col("i"))).alias("A"),
-                            F.sum("i").alias("M")]),
-        _grouped(cg, gcols, [F.sum(tri(F.col("c"))).alias("PG")]),
-        _grouped(cs, gcols, [F.sum(tri(F.col("c"))).alias("PS")]),
-    ]
+def clustering_plan(gold: DataFrame, pred: DataFrame, key: list[str],
+                    gcols: list[str], aggs: list[tuple[str, int]]
+                    ) -> tuple[DataFrame, DataFrame | None]:
+    """→ (scores, edges) for the clustering measures ``aggs``, a list
+    of (aggregate, stack id), in ONE plan.
 
-    def side_den(dp, name):
-        sizes = _sizes_dp(dp, gcols)
-        return _grouped(
-            sizes, gcols,
-            [(tri(F.sum("n")) - F.sum(tri(F.col("n")))).alias(name)])
+    ``gold``/``pred``: (gcols..., key..., eid) membership rows, plus
+    the integer stack id ``_m`` when ``aggs`` has several.  ``scores``:
+    (gcols..., _m, p_num, p_den, r_num, r_den), ``_m`` the measure's
+    position in ``aggs``, with CEAF numerators 0.0.  ``edges``: the
+    CEAF similarity edge list (gcols..., _m, eid_g, eid_s, sim), or
+    None when ``aggs`` has no CEAF measure."""
+    stacked = len({stack for _, stack in aggs}) > 1
+    group = gcols + ["_m"] if stacked else list(gcols)
+    gdp = _dedup_pairs(gold, key, group)
+    sdp = _dedup_pairs(pred, key, group)
+    I = _intersections_dp(gdp, sdp, group)
+    clusters = _clusters(gdp, sdp, I, group)
+    formulas = _formulas()
+    measures = [(j, agg, stack) for j, (agg, stack) in enumerate(aggs)]
+    scores = _per_measure(
+        _totals(clusters, group), gcols, measures, stacked,
+        lambda agg: [c.alias(n) for c, n in zip(formulas[agg], SCORES)])
 
-    out = _combine([side_den(sdp, "p_den"), side_den(gdp, "r_den"),
-                    *parts], gcols)
-    num = tri(F.col("M")) - F.col("PG") - F.col("PS") + F.col("A")
-    return out.select(*gcols, num.alias("p_num"), "p_den",
-                      num.alias("r_num"), "r_den")
+    ceaf = [m for m in measures if m[1] in SIMILARITY]
+    if not ceaf:
+        return scores, None
+    if any(agg == "entity_ceaf" for _, agg, _ in ceaf):
+        sizes = clusters.select(*group, "_side", "eid", "n")
+        for side, x in ((2, "s"), (1, "g")):
+            I = ns_join(I, sizes.where(F.col("_side") == side).select(
+                *group, F.col("eid").alias(f"eid_{x}"),
+                F.col("n").alias(f"n{x}")), group + [f"eid_{x}"])
+    edges = _per_measure(I, gcols + ["eid_g", "eid_s"], ceaf, stacked,
+                         lambda agg: [SIMILARITY[agg]().alias("sim")])
+    return scores, edges
 
 
 # Below this many similarity edges the whole assignment problem is
@@ -272,66 +305,59 @@ def _solve_edge_list(eid_g, eid_s, sims) -> float:
     return total
 
 
-def _solve_components_pandas(pdf: "pd.DataFrame",
-                             gcols: list[str]) -> "pd.DataFrame":
-    """Per-group assignment totals on the driver (fast path)."""
-    out = []
-    gb = pdf.groupby(gcols, dropna=False, sort=False) if gcols \
-        else [((), pdf)]
-    for gvals, grp in gb:
-        if gcols and not isinstance(gvals, tuple):
-            gvals = (gvals,)
-        total = _solve_edge_list(
-            grp["eid_g"].tolist(), grp["eid_s"].tolist(),
-            grp["sim"].tolist())
-        # a NULL group value comes back from dropna=False as NaN
-        out.append({**{c: None if pd.isna(v) else v
-                       for c, v in zip(gcols, gvals)}, "num": total})
-    return pd.DataFrame(out, columns=[*gcols, "num"])
+def solve_assignments(head: list, edges: DataFrame,
+                      group: list[str]) -> dict:
+    """Max-weight 1:1 assignment total per ``group`` value tuple.
 
-
-def _assignment_totals(sim: DataFrame, gcols: list[str]) -> DataFrame:
-    """Max-weight 1:1 assignment total per group.
-
-    ``sim``: (gcols..., eid_g, eid_s, sim). Decomposed by connected
-    components of the nonzero bipartite graph, then solved per
-    component with scipy inside applyInPandas. Components of a single
-    edge (the overwhelmingly common case) are summed directly without
-    entering Python — the reference's 1×1 shortcut, distributed.
-
-    Small problems (≤ DRIVER_SOLVE_MAX_EDGES similarity edges) skip the
-    iterative distributed CC and solve on the driver.
-    """
-    spark = sim.sparkSession
-    types = dict(sim.dtypes)
-    schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in gcols] + ["num double"])
-    # ONE action decides the path AND delivers the edges: a limited
-    # toPandas collects up to the driver-solve cap + 1 rows.  If the
-    # cap is not hit, those rows ARE the whole problem — no persist,
-    # no separate count job, no second execution of the intersection
-    # pipeline (r6: the old persist+count+toPandas shape ran three
-    # driver round-trips for the common small case).
-    try:
-        head = sim.limit(DRIVER_SOLVE_MAX_EDGES + 1).toPandas()
-    except Exception:
-        head = None
-    if head is not None and len(head) <= DRIVER_SOLVE_MAX_EDGES:
-        res = _solve_components_pandas(head, gcols)
-        if res.empty:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(res, schema=schema)
+    ``head`` holds the first ``DRIVER_SOLVE_MAX_EDGES + 1`` rows of
+    ``edges`` (group..., eid_g, eid_s, sim).  When it is not over the
+    cap it IS the whole problem and is solved on the driver; otherwise
+    the distributed path runs over ``edges``.  The cap is the only
+    switch: an error in either path surfaces as it is."""
+    if len(head) <= DRIVER_SOLVE_MAX_EDGES:
+        by_group = defaultdict(list)
+        for r in head:
+            by_group[tuple(r[c] for c in group)].append(r)
+        return {g: _solve_edge_list([r["eid_g"] for r in rows],
+                                    [r["eid_s"] for r in rows],
+                                    [r["sim"] for r in rows])
+                for g, rows in by_group.items()}
     # big problem: persist the full edge set (it feeds CC + stats +
     # trivial-split + solve), compute the tiny per-group totals, then
     # free the cache before returning
-    sim = sim.persist()
+    edges = edges.persist()
     try:
-        res = _assignment_totals_distributed(sim, gcols).toPandas()
+        rows = _assignment_totals_distributed(edges, group).collect()
     finally:
-        sim.unpersist()
-    if res.empty:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(res, schema=schema)
+        edges.unpersist()
+    return {tuple(r[c] for c in group): r["num"] for r in rows}
+
+
+def with_assignment_totals(scores: DataFrame, edges: DataFrame,
+                           group: list[str]) -> DataFrame:
+    """``scores`` (group..., p_num, p_den, r_num, r_den) with the CEAF
+    numerators solved from ``edges`` added, per ``group`` value.
+
+    Eager: ONE action collects up to the driver-solve cap + 1 edges,
+    which decides the path AND delivers the edges of the common small
+    problem.  The totals are added to the 0.0 numerators (exact) by
+    a union and a per-group sum, which treats a NULL group value as
+    an ordinary group."""
+    edges = edges.select(*group, "eid_g", "eid_s", "sim")
+    totals = solve_assignments(
+        edges.limit(DRIVER_SOLVE_MAX_EDGES + 1).collect(), edges, group)
+    if not totals:
+        return scores
+    types = dict(scores.dtypes)
+    found = scores.sparkSession.createDataFrame(
+        [(*g, t, t) for g, t in totals.items()],
+        ", ".join([f"`{c}` {types[c]}" for c in group]
+                  + ["p_num double", "r_num double"]))
+    aligned = [df.select(*group, *[
+        F.col(c) if c in df.columns else F.lit(0.0).alias(c)
+        for c in SCORES]) for df in (scores, found)]
+    return _grouped(reduce(DataFrame.union, aligned), group,
+                    [F.sum(c).alias(c) for c in SCORES])
 
 
 def _assignment_totals_distributed(sim: DataFrame,
@@ -420,52 +446,28 @@ def _assignment_totals_distributed(sim: DataFrame,
     return _grouped(per_comp, gcols, [F.sum("total").alias("num")])
 
 
-def ceaf(gold: DataFrame, pred: DataFrame, key: list[str],
-         gcols: list[str], similarity: str = "overlap") -> DataFrame:
-    """CEAF φ3 (similarity='overlap') / φ4 (similarity='dice')."""
-    gdp = _dedup_pairs(gold, key, gcols)
-    sdp = _dedup_pairs(pred, key, gcols)
-    I = _intersections_dp(gdp, sdp, gcols)
-    ns = _sizes_dp(sdp, gcols).withColumnRenamed("eid", "eid_s") \
-        .withColumnRenamed("n", "ns")
-    ng = _sizes_dp(gdp, gcols).withColumnRenamed("eid", "eid_g") \
-        .withColumnRenamed("n", "ng")
+def _measure_fn(agg: str):
+    def fn(gold: DataFrame, pred: DataFrame, key: list[str],
+           gcols: list[str]) -> DataFrame:
+        """(gcols..., p_num, p_den, r_num, r_den) of one measure."""
+        scores, edges = clustering_plan(gold, pred, key, gcols,
+                                        [(agg, 0)])
+        scores = scores.drop("_m")
+        if edges is not None:
+            scores = with_assignment_totals(scores, edges.drop("_m"),
+                                            gcols)
+        return scores
 
-    if similarity == "overlap":
-        sim = I.withColumn("sim", F.col("i").cast("double"))
-        p_den = _grouped(ns, gcols, [F.sum("ns").alias("p_den")])
-        r_den = _grouped(ng, gcols, [F.sum("ng").alias("r_den")])
-    elif similarity == "dice":
-        sim = ns_join(ns_join(I, ns, gcols + ["eid_s"]), ng,
-                      gcols + ["eid_g"]).withColumn(
-            "sim", 2 * F.col("i") / (F.col("ng") + F.col("ns")))
-        # dice(C, C) = 1 → denominators are cluster counts
-        # (reference vectorized path: coref_metrics.py:465-466)
-        p_den = _grouped(ns, gcols, [F.count(F.lit(1)).alias("p_den")])
-        r_den = _grouped(ng, gcols, [F.count(F.lit(1)).alias("r_den")])
-    else:
-        raise ValueError(f"unknown similarity {similarity!r}")
-
-    num = _assignment_totals(
-        sim.select(*gcols, "eid_g", "eid_s", "sim"), gcols)
-    return _combine([p_den, r_den, num], gcols).select(
-        *gcols, F.col("num").alias("p_num"), "p_den",
-        F.col("num").alias("r_num"), "r_den")
+    fn.__name__ = fn.__qualname__ = agg
+    return fn
 
 
-def mention_ceaf(gold, pred, key, gcols):
-    return ceaf(gold, pred, key, gcols, similarity="overlap")
+muc = _measure_fn("muc")
+b_cubed = _measure_fn("b_cubed")
+pairwise = _measure_fn("pairwise")
+pairwise_negative = _measure_fn("pairwise_negative")
+mention_ceaf = _measure_fn("mention_ceaf")
+entity_ceaf = _measure_fn("entity_ceaf")
 
-
-def entity_ceaf(gold, pred, key, gcols):
-    return ceaf(gold, pred, key, gcols, similarity="dice")
-
-
-CLUSTERING_FNS = {
-    "muc": muc,
-    "b_cubed": b_cubed,
-    "pairwise": pairwise,
-    "pairwise_negative": pairwise_negative,
-    "mention_ceaf": mention_ceaf,
-    "entity_ceaf": entity_ceaf,
-}
+CLUSTERING_FNS = {fn.__name__: fn for fn in (
+    muc, b_cubed, pairwise, pairwise_negative, mention_ceaf, entity_ceaf)}

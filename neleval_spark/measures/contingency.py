@@ -9,14 +9,18 @@ clustering; ``Matrix`` (neleval/evaluate.py:233-292) is the additive
 averages (:122-138).
 
 Like ``Evaluate``, which scores every measure over one load of the
-annotations, ``evaluate`` caches the columns its measures read once
-and runs ONE plan and one collect per aggregation family (sets, each
-clustering aggregate, each overlap mode): the family's measures are
-stacked row-wise under a measure id ``_m`` and the family's function
-groups by it (:func:`family_contingency`).  tac14 is three plans, not
-ten.  A single measure (:func:`contingency_df`, the per-doc tables of
-the stats) is a family of one.  Only the tiny per-(measure, group)
-result tables are collected.
+annotations, ``evaluate`` checkpoints the columns its measures read
+once and scores the sets and clustering families in ONE Spark action
+(:func:`_collect_parts`).  A family's measures are stacked row-wise
+under a measure id ``_m`` and the family's function groups by it
+(:func:`_family_plan`); all clustering aggregates are formulas over
+one set of cluster statistics per distinct (key, filter), so tac14's
+four clustering measures need three stacks and one plan.  The union
+collected holds the per-(measure, group) counts, the CEAF similarity
+edge list up to the driver-solve cap, and the gold group values;
+overlap families keep their own plan and collect.  A single measure
+(:func:`contingency_df`, the per-doc tables of the stats) is a family
+of one, a DataFrame with its CEAF assignments solved eagerly.
 """
 
 from __future__ import annotations
@@ -25,12 +29,15 @@ import itertools
 import warnings
 from collections import OrderedDict, defaultdict
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import clustering
 from .catalog import MeasureSpec, get_measure, parse_measures
-from .clustering import CLUSTERING_FNS
+from .clustering import (CLUSTERING_FNS, clustering_plan,
+                         with_assignment_totals)
 from .overlap import overlap_contingency
 from .sets import (expand_key, measure_col, project_measure,
                    sets_contingency)
@@ -116,47 +123,96 @@ def family_contingency(
     gcols: list[str] | None = None,
 ) -> DataFrame:
     """→ (gcols..., _m, ptp, fp, rtp, fn) for every measure of one
-    aggregation family ({name: spec}, all sharing ``spec.agg``) in ONE
-    plan.
+    aggregation family ({name: spec}: sets, one overlap mode, or all
+    clustering aggregates) in ONE plan, ``_m`` the measure name.  A
+    clustering family with CEAF measures first solves their
+    assignments (one action, :func:`clustering.with_assignment_totals`).
 
-    Each side stacks the measures' projections: every measure's rows
-    carry its position in ``specs`` as the integer literal ``_m`` (a
-    name string would ride in every shuffled row, twice in the
-    clustering key), the union of the family's key fields (a field the
-    measure lacks is a typed NULL) and its filter as the boolean
-    ``_f``.  The family's function then runs once, filtered on ``_f``
-    and grouped by ``gcols + ["_m"]``; the tiny result maps ``_m``
-    back to the measure name.  That is exact: the sets group-by treats
-    NULL as an ordinary group, the clustering ``_dedup_pairs`` struct
-    key compares NULL fields as equal, and a padding column is
-    constant within its measure.  The overlap denominators count
-    unfiltered rows, which ``_f`` (rather than dropping rows before
-    the stack) keeps visible to them.
-
-    A family of one groups by ``gcols`` alone (its ``_m`` is a
-    constant), so its plan is the measure's own: one row without
-    ``gcols``, and a per-doc table partitioned by ``docid`` alone,
-    ready for the stats join."""
+    A family of one groups by ``gcols`` alone, so its plan is the
+    measure's own: one row without ``gcols``, and a per-doc table
+    partitioned by ``docid`` alone, ready for the stats join."""
     gcols = list(gcols or [])
+    out, edges = _family_plan(sys_df, gold_df, specs, gcols)
+    if edges is not None:
+        group = gcols + ["_m"] if len(specs) > 1 else gcols
+        out = with_assignment_totals(out, edges, group)
+    return _named_counts(out, specs, gcols)
+
+
+def _named_counts(out: DataFrame, specs: dict,
+                  gcols: list[str]) -> DataFrame:
+    """A family plan's result → (gcols..., _m name, ptp, fp, rtp, fn):
+    the integer ``_m`` mapped back to the measure name (a name string
+    would ride in every shuffled row, twice in the clustering key), and
+    clustering scores turned into counts."""
+    names = F.array(*[F.lit(n) for n in specs])
+    name = (F.element_at(names, F.col("_m") + 1) if len(specs) > 1
+            else names[0])
+    if "p_num" in out.columns:
+        out = out.select(
+            *gcols, *(["_m"] if len(specs) > 1 else []),
+            F.col("p_num").alias("ptp"),
+            (F.col("p_den") - F.col("p_num")).alias("fp"),
+            F.col("r_num").alias("rtp"),
+            (F.col("r_den") - F.col("r_num")).alias("fn"))
+    return out.select(*gcols, name.alias("_m"), *COUNTS)
+
+
+def _family_plan(sys_df: DataFrame, gold_df: DataFrame, specs: dict,
+                 gcols: list[str]) -> tuple[DataFrame, DataFrame | None]:
+    """One family's plan → (out, edges).
+
+    Each side stacks the measures' projections (:func:`_stack`): every
+    row carries its measure's position as the integer ``_m``, the union
+    of the family's key fields (a field the measure lacks is a typed
+    NULL) and its filter as the boolean ``_f``.  The family's function
+    then runs once, filtered on ``_f`` and grouped by ``gcols + ["_m"]``.
+    That is exact: the sets group-by treats NULL as an ordinary group,
+    the clustering ``_dedup_pairs`` struct key compares NULL fields as
+    equal, and a padding column is constant within its measure.  The
+    overlap denominators count unfiltered rows, which ``_f`` (rather
+    than dropping rows before the stack) keeps visible to them.
+
+    Sets and overlap give ``out`` = (gcols..., [_m,] ptp, fp, rtp, fn)
+    and no edges.  Clustering measures stack once per distinct (key,
+    filter), not per measure — in tac14, ``b_cubed`` and
+    ``mention_ceaf`` share ``span`` — and every aggregate is a formula
+    over one shared set of cluster statistics
+    (:func:`clustering.clustering_plan`): ``out`` = (gcols..., _m,
+    p_num, p_den, r_num, r_den) with CEAF numerators 0.0, and ``edges``
+    the CEAF similarity edge list."""
     first = next(iter(specs.values()))
-    agg = first.agg
-    if first.is_clustering and agg not in CLUSTERING_FNS:
-        raise ValueError(f"Invalid aggregation: {agg!r}")
-    tokens = tuple(dict.fromkeys(f for s in specs.values() for f in s.key))
-    spec = MeasureSpec(tokens, "_f", agg, first.weighting)
+    if first.is_clustering:
+        bad = [s.agg for s in specs.values() if s.agg not in CLUSTERING_FNS]
+        if bad:
+            raise ValueError(f"Invalid aggregation: {bad[0]!r}")
+        stacks = list(dict.fromkeys((s.key, s.filter)
+                                    for s in specs.values()))
+        stacked = [MeasureSpec(k, f, first.agg) for k, f in stacks]
+        aggs = [(s.agg, stacks.index((s.key, s.filter)))
+                for s in specs.values()]
+    else:
+        stacked = list(specs.values())
+    tokens = tuple(dict.fromkeys(f for s in stacked for f in s.key))
+    spec = MeasureSpec(tokens, "_f", first.agg, first.weighting)
     extra = _extra_fields(spec)
     cols = list(dict.fromkeys(gcols + expand_key(tokens) + extra))
-    sys_st = _stack(sys_df, specs, cols, gcols + extra)
-    gold_st = _stack(gold_df, specs, cols, gcols + extra)
+    sys_st = _stack(sys_df, stacked, cols, gcols + extra)
+    gold_st = _stack(gold_df, stacked, cols, gcols + extra)
+    group = gcols + ["_m"] if len(stacked) > 1 else gcols
 
-    names = F.array(*[F.lit(n) for n in specs])
-    if len(specs) > 1:
-        out = _family_plan(sys_st, gold_st, spec, gcols + ["_m"])
-        name = F.element_at(names, F.col("_m") + 1)
-    else:
-        out = _family_plan(sys_st, gold_st, spec, gcols)
-        name = names[0]
-    return out.select(*gcols, name.alias("_m"), *COUNTS)
+    if spec.agg == "sets":
+        return sets_contingency(sys_st, gold_st, spec, group), None
+    if not spec.is_clustering:
+        return overlap_contingency(sys_st, gold_st, spec, group), None
+    # clusters = distinct (eid, key) pairs after filter
+    # (neleval/annotation.py:317-331); deduplication happens inside
+    # clustering_plan (_dedup_pairs), which keeps ``_m`` and the NULL
+    # padding in its packed struct key
+    key = [k for k in expand_key(tokens) if k not in gcols]
+    gold = project_measure(gold_st, spec, group, extra=["eid"])
+    pred = project_measure(sys_st, spec, group, extra=["eid"])
+    return clustering_plan(gold, pred, key, gcols, aggs)
 
 
 def _extra_fields(spec: MeasureSpec) -> list[str]:
@@ -167,49 +223,15 @@ def _extra_fields(spec: MeasureSpec) -> list[str]:
     return [] if spec.agg == "sets" else ["docid", "start", "end"]
 
 
-def _family_plan(sys_st: DataFrame, gold_st: DataFrame, spec: MeasureSpec,
-                 gcols: list[str]) -> DataFrame:
-    """The family's function over the stacked sides →
-    (gcols..., ptp, fp, rtp, fn)."""
-    if spec.agg == "sets":
-        return sets_contingency(sys_st, gold_st, spec, gcols)
-    if not spec.is_clustering:
-        return overlap_contingency(sys_st, gold_st, spec, gcols)
-    key = [k for k in expand_key(spec.key) if k not in gcols]
-    # clusters = distinct (eid, key) pairs after filter
-    # (neleval/annotation.py:317-331).  Deduplication happens INSIDE
-    # the clustering fns (_dedup_pairs: one repartition on the packed
-    # key struct, then in-partition dedup and an exchange-free
-    # intersection join) — no dropDuplicates here, or the fns would
-    # pay an extra full exchange per side.  _dedup_pairs is kept under
-    # stacking: ``_m`` and the NULL padding simply join the packed
-    # struct key.  A shared union+flags dedup of gold and pred (the
-    # sets_contingency shape) was A/B'd in r6 and LOST: the clustering
-    # fns read gold/pred from 3-4 consumer subtrees, so the single
-    # bigger union aggregate re-executes per consumer past the reused
-    # exchange (bench: b_cubed 5.4→6.9 s, reverted).  The measure
-    # stack sits BELOW the reused repartition, so it runs once.
-    gold = project_measure(gold_st, spec, gcols, extra=["eid"])
-    pred = project_measure(sys_st, spec, gcols, extra=["eid"])
-    out = CLUSTERING_FNS[spec.agg](gold, pred, key, gcols)
-    return out.select(
-        *gcols,
-        F.col("p_num").alias("ptp"),
-        (F.col("p_den") - F.col("p_num")).alias("fp"),
-        F.col("r_num").alias("rtp"),
-        (F.col("r_den") - F.col("r_num")).alias("fn"),
-    )
-
-
-def _stack(df: DataFrame, specs: dict, cols: list[str],
+def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
            shared: list[str]) -> DataFrame:
-    """One row per (input row, measure): ``(_m, cols..., _f)`` with
-    ``_m`` the measure's position in ``specs``.  ``shared`` columns are
-    real for every measure; the others only where the measure's key
-    has them, typed NULL elsewhere.
+    """One row per (input row, spec): ``(_m, cols..., _f)`` with
+    ``_m`` the spec's position in ``specs``.  ``shared`` columns are
+    real for every spec; the others only where the spec's key has
+    them, typed NULL elsewhere.
 
-    ONE select per side: ``inline`` over an array of per-measure
-    structs, not a union of per-measure projections — every union
+    ONE select per side: ``inline`` over an array of per-spec
+    structs, not a union of per-spec projections — every union
     branch would repeat the input plan, and each later DataFrame step
     re-analyzes all the copies (a TSV-parse plan costs about a second
     per family to build that way)."""
@@ -225,7 +247,7 @@ def _stack(df: DataFrame, specs: dict, cols: list[str],
                   for c in cols],
                 flag.alias("_f")]
 
-    rows = [fields(i, s) for i, s in enumerate(specs.values())]
+    rows = [fields(i, s) for i, s in enumerate(specs)]
     if len(rows) == 1:
         return df.select(*rows[0])
     return df.select(F.inline(F.array(*[F.struct(*r) for r in rows])))
@@ -241,17 +263,6 @@ def contingency_df(
     :func:`family_contingency` over a family of one."""
     return family_contingency(
         sys_df, gold_df, {str(spec): spec}, gcols).drop("_m")
-
-
-def _group_values(df: DataFrame, fields: list[str]) -> list[list]:
-    """Sorted distinct values per group field from GOLD annotations
-    (reference uses the gold side only, neleval/evaluate.py:100-103)."""
-    out = []
-    for f in fields:
-        vals = [r[0] for r in
-                df.select(measure_col(df, f).alias(f)).distinct().collect()]
-        out.append(sorted(vals, key=lambda v: (v is None, v)))
-    return out
 
 
 def macro_average(results_iter) -> dict:
@@ -282,36 +293,34 @@ def evaluate(
     fmt='none' output (neleval/evaluate.py:70-140).
     """
     names = parse_measures(measures)
-    results: "OrderedDict[str, dict]" = OrderedDict()
     gcols = list(group_by or [])
     specs = {str_name(n): get_measure(n, weighting=weighting)
              for n in names}
 
     # Materialize both mention tables once for the whole run (the
-    # reference loads annotations into lists the same way).  Without
-    # this, every family re-derives the frames AND — the expensive
-    # part — measure FILTERS (is_linked/is_nil) get substituted
-    # through the projections by predicate pushdown, inlining the
-    # full TSV parse tree dozens of times into one predicate
-    # (measured 11× the cost of evaluating the column once).  A
-    # cached table makes the derived columns physical, so filters
-    # evaluate on columnar data.  Only the columns the measures read
-    # are cached: the reader's ``is_first`` window (its own exchange)
-    # and the candidate arrays are pruned unless a measure asks.
-    to_unpersist = []
-    sides = []
-    for df in (sys_df, gold_df):
-        if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-            df = df.select(*_needed_columns(df, specs.values(), gcols))
-            df.persist()
-            to_unpersist.append(df)
-        sides.append(df)
-
+    # reference loads annotations into lists the same way), only the
+    # columns the measures read: the reader's ``is_first`` window (its
+    # own exchange) and the candidate arrays are pruned unless a
+    # measure asks.  Without this, measure FILTERS (is_linked/is_nil)
+    # get substituted through the projections by predicate pushdown,
+    # inlining the full TSV parse tree dozens of times into one
+    # predicate (measured 11× the cost of evaluating the column once).
+    # The barrier is an EAGER local checkpoint, not a persist: above an
+    # in-memory relation that feeds two branches AQE does not reuse an
+    # exchange (each side's ``_k`` repartition ran once per consumer),
+    # above a checkpointed RDD it does.  A lazy checkpoint would be
+    # computed inside the first query (probed: block computed twice,
+    # accumulator errors).  ``DataFrame.unpersist`` does not free
+    # checkpoint blocks; removing the checkpointed RDD's blocks does
+    # (``RDD.unpersist`` would too, but warns that the lineage is gone).
+    sides = [df.select(*_needed_columns(df, specs.values(), gcols))
+             .localCheckpoint(eager=True) for df in (sys_df, gold_df)]
     try:
-        return _evaluate_measures(*sides, specs, gcols, overall, results)
+        return _evaluate_measures(*sides, specs, gcols, overall)
     finally:
-        for df in to_unpersist:
-            df.unpersist()
+        for df in sides:
+            rdd = df._jdf.queryExecution().analyzed().rdd()
+            rdd.context().unpersistRDD(rdd.id(), True)
 
 
 def _needed_columns(df: DataFrame, specs, gcols: list[str]) -> list[str]:
@@ -327,35 +336,76 @@ def _needed_columns(df: DataFrame, specs, gcols: list[str]) -> list[str]:
         f if f in df.columns else "attrs" for f in fields))
 
 
-def _evaluate_measures(sys_df, gold_df, specs, gcols, overall, results):
-    if gcols:
-        group_vals = _group_values(gold_df, gcols)
-        product = list(itertools.product(*group_vals))
+# row kinds of evaluate's single collect
+_COUNTS, _EDGES, _GROUPS = 0, 1, 2
 
-    # one plan and one collect per aggregation family
+
+def _collect_parts(sys_df, gold_df, specs, gcols):
+    """ONE action for the sets and clustering families and the gold
+    group values → ({measure: {group tuple: Matrix}}, gold group rows).
+
+    The union's branches: each family's named counts (CEAF with 0.0
+    numerators), the CEAF edge list capped at the driver-solve limit
+    + 1 rows, and the distinct gold group tuples.  Edges over the cap
+    are solved by the distributed path (a second action); overlap
+    families keep their own plan and collect."""
     families: dict = defaultdict(dict)
     for name, spec in specs.items():
-        families[spec.agg][name] = spec
-    rows_by_measure: dict = defaultdict(list)
-    for family in families.values():
-        for r in family_contingency(sys_df, gold_df, family,
-                                    gcols).collect():
-            rows_by_measure[r["_m"]].append(r)
+        fam = "clustering" if spec.is_clustering else spec.agg
+        families[fam][name] = spec
+    parts, counts, edges, ceaf = [], [], None, {}
+    for fam, family in families.items():
+        if fam.startswith("overlap"):
+            counts += family_contingency(sys_df, gold_df, family,
+                                         gcols).collect()
+            continue
+        out, fam_edges = _family_plan(sys_df, gold_df, family, gcols)
+        parts.append(_named_counts(out, family, gcols)
+                     .withColumn("_p", F.lit(_COUNTS)))
+        if fam_edges is not None:
+            # edges carry the measure's position in its family as _e
+            ceaf = {name: e for e, name in enumerate(family)}
+            edges = fam_edges.withColumnRenamed("_m", "_e")
+            parts.append(edges.limit(clustering.DRIVER_SOLVE_MAX_EDGES + 1)
+                         .withColumn("_p", F.lit(_EDGES)))
+    if gcols:
+        parts.append(gold_df.select(*[measure_col(gold_df, f).alias(f)
+                                      for f in gcols])
+                     .distinct().withColumn("_p", F.lit(_GROUPS)))
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  parts).collect() if parts else []
+    by_kind = defaultdict(list)
+    for r in rows:
+        by_kind[r["_p"]].append(r)
+
+    solved = {} if edges is None else clustering.solve_assignments(
+        by_kind[_EDGES], edges, gcols + ["_e"])
+    mats: dict = defaultdict(dict)
+    for r in counts + by_kind[_COUNTS]:
+        group = tuple(r[c] for c in gcols)
+        # a CEAF numerator adds to ptp/rtp and comes off fp/fn
+        t = solved.get((*group, ceaf.get(r["_m"])), 0.0)
+        mats[r["_m"]][group] = Matrix(r["ptp"] + t, r["fp"] - t,
+                                      r["rtp"] + t, r["fn"] - t)
+    return mats, by_kind[_GROUPS]
+
+
+def _evaluate_measures(sys_df, gold_df, specs, gcols, overall):
+    results: "OrderedDict[str, dict]" = OrderedDict()
+    mats, group_rows = _collect_parts(sys_df, gold_df, specs, gcols)
+    if gcols:
+        # sorted distinct values per group field from GOLD annotations
+        # (the reference uses the gold side only, evaluate.py:100-103)
+        group_vals = [sorted({r[c] for r in group_rows},
+                             key=lambda v: (v is None, v)) for c in gcols]
+        product = list(itertools.product(*group_vals))
 
     for name in specs:
-        rows = rows_by_measure[name]
+        by_group = mats[name]
         if not gcols:
-            row = rows[0] if rows else None
-            mat = (Matrix(row["ptp"], row["fp"], row["rtp"], row["fn"])
-                   if row is not None else Matrix())
-            results[name] = mat.results
+            results[name] = by_group.get((), Matrix()).results
             continue
 
-        by_group = {
-            tuple(r[c] for c in gcols):
-                Matrix(r["ptp"], r["fp"], r["rtp"], r["fn"])
-            for r in rows
-        }
         name_fmt = name + "".join(
             ";{}={{group[{}]}}".format(f, i) for i, f in enumerate(gcols))
 

@@ -50,7 +50,7 @@ def expand_key(key: tuple[str, ...]) -> list[str]:
 
 def measure_col(df: DataFrame, name: str):
     """A measure field of ``df``: its column when ``df`` has one (the
-    stacked frames of ``contingency.family_contingency`` carry every
+    stacked frames of ``contingency._family_plan`` carry every
     field, ``_m`` and the ``_f`` filter flag physically), else
     :func:`field_col`'s attrs lookup."""
     return F.col(name) if name in df.columns else field_col(name)

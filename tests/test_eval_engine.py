@@ -9,6 +9,7 @@ generator never writes: bare spans (no candidate), NIL-only rows
 import json
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,19 +149,98 @@ def test_permutation_evaluates_each_input_once(spark):
         m1["fscore"] - m2["fscore"], rel=1e-12)
 
 
-def test_evaluate_tac14_jobs(spark, tmp_path):
-    """tac14 runs one plan per family: 90 jobs when every measure was
-    its own action, far fewer now."""
-    from perfbench.inputs import write_annotations
-
-    write_annotations(str(tmp_path), 200, seed=5)
-    s = read_annotations_tsv(spark, str(tmp_path / "system.tsv"))
-    g = read_annotations_tsv(spark, str(tmp_path / "gold.tsv"))
+def _evaluate_observed(spark, s, g, **kw):
+    """``evaluate(s, g, **kw)`` → (results, jobs run, ``_k``
+    repartitions in the executed plans, RDD ids newly in storage)."""
     sc = spark.sparkContext
-    sc.setJobGroup("tac14_jobs", "evaluate(tac14)")
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    before = stored()
+    # the tree form of the plans, which names each exchange's keys
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    group = f"evaluate_after_{last}"
+    sc.setJobGroup(group, "evaluate")
     try:
-        evaluate(s, g, measures="tac14")
+        results = evaluate(s, g, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("tac14_jobs")
-    assert len(jobs) < 60, len(jobs)
+        spark.conf.unset("spark.sql.ui.explainMode")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    k_exchanges = sum(
+        len(re.findall(r"- Exchange hashpartitioning\(_k#",
+                       e.physicalPlanDescription()
+                       .split("== Initial Plan ==")[0]))
+        for e in executions() if e.executionId() > last)
+    return results, len(jobs), k_exchanges, stored() - before
+
+
+@pytest.fixture(scope="module")
+def tac14_inputs(spark, tmp_path_factory):
+    from perfbench.inputs import write_annotations
+
+    d = tmp_path_factory.mktemp("tac14")
+    write_annotations(str(d), 200, seed=5)
+    return (read_annotations_tsv(spark, str(d / "system.tsv")),
+            read_annotations_tsv(spark, str(d / "gold.tsv")))
+
+
+@pytest.fixture(scope="module")
+def tac14_run(spark, tac14_inputs):
+    spark.catalog.clearCache()
+    return _evaluate_observed(spark, *tac14_inputs, measures="tac14")
+
+
+def test_evaluate_tac14_jobs(tac14_run):
+    """tac14 is one action for the sets and clustering families: 90
+    jobs when every measure was its own action, 36 with one plan per
+    family, at most 22 now (a job per query stage under AQE)."""
+    assert tac14_run[1] <= 22, tac14_run[1]
+
+
+def test_evaluate_repartitions_each_side_once(tac14_run):
+    """Every clustering stack shares one ``_k`` repartition per side:
+    the later consumers of a side's membership pairs read a reused
+    exchange (at one plan per family over persisted sides: 10)."""
+    assert tac14_run[2] == 2, tac14_run[2]
+
+
+def test_evaluate_releases_its_barrier(spark, tac14_run):
+    """The checkpointed sides are freed before ``evaluate`` returns:
+    no RDD it stored is left, and no table is cached."""
+    assert tac14_run[3] == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_grouped_evaluate_collects_group_values_in_the_same_action(
+        spark, tac14_inputs, tac14_run):
+    """The gold group values ride in the families' collect: a field
+    costs no action of its own, only the one shuffle-stage job its
+    distinct runs under AQE (38 jobs when each field ran a distinct
+    collect before the family plans), and the per-group results are
+    those of the measure's own grouped plan."""
+    s, g = tac14_inputs
+    grouped, jobs, _, _ = _evaluate_observed(
+        spark, s, g, measures="tac14", group_by=["type"])
+    assert jobs <= tac14_run[1] + 1, jobs
+    types = sorted({r[0] for r in g.select("type").distinct().collect()},
+                   key=lambda v: (v is None, v))
+    for name in ("b_cubed", "typed_mention_ceaf", "strong_typed_all_match"):
+        labels = [k for k in grouped if k.split(";")[0] == name]
+        assert labels == [f"{name};type={json.dumps(t)}" for t in types] \
+            + [f"{name};type=<macro>", f"{name};type=<micro>"], labels
+        rows = {r["type"]: r for r in contingency_df(
+            s, g, get_measure(name), ["type"]).collect()}
+        for t in types:
+            assert _close(grouped[f"{name};type={json.dumps(t)}"],
+                          _matrix(rows.get(t))), (name, t)
