@@ -234,7 +234,14 @@ def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
     structs, not a union of per-spec projections — every union
     branch would repeat the input plan, and each later DataFrame step
     re-analyzes all the copies (a TSV-parse plan costs about a second
-    per family to build that way)."""
+    per family to build that way).
+
+    A family of one stacks through ``inline`` too: the Generate is the
+    pushdown barrier.  Over a plain ``select`` predicate pushdown
+    substitutes the ``_f`` filter through the reader's projections and
+    inlines the whole TSV parse into the scan-level filter, once per
+    derived column it reads (docs/PLANS.md "predicate-pushdown
+    inlining")."""
     types = dict(df.dtypes)
 
     def fields(i, spec):
@@ -247,10 +254,8 @@ def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
                   for c in cols],
                 flag.alias("_f")]
 
-    rows = [fields(i, s) for i, s in enumerate(specs)]
-    if len(rows) == 1:
-        return df.select(*rows[0])
-    return df.select(F.inline(F.array(*[F.struct(*r) for r in rows])))
+    return df.select(F.inline(F.array(
+        *[F.struct(*fields(i, s)) for i, s in enumerate(specs)])))
 
 
 def contingency_df(

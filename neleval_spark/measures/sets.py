@@ -118,7 +118,10 @@ def _weighted_sets_contingency(
 ) -> DataFrame:
     weighting = spec.weighting or {}
     wfields = [f for f in spec.key if f in weighting]
-    key = expand_key(tuple(f for f in spec.key if f not in weighting))
+    # a group column already in the key (docid of a span) joins once
+    key = [k for k in expand_key(tuple(f for f in spec.key
+                                       if f not in weighting))
+           if k not in gcols]
 
     g = project_measure(gold_df, spec.with_weighting(None), gcols,
                         extra=wfields)

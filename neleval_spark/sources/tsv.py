@@ -16,10 +16,15 @@ All parsing happens JVM-side as Catalyst expressions over
 ``spark.read.text`` — no per-row Python.  At scale the prepared data
 lives in parquet and this path only serves the fixture boundary.
 
-Filter-heavy workloads over this reader should ``persist()`` the
-frame first (``evaluate()`` does): predicate pushdown substitutes
-derived-column aliases into scan-level predicates, duplicating the
-parse expression tree (docs/PLANS.md, "predicate-pushdown inlining").
+Predicate pushdown substitutes derived-column aliases into
+scan-level predicates, duplicating the parse expression tree
+(docs/PLANS.md, "predicate-pushdown inlining"), so a filter over this
+reader needs a barrier below it.  The measures have one:
+``evaluate()`` takes an eager local checkpoint of the columns its
+measures read, and ``contingency_df`` (the stats' per-doc tables)
+filters above the ``inline`` Generate of its measure stack, which
+pushdown cannot cross.  Other filter-heavy workloads should
+materialize the frame first.
 """
 
 from __future__ import annotations

@@ -14,14 +14,18 @@ Reference semantics (neleval/significance.py):
 Scale design: the reference materializes per-doc Matrix lists on one
 machine and joblib-forks trials. Here the per-doc contingency table is
 a DataFrame (one row per doc, additive by construction — the whole
-reason the measures distribute, SURVEY.md §1.1 'Matrix'), and the
-trial loop is ONE ``mapInPandas`` pass over doc partitions: each
-partition computes, vectorized in numpy, its partial contribution to
-every trial's pseudo-sums simultaneously (O(docs × trials) flops, no
-driver materialization of the doc table), plus its plain column sums
-— the observed matrix, a weight-1 trial.  So ``bootstrap_confidence``,
-``permutation_test`` and ``calibrate_trials`` each run one action and
-evaluate their per-doc input (a whole contingency plan) once.
+reason the measures distribute, SURVEY.md §1.1 'Matrix'), and each
+trial pass computes, vectorized in numpy, every trial's pseudo-sums
+at once (O(docs × trials) flops) plus the plain column sums — the
+observed matrix, a weight-1 trial.  While docs × trials fits the
+driver budget (``TRIAL_CELLS``) the table comes to the driver in ONE
+bounded Arrow collect and is mixed there, slice by slice,
+with no Python worker — as the reference resamples on the driver;
+above it ONE ``mapInPandas`` pass mixes each Arrow batch on the
+executors (:func:`_trial_partials`).  So ``bootstrap_confidence``,
+``permutation_test`` and ``calibrate_trials`` each evaluate their
+per-doc input (a whole contingency plan) once: in one action under
+the budget, and in two over one cached table above it.
 Randomness is a deterministic mix of (doc hash, trial id) —
 reproducible regardless of partitioning or executor count. The
 per-trial resampling is the Poisson bootstrap (the standard
@@ -53,15 +57,38 @@ def per_doc_contingency(sys_df: DataFrame, gold_df: DataFrame,
 
 MIX_PRIME = 2147483647  # 2^31-1, the shared polynomial-hash modulus
 
+# The driver-side trial budget in docs × trials cells: a per-doc table
+# of at most TRIAL_CELLS // n_trials docs is mixed on the driver
+# (_trial_partials), and multinomial resampling draws its trials in
+# chunks of this many cells.  The mix costs 40–60 ns a cell on one core;
+# the mapInPandas pass splits it over the executors but starts a
+# Python worker (a pass over 500 docs: 0.7 s warm, 2.6–3.1 s cold).
+# Measured on local[4] with warm workers, the two tie at 2·10⁷ cells
+# for 200 and for 2500 trials; the driver takes half the time at
+# 5·10⁶ and 1.3–1.6× as long at 8·10⁷.
+TRIAL_CELLS = 20_000_000
+
 
 def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
                     mode: str, hash_mode: str = "xxhash64",
                     ) -> tuple[np.ndarray, np.ndarray]:
-    """One distributed pass: per partition, vectorized partial sums for
-    all trials plus the plain column sums (the observed matrix, a
-    weight-1 "trial").  Returns ``(trials, observed)``: [n_trials, 8]
-    and [8] (sys1 ptp,fp,rtp,fn, sys2 ...) — one job, so callers never
-    evaluate the per-doc input a second time for the observed score.
+    """Partial sums for all trials plus the plain column sums (the
+    observed matrix, a weight-1 "trial").  Returns ``(trials,
+    observed)``: [n_trials, 8] and [8] (sys1 ptp,fp,rtp,fn, sys2 ...).
+
+    The per-doc table ``(doc_hash, 8 counts)`` comes to the driver in
+    ONE bounded Arrow collect (:func:`_bounded_collect`) when it holds
+    at most ``TRIAL_CELLS // n_trials`` docs, and the trials are mixed
+    there in slices of ``TRIAL_CELLS // 100`` cells — no Python worker,
+    and each numpy temporary ~1.6 MB (smaller slices run no faster).
+    Above that cap ONE ``mapInPandas`` pass computes the same partials
+    per Arrow batch on the executors and the driver sums them.  The
+    projection is persisted for the call, so that pass reads the table
+    the bounded collect cached: either way the per-doc input is
+    evaluated once, and the observed score comes from the same pass as
+    the trials.  The mix is the same code on both paths, so the trials
+    are bit-identical wherever the per-doc counts are integers (sums
+    of integers are exact in float64, whatever their order).
 
     Per-doc randomness seeds from a JVM-side doc hash — no per-row
     (let alone per-byte) Python anywhere in the stats path;
@@ -86,11 +113,10 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
     if hash_mode == "poly":
         from ..functions.textops import token_hash
 
-        joined = joined.withColumn(
-            "doc_hash", token_hash(F.col("docid").cast("string")))
+        doc_hash = token_hash(F.col("docid").cast("string"))
     else:
-        joined = joined.withColumn(
-            "doc_hash", F.xxhash64(F.col("docid").cast("string")))
+        doc_hash = F.xxhash64(F.col("docid").cast("string"))
+    joined = joined.select(doc_hash.alias("doc_hash"), *cols).persist()
 
     def gen(batches):
         for pdf in batches:
@@ -141,13 +167,35 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
                 p2 = np.einsum("dt,dk->tk", w, m2)
             out = np.concatenate([np.hstack([p1, p2]).reshape(n_trials * 8),
                                   m1.sum(axis=0), m2.sum(axis=0)])
-            yield pd.DataFrame({"partial": [out.tolist()]})
+            yield out
 
-    parts = joined.mapInPandas(gen, schema="partial array<double>")
-    total = np.zeros(n_trials * 8 + 8)
-    for r in parts.collect():
-        total += np.asarray(r["partial"])
+    try:
+        pdf = _bounded_collect(joined, TRIAL_CELLS // max(n_trials, 1))
+        if pdf is not None:
+            step = max(1, TRIAL_CELLS // 100 // max(n_trials, 1))
+            parts = gen(pdf.iloc[lo:lo + step]
+                        for lo in range(0, len(pdf), step))
+        else:
+            rows = joined.mapInPandas(
+                lambda it: (pd.DataFrame({"partial": [out.tolist()]})
+                            for out in gen(it)),
+                schema="partial array<double>").collect()
+            parts = (np.asarray(r["partial"]) for r in rows)
+        total = np.zeros(n_trials * 8 + 8)
+        for out in parts:
+            total += out
+    finally:
+        joined.unpersist()
     return total[:-8].reshape(n_trials, 8), total[-8:]
+
+
+def _bounded_collect(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
+    """``df`` on the driver in ONE Arrow collect of at most
+    ``max_rows + 1`` rows (a root-level limit: every partition of
+    ``df`` is computed once and no Python worker starts); None when
+    ``df`` holds more than ``max_rows`` rows."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    return pdf if len(pdf) <= max_rows else None
 
 
 _POISSON_CDF = None
@@ -261,7 +309,7 @@ def calibrate_trials(
     """How many bootstrap trials are enough? (reference
     Confidence.calibrate_trials, significance.py:272-288).
 
-    Runs ONE distributed bootstrap of ``max_trials``, then — driver-side
+    Runs ONE Poisson bootstrap of ``max_trials``, then — driver-side
     on the tiny trial-score vectors — estimates, for each
     (metric, percentile, n), the stdev of the CI bound over
     ``n_resamples`` subsamples of n trials (sampled without
@@ -294,8 +342,9 @@ def calibrate_trials(
 
 # _multinomial_trials collects the per-doc matrix table to the
 # driver; beyond this many docs that is a driver OOM risk, so the
-# call refuses and tells the user to use the distributed Poisson mode
-# (the at-scale default, which never materializes the doc table).
+# call refuses and tells the user to use the Poisson mode (the
+# at-scale default, which mixes trials on the executors once the
+# table outgrows the driver trial budget).
 MULTINOMIAL_MAX_DOCS = 1_000_000
 
 
@@ -311,14 +360,15 @@ def _multinomial_trials(joined: DataFrame, n_trials: int,
     Multinomial(N, 1/N) count vectors and matrix-multiply them into
     per-trial sums; the observed sums come from the same table.
     Returns ``(trials, observed)`` like :func:`_trial_partials`.  Use
-    the default Poisson mode at scale — it never materializes the doc
-    table; this path is BOUNDED at ``MULTINOMIAL_MAX_DOCS`` per-doc
-    rows (≈32 MB of float64 at the bound): it collects at most one row
-    past the bound and raises rather than OOMing the driver."""
+    the default Poisson mode at scale — it runs distributed above the
+    driver trial budget; this path is BOUNDED at
+    ``MULTINOMIAL_MAX_DOCS`` per-doc rows (≈32 MB of float64 at the
+    bound): its collect (:func:`_bounded_collect`) takes at most one
+    row past the bound, and it raises rather than OOMing the driver."""
     cols = ["ptp1", "fp1", "rtp1", "fn1"]
-    pdf = joined.select("docid", *cols) \
-        .limit(MULTINOMIAL_MAX_DOCS + 1).toPandas()
-    if len(pdf) > MULTINOMIAL_MAX_DOCS:
+    pdf = _bounded_collect(joined.select("docid", *cols),
+                           MULTINOMIAL_MAX_DOCS)
+    if pdf is None:
         raise ValueError(
             f"method='multinomial' collects the per-doc table to the "
             f"driver and is bounded at {MULTINOMIAL_MAX_DOCS:,} docs; "
@@ -332,7 +382,7 @@ def _multinomial_trials(joined: DataFrame, n_trials: int,
     if n_docs == 0:
         return out, observed
     rng = np.random.default_rng(seed)
-    chunk = max(1, int(2e7 / max(n_docs, 1)))
+    chunk = max(1, TRIAL_CELLS // n_docs)
     pvals = np.full(n_docs, 1.0 / n_docs)
     for lo in range(0, n_trials, chunk):
         k = min(chunk, n_trials - lo)
@@ -353,16 +403,17 @@ def bootstrap_confidence(
     interpolation on the collected trial scores — tiny, driver-side,
     exactly like the reference).
 
-    ``method="poisson"`` (default): distributed Poisson bootstrap —
-    per-doc weights drawn independently from the (doc-hash, trial)
-    mix; never materializes the doc table.  Asymptotically equivalent
-    to the reference's multinomial resample but not bit-comparable.
-    ``method="multinomial"``: the reference's exact resampling
-    protocol (N docs drawn uniformly with replacement per trial,
-    significance.py:224-234), driver-side — use when cross-checking
-    CI bounds against the reference on fixture-sized inputs.  Either
-    way the per-doc input is evaluated once: the observed score comes
-    from the same pass as the trials."""
+    ``method="poisson"`` (default): Poisson bootstrap — per-doc
+    weights drawn independently from the (doc-hash, trial) mix, on the
+    driver while the doc table fits the trial budget and in one
+    distributed pass above it (:func:`_trial_partials`).
+    Asymptotically equivalent to the reference's multinomial resample
+    but not bit-comparable.  ``method="multinomial"``: the reference's
+    exact resampling protocol (N docs drawn uniformly with replacement
+    per trial, significance.py:224-234), driver-side — use when
+    cross-checking CI bounds against the reference on fixture-sized
+    inputs.  Either way the per-doc input is evaluated once: the
+    observed score comes from the same pass as the trials."""
     joined = _one_system(per_doc)
     if method == "multinomial":
         partials, sums = _multinomial_trials(joined, n_trials, seed)

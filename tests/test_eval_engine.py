@@ -149,23 +149,145 @@ def test_permutation_evaluates_each_input_once(spark):
         m1["fscore"] - m2["fscore"], rel=1e-12)
 
 
+def _executions(spark):
+    """The SQL executions in the status store, oldest first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _across_the_cap(spark, monkeypatch, run):
+    """``run()`` with the driver trial budget at 0 cells (every
+    non-empty per-doc table mixes on the executors) and at 10^9 →
+    ``[(result, trials, observed, MapInPandas executions)]``, distributed
+    first."""
+    from neleval_spark.stats import significance as sig
+
+    real, out = sig._trial_partials, []
+    for cells in (0, 10 ** 9):
+        seen = []
+        monkeypatch.setattr(sig, "TRIAL_CELLS", cells)
+        monkeypatch.setattr(sig, "_trial_partials",
+                            lambda *a, **k: seen.append(real(*a, **k))
+                            or seen[-1])
+        last = max((e.executionId() for e in _executions(spark)),
+                   default=-1)
+        result = run()
+        pandas_runs = sum("MapInPandas" in e.physicalPlanDescription()
+                          for e in _executions(spark)
+                          if e.executionId() > last)
+        (trials, observed), = seen
+        out.append((result, trials, observed, pandas_runs))
+    return out
+
+
+def _assert_same_trials(across, exact):
+    (res0, t0, o0, runs0), (res1, t1, o1, runs1) = across
+    assert runs0 == 1 and runs1 == 0, (runs0, runs1)
+    if exact:
+        assert (t0 == t1).all() and (o0 == o1).all()
+        assert res0 == res1
+    else:
+        assert t0 == pytest.approx(t1, rel=1e-12, abs=0)
+        assert o0 == pytest.approx(o1, rel=1e-12, abs=0)
+
+
+@pytest.mark.parametrize("measure,exact", [("strong_link_match", True),
+                                           ("b_cubed", False)])
+def test_bootstrap_trials_equal_across_the_cap(spark, sides, monkeypatch,
+                                               measure, exact):
+    """The driver-side trial pass gives the distributed pass's trials:
+    bit-identical for integer counts, to 1e-12 for B-cubed's fractions.
+    Below the cap no plan runs a Python worker."""
+    per_doc = per_doc_contingency(*sides, measure).repartition(4)
+    _assert_same_trials(_across_the_cap(
+        spark, monkeypatch,
+        lambda: bootstrap_confidence(per_doc, n_trials=300, seed=5)), exact)
+
+
+@pytest.mark.parametrize("hash_mode", ["xxhash64", "poly"])
+@pytest.mark.parametrize("measure,exact", [("strong_link_match", True),
+                                           ("b_cubed", False)])
+def test_permutation_trials_equal_across_the_cap(spark, sides, monkeypatch,
+                                                 measure, exact, hash_mode):
+    s, g = sides
+    pd1 = per_doc_contingency(s, g, measure).repartition(4)
+    pd2 = per_doc_contingency(g, s, measure).repartition(4)
+    _assert_same_trials(_across_the_cap(
+        spark, monkeypatch,
+        lambda: permutation_test(pd1, pd2, n_trials=300, seed=5,
+                                 hash_mode=hash_mode)), exact)
+
+
+def test_trial_pass_above_the_cap_evaluates_each_input_once(spark,
+                                                            monkeypatch):
+    """Above the driver trial budget the ``mapInPandas`` pass reads the
+    table the bounded collect cached, and the cache is gone after."""
+    from neleval_spark.stats import significance as sig
+
+    monkeypatch.setattr(sig, "TRIAL_CELLS", 0)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    last = max((e.executionId() for e in _executions(spark)), default=-1)
+    per_doc, ticks = _ticking_per_doc(spark, 200, seed=1)
+    bootstrap_confidence(per_doc, n_trials=30)
+    pd1, ticks1 = _ticking_per_doc(spark, 150, seed=2)
+    pd2, ticks2 = _ticking_per_doc(spark, 150, seed=3)
+    permutation_test(pd1, pd2, n_trials=40)
+    assert (ticks.value, ticks1.value, ticks2.value) == (200, 150, 150)
+    assert sum("MapInPandas" in e.physicalPlanDescription()
+               for e in _executions(spark) if e.executionId() > last) == 2
+    assert set(persistent().keys()) == before
+
+
+@pytest.mark.parametrize("measure", ["strong_link_match", "strong_nil_match"])
+def test_per_doc_plan_parses_each_side_once(sides, measure):
+    """A family of one stacks through ``inline`` like any family, so the
+    filter cannot be pushed through the reader's projections: one
+    candidate sort per side in the optimized plan (10 and 6 when a
+    family of one was a plain select)."""
+    plan = per_doc_contingency(*sides, measure)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert plan.count("array_sort(") == 2, plan.count("array_sort(")
+
+
+@pytest.mark.parametrize("lone,companion,weighted", [
+    ("strong_link_match", "strong_nil_match", False),
+    ("overlap-maxmax:is_linked:span", "overlap-maxmax:None:span", False),
+    ("strong_typed_mention_match", "strong_typed_all_match", True),
+])
+def test_family_of_one_equals_stacked(spark, tac14_inputs, lone, companion,
+                                      weighted):
+    """A lone measure (its own family) scores what it scores stacked
+    with a companion of its family, alone and per doc."""
+    s, g = tac14_inputs
+    weighting = None
+    if weighted:
+        weighting = {"type": spark.createDataFrame(
+            [("PER", "ORG", 0.5), ("GPE", "LOC", 0.25)],
+            "gold_type string, sys_type string, weight double")}
+    alone = evaluate(s, g, measures=[lone], weighting=weighting)
+    stacked = evaluate(s, g, measures=[lone, companion], weighting=weighting)
+    assert list(alone) == [lone]
+    assert _close(alone[lone], stacked[lone]), (alone, stacked)
+    spec = get_measure(lone, weighting=weighting)
+    assert _close(_matrix(contingency_df(s, g, spec).first()), alone[lone])
+    per_doc = contingency_df(s, g, spec, ["docid"]) \
+        .agg(*[F.sum(c).alias(c) for c in COUNTS]).first()
+    assert _close(_matrix(per_doc), alone[lone])
+
+
 def _evaluate_observed(spark, s, g, **kw):
     """``evaluate(s, g, **kw)`` → (results, jobs run, ``_k``
     repartitions in the executed plans, RDD ids newly in storage)."""
     sc = spark.sparkContext
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = sc._jsc.sc().listenerBus()
-
-    def executions():
-        bus.waitUntilEmpty()
-        it = store.executionsList().iterator()
-        while it.hasNext():
-            yield it.next()
 
     def stored():
         return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
 
-    last = max((e.executionId() for e in executions()), default=-1)
+    last = max((e.executionId() for e in _executions(spark)), default=-1)
     before = stored()
     # the tree form of the plans, which names each exchange's keys
     spark.conf.set("spark.sql.ui.explainMode", "extended")
@@ -181,7 +303,7 @@ def _evaluate_observed(spark, s, g, **kw):
         len(re.findall(r"- Exchange hashpartitioning\(_k#",
                        e.physicalPlanDescription()
                        .split("== Initial Plan ==")[0]))
-        for e in executions() if e.executionId() > last)
+        for e in _executions(spark) if e.executionId() > last)
     return results, len(jobs), k_exchanges, stored() - before
 
 
