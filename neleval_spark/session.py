@@ -35,6 +35,15 @@ def get_spark(
 
     ``master`` and ``driver_memory`` default to :func:`host_defaults`
     (``local[<cores>]`` and a quarter of physical memory).
+
+    The session turns off PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``): with it on,
+    every ``F.*``/``Column``/``DataFrame`` call walks the Python stack
+    and sets and clears the JVM's current origin, about ten py4j round
+    trips per expression node (11.5k → 3.9k round trips to read two
+    200-doc TSVs and score tac14 on them).  Plans, jobs and results
+    are the same; a DataFrame error keeps its error class and message
+    but its query context no longer names the Python ``file:line``.
     """
     cpus, mem = host_defaults()
     master = master or f"local[{cpus}]"
@@ -56,6 +65,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory or mem)
         .config("spark.ui.enabled", "false")
+        # static: no per-expression stack capture (see the docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # broadcast dims (alias dict, type weights, mappings) aggressively;
         # at 100 TB the fact side never fits but dims stay small
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -113,11 +124,7 @@ def _warm_session(spark: SparkSession) -> None:
     (measured ~1.5-2 s shaved off the first real query on this box,
     r6 OPTIMIZATION notes).  Touches no input data, caches nothing,
     and is bounded (~100k synthetic longs); runs once per session —
-    latency-sensitive services warm Spark the same way.  Opt out with
-    SPARK_GRAFT_NO_WARMUP=1 (e.g. one-shot CLI calls on tiny data
-    where the warm-up would dominate)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP") == "1":
-        return
+    latency-sensitive services warm Spark the same way."""
     if spark.conf.get("spark.neleval.warmed", "0") == "1":
         return
     from pyspark.sql import Window

@@ -22,6 +22,8 @@ def main() -> None:
         SparkSession.builder.appName("neleval_spark_pipeline")
         # html-heavy Arrow batches: see neleval_spark/session.py
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+        # no per-expression stack capture: see neleval_spark/session.py
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     pages = spark.read.parquet(pages_path)

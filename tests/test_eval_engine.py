@@ -308,13 +308,22 @@ def _evaluate_observed(spark, s, g, **kw):
 
 
 @pytest.fixture(scope="module")
-def tac14_inputs(spark, tmp_path_factory):
+def tac14_dir(tmp_path_factory):
     from perfbench.inputs import write_annotations
 
     d = tmp_path_factory.mktemp("tac14")
     write_annotations(str(d), 200, seed=5)
+    return d
+
+
+def _read_sides(spark, d):
     return (read_annotations_tsv(spark, str(d / "system.tsv")),
             read_annotations_tsv(spark, str(d / "gold.tsv")))
+
+
+@pytest.fixture(scope="module")
+def tac14_inputs(spark, tac14_dir):
+    return _read_sides(spark, tac14_dir)
 
 
 @pytest.fixture(scope="module")
@@ -342,6 +351,30 @@ def test_evaluate_releases_its_barrier(spark, tac14_run):
     no RDD it stored is left, and no table is cached."""
     assert tac14_run[3] == set()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_evaluate_tac14_driver_round_trips(spark, tac14_dir, monkeypatch):
+    """Reading both sides and scoring tac14 builds its plans in at
+    most 4,500 py4j round trips (GC deletes aside): 11.5k while every
+    ``F.*``/``Column``/``DataFrame`` call also captured its Python call
+    site in the JVM, 3.9k without.  The debugging flag is cached per
+    process; clearing it makes the call re-read the session's conf."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors import utils
+
+    send = ClientServerConnection.send_command
+    sent = 0
+
+    def counted(self, command):
+        nonlocal sent
+        sent += not command.startswith("m\nd")
+        return send(self, command)
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    evaluate(*_read_sides(spark, tac14_dir), measures="tac14")
+    monkeypatch.undo()
+    assert sent <= 4500, sent
 
 
 def test_grouped_evaluate_collects_group_values_in_the_same_action(

@@ -9,10 +9,11 @@ import pytest
 
 EXAMPLES = "/root/reference/neleval/examples"
 
-pytestmark = pytest.mark.skipif(
+needs_examples = pytest.mark.skipif(
     not os.path.isdir(EXAMPLES), reason="reference fixtures not present")
 
 
+@needs_examples
 @pytest.mark.parametrize(
     "links,queries,combined",
     [
@@ -35,6 +36,7 @@ def test_tac_prepare_golden(spark, links, queries, combined):
     assert sorted(lines) == sorted(expected)
 
 
+@needs_examples
 def test_tsv_read_write_roundtrip(spark):
     """Read ↔ write round-trip (reference: test.py:69-72)."""
     from neleval_spark.sources.tsv import (

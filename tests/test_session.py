@@ -1,4 +1,5 @@
-"""Session defaults: the core count and driver heap fit the host."""
+"""Session defaults: the core count and driver heap fit the host, and
+DataFrame calls capture no Python call site."""
 
 import os
 
@@ -16,3 +17,14 @@ def test_host_defaults_fit_the_host():
 def test_host_defaults_env_overrides():
     assert host_defaults({"SPARK_GRAFT_CPUS": "3",
                           "SPARK_GRAFT_MEM": "5g"}) == ("3", "5g")
+
+
+def test_session_captures_no_call_sites(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-expression stack capture;
+    the flag is cached per process, so clear it to re-read the conf."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
