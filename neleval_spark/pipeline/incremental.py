@@ -16,16 +16,25 @@ tests/test_incremental.py equality tests), at the cost of the
 changed fraction, not the corpus.
 
 Scale shape: the diff is one full-outer join on url over two
-(url, xxhash64) projections (sub-page-width rows); the reuse path is
-one left-semi join of the stored mention table against the unchanged
-url set; only changed+added pages enter the mapInPandas stages.  At
+(url, xxhash64) projections (sub-page-width rows), written ONCE per
+step as a (url, status) scratch snapshot, so each generation's html is
+read and hashed once whatever reads the diff.  The fresh-page
+selection and the reuse of stored mentions (and through it the NIL-key
+CC collect and the sink) semi-join against that snapshot's scan, which
+the planner sizes from its files: while the url set fits under the
+broadcast threshold each semi-join is a static broadcast join, and
+neither pages nor stored mentions are shuffled.  A live join would be
+sized as the product of its inputs and planned as a sort-merge join,
+shuffling the wide side first.  Past the threshold (crawl scale) the
+semi-joins are sort-merge joins again, with the html still hashed
+once.  Only changed+added pages enter the mapInPandas stages.  At
 crawl scale the changed fraction per generation is typically a few
-percent — this converts the dominant Python-stage cost to
-O(churn), while the relational tail (canonicalize + triple sink)
-stays O(corpus) but cheap: below the driver-CC cap the NIL labels are
-one projection of a broadcast CC result (no shuffle of the mention
-side), and the sink bucket count is sized from the merged mention
-scans, so a small generation writes one file.  Pair with
+percent — this converts the dominant Python-stage cost to O(churn),
+while the relational tail (canonicalize + triple sink) stays O(corpus)
+but cheap: below the driver-CC cap the NIL labels are one projection
+of a broadcast CC result (no shuffle of the mention side), and the
+sink bucket count is sized from the merged mention scans, so a small
+generation writes one file.  Pair with
 :func:`~neleval_spark.pipeline.triples.merge_kg` when maintaining
 the aggregated KG instead of re-emitting witness triples.
 """
@@ -37,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.corpusops import crawl_diff
 from .canonicalize import canonicalize_nils
-from .run import build_mentions
+from .run import _materialize, build_mentions
 from .triples import emit_triples, sink_buckets
 
 __all__ = ["page_diff", "incremental_linked", "incremental_triples"]
@@ -63,8 +72,15 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
     pipeline only on changed+added pages.  ``prev_linked`` must be
     the stored ``build_mentions(..., canonicalize=False)`` output of
     the PREVIOUS generation.  Removed urls drop out by construction
-    (they are in neither the unchanged set nor the new pages)."""
-    d = page_diff(pages_prev, pages_new)
+    (they are in neither the unchanged set nor the new pages).
+
+    The returned frame reads two scratch snapshots, listed in its
+    ``_materialized_deps``: the (url, status) diff and the fresh
+    pages' linked mentions.  Free them with
+    :func:`~.run.release_materialized` once every action over the frame
+    has run."""
+    d = _materialize(page_diff(pages_prev, pages_new)
+                     .select("url", "status"))
     unchanged = d.where(F.col("status") == "unchanged").select("url")
     todo = d.where(F.col("status").isin("added", "changed")) \
         .select("url")
@@ -73,9 +89,7 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
     fresh = build_mentions(fresh_pages, kb, canonicalize=False,
                            **build_kw)
     out = kept.unionByName(fresh)
-    # propagate the fresh path's materialization handle for lifetime
-    # managers (streaming ingest frees per batch)
-    out._materialized_deps = getattr(fresh, "_materialized_deps", [])
+    out._materialized_deps = [d, *fresh._materialized_deps]
     return out
 
 
@@ -91,8 +105,22 @@ def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
     ``n_buckets`` defaults to :func:`~.triples.sink_buckets` of the
     merged PRE-canonicalization mentions, whose estimate is the
     ``prev_linked`` scan plus the fresh snapshot (the canonicalized
-    plan joins a local-rows CC result of unknown size)."""
+    plan joins a local-rows CC result of unknown size).
+
+    The returned frame carries the step's scratch snapshots in
+    ``_materialized_deps`` (see :func:`incremental_linked`).  They stay
+    on disk until released — the per-process default scratch root is
+    removed at exit, a ``spark.neleval.scratchDir`` is not — so a
+    caller that runs many steps frees them after the write::
+
+        t = incremental_triples(prev, new, prev_linked, kb)
+        write_triples(t, out, run_id=run)
+        for h in t._materialized_deps:
+            release_materialized(h)
+    """
     linked = incremental_linked(pages_prev, pages_new, prev_linked,
                                 kb, **build_kw)
-    return emit_triples(canonicalize_nils(linked),
-                        n_buckets=n_buckets or sink_buckets(linked))
+    out = emit_triples(canonicalize_nils(linked),
+                       n_buckets=n_buckets or sink_buckets(linked))
+    out._materialized_deps = linked._materialized_deps
+    return out

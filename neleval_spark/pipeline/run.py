@@ -114,7 +114,9 @@ def _materialize(df: DataFrame) -> DataFrame:
         or _process_scratch_root()
     path = os.path.join(base, f"neleval_mat_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
+    # read back with the schema just written: a bare read would start
+    # a parquet footer-inference job on every call
+    out = spark.read.schema(df.schema).parquet(path)
     out._scratch_dir = path
     return out
 

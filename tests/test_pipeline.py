@@ -334,6 +334,45 @@ def test_sink_buckets_sized_from_input(spark, tmp_path):
             assert len(files) == 1, files
 
 
+def test_materialize_reads_back_what_it_wrote(spark, tmp_path):
+    """A scratch snapshot has the column names, types and rows of the
+    frame it was written from, nested candidates and a timestamp
+    included, and costs the jobs of the write alone (reading it back
+    through parquet schema inference was one job more)."""
+    import datetime
+
+    from neleval_spark.pipeline.run import (
+        _materialize, release_materialized)
+
+    df = spark.createDataFrame(
+        [("u1", datetime.datetime(2024, 5, 1, 12, 30),
+          [("E1", 0.5, "PER"), ("E2", 0.25, "ORG")]),
+         ("u2", None, [])],
+        "url string, warc_ts timestamp, "
+        "candidates array<struct<eid:string,score:double,type:string>>")
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, bare = jobs("materialize-bare-write",
+                   lambda: df.write.parquet(str(tmp_path / "bare")))
+    snap, n = jobs("materialize-snapshot", lambda: _materialize(df))
+    try:
+        assert [(f.name, f.dataType) for f in snap.schema] == \
+            [(f.name, f.dataType) for f in df.schema]
+        assert snap.orderBy("url").collect() == df.orderBy("url").collect()
+    finally:
+        release_materialized(snap)
+    assert n == bare, (n, bare)
+
+
 def test_canonicalize_hub_surface_skew(spark):
     """Hub-entity skew (north_rule): one NIL surface appearing in a
     large share of all documents must not blow up canonicalization.
