@@ -805,20 +805,6 @@ def cmd_compact_sink(args):
                       "out": args.triples}))
 
 
-def cmd_entity_salience(args):
-    """PageRank-based salience over an emitted triple sink (the
-    graph-analytics layer on top of run-pipeline/stream output)."""
-    from .graph.pagerank import entity_salience
-    from .pipeline.triples import read_triples
-
-    spark = _spark()
-    triples = read_triples(spark, args.triples)
-    out = entity_salience(triples, top_k=args.top)
-    print("entity\tsalience")
-    for r in out.collect():
-        print(f"{r['entity']}\t{r['salience']:.6f}")
-
-
 def cmd_curate(args):
     """Corpus-curation funnel over a parquet documents table
     (doc_id, text, lang, source, ...): C4-style heuristic line/doc
@@ -1019,75 +1005,6 @@ def cmd_curate(args):
         d.write.mode("overwrite").parquet(args.out)
     funnel["out"] = spark.read.parquet(args.out).count()
     print(json.dumps({"funnel": funnel, "out_path": args.out}))
-
-
-def cmd_graph_corpus(args):
-    """Graph-embedding training data from an edge list parquet
-    (src, dst): deterministic walks (DeepWalk, or node2vec when any
-    bias weight differs from 1) → skip-gram (center, context) pairs
-    → filtered TransE negatives.  Writes three parquet tables under
-    --out (walks/, pairs/, negatives/) and a JSON row-count summary
-    to stdout.  Everything is a pure function of the edge list —
-    re-runs rebuild identical corpora."""
-    from pyspark.sql import functions as F
-
-    from .functions.textops import skipgram_pairs
-    from .graph.negatives import negative_samples
-    from .graph.walks import node2vec_walks, random_walks
-
-    spark = _spark()
-    edges = spark.read.parquet(args.edges).select("src", "dst")
-
-    n_kcore = None
-    if args.kcore:
-        # prune the stray-mention periphery BEFORE walk generation:
-        # 1-shell vertices dominate walk starts but carry no
-        # co-occurrence signal (graph/kcore.py).  kcore() returns
-        # the normalized a<b undirected edges — symmetrize so every
-        # surviving vertex starts walks (the walk ops read src→dst)
-        from .graph.kcore import kcore
-
-        core = kcore(edges, args.kcore)
-        n_kcore = core.count()
-        edges = (core.select(F.col("a").alias("src"),
-                             F.col("b").alias("dst"))
-                 .unionByName(core.select(
-                     F.col("b").alias("src"), F.col("a").alias("dst"))))
-
-    biased = not (args.w_return == args.w_near == args.w_far == 1)
-    if biased:
-        walks = node2vec_walks(
-            edges, walk_len=args.walk_len, n_walks=args.n_walks,
-            w_return=args.w_return, w_near=args.w_near,
-            w_far=args.w_far, max_degree=args.max_degree or None)
-    else:
-        walks = random_walks(edges, walk_len=args.walk_len,
-                             n_walks=args.n_walks)
-    walks.write.mode("overwrite").parquet(f"{args.out}/walks")
-    walks = spark.read.parquet(f"{args.out}/walks")
-
-    corpus = walks.select(
-        "node", F.array_join("path", " ").alias("text"))
-    # whitespace tokenizer: node ids must survive verbatim (the text
-    # tokenizer would lowercase and split ids like Barack_Obama)
-    pairs = skipgram_pairs(corpus, id_col="node",
-                           window=args.window,
-                           tokenizer="whitespace")
-    pairs.write.mode("overwrite").parquet(f"{args.out}/pairs")
-
-    triples = edges.select(F.col("src").alias("subj"),
-                           F.lit("edge").alias("pred"),
-                           F.col("dst").alias("obj")).distinct()
-    neg = negative_samples(triples, n_neg=args.n_neg)
-    neg.write.mode("overwrite").parquet(f"{args.out}/negatives")
-
-    print(json.dumps({
-        "walks": spark.read.parquet(f"{args.out}/walks").count(),
-        "pairs": spark.read.parquet(f"{args.out}/pairs").count(),
-        "negatives":
-            spark.read.parquet(f"{args.out}/negatives").count(),
-        "kcore_edges": n_kcore,
-        "biased": biased, "out_path": args.out}))
 
 
 def cmd_resolve_entities(args):
@@ -1292,42 +1209,6 @@ def cmd_distant_label(args):
         summary["patterns_out"] = args.patterns_out
         summary["patterns"] = (
             spark.read.parquet(args.patterns_out).count())
-    print(json.dumps(summary))
-
-
-def cmd_taxonomy_closure(args):
-    """Schema-level taxonomy closure: a parquet is-a edge table
-    (child, parent) → the full (node, ancestor, depth) transitive
-    closure at minimum hop distance (graph/taxonomy.taxonomy_closure,
-    min-plus path doubling — the distributed generalization of the
-    reference's weights-for-hierarchy recursion,
-    neleval/prepare.py:107-145), written as parquet.  With
-    --instances, additionally expands an (entity, type) instance
-    table through the closure (graph/taxonomy.infer_types) via a
-    broadcast join — the instance side is never shuffled."""
-    from .graph.taxonomy import infer_types, taxonomy_closure
-
-    if args.instances and not args.types_out:
-        raise SystemExit(
-            "taxonomy-closure: --instances requires --types-out")
-    spark = _spark()
-    edges = spark.read.parquet(args.edges)
-    stats = {}
-    closure = taxonomy_closure(
-        edges, child=args.child_col, parent=args.parent_col,
-        max_depth=args.max_depth, stats=stats)
-    closure.write.mode("overwrite").parquet(args.out)
-    closure = spark.read.parquet(args.out)
-    summary = {"out_path": args.out, **stats}
-    if args.instances:
-        inst = spark.read.parquet(args.instances)
-        typed = infer_types(inst, closure,
-                            entity=args.entity_col,
-                            type_col=args.type_col)
-        typed.write.mode("overwrite").parquet(args.types_out)
-        summary["types_out"] = args.types_out
-        summary["typed_rows"] = (
-            spark.read.parquet(args.types_out).count())
     print(json.dumps(summary))
 
 
@@ -1754,10 +1635,6 @@ def main(argv=None):
         sp.add_argument("--checkpoint",
                         help="stream checkpoint dir (default "
                              "<out>/_checkpoint; pair 1:1 with out)")))
-    add("entity-salience", cmd_entity_salience, lambda sp: (
-        sp.add_argument("triples",
-                        help="triple sink dir (run-pipeline -o)"),
-        sp.add_argument("--top", type=int, default=20)))
     add("compact-sink", cmd_compact_sink, lambda sp: (
         sp.add_argument("triples",
                         help="triple sink dir to compact into one run"),
@@ -1850,34 +1727,6 @@ def main(argv=None):
                              "exactly-balanced shards per split, one "
                              "parquet file per shard in read order "
                              "(0 = stage off)")))
-    add("graph-corpus", cmd_graph_corpus, lambda sp: (
-        sp.add_argument("edges",
-                        help="parquet edge list (src, dst)"),
-        sp.add_argument("-o", "--out", required=True),
-        sp.add_argument("--kcore", type=int, default=0,
-                        help="prune to the k-core before walk "
-                             "generation (strip stray-mention "
-                             "periphery; 0 = stage off)"),
-        sp.add_argument("--walk-len", type=int, default=5,
-                        dest="walk_len"),
-        sp.add_argument("--n-walks", type=int, default=4,
-                        dest="n_walks"),
-        sp.add_argument("--window", type=int, default=2,
-                        help="skip-gram context window"),
-        sp.add_argument("--n-neg", type=int, default=4,
-                        dest="n_neg"),
-        sp.add_argument("--w-return", type=int, default=1,
-                        dest="w_return",
-                        help="node2vec 1/p as an integer weight"),
-        sp.add_argument("--w-near", type=int, default=1,
-                        dest="w_near"),
-        sp.add_argument("--w-far", type=int, default=1,
-                        dest="w_far",
-                        help="node2vec 1/q as an integer weight"),
-        sp.add_argument("--max-degree", type=int, default=0,
-                        dest="max_degree",
-                        help="cap biased-walk candidates per node "
-                             "(0 = uncapped)")))
     add("resolve-entities", cmd_resolve_entities, lambda sp: (
         sp.add_argument("names",
                         help="parquet name table (id, name)"),
@@ -1965,27 +1814,6 @@ def main(argv=None):
                         dest="min_support"),
         sp.add_argument("--max-gap", type=int, default=80,
                         dest="max_gap")))
-    add("taxonomy-closure", cmd_taxonomy_closure, lambda sp: (
-        sp.add_argument("edges",
-                        help="parquet is-a edge table "
-                             "(child, parent)"),
-        sp.add_argument("-o", "--out", required=True),
-        sp.add_argument("--child-col", default="child",
-                        dest="child_col"),
-        sp.add_argument("--parent-col", default="parent",
-                        dest="parent_col"),
-        sp.add_argument("--max-depth", type=int, default=32,
-                        dest="max_depth"),
-        sp.add_argument("--instances",
-                        help="optional (entity, type) parquet to "
-                             "expand through the closure"),
-        sp.add_argument("--types-out", dest="types_out",
-                        help="output path for the expanded types "
-                             "(required with --instances)"),
-        sp.add_argument("--entity-col", default="entity",
-                        dest="entity_col"),
-        sp.add_argument("--type-col", default="type",
-                        dest="type_col")))
     add("chain-mentions", cmd_chain_mentions, lambda sp: (
         sp.add_argument("mentions",
                         help="parquet mention table "

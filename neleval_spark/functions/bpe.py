@@ -19,8 +19,8 @@ dict, kept relational:
   greedy left-to-right non-overlapping (the reference semantics:
   ``aaa`` under merge (a,a) → ``[aa, a]``), as an in-row fold.
 * :func:`bpe_train` — the driver loop: argmax pair → merge →
-  repeat.  One ``.first()`` per iteration (a single row — the same
-  driver-scalar-per-iteration shape as pagerank's dangling mass);
+  repeat.  One ``.first()`` per iteration (a single row: one
+  driver scalar per iteration);
   intermediate word tables are cached and unpersisted pairwise so
   ``n_merges`` iterations never stack lineage or leak cache entries.
 

@@ -626,46 +626,6 @@ def latest_snapshot(pages: DataFrame, key: str = "url",
                                 for c in others])
 
 
-def crawl_diff(old: DataFrame, new: DataFrame, key: str = "url",
-               content_col: str = "content_hash") -> DataFrame:
-    """Snapshot churn between two crawls: per-``key`` status
-    ``added`` / ``removed`` / ``changed`` / ``unchanged``.
-
-    The forward complement of ``latest_snapshot``: where that op
-    collapses recrawls, this one *compares* two crawl generations so
-    a scheduler can prioritize churning hosts and skip static ones
-    (public-knowledge recrawl-policy practice; no reference
-    counterpart — the reference is an evaluation engine).
-
-    Inputs must be one row per ``key`` (run ``latest_snapshot``
-    first when they aren't).  ``content_col`` is whatever identity
-    proxy the caller trusts — a stored digest, or
-    ``xxhash64(html)`` computed on the way in.
-
-    Scale shape: ONE full-outer join on ``key``.  That join is
-    inherent to the semantics; url keys are near-unique so there is
-    no skew to guard, and when both generations live in the bucketed
-    layout (sources/bucketed.py, bucket-by-url) the SMJ runs with
-    ZERO exchange.  Output is narrow (key, status, both hashes) —
-    project page bodies away before calling, not after.
-    """
-    o = old.select(F.col(key).alias(key),
-                   F.col(content_col).alias("old_content"),
-                   F.lit(True).alias("_in_old"))
-    n = new.select(F.col(key).alias(key),
-                   F.col(content_col).alias("new_content"),
-                   F.lit(True).alias("_in_new"))
-    j = o.join(n, key, "full_outer")
-    status = (
-        F.when(F.col("_in_old").isNull(), F.lit("added"))
-         .when(F.col("_in_new").isNull(), F.lit("removed"))
-         .when(F.col("old_content").eqNullSafe(F.col("new_content")),
-               F.lit("unchanged"))
-         .otherwise(F.lit("changed")))
-    return j.select(key, status.alias("status"),
-                    "old_content", "new_content")
-
-
 def snapshot_intervals(pages: DataFrame, key="url",
                        ts: str = "warc_ts",
                        value_col: str = "content_hash",
@@ -673,14 +633,14 @@ def snapshot_intervals(pages: DataFrame, key="url",
                        open_end_ms: int = -1) -> DataFrame:
     """Validity intervals from a full crawl history (SCD-2 over
     snapshots; the N-generation generalization of the two-generation
-    :func:`crawl_diff`): collapse each ``key``'s consecutive run of
-    an identical ``value_col`` into ONE row ``(key, value,
-    valid_from_ms, valid_to_ms, n_snapshots)`` — "this url served
-    THIS content from t1 until t2".  Temporal-KG construction reads
-    these as triple validity intervals; recrawl schedulers read run
-    lengths as churn rates.  The open (current) run gets
-    ``valid_to_ms = open_end_ms`` (a pinned sentinel, not NULL — the
-    crawl_diff convention).
+    :func:`~neleval_spark.pipeline.incremental.crawl_diff`): collapse
+    each ``key``'s consecutive run of an identical ``value_col`` into
+    ONE row ``(key, value, valid_from_ms, valid_to_ms, n_snapshots)``
+    — "this url served THIS content from t1 until t2".  Temporal-KG
+    construction reads these as triple validity intervals; recrawl
+    schedulers read run lengths as churn rates.  The open (current)
+    run gets ``valid_to_ms = open_end_ms`` (a pinned sentinel, not
+    NULL — the crawl_diff convention).
 
     Gaps-and-islands WITHOUT the groupBy: run STARTS are detected
     with ``lag`` (null-safe — a NULL value is a run like any other),

@@ -1,12 +1,11 @@
 """Web link-graph construction from raw html — hyperlink
-extraction, URL canonicalization, host-level edge aggregation, and
-host authority (PageRank over the host graph).
+extraction, URL canonicalization and host-level edge aggregation.
 
 No reference counterpart (wikilinks/neleval is evaluation-side);
 this is the public-knowledge web-curation step that turns the
 BASELINE.json input table (url, warc_ts, html, ...) into the graph
-signals a KG-construction pipeline needs: which hosts link to which,
-and which hosts carry authority.
+signals a KG-construction pipeline needs: which hosts link to
+which.
 
 Spark-first design — every step below is a JVM column expression
 (regexp / array / higher-order functions; the scalar/regexp parts
@@ -359,19 +358,3 @@ def host_cocitation(links: DataFrame, min_count: int = 1,
     if min_count > 1:
         out = out.where(F.col("n_pages") >= min_count)
     return out
-
-
-def host_authority(pages: DataFrame, url: str = "url",
-                   html: str = "html", **pagerank_kwargs) -> DataFrame:
-    """Host-level authority: PageRank over the host link graph,
-    link-count-weighted.  Returns (vertex, rank) — one row per host.
-
-    Composition of extract_links → host_edges → graph.pagerank
-    (weight=n_links): per-iteration cost is one equi-join + one
-    aggregation over the HOST graph, which is orders of magnitude
-    smaller than the page table."""
-    from ..graph.pagerank import pagerank
-
-    edges = host_edges(extract_links(pages, url=url, html=html))
-    return pagerank(edges, src="src_host", dst="dst_host",
-                    weight="n_links", **pagerank_kwargs)

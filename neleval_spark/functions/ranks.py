@@ -10,9 +10,7 @@ across partitionings and engines (the hash is the shared
 polynomial), and equal to DuckDB's
 ``row_number() OVER (PARTITION BY group ORDER BY h % n_sub, h, tb)``.
 
-Consumers: graph/negatives.entity_ids (ungrouped, over the entity
-vocabulary), graph/walks.indexed_edges (grouped by src, hashed on
-the whole edge), corpusops.contrastive_pairs (grouped by cluster).
+Consumer: corpusops.contrastive_pairs (grouped by cluster).
 """
 
 from __future__ import annotations

@@ -17,8 +17,7 @@ query this is all waste: only the query's own terms matter.  Here:
   the filter lambdas evaluate as interpreted JVM expressions);
 * corpus statistics (N, avgdl, per-term document frequencies) are
   ONE 1-row aggregate with map-side partials, broadcast back via a
-  1×1 cross join (the same in-plan-scalar pattern as pagerank's
-  dangling mass — no driver collect);
+  1×1 cross join (an in-plan scalar — no driver collect);
 * the result is a ``TakeOrderedAndProject`` top-k, never a global
   sort.
 

@@ -44,8 +44,7 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int,
     sets.  Because it is also the API a naive caller reaches for
     first, it refuses to run when ``|queries| × |candidates|``
     exceeds ``max_pairs`` (two count jobs, metadata-cheap on file
-    sources) and points at the scale paths instead: same refuse-
-    cartesian stance as ``graph.pattern.match_pattern``.  Pass
+    sources) and points at the scale paths instead.  Pass
     ``max_pairs=None`` to skip the guard (and the counts) when the
     cross product is intended, e.g. inside a recall harness."""
     if max_pairs is not None:

@@ -810,11 +810,7 @@ def skipgram_pairs(docs: DataFrame, text_col: str = "text",
     of the graph's vocabulary.
 
     Works on any whitespace-joinable sequence corpus: documents
-    directly, or DeepWalk paths via
-    ``walks.select("node", F.array_join("path", " ").alias("text"))``
-    — which together with ``graph/negatives.py`` completes the
-    graph-embedding training-data path (walk → skip-gram pairs →
-    negatives).
+    directly, or graph walks joined into one string per walk.
 
     Scale shape (10^12 docs): pair expansion is IN-ROW (transform
     over an index sequence on the staged token array — bounded by

@@ -1,12 +1,1 @@
-from .associations import association_scores  # noqa: F401
 from .connected_components import connected_components  # noqa: F401
-from .hits import hits  # noqa: F401
-from .label_propagation import (  # noqa: F401
-    entity_communities, label_propagation)
-from .neighborhood import (  # noqa: F401
-    cooccurrence_edges, k_hop_neighbors)
-from .redirects import resolve_redirect_chains  # noqa: F401
-from .taxonomy import infer_types, taxonomy_closure  # noqa: F401
-from .pagerank import (  # noqa: F401
-    entity_salience, pagerank, related_entities)
-from .triangles import triangle_count  # noqa: F401

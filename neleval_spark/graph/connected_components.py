@@ -142,8 +142,8 @@ def connected_components(
             rows = [(v, comp_min[uf.find(v)]) for v in uf.parent]
             return F.broadcast(edges.sparkSession.createDataFrame(
                 rows, "vertex string, component string"))
-    # distributed path: LAZY checkpoints throughout (the r6
-    # one-job-per-round discipline, see pagerank.py).  Only the
+    # distributed path: LAZY checkpoints throughout, so each round
+    # costs one job (its signature collect).  Only the
     # topmost marked RDD of an action is checkpoint-finalized, so e0's
     # and vertices' checkpoints never truncate lineage; what they buy
     # is localCheckpoint's implicit MEMORY_AND_DISK persist — the

@@ -1,4 +1,3 @@
-from .asof import asof_join  # noqa: F401
 from .normalize import (  # noqa: F401
     derive_mention_columns,
     field_col,

@@ -9,9 +9,9 @@ footballer, not the politician).  This is the one-round, deterministic
 core of the AIDA / TagMe / Ratinov "global coherence" family
 (Hoffart et al. EMNLP 2011; Ferragina & Scaiella CIKM 2010): each
 mention's candidates collect votes from the OTHER mentions' prior
-winners through an entity-relatedness edge table (e.g.
-graph/neighborhood.cooccurrence_edges over the KG the pipeline
-itself emitted — the construction loop feeding back into linking).
+winners through an entity-relatedness edge table (e.g. sentence
+co-occurrence pairs from the KG the pipeline itself emitted — the
+construction loop feeding back into linking).
 
 All arithmetic is exact BIGINT (priors are counts — e.g.
 functions/linkgraph.anchor_priors — and votes are counts; the blend
@@ -59,10 +59,9 @@ def rerank_by_coherence(
     ``candidates``: (url, mention_id, eid, prior) rows — the full
     per-mention candidate lists with INTEGER priors (counts, e.g.
     anchor-text frequencies).  ``edges``: symmetric (src, dst)
-    entity-relatedness pairs (feed
-    ``graph/neighborhood.cooccurrence_edges`` output; must already
-    contain both directions).  ``alpha_ppm``: prior weight in parts
-    per million — ``combined = alpha·prior + (1e6−alpha)·votes``,
+    entity-relatedness pairs (e.g. entities that share a sentence;
+    must already contain both directions).  ``alpha_ppm``: prior
+    weight in parts per million — ``combined = alpha·prior + (1e6−alpha)·votes``,
     where ``votes`` counts the OTHER mentions in the document whose
     prior-winning entity is adjacent to the candidate.
 

@@ -44,12 +44,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.corpusops import crawl_diff
 from .canonicalize import canonicalize_nils
 from .run import _materialize, build_mentions
 from .triples import emit_triples, sink_buckets
 
-__all__ = ["page_diff", "incremental_linked", "incremental_triples"]
+__all__ = ["crawl_diff", "page_diff", "incremental_linked",
+           "incremental_triples"]
+
+
+def crawl_diff(old: DataFrame, new: DataFrame, key: str = "url",
+               content_col: str = "content_hash") -> DataFrame:
+    """Snapshot churn between two crawls: per-``key`` status
+    ``added`` / ``removed`` / ``changed`` / ``unchanged``.
+
+    The forward complement of ``corpusops.latest_snapshot``: where
+    that op collapses recrawls, this one *compares* two crawl
+    generations so a scheduler can prioritize churning hosts and skip
+    static ones (public-knowledge recrawl-policy practice; no
+    reference counterpart — the reference is an evaluation engine).
+
+    Inputs must be one row per ``key`` (run ``latest_snapshot``
+    first when they aren't).  ``content_col`` is whatever identity
+    proxy the caller trusts — a stored digest, or
+    ``xxhash64(html)`` computed on the way in.
+
+    Scale shape: ONE full-outer join on ``key``.  That join is
+    inherent to the semantics; url keys are near-unique so there is
+    no skew to guard, and when both generations live in the bucketed
+    layout (sources/bucketed.py, bucket-by-url) the SMJ runs with
+    ZERO exchange.  Output is narrow (key, status, both hashes) —
+    project page bodies away before calling, not after.
+    """
+    o = old.select(F.col(key).alias(key),
+                   F.col(content_col).alias("old_content"),
+                   F.lit(True).alias("_in_old"))
+    n = new.select(F.col(key).alias(key),
+                   F.col(content_col).alias("new_content"),
+                   F.lit(True).alias("_in_new"))
+    j = o.join(n, key, "full_outer")
+    status = (
+        F.when(F.col("_in_old").isNull(), F.lit("added"))
+         .when(F.col("_in_new").isNull(), F.lit("removed"))
+         .when(F.col("old_content").eqNullSafe(F.col("new_content")),
+               F.lit("unchanged"))
+         .otherwise(F.lit("changed")))
+    return j.select(key, status.alias("status"),
+                    "old_content", "new_content")
 
 
 def page_diff(pages_prev: DataFrame, pages_new: DataFrame,
@@ -65,8 +105,8 @@ def page_diff(pages_prev: DataFrame, pages_new: DataFrame,
 
 
 def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
-                       prev_linked: DataFrame, kb: DataFrame,
-                       **build_kw) -> DataFrame:
+                       prev_linked: DataFrame, kb: DataFrame
+                       ) -> DataFrame:
     """Linked (pre-canonicalization) mentions for the NEW generation:
     reuse ``prev_linked`` rows for byte-unchanged urls, run the real
     pipeline only on changed+added pages.  ``prev_linked`` must be
@@ -86,8 +126,7 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
         .select("url")
     kept = prev_linked.join(unchanged, "url", "left_semi")
     fresh_pages = pages_new.join(todo, "url", "left_semi")
-    fresh = build_mentions(fresh_pages, kb, canonicalize=False,
-                           **build_kw)
+    fresh = build_mentions(fresh_pages, kb, canonicalize=False)
     out = kept.unionByName(fresh)
     out._materialized_deps = [d, *fresh._materialized_deps]
     return out
@@ -95,8 +134,7 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
 
 def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
                         prev_linked: DataFrame, kb: DataFrame,
-                        n_buckets: int | None = None,
-                        **build_kw) -> DataFrame:
+                        n_buckets: int | None = None) -> DataFrame:
     """Full incremental step: reuse + recompute linked mentions, then
     re-run the two global (cheap, relational) stages — NIL
     canonicalization and the triple sink — over the merged set.
@@ -118,8 +156,7 @@ def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
         for h in t._materialized_deps:
             release_materialized(h)
     """
-    linked = incremental_linked(pages_prev, pages_new, prev_linked,
-                                kb, **build_kw)
+    linked = incremental_linked(pages_prev, pages_new, prev_linked, kb)
     out = emit_triples(canonicalize_nils(linked),
                        n_buckets=n_buckets or sink_buckets(linked))
     out._materialized_deps = linked._materialized_deps

@@ -7,9 +7,9 @@ types follow a characteristic distribution learned from the KG
 itself — `born_in` objects are places, `works_at` objects are
 organizations — so an emitted triple whose object type is RARE for
 its predicate is statistically implausible and a likely extraction
-error.  This composes directly with graph/taxonomy.infer_types: feed
-the inherited (entity, type) table and the signature generalizes
-over the taxonomy instead of memorizing leaf types.
+error.  Fed an (entity, type) table that already carries inherited
+ancestor types, the signature generalizes over the taxonomy instead
+of memorizing leaf types.
 
 All scores are exact integers (parts-per-``denom`` by BIGINT
 division), so thresholds never compare floats and the DuckDB oracle
@@ -48,10 +48,10 @@ def predicate_type_signature(
 
     ``triples``: (subj, pred, obj) — deduplicated here so a repeated
     assertion cannot inflate its own plausibility.  ``types``:
-    (entity, type) rows, e.g. asserted types or
-    graph/taxonomy.infer_types output (multi-typed entities
-    contribute one count per type).  ``side``: which end of the
-    triple the signature describes ("obj" or "subj").
+    (entity, type) rows, e.g. asserted or inherited types
+    (multi-typed entities contribute one count per type).  ``side``:
+    which end of the triple the signature describes ("obj" or
+    "subj").
 
     Returns (pred, type, support, pred_total): ``support`` = number
     of distinct triples with that predicate whose ``side`` entity

@@ -20,13 +20,10 @@ from pyspark.sql import functions as F
 
 from .candidates import generate_candidates, score_and_select
 from .canonicalize import canonicalize_nils
-from .extract import with_extracted_text
-from .ner import detect_mentions
 from .triples import emit_triples, sink_buckets
 
 
 def build_mentions(pages: DataFrame, kb: DataFrame,
-                   use_stored_text: bool = False,
                    dedupe_snapshots: bool = False,
                    canonicalize: bool = True) -> DataFrame:
     """web_pages + alias dict → linked, canonicalized mentions.
@@ -57,11 +54,8 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     # known names are found by longest-match even where the casing
     # heuristics alone would hesitate
     gaz = gazetteer_from_kb(kb)
-    if use_stored_text:
-        mentions = detect_mentions(pages, gazetteer=gaz)
-    else:
-        # extraction + NER fused into one Python hop (see ner.py)
-        mentions = extract_and_detect(pages, gazetteer=gaz)
+    # extraction + NER fused into one Python hop (see ner.py)
+    mentions = extract_and_detect(pages, gazetteer=gaz)
     # candidate gen (broadcast join — no shuffle) and the
     # context-feature projection run in the SAME stage as NER, so the
     # wide context strings are dropped BEFORE the exchange; the

@@ -1,4 +1,2 @@
 from .tsv import (read_annotations_tsv, parse_annotation_lines,  # noqa: F401
                   annotations_to_tsv_lines)
-from .tac import prepare_tac, prepare_tac15  # noqa: F401
-from .warc import read_warc, parse_warc, build_warc  # noqa: F401

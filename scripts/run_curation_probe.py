@@ -1,8 +1,8 @@
 """One-off scale probe: the round-5 curation/embedding ops over N
 synthetic multi-line docs (~200 tokens each) — wall / docs/sec for
-clean_lines, dsir_weights, bpe_encode (200 merges), skipgram_pairs,
-and random_walks+negatives over a 60k-edge KG.  Evidence for the
-PLANS.md round-5 scale notes.
+clean_lines, dsir_weights, bpe_encode (200 merges), skipgram_pairs
+and split+shard+write.  Evidence for the PLANS.md round-5 scale
+notes.
 Usage:
     python scripts/run_curation_probe.py [n_docs]
 """
@@ -31,8 +31,6 @@ from neleval_spark.functions.bpe import bpe_encode
 from neleval_spark.functions.corpusops import clean_lines
 from neleval_spark.functions.textops import skipgram_pairs
 from neleval_spark.functions.webquality import dsir_weights
-from neleval_spark.graph.negatives import negative_samples
-from neleval_spark.graph.walks import random_walks
 
 spark = get_spark(app_name="probe_curation", master="local[32]",
                   shuffle_partitions=64, driver_memory="24g")
@@ -83,30 +81,6 @@ try:
     n_pairs = skipgram_pairs(docs, window=2).count()
     t_sg = time.perf_counter() - t0
 
-    edges = (spark.range(60_000)
-             .select(F.concat(F.lit("q"), (F.col("id") % 20_000)
-                              .cast("string")).alias("src"),
-                     F.concat(F.lit("q"), ((F.col("id") * 7 + 3)
-                                           % 20_000).cast("string"))
-                     .alias("dst")).distinct())
-    t0 = time.perf_counter()
-    n_walkrows = random_walks(edges, walk_len=5, n_walks=4).count()
-    t_rw = time.perf_counter() - t0
-
-    from neleval_spark.graph.walks import node2vec_walks
-    t0 = time.perf_counter()
-    n_n2v = node2vec_walks(edges, walk_len=5, n_walks=4,
-                           w_return=1, w_near=4, w_far=2,
-                           max_degree=32).count()
-    t_n2v = time.perf_counter() - t0
-
-    triples = edges.select("src", F.lit("linked_to").alias("pred"),
-                           F.col("dst").alias("obj")) \
-                   .withColumnRenamed("src", "subj")
-    t0 = time.perf_counter()
-    n_neg = negative_samples(triples, n_neg=4).count()
-    t_ng = time.perf_counter() - t0
-
     # split (4-doc clusters) -> per-split permutation -> 32 balanced
     # shards -> one file per (split, shard) leaf, the funnel's tail
     from neleval_spark.functions.corpusops import (shuffle_shards,
@@ -135,9 +109,6 @@ try:
           f"pieces={n_pieces}, merges={len(merges)}) "
           f"skipgram={t_sg:.1f}s ({n_docs / t_sg:.0f} docs/s, "
           f"pairs={n_pairs}) "
-          f"walks[60k-edge]={t_rw:.1f}s (rows={n_walkrows}) "
-          f"node2vec[60k-edge]={t_n2v:.1f}s (rows={n_n2v}) "
-          f"negatives[60k-triple]={t_ng:.1f}s (rows={n_neg}) "
           f"split+shard+write={t_sh:.1f}s ({n_docs / t_sh:.0f} "
           f"docs/s, leaves={n_leaves}, files={n_files})",
           flush=True)

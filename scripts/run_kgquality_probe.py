@@ -1,10 +1,9 @@
-"""One-off scale probe for the round-5 KG-quality tail: taxonomy
-closure over a 1M-node forest (depth 20), instance-type inheritance
-onto 5M instances, distant-supervision labeling over ~3M mentions
-(600k sentences x 5 mentions, one 5k-mention boilerplate page, KB
-matching ~1/8 of pairs), and SDValidate plausibility over the 21-pred
-x 5M-triple table. Evidence for the PLANS.md taxonomy_closure /
-distant_label / triple_plausibility notes.
+"""One-off scale probe for the round-5 KG-quality tail:
+distant-supervision labeling over ~3M mentions (600k sentences x 5
+mentions, one 5k-mention boilerplate page, KB matching ~1/8 of
+pairs), and SDValidate plausibility over the 21-pred x 5M-triple
+table. Evidence for the PLANS.md distant_label /
+triple_plausibility notes.
 Usage:
     python scripts/run_kgquality_probe.py [scale]
 """
@@ -23,7 +22,6 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 from pyspark.sql import functions as F
 
 from neleval_spark import get_spark
-from neleval_spark.graph.taxonomy import infer_types, taxonomy_closure
 from neleval_spark.pipeline.distant import (
     cooccurring_pairs, distant_label)
 from neleval_spark.pipeline.plausibility import (
@@ -34,33 +32,6 @@ scale = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
 spark = get_spark(app_name="probe_kgquality", master="local[32]",
                   shuffle_partitions=64, driver_memory="24g")
 i = F.col("id")
-
-# --- taxonomy closure: binary-heap forest, 1M nodes, depth ~20
-n_nodes = int(1_000_000 * scale)
-edges = (spark.range(2, n_nodes + 2).repartition(64)
-         .select(i.alias("child"),
-                 F.expr("id div 2").alias("parent")))
-stats = {}
-t0 = time.perf_counter()
-closure = taxonomy_closure(edges, max_depth=32, stats=stats)
-t_closure = time.perf_counter() - t0
-print(f"taxonomy_closure: {n_nodes} nodes -> {stats['pairs']} pairs "
-      f"in {stats['rounds']} rounds, {t_closure:.1f} s")
-
-# --- infer_types: 5M instances, single-typed (shuffle-free path),
-# types drawn from the bottom heap layer
-n_inst = int(5_000_000 * scale)
-inst = (spark.range(n_inst).repartition(64)
-        .select(F.concat(F.lit("inst"), i.cast("string"))
-                .alias("entity"),
-                (i % n_nodes + 2).alias("type")))
-closure_l = closure.select(F.col("node"), F.col("ancestor"),
-                           F.col("depth"))
-t0 = time.perf_counter()
-n_typed = infer_types(inst, closure_l, dedup=False).count()
-t_types = time.perf_counter() - t0
-print(f"infer_types: {n_inst} instances -> {n_typed} typed rows, "
-      f"{t_types:.1f} s (broadcast join, dedup=False)")
 
 # --- distant supervision: 600k sentences x 5 mentions (+1 page with
 # 5k mentions that the guard must drop), eids mod 40k, KB 200k edges

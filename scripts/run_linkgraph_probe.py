@@ -1,7 +1,7 @@
 """One-off scale probe: link-graph construction over N synthetic
 pages (~40 anchors each) — wall / pages/sec / anchors/sec for
-extract_links→host_edges, host_authority, anchor_priors, and
-host_cocitation.  Evidence for the PLANS.md linkgraph scale notes.
+extract_links→host_edges, anchor_priors and host_cocitation.
+Evidence for the PLANS.md linkgraph scale notes.
 Usage:
     python scripts/run_linkgraph_probe.py [n_pages]
 """
@@ -25,7 +25,6 @@ from neleval_spark import get_spark
 from neleval_spark.functions.linkgraph import (
     anchor_priors, extract_anchors, extract_links, host_cocitation,
     host_edges)
-from neleval_spark.graph.pagerank import pagerank
 
 spark = get_spark(app_name="probe_linkgraph", master="local[32]",
                   shuffle_partitions=64, driver_memory="24g")
@@ -69,12 +68,6 @@ try:
     t_he = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    n_hosts = pagerank(host_edges(extract_links(pages)),
-                       src="src_host", dst="dst_host",
-                       weight="n_links", iters=5).count()
-    t_pr = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
     n_alias = anchor_priors(extract_anchors(pages)).count()
     t_ap = time.perf_counter() - t0
 
@@ -86,7 +79,6 @@ try:
           f"extract={t_ext:.1f}s ({n_pages / t_ext:.0f} pages/s, "
           f"{n_links / t_ext:.0f} anchors/s) "
           f"host_edges={t_he:.1f}s (edges={n_edges}) "
-          f"authority5={t_pr:.1f}s (hosts={n_hosts}) "
           f"anchor_priors={t_ap:.1f}s (aliases={n_alias}) "
           f"cocitation={t_cc:.1f}s (pairs={n_pairs})", flush=True)
 finally:

@@ -1,8 +1,6 @@
 """One-off scale probe for the round-5 tail ops: snapshot_intervals
-over ~1M crawl snapshots, kcore over a 2M-edge hub-skewed graph,
-ranking_eval at 500 test x 50k entities (JVM xxhash scorer — the
-production shape; the oracle's polynomial hash is interpreted and
-demo-only), and mine_bitext over 20k x 20k synthetic embeddings.
+over ~1M crawl snapshots and mine_bitext over 20k x 20k synthetic
+embeddings.
 Evidence for the PLANS.md round-5 scale notes.
 Usage:
     python scripts/run_round5_tail_probe.py [n_urls]
@@ -24,8 +22,6 @@ from pyspark.sql import functions as F
 from neleval_spark import get_spark
 from neleval_spark.functions.bitext import mine_bitext
 from neleval_spark.functions.corpusops import snapshot_intervals
-from neleval_spark.graph.kcore import kcore
-from neleval_spark.graph.ranking import ranking_eval
 
 n_urls = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
 
@@ -51,52 +47,6 @@ t0 = time.perf_counter()
 n_iv = snapshot_intervals(snaps, tiebreak="fetch_id").count()
 t_si = time.perf_counter() - t0
 
-# --- kcore: ring (2-core spine) + chords + one degree-100k hub +
-# 200k pendant leaves; k=3 peels hub spokes + leaves
-n_v = 500_000
-ring = spark.range(n_v).select(
-    F.col("id").alias("src"), ((F.col("id") + 1) % n_v).alias("dst"))
-chords = spark.range(n_v).select(
-    F.col("id").alias("src"),
-    ((F.col("id") * 7 + 13) % n_v).alias("dst"))
-chords2 = spark.range(n_v).select(
-    F.col("id").alias("src"),
-    ((F.col("id") * 131 + 7) % n_v).alias("dst"))
-hub = spark.range(100_000).select(
-    F.lit(0).alias("src"), (F.col("id") * 5 + 1).alias("dst"))
-leaves = spark.range(200_000).select(
-    (F.col("id") + n_v).alias("src"),
-    ((F.col("id") * 3) % n_v).alias("dst"))
-edges = ring.unionByName(chords).unionByName(chords2) \
-    .unionByName(hub).unionByName(leaves)
-stats = {}
-t0 = time.perf_counter()
-core = kcore(edges, 3, stats=stats)
-n_core = core.count()
-t_kc = time.perf_counter() - t0
-
-# --- ranking_eval: 500 test triples x 50k entities, JVM scorer
-ents = spark.range(50_000).select(
-    F.concat(F.lit("e"), F.col("id").cast("string")).alias("entity"))
-known = spark.range(200_000).select(
-    F.concat(F.lit("e"), (F.col("id") % 10_000).cast("string"))
-    .alias("subj"),
-    F.lit("rel").alias("pred"),
-    F.concat(F.lit("e"), ((F.col("id") * 17 + 3) % 50_000)
-             .cast("string")).alias("obj")).distinct()
-test = known.where(F.xxhash64("subj", "obj") % 400 == 0).limit(500)
-
-
-def jvm_score(s, p, e):
-    return F.xxhash64(s, p, e)
-
-
-t0 = time.perf_counter()
-ranked = ranking_eval(test, known, entities=ents,
-                      score_fn=jvm_score)
-n_rank = ranked.count()
-t_re = time.perf_counter() - t0
-
 # --- mine_bitext: 20k x 20k embeddings (dim 32, hash-synthesized)
 dim = 32
 
@@ -119,9 +69,5 @@ t_bm = time.perf_counter() - t0
 print(f"RESULT n_urls={n_urls} "
       f"snapshot_intervals={t_si:.1f}s "
       f"({n_urls * 8 / t_si:.0f} snaps/s, {n_iv} intervals) "
-      f"kcore={t_kc:.1f}s ({n_core} edges kept, "
-      f"iters={stats['iterations']}, rounds={stats['n_edges']}) "
-      f"ranking={t_re:.1f}s ({n_rank} test triples x 50k ents, "
-      f"{n_rank * 50_000 / t_re:.0f} cmp/s) "
       f"bitext={t_bm:.1f}s ({n_mined} pairs from 20k x 20k)")
 spark.stop()

@@ -13,7 +13,7 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def tables(spark):
-    from neleval_spark.sources import prepare_tac
+    from neleval_spark.sources.tac import prepare_tac
     from neleval_spark.sources.bucketed import write_mentions_bucketed
 
     gold = prepare_tac(spark, f"{E}/tac_gold.tab", f"{E}/tac_gold.xml")

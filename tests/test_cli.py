@@ -365,28 +365,9 @@ def test_cli_evaluate_official_regression(spark, capsys, tmp_path):
             assert out == f.read(), f"drift vs frozen {frozen}"
 
 
-def test_cli_entity_salience(spark, capsys, tmp_path):
-    """Graph-analytics CLI: run the pipeline into a sink, then rank
-    entities by PageRank salience over the emitted triples."""
-    from neleval_spark.pipeline import synth_corpus
-
-    corpus = str(tmp_path / "pages")
-    synth_corpus(spark, 150).write.parquet(corpus)
-    out = str(tmp_path / "kg")
-    _run(capsys, "run-pipeline", corpus, "-o", out)
-    ranked = _run(capsys, "entity-salience", out, "--top", "5")
-    lines = ranked.strip().split("\n")
-    assert lines[0] == "entity\tsalience"
-    assert 2 <= len(lines) <= 6
-    scores = [float(l.split("\t")[1]) for l in lines[1:]]
-    assert scores == sorted(scores, reverse=True)
-    assert all(s > 0 for s in scores)
-
-
 def test_cli_compact_sink(spark, capsys, tmp_path):
     """Full operational lifecycle from the CLI: stream-ingest into a
-    run_id-partitioned sink, compact it into one run, then rank
-    salience over the compacted sink."""
+    run_id-partitioned sink, then compact it into one run."""
     from neleval_spark.pipeline import synth_corpus
 
     corpus = str(tmp_path / "pages")
@@ -400,8 +381,6 @@ def test_cli_compact_sink(spark, capsys, tmp_path):
     runs = [r["run_id"] for r in
             triples.select("run_id").distinct().collect()]
     assert len(runs) == 1 and runs[0].startswith("compact-")
-    ranked = _run(capsys, "entity-salience", out, "--top", "3")
-    assert ranked.startswith("entity\tsalience")
 
 
 def test_cli_track_eval(spark, capsys, tmp_path):
@@ -610,52 +589,6 @@ def test_cli_frontier(spark, capsys, tmp_path):
     } | {"http://a.example/s0", "http://a.example/fresh"}
     assert sorted(r["slot"] for r in rows) == [0, 1, 2, 3, 4, 5]
     assert all(r["fetch_ts"] == 50 + r["slot"] * 10 for r in rows)
-
-
-def test_cli_graph_corpus(spark, capsys, tmp_path):
-    edges = str(tmp_path / "edges")
-    spark.createDataFrame(
-        [(f"n{i}", f"n{(i * 3 + 1) % 12}") for i in range(12)]
-        + [(f"n{i}", f"n{(i * 5 + 2) % 12}") for i in range(12)],
-        "src string, dst string"
-    ).write.mode("overwrite").parquet(edges)
-    out = _run(capsys, "graph-corpus", edges,
-               "-o", str(tmp_path / "gc"),
-               "--walk-len", "4", "--n-walks", "2", "--n-neg", "2",
-               "--w-return", "1", "--w-near", "4", "--w-far", "2",
-               "--max-degree", "2")
-    res = json.loads(out)
-    assert res["biased"] is True
-    assert res["walks"] == 12 * 2
-    assert res["pairs"] > 0 and res["negatives"] > 0
-    walks = spark.read.parquet(str(tmp_path / "gc") + "/walks")
-    assert set(walks.columns) == {"node", "walk_id", "path",
-                                  "n_steps"}
-
-
-def test_cli_graph_corpus_kcore(spark, capsys, tmp_path):
-    from pyspark.sql import functions as F
-
-    edges = str(tmp_path / "edges")
-    ring = [(f"n{i}", f"n{(i + 1) % 8}") for i in range(8)]
-    chords = [(f"n{i}", f"n{(i + 3) % 8}") for i in range(8)]
-    leaves = [(f"leaf{i}", f"n{i}") for i in range(4)]
-    spark.createDataFrame(ring + chords + leaves,
-                          "src string, dst string") \
-        .write.mode("overwrite").parquet(edges)
-    out = _run(capsys, "graph-corpus", edges,
-               "-o", str(tmp_path / "gc"),
-               "--kcore", "2", "--walk-len", "3", "--n-walks", "1",
-               "--n-neg", "1")
-    res = json.loads(out)
-    # the 4 leaf edges are peeled before walk generation
-    assert res["kcore_edges"] == 16
-    walks = spark.read.parquet(str(tmp_path / "gc") + "/walks")
-    nodes = {r["node"] for r in walks.select("node").collect()}
-    assert nodes == {f"n{i}" for i in range(8)}  # no leaf starts
-    # and no walk ever visits a leaf
-    assert walks.where(
-        F.exists("path", lambda s: s.startswith("leaf"))).count() == 0
 
 
 def test_cli_curate_upsample(spark, capsys, tmp_path):
@@ -1002,45 +935,6 @@ def test_cli_align_predicates(spark, capsys, tmp_path):
     [r] = spark.read.parquet(out_dir).collect()
     assert (r["pred_a"], r["pred_b"]) == ("born_in", "place_of_birth")
     assert r["containment_b"] == 1.0
-
-
-def test_cli_taxonomy_closure(spark, capsys, tmp_path):
-    edges = spark.createDataFrame(
-        [("cat", "mammal"), ("mammal", "animal"),
-         ("cat", "pet"), ("pet", "animal")],
-        "child string, parent string")
-    src = str(tmp_path / "edges")
-    edges.write.parquet(src)
-    inst = spark.createDataFrame(
-        [("felix", "cat"), ("rex", "mammal")],
-        "entity string, type string")
-    inst_src = str(tmp_path / "inst")
-    inst.write.parquet(inst_src)
-    out_dir = str(tmp_path / "closure")
-    types_dir = str(tmp_path / "types")
-    out = _run(capsys, "taxonomy-closure", src, "-o", out_dir,
-               "--instances", inst_src, "--types-out", types_dir)
-    info = json.loads(out.strip().splitlines()[-1])
-    assert info["nodes"] == 4 and info["typed_rows"] == 6
-    closure = {(r["node"], r["ancestor"]): r["depth"]
-               for r in spark.read.parquet(out_dir).collect()}
-    assert closure[("cat", "animal")] == 2  # min over the two paths
-    typed = {(r["entity"], r["type"]): r["depth"]
-             for r in spark.read.parquet(types_dir).collect()}
-    assert typed[("felix", "animal")] == 2
-    assert typed[("rex", "mammal")] == 0
-
-
-def test_cli_taxonomy_closure_requires_types_out(spark, capsys,
-                                                 tmp_path):
-    edges = spark.createDataFrame([("a", "b")],
-                                  "child string, parent string")
-    src = str(tmp_path / "edges2")
-    edges.write.parquet(src)
-    with pytest.raises(SystemExit, match="types-out"):
-        _run(capsys, "taxonomy-closure", src,
-             "-o", str(tmp_path / "c2"),
-             "--instances", src)
 
 
 def test_cli_distant_label(spark, capsys, tmp_path):

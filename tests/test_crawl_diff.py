@@ -1,6 +1,6 @@
-"""Crawl-generation diff (functions/corpusops.crawl_diff)."""
+"""Crawl-generation diff (pipeline/incremental.crawl_diff)."""
 
-from neleval_spark.functions.corpusops import crawl_diff
+from neleval_spark.pipeline.incremental import crawl_diff
 
 
 def test_statuses(spark):

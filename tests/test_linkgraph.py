@@ -1,12 +1,12 @@
 """Web link-graph construction (functions/linkgraph.py): URL
 canonicalization contract N1-N9, anchor extraction + reference
-resolution, host-edge aggregation, and the PageRank composition."""
+resolution and host-edge aggregation."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from neleval_spark.functions.linkgraph import (
-    anchor_priors, extract_anchors, extract_links, host_authority,
+    anchor_priors, extract_anchors, extract_links,
     host_cocitation, host_edges, host_of, normalize_url,
     registered_domain)
 
@@ -206,22 +206,3 @@ def test_anchor_and_cocitation_plans_are_jvm_only(spark):
         .split("== Initial Plan ==")[0]
     assert "Python" not in p2 and "Join" not in p2
     assert "Window" not in p2
-
-
-def test_host_authority_sums_to_one_and_is_partition_invariant(spark):
-    rows = []
-    for i in range(60):
-        rows.append((f"http://s{i % 6}.net/p{i}",
-                     f'<a href="http://s{(i + 1) % 6}.net/x">l</a>'
-                     f'<a href="http://hub.net/y">l</a>'))
-    pages = spark.createDataFrame(rows, "url string, html string")
-    ranks = host_authority(pages, iters=5).collect()
-    total = sum(r["rank"] for r in ranks)
-    assert abs(total - 1.0) < 1e-6
-    by_host = {r["vertex"]: r["rank"] for r in ranks}
-    # hub.net receives 6x the in-links of any ring host
-    assert by_host["hub.net"] == max(by_host.values())
-    again = {r["vertex"]: r["rank"]
-             for r in host_authority(pages.repartition(13),
-                                     iters=5).collect()}
-    assert again == by_host

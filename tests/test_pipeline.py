@@ -454,13 +454,17 @@ def _union_find_labels(surfaces, keys):
         for s in surfaces}
 
 
-def test_nil_labels_match_union_find_reference(spark):
+def test_nil_labels_match_union_find_reference(spark, monkeypatch):
     """NIL labels are read off the CC component id.  Pinned against a
     pure-Python union-find on surfaces whose acronym keys sort BELOW
     their surface keys ("za" < "zeta_able") and whose components hold
-    several surfaces each, for the default keys and for a single key."""
+    several surfaces each, for the default keys and for a single key,
+    on CC's driver path and on its distributed path."""
+    import functools
     import random
 
+    from neleval_spark.graph import connected_components
+    from neleval_spark.pipeline import canonicalize
     from neleval_spark.pipeline.canonicalize import (
         canonicalize_nils, surface_key)
 
@@ -487,9 +491,17 @@ def test_nil_labels_match_union_find_reference(spark):
         by_label.setdefault(label, []).append(s)
     assert any(len(ss) > 1 and all(acro(s) < norm(s) for s in ss)
                for ss in by_label.values())
-    assert labels() == want
-    assert labels(key_fns=(("surface", surface_key),)) == \
-        _union_find_labels(surfaces, (norm,))
+
+    def check():
+        assert labels() == want
+        assert labels(key_fns=(("surface", surface_key),)) == \
+            _union_find_labels(surfaces, (norm,))
+
+    check()  # driver path: the key graph is below DRIVER_CC_MAX_EDGES
+    monkeypatch.setattr(canonicalize, "connected_components",
+                        functools.partial(connected_components,
+                                          driver_max_edges=0))
+    check()  # distributed path
 
 
 def test_canonicalize_driver_path_plan_has_no_shuffle(spark):

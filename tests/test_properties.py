@@ -68,7 +68,7 @@ def test_assignment_matches_brute_force(rows):
     assert max_weight_assignment_total(-cost) == -best
 
 
-# --- round 3: session merging and PageRank (pure parts) -------------------
+# --- round 3: session merging (pure parts) --------------------------------
 
 @given(
     ts=st.lists(st.integers(0, 100_000), max_size=40),
@@ -104,25 +104,3 @@ def test_merge_sessions_invariants(ts, gap, pending):
         assert final + keep == sessions
         assert all(s[1] + gap <= wm for s in final)
         assert all(s[1] + gap > wm for s in keep)
-
-
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 8), st.integers(0, 8)),
-        min_size=1, max_size=25),
-    damping=st.sampled_from([0.5, 0.85]),
-)
-@settings(max_examples=25, deadline=None)
-def test_pagerank_numpy_model(edges, damping):
-    """The numpy model of the distributed algorithm (same rounding,
-    same dangling handling) conserves mass and stays non-negative on
-    arbitrary small digraphs — the Spark parity with this model is
-    pinned separately in tests/test_pagerank.py."""
-    edges = [(f"v{a}", f"v{b}") for a, b in edges if a != b]
-    if not edges:
-        return
-    from tests.test_pagerank import _numpy_pagerank
-
-    r = _numpy_pagerank(edges, iters=10, damping=damping)
-    assert all(v >= 0 for v in r.values())
-    assert abs(sum(r.values()) - 1.0) < 1e-6

@@ -173,7 +173,7 @@ def test_evaluate_unpersists_inputs(spark):
     leak cached tables afterwards (callers' own persisted frames are
     left untouched)."""
     from neleval_spark.measures import evaluate
-    from neleval_spark.sources import prepare_tac
+    from neleval_spark.sources.tac import prepare_tac
 
     E = "/root/reference/neleval/examples"
     gold = prepare_tac(spark, f"{E}/tac_gold.tab", f"{E}/tac_gold.xml")

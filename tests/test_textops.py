@@ -155,8 +155,7 @@ def test_ann_lsh_recall(spark):
 
 def test_cosine_topk_refuses_large_cross_join(spark):
     """cosine_topk is the exact-baseline cross join; above max_pairs
-    it must refuse with a pointer at the scale paths (the
-    match_pattern refuse-cartesian stance)."""
+    it must refuse with a pointer at the scale paths."""
     import pytest
     from neleval_spark.functions.similarity import cosine_topk
 
@@ -264,7 +263,7 @@ def test_semantic_dedup_flags_planted_neardups(spark):
 def test_semantic_dedup_refuses_hot_cells(spark):
     """All vectors in one cell → quadratic pair fan-in; must refuse
     above max_cell_pairs with a pointer at n_cells (the
-    refuse-cartesian stance of cosine_topk/match_pattern)."""
+    refuse-cartesian stance of cosine_topk)."""
     import pytest
     from neleval_spark.functions.similarity import semantic_dedup
 

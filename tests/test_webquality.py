@@ -1,16 +1,14 @@
 """Web-corpus quality operators: Gopher-style repetition signals,
-benchmark decontamination, vocabulary stats, and PMI association
-scoring over the triple sink — hand-computed fixtures plus plan-shape
-assertions (the at-scale contracts: repetition is shuffle-free, the
-contamination eval side is broadcast)."""
+benchmark decontamination and vocabulary stats — hand-computed
+fixtures plus plan-shape assertions (the at-scale contracts:
+repetition is shuffle-free, the contamination eval side is
+broadcast)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from neleval_spark.functions.webquality import (
     contamination, repetition_signals, vocab_stats)
-from neleval_spark.graph.associations import association_scores
-from neleval_spark.pipeline.triples import emit_triples
 
 
 def _plan(df):
@@ -119,37 +117,6 @@ def test_vocab_stats(spark, docs):
     assert got["l1"] == (2, 1)
     assert got["q"] == (1, 1)
     assert "" not in got
-
-
-def test_association_scores_exact(spark):
-    m = spark.createDataFrame(
-        [("u1", 1, "A"), ("u1", 1, "B"), ("u1", 2, "A"), ("u1", 2, "C"),
-         ("u2", 1, "A"), ("u2", 1, "B"), ("u3", 1, "C")],
-        "url string, sent_uid long, eid string")
-    out = association_scores(emit_triples(m))
-    got = {(r["subj"], r["obj"]): r for r in out.collect()}
-    # A,B co-occur in u1,u2; each occurs in 2 docs; N=3 -> pmi 2*3/(2*2)
-    ab = got[("A", "B")]
-    assert (ab["c_pair"], ab["c_subj"], ab["c_obj"], ab["n_docs"]) == \
-        (2, 2, 2, 3)
-    assert ab["pmi_scaled"] == 1_500_000
-    # A,C co-occur only in u1 -> 1*3/(2*2)
-    assert got[("A", "C")]["pmi_scaled"] == 750_000
-    # B,C never share a sentence
-    assert ("B", "C") not in got
-    # entity counts join back broadcast; N is an in-plan scalar
-    assert "BroadcastExchange" in _plan(out)
-
-
-def test_association_scores_partitioning_invariant(spark):
-    rows = [("u%d" % (i % 17), i % 5, "E%d" % (i % 7))
-            for i in range(500)]
-    m = spark.createDataFrame(rows, "url string, sent_uid long, eid string")
-    a = {tuple(r) for r in
-         association_scores(emit_triples(m)).collect()}
-    b = {tuple(r) for r in
-         association_scores(emit_triples(m.repartition(7))).collect()}
-    assert a == b and a
 
 
 def test_unigram_surprisal_hand_computed(spark):
