@@ -4,7 +4,7 @@ in which every vertex keeps degree ≥ k, computed by repeatedly
 peeling vertices of degree < k (Seidman 1983, "Network structure and
 minimum degree"; Batagelj-Zaveršnik peel).  KG practice prunes the
 1-/2-shell (entities attached by a single stray co-occurrence)
-before embedding training or salience ranking — peripheral noise
+before embedding training — peripheral noise
 otherwise dominates negative sampling and random walks.
 
 Scale shape (10^9+ edges):
@@ -22,9 +22,7 @@ Scale shape (10^9+ edges):
 * The removal test is on the VERTEX key (uniform hash); the only
   skew is the degree groupBy's, which partial aggregation absorbs.
 
-No reference counterpart (the reference is an evaluation engine);
-extends the graph family (connected_components, pagerank, hits,
-triangles, label_propagation).
+No reference counterpart (the reference is an evaluation engine).
 """
 
 from __future__ import annotations

@@ -21,7 +21,7 @@ Scale shape: per round ONE self-equi-join of the vertex-sized
 mapping table (hash-partitioned on the join key, AQE skew splitting
 for hub targets) + one 1-row early-stop aggregate; lineage truncated
 with ``localCheckpoint`` per round, same discipline as
-``connected_components`` / ``pagerank``.  The mapping table is one
+``connected_components``.  The mapping table is one
 row per redirect source — never edge×iteration blowup, no driver
 collect.
 """
@@ -69,7 +69,7 @@ def resolve_redirect_chains(
     )
     # lazy checkpoints: each round's moved-count collect is the
     # materializing action — one job per doubling round instead of
-    # two (the r6 discipline, see pagerank.py)
+    # two
 
     done = 0
     for i in range(rounds):

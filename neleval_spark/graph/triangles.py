@@ -15,8 +15,7 @@ O(sqrt(E)) for ANY graph, so the wedge self-join at a hub entity
 O(sqrt(E)) wedges per hub instead of the O(deg²) a naive
 neighbour-pair expansion pays — the hub's edges are oriented INTO it
 and contribute no wedges there.  No reference counterpart (the
-reference has no graph analytics); extends the graph family
-(connected_components, pagerank, associations).
+reference has no graph analytics).
 """
 
 from __future__ import annotations

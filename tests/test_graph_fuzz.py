@@ -1,9 +1,6 @@
-"""Differential fuzz: the round-5 graph ops (kcore, link_prediction)
-vs pure-Python replicas on random small graphs — the walk-family
-fuzz-net pattern (tests/test_walks_fuzz.py) extended to the peel and
-triad-closure operators."""
-import math
-
+"""Differential fuzz: kcore vs a pure-Python replica on random small
+graphs — the walk-family fuzz-net pattern (tests/test_walks_fuzz.py)
+extended to the peel operator."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -26,27 +23,6 @@ def _py_kcore(edges, k):
         e = e2
 
 
-def _py_linkpred(edges):
-    e = {tuple(sorted(t)) for t in edges if t[0] != t[1]}
-    nbr = {}
-    for a, b in e:
-        nbr.setdefault(a, set()).add(b)
-        nbr.setdefault(b, set()).add(a)
-    deg = {v: len(ns) for v, ns in nbr.items()}
-    acc = {}
-    for z, ns in nbr.items():
-        ns = sorted(ns)
-        for i in range(len(ns)):
-            for j in range(i + 1, len(ns)):
-                cn, aa = acc.get((ns[i], ns[j]), (0, 0.0))
-                acc[(ns[i], ns[j])] = (cn + 1,
-                                       aa + 1.0 / math.log(deg[z]))
-    return {
-        (u, w): (cn, round(cn / (deg[u] + deg[w] - cn), 6),
-                 round(aa, 6))
-        for (u, w), (cn, aa) in acc.items() if (u, w) not in e}
-
-
 @settings(max_examples=10, deadline=None)
 @given(edges=_edges_strategy, k=st.sampled_from([1, 2, 3]))
 def test_kcore_fuzz(spark, edges, k):
@@ -56,14 +32,3 @@ def test_kcore_fuzz(spark, edges, k):
     got = {(r["a"], r["b"]) for r in kcore(df, k).collect()}
     assert got == _py_kcore(edges, k)
 
-
-@settings(max_examples=10, deadline=None)
-@given(edges=_edges_strategy)
-def test_linkpred_fuzz(spark, edges):
-    from neleval_spark.graph.linkpred import link_prediction
-
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {(r["u"], r["w"]): (r["common_neighbors"], r["jaccard"],
-                              r["adamic_adar"])
-           for r in link_prediction(df).collect()}
-    assert got == _py_linkpred(edges)
