@@ -7,8 +7,8 @@ mapping, neleval/tac.py:83-103) — the fact side never shuffles.
 Scoring: features (alias prior, context-keyword hit) are computed as
 JVM columns; the score combination runs in an Arrow-batched pandas UDF
 (the designated vectorized-UDF surface per BASELINE.json input_hint —
-no per-row Python). Top-1 selection = max_by over the mention key,
-no window shuffle.
+no per-row Python) ahead of the url exchange. Top-1 selection = max_by
+over the mention key, no window shuffle.
 """
 
 from __future__ import annotations
@@ -54,11 +54,20 @@ def with_context_features(cands: DataFrame) -> DataFrame:
 
 def score_and_select(cands: DataFrame) -> DataFrame:
     """Score candidates, keep the argmax per mention, carry the full
-    sorted candidate list for the mentions table."""
+    sorted candidate list for the mentions table.
+
+    The score UDF runs BEFORE the one url exchange, in the same stage
+    as whatever produced ``cands`` (in the pipeline, the NER
+    ``mapInPandas``): a Python operator drops its child's output
+    partitioning, so scoring after the exchange would re-shuffle every
+    candidate row on (url, start, end) for the aggregate.  Hashing the
+    scored rows by url meets that aggregate's clustering, so each
+    candidate row crosses one exchange."""
     if "kw_hit" not in cands.columns:
         cands = with_context_features(cands)
     scored = cands.withColumn(
-        "score", link_score_udf(F.col("prior"), F.col("kw_hit")))
+        "score", link_score_udf(F.col("prior"), F.col("kw_hit"))) \
+        .repartition("url")
 
     cand_struct = F.struct(
         F.col("eid"), F.col("score"), F.col("type"),

@@ -34,7 +34,10 @@ while the relational tail (canonicalize + triple sink) stays O(corpus)
 but cheap: below the driver-CC cap the NIL labels are one projection
 of a broadcast CC result (no shuffle of the mention side), and the
 sink bucket count is sized from the merged mention scans, so a small
-generation writes one file.  Pair with
+generation writes one file.  The sink ships the merged mentions once,
+narrow and hashed by part_id, and that exchange also serves the
+write; the fresh pages' candidate rows likewise cross one url
+exchange, scored before it.  Pair with
 :func:`~neleval_spark.pipeline.triples.merge_kg` when maintaining
 the aggregated KG instead of re-emitting witness triples.
 """

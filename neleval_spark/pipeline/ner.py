@@ -175,10 +175,11 @@ def extract_and_detect(pages: DataFrame,
     """url+html → mention rows, extraction and NER fused into ONE
     Python hop.
 
-    Chaining two Python operators inside one Spark stage (extract UDF
-    feeding mapInPandas) costs ~5× in per-batch JVM↔Python round trips;
-    fusing them keeps a single Arrow boundary and no extra shuffle —
-    the per-document text never crosses back into the JVM.
+    Fusing them keeps a single Arrow boundary: the per-document text
+    never crosses back into the JVM, as it would between an extract
+    UDF and a mapInPandas.  (The link-score UDF does run chained after
+    this operator, in one stage; see docs/PLANS.md for what that chain
+    costs.)
     """
     from .extract import extract_text
 

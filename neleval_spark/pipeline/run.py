@@ -37,8 +37,6 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     and the extra exchange isn't free."""
     from .ner import extract_and_detect, gazetteer_from_kb
 
-    from .candidates import with_context_features
-
     if dedupe_snapshots:
         from ..functions.corpusops import latest_snapshot
 
@@ -56,20 +54,15 @@ def build_mentions(pages: DataFrame, kb: DataFrame,
     gaz = gazetteer_from_kb(kb)
     # extraction + NER fused into one Python hop (see ner.py)
     mentions = extract_and_detect(pages, gazetteer=gaz)
-    # candidate gen (broadcast join — no shuffle) and the
-    # context-feature projection run in the SAME stage as NER, so the
-    # wide context strings are dropped BEFORE the exchange; the
-    # explicit repartition then (a) ships only narrow scored-feature
-    # rows and (b) keeps the NER and scoring Python operators in
-    # separate Spark stages (chained Python operators in one stage
-    # serialize badly — measured ~5×) at zero extra shuffle cost:
-    # hash(url) satisfies the later groupBy(url, start, end) clustering
-    cands = with_context_features(generate_candidates(mentions, kb))
-    cands = cands.repartition(F.col("url"))
-    # materialize the scored mention table once (canonicalization fans
-    # out into ≥3 consumers — nil branch, linked branch, key graph —
-    # and a live plan with Python stages would re-run per consumer)
-    linked = _materialize(score_and_select(cands))
+    # candidate gen (broadcast join — no shuffle), the context-feature
+    # projection and the score UDF run in the SAME stage as NER, so
+    # the wide context strings are dropped BEFORE the one url exchange,
+    # which score_and_select places after its UDF.  Materialize the
+    # scored mention table once (canonicalization fans out into ≥3
+    # consumers — nil branch, linked branch, key graph — and a live
+    # plan with Python stages would re-run per consumer)
+    linked = _materialize(score_and_select(
+        generate_candidates(mentions, kb)))
     if not canonicalize:
         # pre-canonicalization linked mentions: the PER-PAGE-pure
         # stage boundary (everything above depends only on the page

@@ -25,6 +25,13 @@ The bucket count is derived from the input size (:func:`sink_buckets`:
 about one 128 MB file per bucket, at most 64), so a small run writes
 one file instead of 64 near-empty ones; callers may still pass an
 explicit ``n_buckets``.
+
+Shuffle: :func:`emit_triples` hashes the narrow mention projection by
+``part_id`` once, and that exchange is also the write's: the
+aggregates and the explode above it keep the partitioning, so the
+write's own ``repartition("part_id")`` plans no second exchange.  A
+frame built any other way (compaction, the markup union, snapshots,
+streaming batches) is repartitioned by the write as before.
 """
 
 from __future__ import annotations
@@ -62,38 +69,46 @@ def emit_triples(mentions: DataFrame,
     ``pmod(xxhash64(url), n_buckets)``; ``n_buckets`` defaults to
     :func:`sink_buckets` of ``mentions``.
 
-    Plan shape (this is the hot sink of the pipeline): ONE aggregation
-    per granularity, no self-join —
+    Plan shape (this is the hot sink of the pipeline): ONE exchange,
+    by ``part_id``, and ONE aggregation per granularity, no self-join —
 
-      1. groupBy(url, sent_uid) → sorted distinct entity set per
-         sentence (the only mention-proportional exchange, and it
-         ships just (url, sent_uid, eid));
-      2. in-row pair expansion over the sorted set (a < b falls out of
+      1. derive ``part_id`` on the narrow (url, sent_uid, eid)
+         projection and hash it by part_id (the only exchange, and it
+         ships just (part_id, url, sent_uid, eid));
+      2. groupBy(part_id, url, sent_uid) → sorted distinct entity set
+         per sentence, in-partition;
+      3. in-row pair expansion over the sorted set (a < b falls out of
          the sort order) — pure column expressions, no shuffle;
-      3. groupBy(url) → url-level dedup of pairs and entities in one
-         row per url (the exchanged rows are per-SENTENCE aggregates,
-         ~1-2 orders of magnitude fewer than mentions);
-      4. explode into triple rows — narrow.
+      4. groupBy(part_id, url) → url-level dedup of pairs and entities
+         in one row per url, in-partition;
+      5. explode into triple rows — narrow, and still hash-partitioned
+         by part_id, so :func:`write_triples` adds no exchange.
 
-    The former shape (distinct + sentence-key self-join + distinct)
-    exchanged the mention table four times and sorted it twice for the
-    SortMergeJoin; this shape exchanges it once, and the second
-    exchange carries sentence aggregates.  At 10^12 documents both
-    exchanges are hash-partitioned on keys with per-url cardinality
-    bounds (sentences per url, entities per sentence), so no skew."""
+    The former shapes exchanged the mention table four times (distinct
+    + sentence-key self-join + distinct), then twice (by url here, by
+    part_id again in the write).  Trade-off: every row of a bucket is
+    aggregated by one task, so the sink aggregation runs in at most
+    ``n_buckets`` tasks, each over about ``BUCKET_BYTES`` (128 MB) of
+    mention scan.  At 300 pages AQE already ran the url-keyed
+    aggregation in 1 task; at 3,000 pages (one bucket) it ran in 3
+    tasks for 6.2 executor-s, and the one bucket task that now
+    aggregates and writes takes 2.4 s (crawl_build by hand,
+    local[4]).  No skew beyond the bucket function's: part_id is a
+    hash of url."""
+    if n_buckets is None:
+        n_buckets = sink_buckets(mentions)
     m = mentions.select("url", "sent_uid", "eid").where(
         F.col("eid").isNotNull())
-    # ONE exchange for the whole sink: hash the narrow (url, sent_uid,
-    # eid) projection by url up front; the sentence and per-url
-    # aggregations below are then both satisfied by this partitioning
-    # (subset-key distribution) and run as complete in-partition
-    # aggregates — no partial collect_list buffers serialized through
-    # a second exchange (r6 stage metrics: the former shape shipped
-    # 126 MB of sentence aggregates plus 182 MB of per-url partial
-    # list buffers; this ships ~250 MB of raw narrow rows once).
-    m = m.repartition(F.col("url"))
+    # the aggregates below lead with part_id, so this one exchange
+    # satisfies both (subset-key distribution): complete in-partition
+    # aggregates, no partial collect_list buffers through a second
+    # exchange (r6 stage metrics: that shape shipped 126 MB of sentence
+    # aggregates plus 182 MB of per-url partial list buffers; this
+    # ships ~250 MB of raw narrow rows once)
+    m = m.select(bucket_of(F.col("url"), n_buckets).alias("part_id"),
+                 "url", "sent_uid", "eid").repartition("part_id")
 
-    sent = m.groupBy("url", "sent_uid").agg(
+    sent = m.groupBy("part_id", "url", "sent_uid").agg(
         F.array_sort(F.collect_set("eid")).alias("eids"))
 
     # within-sentence ordered pairs over the sorted set: eids[i] <
@@ -108,7 +123,7 @@ def emit_triples(mentions: DataFrame,
                     F.size(F.col("eids"))),
             lambda y: F.concat_ws("\x01", x, y))))
 
-    per_url = sent.groupBy("url").agg(
+    per_url = sent.groupBy("part_id", "url").agg(
         F.array_distinct(F.flatten(F.collect_list("eids")))
         .alias("ents"),
         F.array_distinct(F.flatten(F.collect_list(pair_strs)))
@@ -126,20 +141,19 @@ def emit_triples(mentions: DataFrame,
     # plain codegen (split staged once, try_element_at — no
     # interpreted higher-order lambda per element).
     exploded = per_url.select(
-        F.explode(F.concat("ents", "pairs")).alias("enc"), "url")
+        F.explode(F.concat("ents", "pairs")).alias("enc"), "url",
+        "part_id")
     toks = exploded.select(
-        F.split(F.col("enc"), "\x01").alias("t"), "url")
+        F.split(F.col("enc"), "\x01").alias("t"), "url", "part_id")
     out = toks.select(
         F.try_element_at(F.col("t"), F.lit(1)).alias("subj"),
         F.when(F.size("t") == 1, F.lit("mentioned_in"))
         .otherwise(F.lit("cooccurs_with")).alias("pred"),
         F.coalesce(F.try_element_at(F.col("t"), F.lit(2)),
                    F.col("url")).alias("obj"),
-        F.col("url"),
+        "url", "part_id",
     )
-    if n_buckets is None:
-        n_buckets = sink_buckets(mentions)
-    return out.withColumn("part_id", bucket_of(F.col("url"), n_buckets))
+    return out
 
 
 def bucket_of(url, n_buckets: int):
@@ -198,7 +212,11 @@ def write_triples(
     With it each bucket is written by exactly one task: files per
     run == occupied buckets, and file SIZE is steered by the
     ``n_buckets`` chosen at part_id derivation (by default
-    :func:`sink_buckets`, so one bucket ~ one 128 MB parquet file)."""
+    :func:`sink_buckets`, so one bucket ~ one 128 MB parquet file).
+    For input already hash-partitioned on part_id — the
+    :func:`emit_triples` output — the repartition is a no-op: the
+    planner drops it as already satisfied, and the write ships no
+    row."""
     if not overwrite_run:
         raise ValueError(
             "write_triples always replaces its run; overwrite_run=False "

@@ -13,7 +13,9 @@ import pytest
 
 EXAMPLES = "/root/reference/neleval/examples"
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference's example files (through
+# ``gold_path``/``sys_path`` or ``EXAMPLES``) need its checkout
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(EXAMPLES), reason="reference fixtures not present")
 
 
@@ -34,6 +36,7 @@ def sys_path():
     return os.path.join(EXAMPLES, "tac_system.combined.tsv")
 
 
+@needs_reference
 def test_cli_evaluate_tab(spark, capsys, gold_path, sys_path):
     out = _run(capsys, "evaluate", sys_path, "-g", gold_path,
                "-m", "strong_link_match")
@@ -43,6 +46,7 @@ def test_cli_evaluate_tab(spark, capsys, gold_path, sys_path):
     assert "1.000" in lines[1]
 
 
+@needs_reference
 def test_cli_evaluate_type_weights(spark, capsys, tmp_path,
                                    gold_path, sys_path):
     w = tmp_path / "weights.tsv"
@@ -93,6 +97,7 @@ def test_cli_to_weak(spark, capsys, tmp_path):
         "d1\t3\t4\tE1\t\t", "d1\t4\t5\tE1\t\t", "d1\t5\t6\tE1\t\t"]
 
 
+@needs_reference
 def test_cli_rank_compose_compare(spark, capsys, tmp_path,
                                   gold_path, sys_path):
     # build two evaluation files
@@ -131,11 +136,13 @@ def test_cli_list_measures(spark, capsys):
     assert "strong_link_match" in out and "mention_ceaf" in out
 
 
+@needs_reference
 def test_cli_analyze_summary(spark, capsys, gold_path, sys_path):
     out = _run(capsys, "analyze", sys_path, "-g", gold_path, "-s")
     assert "correct" in out
 
 
+@needs_reference
 def test_cli_significance_and_confidence(spark, capsys, tmp_path,
                                          gold_path, sys_path):
     """Reference CLI parity: one significance invocation covers ALL
@@ -220,6 +227,7 @@ def test_cli_significance_and_confidence(spark, capsys, tmp_path,
     assert data[0]["measure"] == "strong_link_match"
 
 
+@needs_reference
 def test_cli_validate_and_weights(spark, capsys, tmp_path, sys_path):
     out = _run(capsys, "validate-spans", sys_path,
                "--duplicate", "warn")
@@ -240,6 +248,7 @@ def test_cli_select_alternatives(spark, capsys, tmp_path):
     assert out.strip().split("\n")[0].startswith("d1\t0\t5\tE1")
 
 
+@needs_reference
 def test_cli_plot_systems_data(spark, capsys, tmp_path,
                                gold_path, sys_path):
     out_a = _run(capsys, "evaluate", sys_path, "-g", gold_path,
@@ -263,6 +272,7 @@ def test_cli_plot_systems_data(spark, capsys, tmp_path,
     assert len(json.loads(out)[0]["points"]) == 1
 
 
+@needs_reference
 def test_cli_plot_systems_confidence_input(spark, capsys, tmp_path,
                                            gold_path, sys_path):
     out = _run(capsys, "confidence", sys_path, "-g", gold_path,
@@ -296,6 +306,7 @@ def test_cli_run_pipeline_stream(spark, tmp_path, capsys):
     assert rep2["triples"] == rep["triples"]
 
 
+@needs_reference
 def test_cli_plot_systems_figure_variants(spark, capsys, tmp_path,
                                           gold_path, sys_path):
     """Figure-JSON structure parity with the reference's variants
@@ -342,6 +353,7 @@ def test_cli_plot_systems_figure_variants(spark, capsys, tmp_path,
     assert p["lo"] <= p["score"] <= p["hi"]
 
 
+@needs_reference
 def test_cli_evaluate_official_regression(spark, capsys, tmp_path):
     """Byte-diff regression against committed evaluate outputs for the
     bundled TAC and CoNLL examples (analogue of the reference's
@@ -383,6 +395,7 @@ def test_cli_compact_sink(spark, capsys, tmp_path):
     assert len(runs) == 1 and runs[0].startswith("compact-")
 
 
+@needs_reference
 def test_cli_track_eval(spark, capsys, tmp_path):
     """Track pipeline analogue (reference run_tac14_evaluation.sh):
     prepare gold + every system in a dir, evaluate with the track
@@ -422,6 +435,7 @@ def test_cli_track_eval(spark, capsys, tmp_path):
     assert row[-1] == "teamA" and set(row[:-1]) == {"1.000"}
 
 
+@needs_reference
 def test_cli_filtered_track_eval(spark, capsys, tmp_path):
     """Filtered-subset rerun (reference run_tac14_filtered.sh +
     run_filtrate.sh): per-filter egrep-equivalent rlike over the

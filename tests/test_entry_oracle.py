@@ -14,6 +14,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="testdata not present")
 
+# the entries checked for rows only, as no SQL reproduces them: a
+# top-k over a k-means-trained quantizer, CEAF's unbounded-component
+# assignment and the full pipeline with its pandas-UDF NER.  Every
+# other entry must have an oracle.
+ROWS_ONLY = {"ivf_topk", "mention_ceaf", "pipeline_triples"}
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -62,9 +68,11 @@ def test_query_vs_oracle(spark, duck, name):
     assert len(srows) >= 0  # query runs
 
     sql = entrymod.oracle_sql().get(name)
-    if sql is None:
+    if name in ROWS_ONLY:
+        assert sql is None, f"{name}: has an oracle; drop it from ROWS_ONLY"
         assert len(srows) > 0, f"{name}: rows-only query returned nothing"
         return
+    assert sql is not None, f"{name}: no oracle_sql() entry"
 
     ores = duck.execute(sql)
     ocols = [d[0] for d in ores.description]

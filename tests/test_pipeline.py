@@ -296,6 +296,73 @@ def test_write_one_file_per_bucket(spark, built, tmp_path):
         assert len(files) == 1, (d, files)
 
 
+def _hash_exchange_keys(plan: str) -> list[str]:
+    """Key lists of the hash exchanges in a final plan, attribute ids
+    dropped: ``["part_id"]``, ``["url", "start", "end"]``."""
+    import re
+
+    return [re.sub(r"#\d+L?", "", keys).split(", ")[:-1]
+            for keys in re.findall(
+                r"Exchange hashpartitioning\(([^)]*)\)", plan)]
+
+
+@pytest.mark.parametrize("n_buckets", [8, 1])
+def test_sink_write_ships_mentions_once(spark, built, tmp_path,
+                                        n_buckets):
+    """emit_triples hashes the mentions by part_id, and that exchange
+    is also the write's: the data write of ``write_triples(
+    emit_triples(m))`` plans exactly one hash exchange, keyed on
+    part_id (the write's own repartition is satisfied), and still
+    lands one parquet file per bucket.  Before, the mentions went by
+    url and the triples again by part_id."""
+    import glob
+
+    from neleval_spark.pipeline.triples import emit_triples, write_triples
+    from tests.test_incremental import _final_plans
+
+    # a scan, as run_pipeline's materialized mentions are
+    m_dir = str(tmp_path / "mentions")
+    built.select("url", "sent_uid", "eid").write.parquet(m_dir)
+    m = spark.read.parquet(m_dir)
+    out = str(tmp_path / "sink")
+    plans = _final_plans(spark, lambda: write_triples(
+        emit_triples(m, n_buckets=n_buckets), out))
+    data = [p for p in plans if "triples/run_id=run" in p]
+    assert len(data) == 1, plans
+    assert _hash_exchange_keys(data[0]) == [["part_id"]], data[0]
+    dirs = glob.glob(f"{out}/triples/run_id=run/part_id=*")
+    assert len(dirs) == n_buckets, dirs
+    for d in dirs:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+
+def test_scored_mentions_ship_once(spark, tmp_path):
+    """The score UDF runs before the url exchange, in the NER stage, so
+    the scored-mention snapshot's plan has one hash exchange, by url,
+    and no (url, start, end) re-exchange for the top-1 aggregate (a
+    Python operator after the url exchange dropped its
+    partitioning)."""
+    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.run import (
+        build_mentions, release_materialized)
+    from tests.test_incremental import _final_plans
+
+    pages_dir = str(tmp_path / "pages")
+    synth_corpus(spark, 40).write.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir)
+    got = []
+    plans = _final_plans(spark, lambda: got.append(build_mentions(
+        pages, kb_table(spark), canonicalize=False)))
+    try:
+        snap = [p for p in plans if got[0]._scratch_dir in p]
+        assert len(snap) == 1, plans
+        assert _hash_exchange_keys(snap[0]) == [["url"]], snap[0]
+        assert got[0].count() > 0
+    finally:
+        release_materialized(got[0])
+
+
 def test_sink_buckets_sized_from_input(spark, tmp_path):
     """The sink bucket count is derived from the input size: a small
     run (NER and JSON-LD markup rows) lands in ONE bucket and one file,

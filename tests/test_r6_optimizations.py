@@ -130,9 +130,9 @@ def test_banded_overlap_pairs_exact(spark, width):
 
 
 def test_emit_triples_one_full_exchange(spark):
-    """emit_triples: after the up-front url repartition, the sentence
-    and per-url aggregations run in-partition — exactly one Exchange
-    (plus AQE reads) in the sink plan."""
+    """emit_triples: after the up-front part_id repartition, the
+    sentence and per-url aggregations run in-partition — exactly one
+    Exchange (plus AQE reads) in the sink plan."""
     from neleval_spark.pipeline.triples import emit_triples
 
     m = spark.createDataFrame(
