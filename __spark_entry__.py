@@ -849,7 +849,7 @@ def q_latest_snapshot(spark, sf_dir):
     (url, warc_ts, ...) crawl table; (user_id, ts) is unique in the
     testdata so the content tie-break is off and the DuckDB
     top-1-per-key oracle is exact."""
-    from neleval_spark.functions.corpusops import latest_snapshot
+    from neleval_spark.pipeline.run import latest_snapshot
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return latest_snapshot(ev, key="user_id", ts="ts",
@@ -2751,7 +2751,7 @@ def q_kg_conflate(spark, sf_dir):
     oracle replays brute-force distance pairs over the same
     vocabulary, the recursive-CTE components, the rewrite and the
     re-aggregation exactly."""
-    from neleval_spark.pipeline.triples import conflate_kg
+    from neleval_spark.pipeline.kg import conflate_kg
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     base = part.select(F.col("p_name").alias("name")).distinct()
@@ -2849,7 +2849,7 @@ def q_fact_intervals(spark, sf_dir):
     SCD-2 runs — the composite-key generalization of
     snapshot_intervals.  The oracle replays the run detection and
     lead() bounds over the same composite key."""
-    from neleval_spark.pipeline.triples import fact_intervals
+    from neleval_spark.pipeline.kg import fact_intervals
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     obs = ev.select(
@@ -4894,7 +4894,7 @@ FROM p
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG-construction pipeline on a deterministic
     synthetic corpus; returns emitted (subj, pred, obj) triples."""
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import run_pipeline
 
     pages = synth_corpus(spark, 200)
@@ -4905,7 +4905,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule pipeline, rows-only check (not SQL-expressible:
     pandas-UDF extraction + NER + iterative connected components)."""
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import run_pipeline
 
     pages = synth_corpus(spark, 100)
@@ -5746,8 +5746,7 @@ def q_ntriples_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate are serialized and parsed back; the oracle is the
     CLOSED-FORM original derived from doc_id, so the gate pins the
     encode/decode inverse property itself."""
-    from neleval_spark.pipeline.triples import (
-        from_ntriples, to_ntriples)
+    from neleval_spark.pipeline.kg import from_ntriples, to_ntriples
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")
@@ -6539,7 +6538,7 @@ def q_ntriples_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic triples with IRI-hostile characters (space, pipe,
     quote) in ids and url objects — the oracle replays the minting
     + RFC 3987 percent-escape chain with DuckDB replace()."""
-    from neleval_spark.pipeline.triples import to_ntriples
+    from neleval_spark.pipeline.kg import to_ntriples
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     i = F.col("doc_id")
@@ -6591,7 +6590,7 @@ def q_kg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     moduli (so replaced counts actually change).  Oracle: the same
     two COUNT(DISTINCT url) aggregates FULL OUTER JOINed with
     COALESCE/LEAST/GREATEST in DuckDB."""
-    from neleval_spark.pipeline.triples import aggregate_kg, merge_kg
+    from neleval_spark.pipeline.kg import aggregate_kg, merge_kg
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     i = F.col("doc_id")
@@ -6799,7 +6798,7 @@ def q_kg_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     six-check violation counts.  The oracle rebuilds the same table
     (identical CASE priority, so overlapping moduli agree) and
     recomputes every check in SQL."""
-    from neleval_spark.pipeline.triples import validate_kg
+    from neleval_spark.pipeline.kg import validate_kg
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id")

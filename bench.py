@@ -116,7 +116,7 @@ def bench_pipeline(spark, n_docs: int) -> dict:
     import shutil
     import tempfile
 
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import build_mentions
     from neleval_spark.pipeline.triples import emit_triples
 

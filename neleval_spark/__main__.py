@@ -582,7 +582,7 @@ def cmd_interact(args):
 
 
 def cmd_run_pipeline(args):
-    from .pipeline import kb_table
+    from .pipeline.corpus import kb_table
     from .pipeline.run import run_pipeline
 
     spark = _spark()
@@ -1045,12 +1045,12 @@ def cmd_resolve_entities(args):
 def cmd_fact_intervals(args):
     """Temporal-KG fact validity: a parquet of timestamped triple
     observations (subj, pred, obj, ts) → SCD-2 validity intervals per
-    (subj, pred) run (pipeline/triples.fact_intervals), written as
+    (subj, pred) run (pipeline/kg.fact_intervals), written as
     parquet plus a JSON summary.  --asof additionally filters to the
     facts valid at the given epoch-ms instant (open runs included)."""
     from pyspark.sql import functions as F
 
-    from .pipeline.triples import fact_intervals
+    from .pipeline.kg import fact_intervals
 
     spark = _spark()
     obs = spark.read.parquet(args.observations)
@@ -1341,8 +1341,8 @@ def cmd_extract_markup(args):
 
 def cmd_export_nt(args):
     """KG interop exit: a parquet triple table (subj, pred, obj) →
-    W3C N-Triples text files (pipeline/triples.to_ntriples)."""
-    from .pipeline.triples import to_ntriples
+    W3C N-Triples text files (pipeline/kg.to_ntriples)."""
+    from .pipeline.kg import to_ntriples
 
     spark = _spark()
     t = spark.read.parquet(args.triples)
@@ -1356,9 +1356,9 @@ def cmd_export_nt(args):
 def cmd_import_nt(args):
     """KG interop entrance: N-Triples text files → a parquet triple
     table (subj, pred, obj, kind, lang, datatype), base-stripped and
-    percent-decoded (pipeline/triples.from_ntriples); malformed
+    percent-decoded (pipeline/kg.from_ntriples); malformed
     line count surfaced in the JSON summary."""
-    from .pipeline.triples import from_ntriples
+    from .pipeline.kg import from_ntriples
 
     spark = _spark()
     lines = spark.read.text(args.lines)

@@ -21,7 +21,7 @@ table is touched in one narrow pass.
 
 Hashing is the repo's engine-agnostic polynomial pair (31-fold and
 131-fold over ascii codes mod 2^31-1, exactly
-``textops.token_hash``'s construction), combined by enhanced double
+``stats.significance.token_hash``'s construction), combined by enhanced double
 hashing ``pos_i = (h1 + i·h2 + i²) mod m_bits`` (Kirsch &
 Mitzenmacher 2006: two hashes simulate k with no independence loss;
 the ``+ i²`` term avoids the degenerate ``h2 = 0`` orbit).  Every
@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# shared Mersenne modulus — textops.token_hash / MINHASH_PRIME
+# shared Mersenne modulus — stats.significance.token_hash / MIX_PRIME
 BLOOM_PRIME = 2147483647
 
 

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textops import MINHASH_PRIME, SHINGLE_MULT, token_hash
+from ..stats.significance import token_hash
+from .textops import MINHASH_PRIME, SHINGLE_MULT
 
 
 def dedup_corpus_lines(docs: DataFrame, id_col: str = "doc_id",
@@ -591,41 +592,6 @@ def cap_per_domain(docs: DataFrame, cap: int,
             .drop("_h"))
 
 
-def latest_snapshot(pages: DataFrame, key: str = "url",
-                    ts: str = "warc_ts",
-                    content_col: str | None = "html") -> DataFrame:
-    """Recrawl deduplication: keep only the NEWEST snapshot per
-    ``key`` (the BASELINE.json input table carries every fetch of a
-    url as its own row; downstream KG construction wants one page
-    per url).  Public-knowledge crawl practice (WARC revisit
-    handling); no reference counterpart.
-
-    Scale shape: the whole row must reach its key once — that
-    shuffle is inherent — but ``max_by`` (groupBy + partial
-    aggregate) ships AT MOST ONE row per key per input partition,
-    while the window/`row_number` formulation ships EVERY duplicate
-    of a hot url to one task before discarding.  For a url recrawled
-    10^4 times, that is 10^4× less exchanged data and no single-task
-    sort.
-
-    Determinism: ties on ``ts`` are broken by ``xxhash64`` of
-    ``content_col`` (highest wins), so equal-timestamp duplicates
-    resolve identically on any partitioning; pass
-    ``content_col=None`` if (key, ts) is known unique.
-    """
-    others = [c for c in pages.columns if c != key]
-    tie = (F.xxhash64(F.col(content_col)) if content_col
-           else F.lit(0).cast("long"))
-    picked = (
-        pages.groupBy(key)
-        .agg(F.max_by(F.struct(*others),
-                      F.struct(F.col(ts), tie.alias("_tie")))
-             .alias("_row"))
-    )
-    return picked.select(key, *[F.col(f"_row.{c}").alias(c)
-                                for c in others])
-
-
 def snapshot_intervals(pages: DataFrame, key="url",
                        ts: str = "warc_ts",
                        value_col: str = "content_hash",
@@ -659,7 +625,7 @@ def snapshot_intervals(pages: DataFrame, key="url",
 
     ``key`` may be a single column name or a list of names: a
     composite key SCD-2s each key tuple independently (the temporal-KG
-    use in :func:`neleval_spark.pipeline.triples.fact_intervals`
+    use in :func:`neleval_spark.pipeline.kg.fact_intervals`
     passes ``["subj", "pred"]``)."""
     keys = [key] if isinstance(key, str) else list(key)
     order = [F.col("_si_ms"),

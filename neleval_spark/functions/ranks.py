@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textops import token_hash
+from ..stats.significance import token_hash
 
 
 def dense_index(df: DataFrame, group_cols: list[str],

@@ -209,7 +209,7 @@ def schedule_frontier(frontier: DataFrame, delay_s: int,
                            id_col=url, salt="#sched") \
             .drop("domain_rank")
     from pyspark.sql import Window
-    from neleval_spark.functions.textops import token_hash
+    from neleval_spark.stats.significance import token_hash
     w = Window.partitionBy("host").orderBy(
         token_hash(F.concat(F.col(url), F.lit("#sched"))),
         F.col(url))

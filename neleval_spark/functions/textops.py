@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# fixed affine-hash parameters over the token-id space (mod a Mersenne
-# prime) — deterministic and engine-agnostic
-MINHASH_PRIME = 2147483647
+from ..stats.significance import MIX_PRIME as MINHASH_PRIME, token_hash
+
+# fixed affine-hash parameters over the token-id space (mod the
+# Mersenne prime token_hash uses) — deterministic and engine-agnostic
 MINHASH_PARAMS = [
     (1299721, 104729), (1299743, 104743), (1299763, 104759),
     (1299791, 104773), (1299811, 104779), (1299817, 104789),
@@ -47,17 +48,6 @@ def tokens(docs: DataFrame, id_col: str = "doc_id",
             )
         ).alias("token"),
     )
-
-
-def token_hash(col: F.Column) -> F.Column:
-    """Engine-agnostic token id: polynomial 31-fold over the token's
-    ascii codes, mod 2^31-1. Pure column expression — no dictionary,
-    no shuffle, no driver state; DuckDB computes the identical value
-    via list_reduce (see Q_MINHASH_SQL)."""
-    chars = F.split(col, "")
-    return F.aggregate(
-        chars, F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(MINHASH_PRIME))
 
 
 def token_ids(docs: DataFrame, id_col: str = "doc_id",

@@ -376,7 +376,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
         cols = [F.col("_tok")]
         cols += [_ngrams(F.col("_tok"), n) for n in range(2, ngram + 1)]
         g = F.concat(*cols) if len(cols) > 1 else cols[0]
-        from .textops import token_hash
+        from ..stats.significance import token_hash
         return staged.select(
             "_doc",
             F.explode(g).alias("_gram"),

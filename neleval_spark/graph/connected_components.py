@@ -35,6 +35,41 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+class UnionFind:
+    """Driver-side union-find for small graphs: the local complement
+    of :func:`connected_components` (same contract), used when the
+    edge list fits on the driver — here and in CEAF's component
+    decomposition (``measures/clustering._solve_edge_list``)."""
+
+    def __init__(self):
+        self.parent: dict = {}
+        self.rank: dict = {}
+
+    def find(self, x):
+        parent = self.parent
+        if x not in parent:
+            parent[x] = x
+            self.rank[x] = 0
+            return x
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    def union(self, a, b):
+        ra, rb = self.find(a), self.find(b)
+        if ra == rb:
+            return ra
+        if self.rank[ra] < self.rank[rb]:
+            ra, rb = rb, ra
+        self.parent[rb] = ra
+        if self.rank[ra] == self.rank[rb]:
+            self.rank[ra] += 1
+        return ra
+
+
 def _large_star(e: DataFrame) -> DataFrame:
     """Γ as directed both ways; attach strictly-greater neighbors to
     the neighborhood minimum."""
@@ -129,8 +164,6 @@ def connected_components(
         if len(sample) <= driver_max_edges:
             if stats is not None:
                 stats["driver_path"] = True
-            from ..functions.unionfind import UnionFind
-
             uf = UnionFind()
             for r in sample:
                 uf.union(r["a"], r["b"])

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textops import token_hash
+from ..stats.significance import token_hash
 
 _SEP = "\x1f"
 

@@ -58,11 +58,12 @@ from __future__ import annotations
 from collections import defaultdict
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import connected_components
+from ..graph.connected_components import UnionFind, connected_components
 from ._join import ns_join
 
 SCORES = ["p_num", "p_den", "r_num", "r_den"]
@@ -273,15 +274,96 @@ DRIVER_SOLVE_MAX_EDGES = 100_000
 MAX_COMPONENT_EDGES = 2_000_000
 
 
+def min_cost_assignment(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Return (row_indices, col_indices) of a minimum-cost assignment.
+
+    Requires a 2-D float array; every row of the smaller dimension is
+    assigned. Equivalent contract to
+    ``scipy.optimize.linear_sum_assignment``.
+
+    scipy is not a dependency, and the reference's bundled
+    ``munkres.py`` is not reused; this is an independent numpy
+    implementation of the standard O(n²·m) shortest-augmenting-path
+    Hungarian algorithm (Kuhn-Munkres with potentials, as described in
+    standard references, e.g. Burkard, Dell'Amico & Martello,
+    "Assignment Problems").
+    """
+    cost = np.asarray(cost, dtype=float)
+    if cost.ndim != 2:
+        raise ValueError("cost must be 2-D")
+    transposed = False
+    if cost.shape[0] > cost.shape[1]:
+        cost = cost.T
+        transposed = True
+    n, m = cost.shape
+    INF = np.inf
+
+    # potentials; p[j] = row assigned to column j (0 = none), 1-indexed
+    u = np.zeros(n + 1)
+    v = np.zeros(m + 1)
+    p = np.zeros(m + 1, dtype=np.intp)
+    way = np.zeros(m + 1, dtype=np.intp)
+
+    for i in range(1, n + 1):
+        p[0] = i
+        j0 = 0
+        minv = np.full(m + 1, INF)
+        used = np.zeros(m + 1, dtype=bool)
+        while True:
+            used[j0] = True
+            i0 = p[j0]
+            # vectorized relaxation over unused columns
+            free = ~used[1:]
+            cur = cost[i0 - 1, :] - u[i0] - v[1:]
+            better = free & (cur < minv[1:])
+            if better.any():
+                idx = np.flatnonzero(better) + 1
+                minv[idx] = cur[idx - 1]
+                way[idx] = j0
+            cand = np.where(free, minv[1:], INF)
+            j1 = int(np.argmin(cand)) + 1
+            delta = cand[j1 - 1]
+            # update potentials
+            used_idx = np.flatnonzero(used)
+            u[p[used_idx]] += delta
+            v[used_idx] -= delta
+            unused_idx = np.flatnonzero(~used)
+            minv[unused_idx] -= delta
+            j0 = j1
+            if p[j0] == 0:
+                break
+        # augment along the alternating path
+        while True:
+            j1 = way[j0]
+            p[j0] = p[j1]
+            j0 = j1
+            if j0 == 0:
+                break
+
+    rows = p[1:] - 1
+    cols = np.arange(m)
+    mask = rows >= 0
+    ri, ci = rows[mask], cols[mask]
+    if transposed:
+        ri, ci = ci, ri
+    order = np.argsort(ri)
+    return ri[order], ci[order]
+
+
+def max_weight_assignment_total(weights: np.ndarray) -> float:
+    """Total weight of the maximum-weight assignment (all weights ≥ 0)."""
+    if weights.size == 0:
+        return 0.0
+    if weights.shape == (1, 1):
+        return float(weights[0, 0])
+    ri, ci = min_cost_assignment(-np.asarray(weights, dtype=float))
+    return float(weights[ri, ci].sum())
+
+
 def _solve_edge_list(eid_g, eid_s, sims) -> float:
     """Component-decomposed max-weight assignment over an edge list
     (the reference's `_disjoint_max_assignment` behavior,
     coref_metrics.py:392-440, scipy-free)."""
-    import numpy as np
-
-    from ..functions.assignment import max_weight_assignment_total
-    from ..functions.unionfind import UnionFind
-
     uf = UnionFind()
     for g, s in zip(eid_g, eid_s):
         uf.union(("g", g), ("s", s))
@@ -406,7 +488,7 @@ def _assignment_totals_distributed(sim: DataFrame,
 
         import numpy as np
 
-        from neleval_spark.functions.assignment import (
+        from neleval_spark.measures.clustering import (
             max_weight_assignment_total)
 
         out = []

@@ -27,7 +27,7 @@ table, 10^10-10^11 rows at crawl scale):
   on the probe side — the build side has one row per KB predicate —
   so AQE's skew split has nothing pathological to cut.
 * NA selection is a pure column filter (the engine-agnostic
-  polynomial hash from functions/textops.token_hash) — reproducible
+  polynomial hash from stats/significance.token_hash) — reproducible
   across runs, engines and partitionings, no RNG state.
 * pattern induction joins labeled pairs back to the sentence table
   on (url, sent_id) (text travels once, never through the pair
@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textops import token_hash
+from ..stats.significance import token_hash
 
 NA_LABEL = "NA"
 

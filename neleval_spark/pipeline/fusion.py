@@ -1,7 +1,7 @@
 """Knowledge fusion: resolve conflicting objects per (subj, pred)
 across witnessing sources by iterated source-reliability voting.
 
-``aggregate_kg`` (triples.py) counts witnesses per distinct triple but
+``aggregate_kg`` (kg.py) counts witnesses per distinct triple but
 keeps every conflicting object a crawl emitted — "E1 born_in Paris"
 from 40 hosts and "E1 born_in Lyon" from 3 scraper mirrors both
 survive.  For FUNCTIONAL predicates the KG needs one resolved object
@@ -37,7 +37,7 @@ Scale shape (the 100-TB lens):
 * cross-object normalization is a window over (subj, pred) whose
   partitions hold the DISTINCT CONFLICTING OBJECTS of one key — the
   conflict fan-out of a functional predicate, not the witness count
-  (use :func:`neleval_spark.pipeline.triples.aggregate_kg` for
+  (use :func:`neleval_spark.pipeline.kg.aggregate_kg` for
   multi-valued predicates; fusing ``mentioned_in`` would make these
   groups url-cardinality wide, and makes no semantic sense);
 * the trust update joins claims to per-fact beliefs on the
@@ -138,7 +138,7 @@ def align_predicates(triples: DataFrame, min_support: int = 2,
     by their (subj, obj) pair distributions — the relation-alignment
     half of PARIS (Suchanek, Abiteboul & Senellart, VLDB'12), reduced
     to its set-overlap core.  When :func:`~neleval_spark.pipeline.
-    triples.merge_kg` folds KGs built by different extractors or
+    kg.merge_kg` folds KGs built by different extractors or
     crawl generations, ``born_in`` and ``place_of_birth`` survive as
     parallel predicates; two predicates asserting many of the SAME
     (subj, obj) pairs are alignment candidates.

@@ -38,7 +38,7 @@ generation writes one file.  The sink ships the merged mentions once,
 narrow and hashed by part_id, and that exchange also serves the
 write; the fresh pages' candidate rows likewise cross one url
 exchange, scored before it.  Pair with
-:func:`~neleval_spark.pipeline.triples.merge_kg` when maintaining
+:func:`~neleval_spark.pipeline.kg.merge_kg` when maintaining
 the aggregated KG instead of re-emitting witness triples.
 """
 
@@ -60,7 +60,7 @@ def crawl_diff(old: DataFrame, new: DataFrame, key: str = "url",
     """Snapshot churn between two crawls: per-``key`` status
     ``added`` / ``removed`` / ``changed`` / ``unchanged``.
 
-    The forward complement of ``corpusops.latest_snapshot``: where
+    The forward complement of :func:`~.run.latest_snapshot`: where
     that op collapses recrawls, this one *compares* two crawl
     generations so a scheduler can prioritize churning hosts and skip
     static ones (public-knowledge recrawl-policy practice; no

@@ -292,12 +292,12 @@ def merge_commit(spark: SparkSession, out_dir: str, delta: DataFrame,
     the commit re-points; old generations stay on disk, readable by
     pinned readers, until expire + orphan cleanup).
 
-    ``delta`` is an :func:`~.triples.aggregate_kg` frame
+    ``delta`` is an :func:`~.kg.aggregate_kg` frame
     ``(subj, pred, obj, n_pages, first_seen, last_seen)``.  Steps:
 
     1. read the CURRENT snapshot as the base (crashed earlier merge
        attempts are invisible — their files were never committed);
-    2. :func:`~.triples.merge_kg` base + delta (one full-outer join
+    2. :func:`~.kg.merge_kg` base + delta (one full-outer join
        on the KG primary key — no skew side, both inputs
        aggregate-sized);
     3. write the merged table under ``run_id=gen-{generation:06d}``
@@ -313,7 +313,7 @@ def merge_commit(spark: SparkSession, out_dir: str, delta: DataFrame,
     jobs); :func:`rollback` first to redo history intentionally.
     Returns the committed snapshot dict.
 
-    ``validate`` names :func:`~.triples.validate_kg` checks that must
+    ``validate`` names :func:`~.kg.validate_kg` checks that must
     report ZERO violations on the DELTA before anything is written
     (e.g. ``("null_field", "unknown_pred", "duplicate_key")`` — the
     structural invariants that hold inductively: the base passed them
@@ -322,7 +322,8 @@ def merge_commit(spark: SparkSession, out_dir: str, delta: DataFrame,
     inductive — run ``validate_kg(read_snapshot(...))`` on the merged
     table for those.  A failed gate raises before the write, so no
     files land and no snapshot is committed."""
-    from .triples import merge_kg, validate_kg, write_triples
+    from .kg import merge_kg, validate_kg
+    from .triples import write_triples
 
     run_id = f"gen-{generation:06d}"
     cur = current_snapshot(out_dir)

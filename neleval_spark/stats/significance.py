@@ -57,6 +57,19 @@ def per_doc_contingency(sys_df: DataFrame, gold_df: DataFrame,
 
 MIX_PRIME = 2147483647  # 2^31-1, the shared polynomial-hash modulus
 
+
+def token_hash(col: F.Column) -> F.Column:
+    """Engine-agnostic string hash: polynomial 31-fold over the
+    string's ascii codes, mod ``MIX_PRIME``. Pure column expression —
+    no dictionary, no shuffle, no driver state; DuckDB computes the
+    identical value via list_reduce, which is what lets an oracle
+    replay ``hash_mode="poly"`` trials (:func:`_trial_partials`)."""
+    chars = F.split(col, "")
+    return F.aggregate(
+        chars, F.lit(0).cast("long"),
+        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(MIX_PRIME))
+
+
 # The driver-side trial budget in docs × trials cells: a per-doc table
 # of at most TRIAL_CELLS // n_trials docs is mixed on the driver
 # (_trial_partials), and multinomial resampling draws its trials in
@@ -96,7 +109,7 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
 
     ``hash_mode="xxhash64"`` (default): 64-bit multiply-shift mixing —
     the production path.  ``hash_mode="poly"``: the engine-agnostic
-    polynomial doc hash (textops.token_hash, mod 2^31-1) mixed as
+    polynomial doc hash (:func:`token_hash`, mod 2^31-1) mixed as
     ``x = (h * (t + seed + 1)) % P; x * x % P`` with P = 2^31-1 —
     every intermediate fits int64 EXACTLY, so a DuckDB oracle replays
     the identical trial flips bit-for-bit (the ``permutation_pvalue``
@@ -111,8 +124,6 @@ def _trial_partials(joined: DataFrame, n_trials: int, seed: int,
     cols = ["ptp1", "fp1", "rtp1", "fn1", "ptp2", "fp2", "rtp2", "fn2"]
     tseed = np.uint64(seed)
     if hash_mode == "poly":
-        from ..functions.textops import token_hash
-
         doc_hash = token_hash(F.col("docid").cast("string"))
     else:
         doc_hash = F.xxhash64(F.col("docid").cast("string"))

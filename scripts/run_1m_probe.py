@@ -19,7 +19,7 @@ if os.path.isdir("/dev/shm"):
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR",
                           "/dev/shm/spark_local")
 from neleval_spark import get_spark
-from neleval_spark.pipeline import kb_table, synth_corpus
+from neleval_spark.pipeline.corpus import kb_table, synth_corpus
 from neleval_spark.pipeline.run import build_mentions
 from neleval_spark.pipeline.triples import emit_triples
 

@@ -12,7 +12,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from neleval_spark.pipeline import kb_table
+from neleval_spark.pipeline.corpus import kb_table
 from neleval_spark.pipeline.run import run_pipeline
 
 

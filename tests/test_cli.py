@@ -292,7 +292,7 @@ def test_cli_run_pipeline_stream(spark, tmp_path, capsys):
     import json
 
     from neleval_spark.__main__ import main
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     corpus = str(tmp_path / "pages")
     out = str(tmp_path / "out")
@@ -380,7 +380,7 @@ def test_cli_evaluate_official_regression(spark, capsys, tmp_path):
 def test_cli_compact_sink(spark, capsys, tmp_path):
     """Full operational lifecycle from the CLI: stream-ingest into a
     run_id-partitioned sink, then compact it into one run."""
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     corpus = str(tmp_path / "pages")
     synth_corpus(spark, 120).write.parquet(corpus)

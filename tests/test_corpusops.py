@@ -48,7 +48,7 @@ def test_cap_per_domain_matches_one_window_reference(spark):
         rows, "doc_id long, text string, lang string, source string, "
               "n_chars long")
     got = cap_per_domain(d, cap=7)
-    from neleval_spark.functions.textops import token_hash
+    from neleval_spark.stats.significance import token_hash
     h = token_hash(F.concat(F.col("doc_id").cast("string"),
                             F.lit("#cap")))
     w = Window.partitionBy("source").orderBy("_h", "doc_id")
@@ -299,7 +299,7 @@ def test_dedup_substrings_dup_set_broadcast_modes(spark):
 
 def test_latest_snapshot_keeps_newest_and_is_deterministic(spark):
     import datetime as dt
-    from neleval_spark.functions.corpusops import latest_snapshot
+    from neleval_spark.pipeline.run import latest_snapshot
 
     def t(s):
         return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)

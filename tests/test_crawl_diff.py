@@ -96,7 +96,7 @@ def test_fact_intervals_composite_key(spark):
     flip-flop re-opens a new interval rather than merging runs."""
     from datetime import datetime
 
-    from neleval_spark.pipeline.triples import fact_intervals
+    from neleval_spark.pipeline.kg import fact_intervals
 
     def t(s):
         return datetime(2024, 1, 1, 0, 0, s)

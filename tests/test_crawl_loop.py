@@ -12,7 +12,7 @@ N = 120
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     df = synth_corpus(spark, N, seed=11).cache()
     yield df
@@ -58,7 +58,7 @@ def test_warc_transport_preserves_pages(spark, corpus, warc_dir):
 
 def test_crawl_loop_triples_equal_direct_build(spark, corpus,
                                                warc_dir):
-    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.corpus import kb_table
     from neleval_spark.pipeline.run import build_mentions
     from neleval_spark.pipeline.triples import emit_triples
     from neleval_spark.sources.warc import read_warc

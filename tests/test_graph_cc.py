@@ -8,9 +8,9 @@ import random
 import numpy as np
 import pytest
 
-from neleval_spark.functions.assignment import max_weight_assignment_total
-from neleval_spark.functions.unionfind import UnionFind
 from neleval_spark.graph import connected_components
+from neleval_spark.graph.connected_components import UnionFind
+from neleval_spark.measures.clustering import max_weight_assignment_total
 
 
 def _cc_oracle(edges):

@@ -19,7 +19,7 @@ def _docid(col="url"):
 
 @pytest.fixture(scope="module")
 def gen1(spark):
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     df = synth_corpus(spark, N, seed=7).cache()
     yield df
@@ -30,7 +30,7 @@ def gen1(spark):
 def gen2(spark, gen1):
     """Next generation: doc%3==2 removed, doc%3==1 rewritten (same
     url, seed-8 content), doc%3==0 byte-identical, plus 40 new urls."""
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     rewritten = synth_corpus(spark, N, seed=8)
     df = (
@@ -45,7 +45,7 @@ def gen2(spark, gen1):
 
 @pytest.fixture(scope="module")
 def kb(spark):
-    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.corpus import kb_table
 
     return kb_table(spark)
 

@@ -3,8 +3,7 @@ aggregate_kg / merge_kg / prune_kg)."""
 
 import pytest
 
-from neleval_spark.pipeline.triples import (
-    aggregate_kg, merge_kg, prune_kg)
+from neleval_spark.pipeline.kg import aggregate_kg, merge_kg, prune_kg
 
 
 def _wit(spark, rows):
@@ -95,7 +94,7 @@ WITNESS_SCHEMA = "subj string, pred string, obj string, url string"
 
 
 def test_validate_kg_clean(spark):
-    from neleval_spark.pipeline.triples import validate_kg
+    from neleval_spark.pipeline.kg import validate_kg
 
     rows = [("E1", "mentioned_in", "u1", "u1"),
             ("E2", "mentioned_in", "u1", "u1"),
@@ -109,7 +108,7 @@ def test_validate_kg_clean(spark):
 
 
 def test_validate_kg_empty(spark):
-    from neleval_spark.pipeline.triples import validate_kg
+    from neleval_spark.pipeline.kg import validate_kg
 
     got = {r.check: r.violations for r in validate_kg(
         spark.createDataFrame([], WITNESS_SCHEMA)).collect()}
@@ -123,7 +122,7 @@ def test_validate_kg_counts(spark):
     """Every check fires with an exact count; a self-loop on a
     canonical predicate counts as BOTH self_loop and
     non_canonical_pair (independent invariants)."""
-    from neleval_spark.pipeline.triples import validate_kg
+    from neleval_spark.pipeline.kg import validate_kg
 
     rows = [
         # clean core
@@ -150,7 +149,7 @@ def test_validate_kg_counts(spark):
 def test_validate_kg_plan_shape(spark):
     """Scale claims: no cartesian, no window, no collect-backed
     literal plan; dangling check is a LeftAnti join."""
-    from neleval_spark.pipeline.triples import validate_kg
+    from neleval_spark.pipeline.kg import validate_kg
 
     df = spark.createDataFrame(
         [("E1", "cooccurs_with", "E2", "u1")], WITNESS_SCHEMA)
@@ -160,7 +159,7 @@ def test_validate_kg_plan_shape(spark):
     assert "LeftAnti" in plan
 
 def test_conflate_kg_folds_name_variants(spark):
-    from neleval_spark.pipeline.triples import conflate_kg
+    from neleval_spark.pipeline.kg import conflate_kg
 
     kg = spark.createDataFrame(
         [
@@ -186,7 +185,7 @@ def test_conflate_kg_folds_name_variants(spark):
 
 
 def test_conflate_kg_identity_when_no_variants(spark):
-    from neleval_spark.pipeline.triples import conflate_kg
+    from neleval_spark.pipeline.kg import conflate_kg
 
     kg = spark.createDataFrame(
         [("Entity_Alpha_Holdings", "cooccurs_with",

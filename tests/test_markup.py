@@ -201,7 +201,7 @@ def test_run_pipeline_markup_second_entrance(spark, tmp_path):
     sink/partition scheme as the NER stream."""
     from pyspark.sql import functions as F
 
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import run_pipeline
 
     corpus = synth_corpus(spark, 30)

@@ -4,7 +4,7 @@ line handling."""
 
 from pyspark.sql import functions as F
 
-from neleval_spark.pipeline.triples import from_ntriples, to_ntriples
+from neleval_spark.pipeline.kg import from_ntriples, to_ntriples
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string"
 LINE_SCHEMA = "line string"

@@ -14,21 +14,21 @@ N_DOCS = 300
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     return synth_corpus(spark, N_DOCS).cache()
 
 
 @pytest.fixture(scope="module")
 def gold(spark):
-    from neleval_spark.pipeline import synth_gold_mentions
+    from neleval_spark.pipeline.corpus import synth_gold_mentions
 
     return synth_gold_mentions(spark, N_DOCS).cache()
 
 
 @pytest.fixture(scope="module")
 def built(spark, corpus):
-    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.corpus import kb_table
     from neleval_spark.pipeline.run import build_mentions
 
     return build_mentions(corpus, kb_table(spark)).cache()
@@ -343,7 +343,7 @@ def test_scored_mentions_ship_once(spark, tmp_path):
     and no (url, start, end) re-exchange for the top-1 aggregate (a
     Python operator after the url exchange dropped its
     partitioning)."""
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import (
         build_mentions, release_materialized)
     from tests.test_incremental import _final_plans
@@ -371,7 +371,7 @@ def test_sink_buckets_sized_from_input(spark, tmp_path):
     wins."""
     import glob
 
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import run_pipeline
     from neleval_spark.pipeline.triples import read_triples, sink_buckets
 
@@ -531,7 +531,7 @@ def test_nil_labels_match_union_find_reference(spark, monkeypatch):
     import random
 
     from neleval_spark.graph import connected_components
-    from neleval_spark.pipeline import canonicalize
+    import neleval_spark.pipeline.canonicalize as canonicalize
     from neleval_spark.pipeline.canonicalize import (
         canonicalize_nils, surface_key)
 
@@ -592,7 +592,7 @@ def test_dedupe_snapshots_drops_recrawls(spark, corpus, built):
     the clean corpus when dedupe_snapshots=True."""
     from pyspark.sql import functions as F
 
-    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.corpus import kb_table
     from neleval_spark.pipeline.run import build_mentions
 
     stale = (corpus

@@ -10,7 +10,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from neleval_spark.functions.assignment import (
+from neleval_spark.measures.clustering import (
     max_weight_assignment_total, min_cost_assignment)
 from neleval_spark.functions.multimodal import decode_headers
 

@@ -17,7 +17,8 @@ from neleval_spark.pipeline.snapshots import (
     commit_snapshot, current_snapshot, expire_snapshots,
     merge_commit, read_snapshot, remove_orphan_files, rollback,
     snapshots)
-from neleval_spark.pipeline.triples import aggregate_kg, write_triples
+from neleval_spark.pipeline.kg import aggregate_kg
+from neleval_spark.pipeline.triples import write_triples
 
 
 def _mk_triples(spark, lo, hi, part_mod=4):

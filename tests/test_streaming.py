@@ -27,7 +27,7 @@ def _triple_set(spark, out_dir):
 
 
 def test_stream_matches_batch_and_is_incremental(spark, dirs):
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import build_mentions
     from neleval_spark.pipeline.triples import emit_triples
     from neleval_spark.streaming import stream_construct, stream_pages
@@ -94,7 +94,7 @@ def test_fresh_checkpoint_over_owned_sink_fails(spark, dirs):
     batches restarts batch numbering — dynamic overwrite would then
     double-count the still-present later runs, so the ingest must
     fail fast instead (checkpoint↔sink identity contract)."""
-    from neleval_spark.pipeline import kb_table
+    from neleval_spark.pipeline.corpus import kb_table
     from neleval_spark.streaming import stream_construct, stream_pages
 
     q = stream_construct(
@@ -111,7 +111,7 @@ def test_stream_replay_idempotent(spark, dirs):
     batch id after a crash anywhere mid-write) must converge to
     exactly one copy: run_id partitions are dynamically overwritten,
     data and manifest both."""
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import build_mentions
     from neleval_spark.pipeline.triples import emit_triples, write_triples
 
@@ -199,7 +199,7 @@ def test_compact_recover_states(spark, tmp_path):
     an uncommitted one rolls back — no crash point loses the sink."""
     import shutil
 
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import build_mentions
     from neleval_spark.pipeline.triples import (
         compact_recover, emit_triples, read_triples, write_triples)
@@ -250,7 +250,7 @@ def test_ingest_keeps_caller_cached_frames(spark, tmp_path):
     """Per-batch cache cleanup must release ONLY the frames the batch
     pipeline persisted — not blanket-clearCache() away a dimension
     the caller cached (e.g. a persisted kb)."""
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.streaming import stream_construct, stream_pages
 
     pages_dir = str(tmp_path / "pages")
@@ -501,7 +501,7 @@ def test_stream_construct_markup_parity(spark, tmp_path):
     batch run_pipeline(markup=True) produces, in the batch run_id."""
     import json as _j
 
-    from neleval_spark.pipeline import kb_table, synth_corpus
+    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.streaming import stream_construct, stream_pages
 
     block = ('<script type="application/ld+json">'

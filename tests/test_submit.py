@@ -20,7 +20,7 @@ pytestmark = pytest.mark.skipif(
 def test_submit_pipeline_smoke(spark, tmp_path):
     # corpus written by the session fixture; the submit job itself
     # runs in its OWN JVM via the shell script
-    from neleval_spark.pipeline import synth_corpus
+    from neleval_spark.pipeline.corpus import synth_corpus
 
     pages = str(tmp_path / "pages")
     out = str(tmp_path / "out")

@@ -102,9 +102,12 @@ def test_contamination_token_array_staged(spark, docs):
                                "doc_id long, text string, lang string")
     plan = (contamination(docs, ev, n=2)
             ._jdf.queryExecution().optimizedPlan().toString())
-    assert plan.count("_tok") >= 2, "token staging column was inlined"
-    # the lambda bodies must slice the staged attribute, not a split()
     import re
+    # one staging projection per side, each sliced by its own lambda
+    staged = set(re.findall(r"AS _tok#(\d+)", plan))
+    assert len(staged) == 2, "token staging column was inlined"
+    assert all(f"slice(_tok#{i}," in plan for i in staged), plan
+    # the lambda bodies must slice the staged attribute, not a split()
     lam = [m for m in re.findall(r"slice\(([^,]*),", plan)]
     assert lam and all("split" not in s for s in lam), lam
 
