@@ -10,7 +10,8 @@ across partitionings and engines (the hash is the shared
 polynomial), and equal to DuckDB's
 ``row_number() OVER (PARTITION BY group ORDER BY h % n_sub, h, tb)``.
 
-Consumer: corpusops.contrastive_pairs (grouped by cluster).
+Consumers: corpusops.contrastive_pairs (grouped by cluster) and
+corpusops.shuffle_shards.
 """
 
 from __future__ import annotations

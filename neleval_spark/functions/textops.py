@@ -784,23 +784,13 @@ def redact_pii(docs: DataFrame, id_col: str = "doc_id",
 
 def skipgram_pairs(docs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id",
-                   window: int = 2,
-                   tokenizer: str = "text") -> DataFrame:
+                   window: int = 2) -> DataFrame:
     """Skip-gram (center, context) pair counts — the word2vec/SGNS
     training-pair table (Mikolov et al. 2013): for every token, each
     token at distance 1..``window`` on either side is one context
     observation.  Returns ``(center, context, n)`` aggregated over
-    the corpus.
-
-    ``tokenizer="text"`` (default) applies the corpus word
-    tokenizer (lowercase, [a-z0-9]+ runs); ``tokenizer="whitespace"``
-    splits on whitespace and keeps tokens VERBATIM — required when
-    the sequence items are identifiers (graph node ids like ``Q42``
-    or ``Barack_Obama``) that lowercasing/splitting would mangle out
-    of the graph's vocabulary.
-
-    Works on any whitespace-joinable sequence corpus: documents
-    directly, or graph walks joined into one string per walk.
+    the corpus.  Tokens are the corpus word tokenizer's (lowercase,
+    [a-z0-9]+ runs).
 
     Scale shape (10^12 docs): pair expansion is IN-ROW (transform
     over an index sequence on the staged token array — bounded by
@@ -808,16 +798,9 @@ def skipgram_pairs(docs: DataFrame, text_col: str = "text",
     by the pair; Zipf-hot pairs are absorbed by partial aggregation
     (the vocab_stats argument).  ONE exchange total.
     """
-    if tokenizer == "text":
-        toks = F.filter(
-            F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-            lambda t: t != "")
-    elif tokenizer == "whitespace":
-        toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                        lambda t: t != "")
-    else:
-        raise ValueError(
-            f"tokenizer must be 'text' or 'whitespace': {tokenizer}")
+    toks = F.filter(
+        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+        lambda t: t != "")
     staged = docs.select(F.col(id_col).alias("_doc"),
                          toks.alias("_tok"))
     n = F.size("_tok")

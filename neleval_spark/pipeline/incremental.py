@@ -136,17 +136,16 @@ def incremental_linked(pages_prev: DataFrame, pages_new: DataFrame,
 
 
 def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
-                        prev_linked: DataFrame, kb: DataFrame,
-                        n_buckets: int | None = None) -> DataFrame:
+                        prev_linked: DataFrame, kb: DataFrame) -> DataFrame:
     """Full incremental step: reuse + recompute linked mentions, then
     re-run the two global (cheap, relational) stages — NIL
     canonicalization and the triple sink — over the merged set.
     Output is EXACTLY the full rebuild's (subj, pred, obj, url) rows.
 
-    ``n_buckets`` defaults to :func:`~.triples.sink_buckets` of the
-    merged PRE-canonicalization mentions, whose estimate is the
-    ``prev_linked`` scan plus the fresh snapshot (the canonicalized
-    plan joins a local-rows CC result of unknown size).
+    The sink's bucket count is estimated from the merged
+    PRE-canonicalization mentions (the ``prev_linked`` scan plus the
+    fresh snapshot): the canonicalized plan joins a local-rows CC
+    result of unknown size.
 
     The returned frame carries the step's scratch snapshots in
     ``_materialized_deps`` (see :func:`incremental_linked`).  They stay
@@ -161,6 +160,6 @@ def incremental_triples(pages_prev: DataFrame, pages_new: DataFrame,
     """
     linked = incremental_linked(pages_prev, pages_new, prev_linked, kb)
     out = emit_triples(canonicalize_nils(linked),
-                       n_buckets=n_buckets or sink_buckets(linked))
+                       n_buckets=sink_buckets(linked))
     out._materialized_deps = linked._materialized_deps
     return out

@@ -11,7 +11,7 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 
-pytestmark = pytest.mark.skipif(
+needs_testdata = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="testdata not present")
 
 # the entries checked for rows only, as no SQL reproduces them: a
@@ -57,6 +57,16 @@ def _all_queries():
     return sorted(entrymod.queries().keys())
 
 
+def test_every_oracle_names_an_entry():
+    """An oracle left behind by an entry deletion is never run, since
+    test_query_vs_oracle is parametrized by entries."""
+    import __spark_entry__ as entrymod
+
+    orphans = set(entrymod.oracle_sql()) - set(entrymod.queries())
+    assert not orphans, f"oracles without an entry: {sorted(orphans)}"
+
+
+@needs_testdata
 @pytest.mark.parametrize("name", _all_queries())
 def test_query_vs_oracle(spark, duck, name):
     import __spark_entry__ as entrymod
@@ -89,6 +99,7 @@ def test_query_vs_oracle(spark, duck, name):
         f"duck={o_vals[:3]}")
 
 
+@needs_testdata
 def test_entry_smoke(spark):
     import __spark_entry__ as entrymod
 
