@@ -12,8 +12,10 @@ count``, the distributed analogue of the reference's scipy CSR
 sparse-matrix multiply, neleval/coref_metrics.py:310-338, 379-382) and
 the cluster sizes.  One plan computes those once (:func:`clustering_plan`):
 
-* each side's distinct (key, eid) membership pairs (``_dedup_pairs``);
-* I, by an exchange-free join of the two;
+* per key, the distinct clusters of each side that hold it, from one
+  aggregate over both sides' membership rows (``_key_clusters``);
+* I, each key's gold × pred cluster pairs counted per pair
+  (``_intersections``);
 * per cluster, one aggregate over both sides: its size ``n``, its
   common mentions ``c = Σ I``, ``q = Σ I²`` and ``e``, the number of
   clusters of the other side it meets (``_clusters``);
@@ -45,12 +47,12 @@ Derivations (``_formulas``):
   (:func:`solve_assignments`).  The plan gives CEAF a zero numerator
   and the edge list; the solved totals are added afterwards.
 
-Membership frames are ``(gcols..., key..., eid)`` rows, duplicates
-tolerated.  Several measures over different keys or filters share one
-plan when the frames are stacked: each (key, filter) "stack" is an
-integer ``_m`` column and ``aggs`` names each measure's stack.  Results
-are additive per group, so micro/macro/significance reuse the same
-plans.
+Membership rows are ``(gcols..., _m, key..., eid, _side)``, both
+sides in one frame, duplicates tolerated.  Several measures over
+different keys or filters share one plan when the rows are stacked:
+each (key, filter) "stack" is an integer ``_m`` and each measure names
+its stack.  Results are additive per group, so micro/macro/significance
+reuse the same plans.
 """
 
 from __future__ import annotations
@@ -65,6 +67,7 @@ from pyspark.sql import functions as F
 
 from ..graph.connected_components import UnionFind, connected_components
 from ._join import ns_join
+from .sets import tag_sides
 
 SCORES = ["p_num", "p_den", "r_num", "r_den"]
 
@@ -75,77 +78,57 @@ def _grouped(df: DataFrame, gcols: list[str], exprs: list) -> DataFrame:
     return df.agg(*exprs)
 
 
-def _dedup_pairs(side: DataFrame, key: list[str],
-                 gcols: list[str]) -> DataFrame:
-    """Membership rows (gcols..., key..., eid), duplicates allowed →
-    distinct pairs as (_k, gcols..., eid), where ``_k`` packs
-    (gcols + key) into ONE struct column.
+def _key_clusters(members: DataFrame, key: list[str],
+                  group: list[str]) -> DataFrame:
+    """Membership rows (group..., key..., eid, _side), duplicates
+    allowed → one row per (group, key): ``_g`` and ``_s``, the distinct
+    clusters of each side that hold the key, as arrays of
+    ``struct(eid)`` (a NULL eid is a cluster id of its own, and the
+    struct keeps it out of ``collect_set``'s NULL skipping).
 
-    The shape is what makes the clustering measures cheap (r6):
-
-    * one hash repartition on ``_k`` is the ONLY full-data exchange —
-      the dedup aggregate's required clustering (_k, gcols…, eid) is
-      satisfied by it (subset-key distribution), so dedup runs
-      in-partition with no second exchange;
-    * the intersection join then keys on the single ``_k`` column and
-      both sides are already co-partitioned by it — no join exchange,
-      and struct equality is null-safe per FIELD (probed: struct(NULL)
-      = struct(NULL) is TRUE), so the old per-column eqNullSafe join —
-      whose (coalesce, isnull) key rewrite forced two extra full
-      exchanges and 10-expression sorts — is not needed.
-
-    The former shape (per-side dropDuplicates + eqNullSafe join) cost
-    4 full-data exchanges; this costs 2 (plans/r06/b_cubed_*.txt).
-
-    The pairs feed several consumers of one plan (I and the cluster
-    sizes), whose exchanges are reused only if their subtrees match.
-    The analyzer re-aliases a repeated subtree's plain columns in one
-    copy only, which breaks the match; packing every carried column
-    into ``_v`` (as ``_k`` already is) keeps the copies identical."""
-    kcols = list(dict.fromkeys(list(gcols) + list(key)))
-    packed = side.select(F.struct(*kcols).alias("_k"),
-                         F.struct(*gcols, "eid").alias("_v"))
-    return (packed.repartition(F.col("_k")).dropDuplicates()
-            .select("_k", "_v.*"))
+    One aggregate deduplicates both sides and aligns them, so the
+    intersection needs no join: I's cells are each key's
+    ``_g × _s`` product.  A join would have to match ``docid``
+    null-safely, and a null-safe key is rewritten to (coalesce(k),
+    isnull(k)), which the ``docid`` partitioning does not satisfy;
+    the group-by treats NULL as an ordinary value.  Over input
+    hash-partitioned by a column of ``group + key`` (``evaluate``'s
+    ``docid`` exchange) the aggregate runs in-partition."""
+    eid = F.struct("eid")
+    return members.groupBy(*group, *key).agg(*[
+        F.collect_set(F.when(F.col("_side") == side, eid)).alias(name)
+        for side, name in ((1, "_g"), (2, "_s"))])
 
 
-def _intersections_dp(gdp: DataFrame, sdp: DataFrame,
-                      gcols: list[str]) -> DataFrame:
-    """Intersection sizes from two ``_dedup_pairs`` frames — an equi
-    join on ``_k`` alone (gcols are packed inside it), reusing the
-    frames' partitioning."""
-    g = gdp.withColumnRenamed("eid", "eid_g")
-    s = sdp.withColumnRenamed("eid", "eid_s")
-    if gcols:
-        s = s.drop(*gcols)
-    return (
-        g.join(s, "_k")
-        .groupBy(*(gcols + ["eid_g", "eid_s"]))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
+def _intersections(per_key: DataFrame, group: list[str]) -> DataFrame:
+    """Intersection sizes I(eid_g, eid_s) from :func:`_key_clusters`:
+    the number of keys each pair of clusters shares."""
+    return (per_key.select(*group, F.inline("_g"), "_s")
+            .select(*group, F.col("eid").alias("eid_g"), F.inline("_s"))
+            .groupBy(*group, "eid_g", F.col("eid").alias("eid_s"))
+            .agg(F.count(F.lit(1)).alias("i")))
 
 
-def _clusters(gdp: DataFrame, sdp: DataFrame, I: DataFrame,
-              gcols: list[str]) -> DataFrame:
-    """One row per cluster of either side: (gcols..., _side, eid, n,
+def _clusters(per_key: DataFrame, I: DataFrame,
+              group: list[str]) -> DataFrame:
+    """One row per cluster of either side: (group..., _side, eid, n,
     c, q, e) with ``_side`` 1 for gold, 2 for pred.  One aggregate over
-    the members of both sides (size ``n``, from the distinct pairs, so
-    a key in two clusters counts in both) and I's cells seen from each
-    side (``c = Σ I``, ``q = Σ I²``, ``e`` = cells).  The group-by
+    the members of both sides (size ``n``, the keys the cluster holds,
+    so a key in two clusters counts in both) and I's cells seen from
+    each side (``c = Σ I``, ``q = Σ I²``, ``e`` = cells).  The group-by
     treats a NULL eid or group value as an ordinary group."""
-    def members(dp, side):
-        return dp.select(*gcols, F.lit(side).alias("_side"), "eid",
-                         F.lit(1).alias("n"),
-                         F.lit(None).cast("long").alias("i"))
-
-    cells = I.select(*gcols, F.inline(F.array(*[
+    members = per_key.select(*group, F.inline(F.array(*[
+        F.struct(F.lit(side).alias("_side"), F.col(c).alias("_c"))
+        for side, c in ((1, "_g"), (2, "_s"))]))).select(
+        *group, "_side", F.inline("_c"), F.lit(1).alias("n"),
+        F.lit(None).cast("long").alias("i"))
+    cells = I.select(*group, F.inline(F.array(*[
         F.struct(F.lit(side).alias("_side"), F.col(eid).alias("eid"),
                  F.lit(0).alias("n"), F.col("i").alias("i"))
         for side, eid in ((1, "eid_g"), (2, "eid_s"))])))
     i = F.col("i")
-    return (members(gdp, 1).unionByName(members(sdp, 2))
-            .unionByName(cells)
-            .groupBy(*gcols, "_side", "eid")
+    return (members.unionByName(cells)
+            .groupBy(*group, "_side", "eid")
             .agg(F.sum("n").alias("n"), F.sum(i).alias("c"),
                  F.sum(i * i).alias("q"), F.count(i).alias("e")))
 
@@ -204,44 +187,39 @@ SIMILARITY = {
 }
 
 
-def _per_measure(df: DataFrame, gcols: list[str], measures: list,
-                 stacked: bool, fields) -> DataFrame:
+def per_measure(df: DataFrame, gcols: list[str], measures: list,
+                fields) -> DataFrame:
     """One output row per input row and measure of ``measures``, a
-    list of (position, aggregate, stack id), whose stack the row
-    belongs to: (gcols..., _m, fields(agg)...) with ``_m`` the
-    measure's position."""
+    list of (position, aggregate, stack id), whose stack is the row's
+    ``_m``: (gcols..., _m, fields(agg)...) with ``_m`` the measure's
+    position."""
     rows = F.array(*[
         F.struct(F.lit(j).alias("_m"), F.lit(stack).alias("_st"),
                  *fields(agg))
         for j, agg, stack in measures])
-    if stacked:
-        # ``_m`` outside the lambda is the input row's stack id
-        rows = F.filter(rows, lambda r: r["_st"] == F.col("_m"))
+    # ``_m`` outside the lambda is the input row's stack id
+    rows = F.filter(rows, lambda r: r["_st"] == F.col("_m"))
     return df.select(*gcols, F.inline(rows)).drop("_st")
 
 
-def clustering_plan(gold: DataFrame, pred: DataFrame, key: list[str],
-                    gcols: list[str], aggs: list[tuple[str, int]]
-                    ) -> tuple[DataFrame, DataFrame | None]:
-    """→ (scores, edges) for the clustering measures ``aggs``, a list
-    of (aggregate, stack id), in ONE plan.
+def clustering_plan(members: DataFrame, key: list[str], gcols: list[str],
+                    measures: list) -> tuple[DataFrame, DataFrame | None]:
+    """→ (scores, edges) for the clustering ``measures``, a list of
+    (position, aggregate, stack id), in ONE plan.
 
-    ``gold``/``pred``: (gcols..., key..., eid) membership rows, plus
-    the integer stack id ``_m`` when ``aggs`` has several.  ``scores``:
-    (gcols..., _m, p_num, p_den, r_num, r_den), ``_m`` the measure's
-    position in ``aggs``, with CEAF numerators 0.0.  ``edges``: the
-    CEAF similarity edge list (gcols..., _m, eid_g, eid_s, sim), or
-    None when ``aggs`` has no CEAF measure."""
-    stacked = len({stack for _, stack in aggs}) > 1
-    group = gcols + ["_m"] if stacked else list(gcols)
-    gdp = _dedup_pairs(gold, key, group)
-    sdp = _dedup_pairs(pred, key, group)
-    I = _intersections_dp(gdp, sdp, group)
-    clusters = _clusters(gdp, sdp, I, group)
+    ``members``: (gcols..., _m, key..., eid, _side) membership rows of
+    both sides, ``_m`` the row's stack id and ``_side`` 1 for gold, 2
+    for pred.  ``scores``: (gcols..., _m, p_num, p_den, r_num, r_den),
+    ``_m`` the measure's position, with CEAF numerators 0.0.
+    ``edges``: the CEAF similarity edge list (gcols..., _m, eid_g,
+    eid_s, sim), or None when ``measures`` has no CEAF measure."""
+    group = gcols + ["_m"]
+    per_key = _key_clusters(members, key, group)
+    I = _intersections(per_key, group)
+    clusters = _clusters(per_key, I, group)
     formulas = _formulas()
-    measures = [(j, agg, stack) for j, (agg, stack) in enumerate(aggs)]
-    scores = _per_measure(
-        _totals(clusters, group), gcols, measures, stacked,
+    scores = per_measure(
+        _totals(clusters, group), gcols, measures,
         lambda agg: [c.alias(n) for c, n in zip(formulas[agg], SCORES)])
 
     ceaf = [m for m in measures if m[1] in SIMILARITY]
@@ -253,8 +231,8 @@ def clustering_plan(gold: DataFrame, pred: DataFrame, key: list[str],
             I = ns_join(I, sizes.where(F.col("_side") == side).select(
                 *group, F.col("eid").alias(f"eid_{x}"),
                 F.col("n").alias(f"n{x}")), group + [f"eid_{x}"])
-    edges = _per_measure(I, gcols + ["eid_g", "eid_s"], ceaf, stacked,
-                         lambda agg: [SIMILARITY[agg]().alias("sim")])
+    edges = per_measure(I, gcols + ["eid_g", "eid_s"], ceaf,
+                        lambda agg: [SIMILARITY[agg]().alias("sim")])
     return scores, edges
 
 
@@ -532,8 +510,11 @@ def _measure_fn(agg: str):
     def fn(gold: DataFrame, pred: DataFrame, key: list[str],
            gcols: list[str]) -> DataFrame:
         """(gcols..., p_num, p_den, r_num, r_den) of one measure."""
-        scores, edges = clustering_plan(gold, pred, key, gcols,
-                                        [(agg, 0)])
+        members = tag_sides(*[df.select(*gcols, F.lit(0).alias("_m"),
+                                        *key, "eid")
+                              for df in (pred, gold)])
+        scores, edges = clustering_plan(members, key, gcols,
+                                        [(0, agg, 0)])
         scores = scores.drop("_m")
         if edges is not None:
             scores = with_assignment_totals(scores, edges.drop("_m"),

@@ -10,17 +10,20 @@ averages (:122-138).
 
 Like ``Evaluate``, which scores every measure over one load of the
 annotations, ``evaluate`` checkpoints the columns its measures read
-once and scores the sets and clustering families in ONE Spark action
-(:func:`_collect_parts`).  A family's measures are stacked row-wise
-under a measure id ``_m`` and the family's function groups by it
-(:func:`_family_plan`); all clustering aggregates are formulas over
-one set of cluster statistics per distinct (key, filter), so tac14's
-four clustering measures need three stacks and one plan.  The union
-collected holds the per-(measure, group) counts, the CEAF similarity
-edge list up to the driver-solve cap, and the gold group values;
-overlap families keep their own plan and collect.  A single measure
-(:func:`contingency_df`, the per-doc tables of the stats) is a family
-of one, a DataFrame with its CEAF assignments solved eagerly.
+once, both sides in one side-tagged frame, and scores the sets and
+clustering families in ONE Spark action (:func:`_collect_parts`).  The
+tagged rows cross one exchange, by ``docid``, and are stacked once
+above it, one row per distinct (key, filter) under a stack id ``_m``
+(:func:`_family_plans`); each family's function groups by it, and its
+``docid``-prefixed aggregates need no exchange of their own.  All
+clustering aggregates are formulas over one set of cluster statistics
+per stack, so tac14's four clustering measures need three stacks, all
+shared with its sets measures.  The union collected holds the
+per-(measure, group) counts, the CEAF similarity edge list up to the
+driver-solve cap, and the gold group values; overlap families keep
+their own plan and collect.  A single measure (:func:`contingency_df`,
+the per-doc tables of the stats) is a family of one, a DataFrame with
+its CEAF assignments solved eagerly.
 """
 
 from __future__ import annotations
@@ -36,11 +39,11 @@ from pyspark.sql import functions as F
 
 from . import clustering
 from .catalog import MeasureSpec, get_measure, parse_measures
-from .clustering import (CLUSTERING_FNS, clustering_plan,
+from .clustering import (CLUSTERING_FNS, clustering_plan, per_measure,
                          with_assignment_totals)
 from .overlap import overlap_contingency
-from .sets import (expand_key, measure_col, project_measure,
-                   sets_contingency)
+from .sets import (expand_key, measure_col, sets_contingency, side_counts,
+                   tag_sides)
 
 
 class StrictMetricWarning(Warning):
@@ -128,14 +131,20 @@ def family_contingency(
     clustering family with CEAF measures first solves their
     assignments (one action, :func:`clustering.with_assignment_totals`).
 
-    A family of one groups by ``gcols`` alone, so its plan is the
-    measure's own: one row without ``gcols``, and a per-doc table
-    partitioned by ``docid`` alone, ready for the stats join."""
+    A family of one over a ``docid``-prefixed key, grouped by
+    ``docid`` (the stats' per-doc table), is partitioned by ``docid``
+    alone, ready for the stats join."""
     gcols = list(gcols or [])
-    out, edges = _family_plan(sys_df, gold_df, specs, gcols)
+    return _family_counts(_tagged(sys_df, gold_df, specs.values(), gcols),
+                          specs, gcols)
+
+
+def _family_counts(tagged: DataFrame, specs: dict,
+                   gcols: list[str]) -> DataFrame:
+    """:func:`family_contingency` over a :func:`_tagged` frame."""
+    [(out, edges)] = _family_plans(tagged, [specs], gcols)
     if edges is not None:
-        group = gcols + ["_m"] if len(specs) > 1 else gcols
-        out = with_assignment_totals(out, edges, group)
+        out = with_assignment_totals(out, edges, gcols + ["_m"])
     return _named_counts(out, specs, gcols)
 
 
@@ -143,76 +152,99 @@ def _named_counts(out: DataFrame, specs: dict,
                   gcols: list[str]) -> DataFrame:
     """A family plan's result → (gcols..., _m name, ptp, fp, rtp, fn):
     the integer ``_m`` mapped back to the measure name (a name string
-    would ride in every shuffled row, twice in the clustering key), and
-    clustering scores turned into counts."""
+    would ride in every shuffled row), and clustering scores turned
+    into counts."""
     names = F.array(*[F.lit(n) for n in specs])
-    name = (F.element_at(names, F.col("_m") + 1) if len(specs) > 1
-            else names[0])
     if "p_num" in out.columns:
         out = out.select(
-            *gcols, *(["_m"] if len(specs) > 1 else []),
+            *gcols, "_m",
             F.col("p_num").alias("ptp"),
             (F.col("p_den") - F.col("p_num")).alias("fp"),
             F.col("r_num").alias("rtp"),
             (F.col("r_den") - F.col("r_num")).alias("fn"))
-    return out.select(*gcols, name.alias("_m"), *COUNTS)
+    return out.select(*gcols, F.element_at(names, F.col("_m") + 1)
+                      .alias("_m"), *COUNTS)
 
 
-def _family_plan(sys_df: DataFrame, gold_df: DataFrame, specs: dict,
-                 gcols: list[str]) -> tuple[DataFrame, DataFrame | None]:
-    """One family's plan → (out, edges).
+def _family_plans(tagged: DataFrame, families: list[dict],
+                  gcols: list[str]) -> list:
+    """Each family's plan → [(out, edges)], all over ONE stack of the
+    ``tagged`` rows of both sides.
 
-    Each side stacks the measures' projections (:func:`_stack`): every
-    row carries its measure's position as the integer ``_m``, the union
-    of the family's key fields (a field the measure lacks is a typed
-    NULL) and its filter as the boolean ``_f``.  The family's function
-    then runs once, filtered on ``_f`` and grouped by ``gcols + ["_m"]``.
-    That is exact: the sets group-by treats NULL as an ordinary group,
-    the clustering ``_dedup_pairs`` struct key compares NULL fields as
-    equal, and a padding column is constant within its measure.  The
-    overlap denominators count unfiltered rows, which ``_f`` (rather
-    than dropping rows before the stack) keeps visible to them.
+    ``tagged`` is stacked once (:func:`_stack`), hash-repartitioned by
+    ``docid`` first when every stack's key has it: one row per input
+    row and distinct (key, filter) of the families' measures, with the
+    stack id as the integer ``_m``, the union of the key fields (a
+    field the stack lacks is a typed NULL), the families' extra fields,
+    ``_side`` and the filter as the boolean ``_f``.  All
+    families read that one Generate, so AQE plans the ``docid``
+    exchange once and reuses it: a Generate prunes its input to the
+    fields it reads, and two stacks over different fields would each
+    get an exchange of their own.  With ``docid`` passed through the
+    Generate, the ``docid``-prefixed sets and clustering key
+    aggregates read co-partitioned input and need no exchange of their
+    own.  Each family runs once over its stacks' rows, grouped by
+    ``gcols + ["_m"]``.  That is exact: the group-bys treat NULL as an
+    ordinary value and a padding column is constant within its stack.
+    The overlap denominators count unfiltered rows, which ``_f``
+    (rather than dropping rows before the stack) keeps visible to them.
 
-    Sets and overlap give ``out`` = (gcols..., [_m,] ptp, fp, rtp, fn)
-    and no edges.  Clustering measures stack once per distinct (key,
-    filter), not per measure — in tac14, ``b_cubed`` and
-    ``mention_ceaf`` share ``span`` — and every aggregate is a formula
-    over one shared set of cluster statistics
-    (:func:`clustering.clustering_plan`): ``out`` = (gcols..., _m,
-    p_num, p_den, r_num, r_den) with CEAF numerators 0.0, and ``edges``
-    the CEAF similarity edge list."""
-    first = next(iter(specs.values()))
-    if first.is_clustering:
-        bad = [s.agg for s in specs.values() if s.agg not in CLUSTERING_FNS]
-        if bad:
-            raise ValueError(f"Invalid aggregation: {bad[0]!r}")
-        stacks = list(dict.fromkeys((s.key, s.filter)
-                                    for s in specs.values()))
-        stacked = [MeasureSpec(k, f, first.agg) for k, f in stacks]
-        aggs = [(s.agg, stacks.index((s.key, s.filter)))
-                for s in specs.values()]
-    else:
-        stacked = list(specs.values())
-    tokens = tuple(dict.fromkeys(f for s in stacked for f in s.key))
-    spec = MeasureSpec(tokens, "_f", first.agg, first.weighting)
-    extra = _extra_fields(spec)
-    cols = list(dict.fromkeys(gcols + expand_key(tokens) + extra))
-    sys_st = _stack(sys_df, stacked, cols, gcols + extra)
-    gold_st = _stack(gold_df, stacked, cols, gcols + extra)
-    group = gcols + ["_m"] if len(stacked) > 1 else gcols
-
-    if spec.agg == "sets":
-        return sets_contingency(sys_st, gold_st, spec, group), None
-    if not spec.is_clustering:
-        return overlap_contingency(sys_st, gold_st, spec, group), None
-    # clusters = distinct (eid, key) pairs after filter
-    # (neleval/annotation.py:317-331); deduplication happens inside
-    # clustering_plan (_dedup_pairs), which keeps ``_m`` and the NULL
-    # padding in its packed struct key
-    key = [k for k in expand_key(tokens) if k not in gcols]
-    gold = project_measure(gold_st, spec, group, extra=["eid"])
-    pred = project_measure(sys_st, spec, group, extra=["eid"])
-    return clustering_plan(gold, pred, key, gcols, aggs)
+    ``out`` is (gcols..., _m, ptp, fp, rtp, fn) for sets and overlap
+    and (gcols..., _m, p_num, p_den, r_num, r_den) with CEAF numerators
+    0.0 for clustering (:func:`clustering.clustering_plan`), ``_m`` the
+    measure's position in its family; ``edges`` is the CEAF similarity
+    edge list, or None."""
+    specs = [s for family in families for s in family.values()]
+    bad = [s.agg for s in specs
+           if s.is_clustering and s.agg not in CLUSTERING_FNS]
+    if bad:
+        raise ValueError(f"Invalid aggregation: {bad[0]!r}")
+    stacks = list(dict.fromkeys((s.key, s.filter) for s in specs))
+    extra = list(dict.fromkeys(f for s in specs for f in _extra_fields(s)))
+    cols = list(dict.fromkeys(
+        gcols + [f for k, _ in stacks for f in expand_key(k)] + extra
+        + ["_side"]))
+    stacked = _stack(tagged, [MeasureSpec(k, f) for k, f in stacks], cols,
+                     gcols + extra + ["_side"])
+    group = gcols + ["_m"]
+    plans = []
+    for family in families:
+        measures = [(j, s.agg, stacks.index((s.key, s.filter)))
+                    for j, s in enumerate(family.values())]
+        rows = stacked.where(F.col("_m").isin(
+            sorted({stack for _, _, stack in measures})))
+        tokens = tuple(dict.fromkeys(f for s in family.values()
+                                     for f in s.key))
+        key = [k for k in expand_key(tokens) if k not in gcols]
+        # another family's extra field (the clustering ``eid``) is real
+        # in every stack; in this family's key it pads as NULL wherever
+        # the stack's own key lacks it
+        own = {f for s in family.values() for f in _extra_fields(s)}
+        masked = [c for c in key if c in extra and c not in own]
+        if masked:
+            rows = rows.withColumns({c: F.when(F.col("_m").isin(
+                [i for i, (k, _) in enumerate(stacks)
+                 if c in expand_key(k)]), F.col(c)) for c in masked})
+        first = next(iter(family.values()))
+        if first.is_clustering:
+            plans.append(clustering_plan(
+                rows.where(F.col("_f")).select(*group, *key, "eid", "_side"),
+                key, gcols, measures))
+            continue
+        if first.agg == "sets" and not first.weighting:
+            out = side_counts(
+                rows.where(F.col("_f")).select(*group, *key, "_side"),
+                group)
+        else:
+            spec = MeasureSpec(tokens, "_f", first.agg, first.weighting)
+            sides = [rows.where(F.col("_side") == i) for i in (2, 1)]
+            fn = (sets_contingency if first.agg == "sets"
+                  else overlap_contingency)
+            out = fn(*sides, spec, group)
+        plans.append((per_measure(out, gcols, measures,
+                                  lambda agg: [F.col(c) for c in COUNTS]),
+                      None))
+    return plans
 
 
 def _extra_fields(spec: MeasureSpec) -> list[str]:
@@ -225,16 +257,20 @@ def _extra_fields(spec: MeasureSpec) -> list[str]:
 
 def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
            shared: list[str]) -> DataFrame:
-    """One row per (input row, spec): ``(_m, cols..., _f)`` with
-    ``_m`` the spec's position in ``specs``.  ``shared`` columns are
+    """One row per (input row, spec): ``([docid,] _m, cols..., _f)``
+    with ``_m`` the spec's position in ``specs``.  ``shared`` columns are
     real for every spec; the others only where the spec's key has
-    them, typed NULL elsewhere.
+    them, typed NULL elsewhere.  When every spec has ``docid``, ``df``
+    is hash-repartitioned by it and ``docid`` is a pass-through column
+    of the Generate, outside the stacked struct, so the stack keeps
+    that partitioning; otherwise no aggregate could use it, and
+    ``df`` is stacked as it is.
 
-    ONE select per side: ``inline`` over an array of per-spec
-    structs, not a union of per-spec projections — every union
-    branch would repeat the input plan, and each later DataFrame step
-    re-analyzes all the copies (a TSV-parse plan costs about a second
-    per family to build that way).
+    ONE select: ``inline`` over an array of per-spec structs, not a
+    union of per-spec projections — every union branch would repeat
+    the input plan, and each later DataFrame step re-analyzes all the
+    copies (a TSV-parse plan costs about a second per family to build
+    that way).
 
     A family of one stacks through ``inline`` too: the Generate is the
     pushdown barrier.  Over a plain ``select`` predicate pushdown
@@ -243,6 +279,10 @@ def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
     derived column it reads (docs/PLANS.md "predicate-pushdown
     inlining")."""
     types = dict(df.dtypes)
+    through = (["docid"] if "docid" in shared or all(
+        "docid" in expand_key(s.key) for s in specs) else [])
+    if through:
+        df = df.repartition("docid")
 
     def fields(i, spec):
         own = set(shared) | set(expand_key(spec.key))
@@ -251,10 +291,10 @@ def _stack(df: DataFrame, specs: list[MeasureSpec], cols: list[str],
         return [F.lit(i).alias("_m"),
                 *[measure_col(df, c).alias(c) if c in own
                   else F.lit(None).cast(types.get(c, "string")).alias(c)
-                  for c in cols],
+                  for c in cols if c not in through],
                 flag.alias("_f")]
 
-    return df.select(F.inline(F.array(
+    return df.select(*through, F.inline(F.array(
         *[F.struct(*fields(i, s)) for i, s in enumerate(specs)])))
 
 
@@ -303,29 +343,44 @@ def evaluate(
              for n in names}
 
     # Materialize both mention tables once for the whole run (the
-    # reference loads annotations into lists the same way), only the
-    # columns the measures read: the reader's ``is_first`` window (its
-    # own exchange) and the candidate arrays are pruned unless a
-    # measure asks.  Without this, measure FILTERS (is_linked/is_nil)
-    # get substituted through the projections by predicate pushdown,
-    # inlining the full TSV parse tree dozens of times into one
-    # predicate (measured 11× the cost of evaluating the column once).
-    # The barrier is an EAGER local checkpoint, not a persist: above an
-    # in-memory relation that feeds two branches AQE does not reuse an
-    # exchange (each side's ``_k`` repartition ran once per consumer),
-    # above a checkpointed RDD it does.  A lazy checkpoint would be
-    # computed inside the first query (probed: block computed twice,
+    # reference loads annotations into lists the same way), as ONE
+    # side-tagged frame of the columns the measures read: the reader's
+    # ``is_first`` window (its own exchange) and the candidate arrays
+    # are pruned unless a measure asks.  Without this, measure FILTERS
+    # (is_linked/is_nil) get substituted through the projections by
+    # predicate pushdown, inlining the full TSV parse tree dozens of
+    # times into one predicate (measured 11× the cost of evaluating the
+    # column once).  The barrier is one EAGER local checkpoint, one
+    # job, not a persist: above an in-memory relation that feeds
+    # several branches AQE does not reuse an exchange, above a
+    # checkpointed RDD it does, so every family reads one ``docid``
+    # exchange of the tagged rows (:func:`_family_plans`).  The
+    # exchange sits above the checkpoint: a checkpointed relation
+    # reports no partitioning.  A lazy checkpoint would be computed
+    # inside the first query (probed: block computed twice,
     # accumulator errors).  ``DataFrame.unpersist`` does not free
     # checkpoint blocks; removing the checkpointed RDD's blocks does
     # (``RDD.unpersist`` would too, but warns that the lineage is gone).
-    sides = [df.select(*_needed_columns(df, specs.values(), gcols))
-             .localCheckpoint(eager=True) for df in (sys_df, gold_df)]
+    tagged = _tagged(sys_df, gold_df, specs.values(), gcols) \
+        .localCheckpoint(eager=True)
     try:
-        return _evaluate_measures(*sides, specs, gcols, overall)
+        return _evaluate_measures(tagged, specs, gcols, overall)
     finally:
-        for df in sides:
-            rdd = df._jdf.queryExecution().analyzed().rdd()
-            rdd.context().unpersistRDD(rdd.id(), True)
+        rdd = tagged._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), True)
+
+
+def _tagged(sys_df: DataFrame, gold_df: DataFrame, specs,
+            gcols: list[str]) -> DataFrame:
+    """Both sides in one frame (:func:`sets.tag_sides`), ``docid`` and
+    the columns either side's measures read (:func:`_needed_columns`),
+    a field one side lacks read through its attrs."""
+    cols = list(dict.fromkeys(["docid"] + [
+        c for df in (sys_df, gold_df)
+        for c in _needed_columns(df, specs, gcols)]))
+    return tag_sides(*[df.select(*[measure_col(df, c).alias(c)
+                                   for c in cols])
+                       for df in (sys_df, gold_df)])
 
 
 def _needed_columns(df: DataFrame, specs, gcols: list[str]) -> list[str]:
@@ -345,7 +400,7 @@ def _needed_columns(df: DataFrame, specs, gcols: list[str]) -> list[str]:
 _COUNTS, _EDGES, _GROUPS = 0, 1, 2
 
 
-def _collect_parts(sys_df, gold_df, specs, gcols):
+def _collect_parts(tagged, specs, gcols):
     """ONE action for the sets and clustering families and the gold
     group values → ({measure: {group tuple: Matrix}}, gold group rows).
 
@@ -358,13 +413,13 @@ def _collect_parts(sys_df, gold_df, specs, gcols):
     for name, spec in specs.items():
         fam = "clustering" if spec.is_clustering else spec.agg
         families[fam][name] = spec
-    parts, counts, edges, ceaf = [], [], None, {}
-    for fam, family in families.items():
-        if fam.startswith("overlap"):
-            counts += family_contingency(sys_df, gold_df, family,
-                                         gcols).collect()
-            continue
-        out, fam_edges = _family_plan(sys_df, gold_df, family, gcols)
+    counts, edges, ceaf = [], None, {}
+    for fam in [f for f in families if f.startswith("overlap")]:
+        counts += _family_counts(tagged, families.pop(fam), gcols).collect()
+    parts = []
+    plans = (_family_plans(tagged, list(families.values()), gcols)
+             if families else [])
+    for family, (out, fam_edges) in zip(families.values(), plans):
         parts.append(_named_counts(out, family, gcols)
                      .withColumn("_p", F.lit(_COUNTS)))
         if fam_edges is not None:
@@ -374,8 +429,9 @@ def _collect_parts(sys_df, gold_df, specs, gcols):
             parts.append(edges.limit(clustering.DRIVER_SOLVE_MAX_EDGES + 1)
                          .withColumn("_p", F.lit(_EDGES)))
     if gcols:
-        parts.append(gold_df.select(*[measure_col(gold_df, f).alias(f)
-                                      for f in gcols])
+        gold = tagged.where(F.col("_side") == 1)
+        parts.append(gold.select(*[measure_col(gold, f).alias(f)
+                                   for f in gcols])
                      .distinct().withColumn("_p", F.lit(_GROUPS)))
     rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
                   parts).collect() if parts else []
@@ -395,9 +451,9 @@ def _collect_parts(sys_df, gold_df, specs, gcols):
     return mats, by_kind[_GROUPS]
 
 
-def _evaluate_measures(sys_df, gold_df, specs, gcols, overall):
+def _evaluate_measures(tagged, specs, gcols, overall):
     results: "OrderedDict[str, dict]" = OrderedDict()
-    mats, group_rows = _collect_parts(sys_df, gold_df, specs, gcols)
+    mats, group_rows = _collect_parts(tagged, specs, gcols)
     if gcols:
         # sorted distinct values per group field from GOLD annotations
         # (the reference uses the gold side only, evaluate.py:100-103)

@@ -5,20 +5,21 @@ build key-tuple hash indexes on both sides (which dedupes), intersect:
 
     tp = |keys(gold) ∩ keys(pred)|; fn = |gold| − tp; fp = |pred| − tp
 
-Spark form: project the measure key, filter, tag each side, UNION, and
-aggregate once — ``groupBy(key).agg(max(side==gold), max(side==sys))``
-dedupes both sides and aligns them in the same pass (group-by treats
-NULL key values as ordinary groups, so the null-safety the old
-full-outer eqNullSafe join provided comes for free), then
+Spark form: project the measure key, filter, tag each side with
+``_side`` (:func:`tag_sides`), and aggregate the union once —
+``groupBy(key).agg(max(_side = 1), max(_side = 2))`` dedupes both sides
+and aligns them in the same pass (group-by treats NULL key values as
+ordinary groups, so NULL keys match null-safely with no join), then
 
     ptp = count(both), fp = count(pred only), fn = count(gold only).
 
-ONE full-data exchange total (with map-side partial aggregation), no
-sort, no join.  The previous shape — per-side dropDuplicates + a
-full-outer eqNullSafe join — cost FOUR full-data exchanges plus two
-sorts, because eqNullSafe join keys are rewritten to
-(coalesce(k), isnull(k)) pairs, which can never reuse the dedup
-exchanges' partitioning (r6 plan audit, plans/r06/).
+No join and no sort.  The aggregate's only full-data exchange is the
+one its key needs, and none when the input is already hash-partitioned
+by a key column: ``evaluate`` ships the tagged mention rows once, by
+``docid``, and every ``docid``-prefixed key aggregates in-partition
+(``contingency._family_plans``).  A join would need a null-safe key,
+which Spark rewrites to (coalesce(k), isnull(k)) pairs that no
+partitioning by ``k`` satisfies.
 
 Weighted variant (neleval/annotation.py:344-377): join on the
 non-weighted key, broadcast-join the (gold_type, sys_type, weight)
@@ -50,8 +51,8 @@ def expand_key(key: tuple[str, ...]) -> list[str]:
 
 def measure_col(df: DataFrame, name: str):
     """A measure field of ``df``: its column when ``df`` has one (the
-    stacked frames of ``contingency._family_plan`` carry every
-    field, ``_m`` and the ``_f`` filter flag physically), else
+    stacked frame of ``contingency._family_plans`` carries every
+    field, ``_m``, ``_side`` and the ``_f`` filter flag physically), else
     :func:`field_col`'s attrs lookup."""
     return F.col(name) if name in df.columns else field_col(name)
 
@@ -70,6 +71,13 @@ def project_measure(df: DataFrame, spec: MeasureSpec,
     return out.select(*[measure_col(df, f).alias(f) for f in cols])
 
 
+def tag_sides(sys_df: DataFrame, gold_df: DataFrame) -> DataFrame:
+    """Both sides in one frame with the same columns: ``_side`` is 1 on
+    gold rows and 2 on system rows."""
+    return gold_df.withColumn("_side", F.lit(1)).unionByName(
+        sys_df.withColumn("_side", F.lit(2)))
+
+
 def sets_contingency(
     sys_df: DataFrame,
     gold_df: DataFrame,
@@ -85,13 +93,16 @@ def sets_contingency(
     gcols = list(gcols or [])
     if spec.weighting:
         return _weighted_sets_contingency(sys_df, gold_df, spec, gcols)
+    return side_counts(tag_sides(project_measure(sys_df, spec, gcols),
+                                 project_measure(gold_df, spec, gcols)),
+                       gcols)
 
-    g = project_measure(gold_df, spec, gcols).withColumn(
-        "_side", F.lit(1))
-    s = project_measure(sys_df, spec, gcols).withColumn(
-        "_side", F.lit(2))
-    allcols = [c for c in g.columns if c != "_side"]
-    flags = g.unionByName(s).groupBy(*allcols).agg(
+
+def side_counts(tagged: DataFrame, gcols: list[str]) -> DataFrame:
+    """``tagged`` rows (gcols..., key..., _side) → (gcols..., ptp, fp,
+    rtp, fn): every column but ``_side`` is the match key."""
+    allcols = [c for c in tagged.columns if c != "_side"]
+    flags = tagged.groupBy(*allcols).agg(
         F.max(F.col("_side") == 1).alias("_g"),
         F.max(F.col("_side") == 2).alias("_s"),
     )

@@ -142,10 +142,13 @@ def _warm_session(spark: SparkSession) -> None:
         w = Window.partitionBy("k").orderBy("s")
         (j.withColumn("rn", F.row_number().over(w)).where("rn = 1")
          .agg(F.count(F.lit(1)), F.sum("s")).collect())
-        # second shape: the clustering-measure skeleton (struct-key
-        # repartition + in-partition dedup, exchange-free struct
-        # equi-join, min_by/struct ordering, broadcast + 1-row
-        # crossJoin tails, Arrow toPandas init)
+        # second shape: struct-key repartition + in-partition dedup,
+        # exchange-free struct equi-join, min_by/struct ordering,
+        # broadcast + 1-row crossJoin tails, Arrow toPandas init.
+        # ``evaluate`` no longer plans the repartition/dedup/join part
+        # (it aggregates per key over one docid exchange); a shape
+        # mirroring that plan instead was not faster in setup + first
+        # run over 10 eval_tac14 pairs, so this one stays
         def side(shift):
             return spark.range(0, 50_000).select(
                 F.struct(

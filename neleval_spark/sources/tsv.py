@@ -20,10 +20,11 @@ Predicate pushdown substitutes derived-column aliases into
 scan-level predicates, duplicating the parse expression tree
 (docs/PLANS.md, "predicate-pushdown inlining"), so a filter over this
 reader needs a barrier below it.  The measures have one:
-``evaluate()`` takes an eager local checkpoint of the columns its
-measures read, and ``contingency_df`` (the stats' per-doc tables)
-filters above the ``inline`` Generate of its measure stack, which
-pushdown cannot cross.  Other filter-heavy workloads should
+``evaluate()`` takes one eager local checkpoint of the columns its
+measures read, both sides in one side-tagged frame, and
+``contingency_df`` (the stats' per-doc tables) filters above the
+``inline`` Generate of its measure stack, which pushdown cannot
+cross.  Other filter-heavy workloads should
 materialize the frame first.
 """
 

@@ -20,7 +20,10 @@ from neleval_spark.sources.tsv import read_annotations_tsv
 from neleval_spark.stats import (bootstrap_confidence, per_doc_contingency,
                                  permutation_test)
 
-COMPOSED = ["sets:is_first:docid+kbid", "overlap-maxmax:is_linked:span"]
+# ``sets:None:span+eid`` keys a sets measure on the clustering family's
+# cluster id: the other sets stacks must still see ``eid`` as NULL
+COMPOSED = ["sets:is_first:docid+kbid", "overlap-maxmax:is_linked:span",
+            "sets:None:span+eid"]
 COUNTS = ("ptp", "fp", "rtp", "fn")
 
 
@@ -280,8 +283,8 @@ def test_family_of_one_equals_stacked(spark, tac14_inputs, lone, companion,
 
 
 def _evaluate_observed(spark, s, g, **kw):
-    """``evaluate(s, g, **kw)`` → (results, jobs run, ``_k``
-    repartitions in the executed plans, RDD ids newly in storage)."""
+    """``evaluate(s, g, **kw)`` → (results, jobs run, the final plans
+    of its executions, RDD ids newly in storage)."""
     sc = spark.sparkContext
 
     def stored():
@@ -299,12 +302,35 @@ def _evaluate_observed(spark, s, g, **kw):
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.unset("spark.sql.ui.explainMode")
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    k_exchanges = sum(
-        len(re.findall(r"- Exchange hashpartitioning\(_k#",
-                       e.physicalPlanDescription()
-                       .split("== Initial Plan ==")[0]))
-        for e in _executions(spark) if e.executionId() > last)
-    return results, len(jobs), k_exchanges, stored() - before
+    plans = [e.physicalPlanDescription().split("== Initial Plan ==")[0]
+             for e in _executions(spark) if e.executionId() > last]
+    return results, len(jobs), plans, stored() - before
+
+
+def _exchanges_below(plan: str, node: str) -> list[str]:
+    """For every line of the tree-form ``plan`` that contains
+    ``node``, the nearest exchanges in its subtree (an exchange's own
+    subtree is not searched)."""
+    lines = plan.split("\n")
+
+    def depth(line):
+        m = re.search(r"[+]- ", line)
+        return m.start() if m else -1
+
+    found = []
+    for i, line in enumerate(lines):
+        if node not in line:
+            continue
+        skip = None  # depth of the last exchange found
+        for below in lines[i + 1:]:
+            if depth(below) <= depth(line):
+                break
+            if skip is not None and depth(below) > skip:
+                continue
+            skip = depth(below) if "Exchange " in below else None
+            if skip is not None:
+                found.append(below.strip())
+    return found
 
 
 @pytest.fixture(scope="module")
@@ -339,15 +365,30 @@ def test_evaluate_tac14_jobs(tac14_run):
     assert tac14_run[1] <= 22, tac14_run[1]
 
 
-def test_evaluate_repartitions_each_side_once(tac14_run):
-    """Every clustering stack shares one ``_k`` repartition per side:
-    the later consumers of a side's membership pairs read a reused
-    exchange (at one plan per family over persisted sides: 10)."""
-    assert tac14_run[2] == 2, tac14_run[2]
+DOCID_EXCHANGE = re.compile(
+    r"Exchange hashpartitioning\(docid#\d+, \d+\), REPARTITION_BY_COL")
+
+
+def test_evaluate_ships_mentions_once_on_docid(tac14_run):
+    """The mention rows of both sides cross one exchange, on ``docid``:
+    no struct-key (``_k``) repartition is left, and the sets aggregate
+    and the clustering key aggregate (which deduplicates the
+    membership pairs and forms the intersection cells) read that
+    exchange with no other in between."""
+    plans = tac14_run[2]
+    assert not any(re.search(r"Exchange hashpartitioning\(_k#", p)
+                   for p in plans)
+    shipped = [ln for p in plans for ln in p.split("\n")
+               if DOCID_EXCHANGE.search(ln) and "ReusedExchange" not in ln]
+    assert len(shipped) == 1, shipped
+    for node in ("max((_side#", "collect_set("):
+        below = [ln for p in plans for ln in _exchanges_below(p, node)]
+        assert below and all(DOCID_EXCHANGE.search(ln) for ln in below), \
+            (node, below)
 
 
 def test_evaluate_releases_its_barrier(spark, tac14_run):
-    """The checkpointed sides are freed before ``evaluate`` returns:
+    """The checkpoint is freed before ``evaluate`` returns:
     no RDD it stored is left, and no table is cached."""
     assert tac14_run[3] == set()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -399,3 +440,103 @@ def test_grouped_evaluate_collects_group_values_in_the_same_action(
         for t in types:
             assert _close(grouped[f"{name};type={json.dumps(t)}"],
                           _matrix(rows.get(t))), (name, t)
+
+
+# (docid, start, end, tail): "dnull" becomes a NULL docid; a NIL id
+# has a NULL kbid, a bare span a NULL eid, kbid and type
+NULL_GOLD = [("dnull", 0, 3, "E1\t1.0\tPER"), ("dnull", 5, 8, "NIL1"),
+             ("dnull", 10, 12, ""), ("dnull", 20, 22, "E2\t1.0"),
+             ("d1", 0, 3, "E1\t1.0\tPER"), ("d1", 5, 8, "NIL1"),
+             ("d1", 10, 12, ""), ("d1", 20, 22, "E2\t1.0"),
+             ("d2", 0, 4, "E3\t1.0\tORG"), ("d2", 6, 9, "NIL2"),
+             ("", 40, 43, "E5\t1.0\tPER")]
+NULL_SYS = [("dnull", 0, 3, "E1\t1.0\tPER"), ("dnull", 5, 8, "NIL1"),
+            ("dnull", 10, 12, ""), ("dnull", 20, 22, "E2\t1.0"),
+            ("d1", 0, 3, "E1\t1.0\tORG"), ("d1", 5, 8, "NIL7"),
+            ("d1", 20, 22, "E9\t1.0"), ("d2", 0, 4, "E3\t1.0\tORG"),
+            ("d2", 6, 9, "NIL2"), ("d2", 30, 33, "E4\t1.0\tPER"),
+            ("dnull", 40, 43, "E5\t1.0\tPER")]
+
+
+def _duckdb_counts(sides, names):
+    """(ptp, fp, rtp, fn) of the sets and B-cubed measures of ``names``
+    in DuckDB, where GROUP BY and IS NOT DISTINCT FROM match NULL
+    with NULL (and never with '')."""
+    import duckdb
+
+    cols = ["docid", "start", "end", "eid", "type", "kbid", "is_linked",
+            "is_nil"]
+    con = duckdb.connect()
+    try:
+        for name, df in zip(("s", "g"), sides):
+            con.register(f"{name}_rows", df.select(*cols).toPandas())
+            con.execute(f"CREATE TABLE {name} AS SELECT * FROM {name}_rows")
+        out = {}
+        for m in names:
+            spec = get_measure(m)
+            key = ", ".join(f'"{k}"' for k in
+                            dict.fromkeys(k for f in spec.key for k in (
+                                ["docid", "start", "end"] if f == "span"
+                                else [f])))
+            where = f"WHERE {spec.filter}" if spec.filter else ""
+            if spec.agg == "sets":
+                tp, fp, fn = con.execute(f"""
+                    SELECT count(*) FILTER (WHERE g AND s),
+                           count(*) FILTER (WHERE NOT g),
+                           count(*) FILTER (WHERE NOT s)
+                    FROM (SELECT {key}, bool_or(side = 1) AS g,
+                                 bool_or(side = 2) AS s
+                          FROM (SELECT {key}, 1 AS side FROM g {where}
+                                UNION ALL SELECT {key}, 2 FROM s {where})
+                          GROUP BY ALL)""").fetchone()
+                out[m] = (tp, fp, tp, fn)
+            elif spec.agg == "b_cubed":
+                on = " AND ".join(f"gp.{k} IS NOT DISTINCT FROM sp.{k}"
+                                  for k in key.split(", "))
+                p_num, r_num, p_den, r_den = con.execute(f"""
+                    WITH gp AS (SELECT DISTINCT eid, {key} FROM g),
+                         sp AS (SELECT DISTINCT eid, {key} FROM s),
+                         ng AS (SELECT eid, count(*) AS n FROM gp
+                                GROUP BY eid),
+                         ns AS (SELECT eid, count(*) AS n FROM sp
+                                GROUP BY eid),
+                         i AS (SELECT gp.eid AS ge, sp.eid AS se,
+                                      count(*) AS c
+                               FROM gp JOIN sp ON {on} GROUP BY 1, 2)
+                    SELECT sum(c * c / ns.n), sum(c * c / ng.n),
+                           (SELECT sum(n) FROM ns), (SELECT sum(n) FROM ng)
+                    FROM i JOIN ns ON i.se IS NOT DISTINCT FROM ns.eid
+                           JOIN ng ON i.ge IS NOT DISTINCT FROM ng.eid
+                    """).fetchone()
+                out[m] = (p_num, p_den - p_num, r_num, r_den - r_num)
+        return out
+    finally:
+        con.close()
+
+
+def test_null_docid_kbid_and_type_are_ordinary_values(spark, tmp_path):
+    """A NULL ``docid``, ``kbid`` or ``type`` (and a NULL ``eid``) is a
+    key value like any other on both sides, as in the reference's
+    tuple keys: ``evaluate(tac14)`` counts what DuckDB's GROUP BY and
+    IS NOT DISTINCT FROM count, a NULL docid never matches '', and
+    each measure's own ``contingency_df`` gives ``evaluate``'s counts."""
+    pytest.importorskip("duckdb")
+    sides = []
+    for name, rows in (("system", NULL_SYS), ("gold", NULL_GOLD)):
+        path = tmp_path / f"{name}.tsv"
+        path.write_text("".join(f"{d}\t{s}\t{e}" + (f"\t{t}" if t else "")
+                                + "\n" for d, s, e, t in rows))
+        df = read_annotations_tsv(spark, str(path))
+        sides.append(df.withColumn(
+            "docid", F.when(F.col("docid") != "dnull", F.col("docid"))))
+    assert sides[1].where(F.col("docid").isNull()).count() == 4
+    names = parse_measures("tac14")
+    results = evaluate(*sides, measures=names)
+    expected = _duckdb_counts(sides, names)
+    assert len(expected) == 8
+    for m, exp in expected.items():
+        assert _close(results[m], dict(zip(COUNTS, exp))), (m, results[m],
+                                                            exp)
+    for m in names:
+        row = contingency_df(*sides, get_measure(m)).first()
+        assert _close(_matrix(row), results[m]), (m, row, results[m])

@@ -55,16 +55,23 @@ def test_sets_contingency_single_exchange_no_smj(spark):
     assert n_exchanges <= 2, plan
 
 
-def test_dedup_pairs_local_dedup_single_exchange(spark):
-    """_dedup_pairs: the dedup aggregate must reuse the struct-key
-    repartition (no second exchange between repartition and dedup)."""
-    from neleval_spark.measures.clustering import _dedup_pairs
+def test_key_clusters_reuse_the_docid_partitioning(spark):
+    """_key_clusters: over membership rows of both sides hash-partitioned
+    by docid, the per-key aggregate that deduplicates the pairs and
+    aligns the sides runs in-partition: the repartition is the only
+    exchange."""
+    from neleval_spark.measures.clustering import _key_clusters
 
-    g = _mentions(spark, seed=3).select("docid", "start", "end", "eid")
-    dp = _dedup_pairs(g, ["docid", "start", "end"], [])
-    dp.collect()
-    plan = _plan(dp)
+    members = _mentions(spark, seed=3).select(
+        "docid", "start", "end", "eid", F.lit(1).alias("_side")).unionByName(
+        _mentions(spark, seed=4).select(
+            "docid", "start", "end", "eid", F.lit(2).alias("_side")))
+    kc = _key_clusters(members.repartition("docid"),
+                       ["docid", "start", "end"], [])
+    kc.collect()
+    plan = _plan(kc)
     assert plan.count("+- Exchange") == 1, plan
+    assert "REPARTITION_BY_COL" in plan, plan
 
 
 def test_clustering_join_has_no_eqnullsafe_exchange(spark):
