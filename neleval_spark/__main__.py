@@ -593,7 +593,7 @@ def cmd_run_pipeline(args):
         ckpt = args.checkpoint or f"{args.out}/_checkpoint"
         q = stream_construct(
             stream_pages(spark, args.corpus), kb_table(spark),
-            args.out, ckpt, available_now=True, markup=args.markup)
+            args.out, ckpt, available_now=True)
         q.awaitTermination()
         n = read_triples(spark, args.out).count()
         print(json.dumps({"triples": n, "out": args.out,
@@ -601,7 +601,7 @@ def cmd_run_pipeline(args):
         return
     pages = spark.read.parquet(args.corpus)
     res = run_pipeline(pages, kb_table(spark), out_dir=args.out,
-                       n_buckets=args.buckets, markup=args.markup)
+                       n_buckets=args.buckets)
     n = res["triples"].count()
     print(json.dumps({"triples": n, "out": args.out}))
 
@@ -1270,75 +1270,6 @@ def cmd_rerank_coherence(args):
                       "alpha_ppm": args.alpha_ppm}))
 
 
-def cmd_extract_markup(args):
-    """Structured-data extraction (the Web Data Commons entrance
-    into the KG): a parquet page table (url, html) → flattened
-    JSON-LD rows (url, block, node, subj, pred, obj, kind) as
-    parquet; --meta-out additionally writes the OpenGraph/<meta>
-    key/content table; --triples-out writes the (subj, pred, obj)
-    projection ready for merge-kg/fuse-facts.  Prints a JSON
-    summary including the surfaced malformed-node count."""
-    from pyspark.sql import functions as F
-
-    from .pipeline.markup import (
-        html_tables, jsonld_triples, markup_as_triples, meta_tags)
-
-    spark = _spark()
-    pages = spark.read.parquet(args.pages)
-    stats: dict = {}
-    flat = jsonld_triples(pages, stats=stats)
-    flat.write.mode("overwrite").parquet(args.out)
-    flat = spark.read.parquet(args.out)
-    if args.triples_out:
-        markup_as_triples(flat).write.mode("overwrite") \
-            .parquet(args.triples_out)
-    n_meta = n_table = None
-    if args.meta_out:
-        meta_tags(pages).write.mode("overwrite") \
-            .parquet(args.meta_out)
-        n_meta = spark.read.parquet(args.meta_out).count()
-    if args.tables_out:
-        html_tables(pages).write.mode("overwrite") \
-            .parquet(args.tables_out)
-        n_table = spark.read.parquet(args.tables_out).count()
-    if args.links_out:
-        from .functions.discovery import link_rels
-        link_rels(pages).write.mode("overwrite") \
-            .parquet(args.links_out)
-    if args.canonical_out:
-        from .functions.discovery import canonical_map
-        canonical_map(pages).write.mode("overwrite") \
-            .parquet(args.canonical_out)
-    n_cap = None
-    if args.captions_out:
-        from .pipeline.markup import image_captions
-        image_captions(pages).write.mode("overwrite") \
-            .parquet(args.captions_out)
-        n_cap = spark.read.parquet(args.captions_out).count()
-    n_micro = None
-    if args.microdata_out:
-        from .pipeline.markup import microdata_triples
-        microdata_triples(pages).write.mode("overwrite") \
-            .parquet(args.microdata_out)
-        n_micro = spark.read.parquet(args.microdata_out).count()
-    agg = flat.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.countDistinct("url", "block", "node").alias("nodes")
-    ).collect()[0]
-    out = {"out_path": args.out, "rows": agg["rows"],
-           "nodes": agg["nodes"],
-           "bad_nodes": stats["bad_nodes"]}
-    if n_meta is not None:
-        out["meta_rows"] = n_meta
-    if n_table is not None:
-        out["table_cells"] = n_table
-    if n_cap is not None:
-        out["caption_pairs"] = n_cap
-    if n_micro is not None:
-        out["microdata_rows"] = n_micro
-    print(json.dumps(out))
-
-
 def cmd_export_nt(args):
     """KG interop exit: a parquet triple table (subj, pred, obj) →
     W3C N-Triples text files (pipeline/kg.to_ntriples)."""
@@ -1380,66 +1311,6 @@ def _nt_base_args(sp):
                     default="http://kg.local/p/")
     sp.add_argument("--obj-base", dest="obj_base",
                     default="http://kg.local/e/")
-
-
-def cmd_frontier(args):
-    """Crawl dispatch: seed urls (+ optional fetched sitemaps) →
-    robots.txt compliance filter → politeness schedule → fetch-plan
-    parquet (url, host, slot, fetch_ts).  The plan is deterministic
-    (salted-hash slot order), so a re-run schedules identically —
-    the dispatch analogue of the pipeline's replayable sink runs."""
-    from pyspark.sql import functions as F
-
-    from .functions.discovery import extract_sitemap_urls
-    from .functions.robots import (parse_robots, robots_filter,
-                                   schedule_frontier)
-
-    spark = _spark()
-    frontier = spark.read.parquet(args.urls).select("url")
-    stats = {"seed_urls": frontier.count()}
-    if args.sitemaps:
-        sm = spark.read.parquet(args.sitemaps)
-        discovered = (extract_sitemap_urls(sm)
-                      .where(F.col("kind") == "page")
-                      .select(F.col("loc").alias("url")))
-        frontier = frontier.unionByName(discovered)
-        stats["discovered"] = discovered.count()
-    if args.feeds:
-        from .functions.discovery import extract_feed_entries
-
-        fe = (extract_feed_entries(spark.read.parquet(args.feeds))
-              .select(F.col("link").alias("url")))
-        frontier = frontier.unionByName(fe)
-        stats["feed_urls"] = fe.count()
-    frontier = frontier.distinct()
-    stats["distinct"] = frontier.count()
-    if args.robots:
-        rb = spark.read.parquet(args.robots)
-        rules = parse_robots(rb)
-        frontier = robots_filter(frontier, rules, agent=args.agent)
-        stats["allowed"] = frontier.count()
-        if args.sitemap_urls_out:
-            from .functions.robots import sitemap_directives
-
-            sm_urls = sitemap_directives(rb)
-            sm_urls.write.mode("overwrite") \
-                .parquet(args.sitemap_urls_out)
-            stats["sitemap_urls"] = (
-                spark.read.parquet(args.sitemap_urls_out).count())
-    plan = schedule_frontier(
-        frontier, delay_s=args.delay,
-        max_per_host=args.max_per_host or None,
-        start_ts=args.start_ts)
-    plan.write.mode("overwrite").parquet(args.out)
-    summary = plan.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("host").alias("hosts"),
-        F.max("fetch_ts").alias("horizon")).collect()[0]
-    stats.update({"scheduled": summary["n"],
-                  "hosts": summary["hosts"],
-                  "horizon_ts": summary["horizon"],
-                  "out": args.out})
-    print(json.dumps(stats))
 
 
 def main(argv=None):
@@ -1624,10 +1495,6 @@ def main(argv=None):
                              "default: derived from the mention "
                              "table's size, ~128 MB per bucket, at "
                              "most 64"),
-        sp.add_argument("--markup", action="store_true",
-                        help="also flatten publisher JSON-LD into "
-                             "the triple sink (the second entrance "
-                             "into the same KG)"),
         sp.add_argument("--stream", action="store_true",
                         help="incremental ingest: drain new corpus "
                              "files via Structured Streaming "
@@ -1834,34 +1701,6 @@ def main(argv=None):
                         dest="max_mentions",
                         help="docs with more mentions pass through "
                              "unreranked")))
-    add("extract-markup", cmd_extract_markup, lambda sp: (
-        sp.add_argument("pages",
-                        help="parquet page table (url, html)"),
-        sp.add_argument("-o", "--out", required=True,
-                        help="output path for the flattened "
-                             "JSON-LD rows"),
-        sp.add_argument("--meta-out", dest="meta_out",
-                        help="also write the <meta> key/content "
-                             "table here"),
-        sp.add_argument("--triples-out", dest="triples_out",
-                        help="also write the (subj, pred, obj) "
-                             "projection here"),
-        sp.add_argument("--tables-out", dest="tables_out",
-                        help="also write the WebTables-style "
-                             "(table, row, col, header, value) "
-                             "cells here"),
-        sp.add_argument("--links-out", dest="links_out",
-                        help="also write the <link> relation table "
-                             "(rel/canonical/hreflang) here"),
-        sp.add_argument("--canonical-out", dest="canonical_out",
-                        help="also write the per-page (url, "
-                             "canonical) consolidation map here"),
-        sp.add_argument("--captions-out", dest="captions_out",
-                        help="also write the image–alt-text caption "
-                             "pairs here (multimodal seed set)"),
-        sp.add_argument("--microdata-out", dest="microdata_out",
-                        help="also write the flat itemscope/"
-                             "itemprop rows here")))
     add("export-nt", cmd_export_nt, lambda sp: (
         sp.add_argument("triples",
                         help="parquet triple table (subj, pred, obj)"),
@@ -1872,33 +1711,6 @@ def main(argv=None):
                         help="N-Triples text file(s)/directory"),
         sp.add_argument("-o", "--out", required=True),
         _nt_base_args(sp)))
-    add("frontier", cmd_frontier, lambda sp: (
-        sp.add_argument("urls",
-                        help="parquet seed frontier with a url column"),
-        sp.add_argument("-o", "--out", required=True),
-        sp.add_argument("--sitemaps",
-                        help="parquet (url, body) fetched sitemap "
-                             "files to expand the frontier with"),
-        sp.add_argument("--feeds",
-                        help="parquet (url, body) fetched RSS/Atom "
-                             "feeds whose entry links join the "
-                             "frontier (the freshness signal)"),
-        sp.add_argument("--robots",
-                        help="parquet (host, body) fetched robots.txt "
-                             "files for the compliance filter"),
-        sp.add_argument("--sitemap-urls-out", dest="sitemap_urls_out",
-                        help="write robots-declared Sitemap: urls "
-                             "here for the next fetch loop"),
-        sp.add_argument("--agent", default="*",
-                        help="crawler product token for robots "
-                             "group resolution"),
-        sp.add_argument("--delay", type=int, default=5,
-                        help="per-host politeness delay, seconds"),
-        sp.add_argument("--max-per-host", type=int, default=0,
-                        dest="max_per_host",
-                        help="per-host url budget (0 = unbounded)"),
-        sp.add_argument("--start-ts", type=int, default=0,
-                        dest="start_ts")))
     add("track-eval", cmd_track_eval, lambda sp: (
         sp.add_argument("gold_xml"),
         sp.add_argument("gold_tab"),

@@ -11,8 +11,9 @@ counts.
 
 Spark form: an equi+range join (Catalyst executes equi keys hash/SMJ
 with the band predicate as a post-filter; AQE handles skew), then
-either a plain aggregate ('max') or a JVM-side interval-union fold over
-the collected overlapping spans ('sum') — no Python in the loop.
+one aggregate over the pairs that credits both sides, with a plain max
+('max') or a JVM-side interval-union fold over the collected
+overlapping spans ('sum') — no Python in the loop.
 
 Note: for pathological inputs with *nested/overlapping spans on the
 same side*, the reference's two-pointer merge (annotation.py:419-431)
@@ -118,45 +119,51 @@ def _union_credit(ref_start, ref_end, spans_col):
 
 
 def _credits(pairs: DataFrame, gcols: list[str], keycols: list[str],
-             ref_side: str, mode: str) -> DataFrame:
-    """Per-group total credit for one side ('s' = precision refs,
-    'g' = recall refs).
+             modes: dict) -> DataFrame:
+    """Per-group total credit of both sides, ``s_credit`` (precision
+    refs, credited by ``modes["s"]``) and ``g_credit`` (recall refs,
+    ``modes["g"]``), in ONE aggregate over ``pairs``: each pair row
+    is read once and turned into one row per side, so the pairs are
+    computed once with no checkpoint.
 
     A 'ref' is one annotation = one (non-span key, span) tuple — two
     same-span annotations with different types are distinct refs, each
     earning up to 1.0 credit (reference measure_overlap iterates the
     per-annotation index, annotation.py:436-479), so the non-span key
     columns participate in the per-ref groupBy."""
-    other = "g" if ref_side == "s" else "s"
-    rs, re_ = F.col(f"{ref_side}_start"), F.col(f"{ref_side}_end")
-    os_, oe = F.col(f"{other}_start"), F.col(f"{other}_end")
-    ref_key = list(dict.fromkeys(
-        gcols + keycols + ["docid", f"{ref_side}_start",
-                           f"{ref_side}_end"]))
-
-    if mode == "max":
-        frac = (
-            (F.least(re_, oe) - F.greatest(rs, os_) + 1).cast("double")
-            / (re_ - rs + 1).cast("double")
-        )
-        per_ref = pairs.groupBy(*ref_key).agg(F.max(frac).alias("credit"))
-    elif mode == "sum":
-        spans = F.collect_list(
-            F.struct(os_.alias("start"), oe.alias("end")))
-        per_ref = pairs.groupBy(*ref_key).agg(spans.alias("spans"))
-        per_ref = per_ref.withColumn(
-            "credit",
-            _union_credit(F.col(f"{ref_side}_start"),
-                          F.col(f"{ref_side}_end"), F.col("spans")),
-        )
-    else:
-        raise ValueError(f"Unexpected overlap measurement mode: {mode!r}")
+    aggs = {"max": "_max", "sum": "_spans"}
+    for mode in modes.values():
+        if mode not in aggs:
+            raise ValueError(f"Unexpected overlap measurement mode: {mode!r}")
+    sides = pairs.select(
+        *dict.fromkeys(gcols + keycols + ["docid"]),
+        F.inline(F.array(*[F.struct(
+            F.lit(ref).alias("_ref"),
+            F.col(f"{ref}_start").alias("_r_start"),
+            F.col(f"{ref}_end").alias("_r_end"),
+            F.col(f"{other}_start").alias("_o_start"),
+            F.col(f"{other}_end").alias("_o_end"))
+            for ref, other in (("s", "g"), ("g", "s"))])))
+    rs, re_ = F.col("_r_start"), F.col("_r_end")
+    os_, oe = F.col("_o_start"), F.col("_o_end")
+    frac = (
+        (F.least(re_, oe) - F.greatest(rs, os_) + 1).cast("double")
+        / (re_ - rs + 1).cast("double")
+    )
+    spans = F.collect_list(F.struct(os_.alias("start"), oe.alias("end")))
+    per_ref = sides.groupBy(*dict.fromkeys(
+        gcols + keycols + ["docid", "_ref", "_r_start", "_r_end"])).agg(
+        *[(F.max(frac) if m == "max" else spans).alias(aggs[m])
+          for m in sorted(set(modes.values()))])
+    credit = {"max": F.col("_max"),
+              "sum": _union_credit(rs, re_, F.col("_spans"))}
 
     # NB: refs appearing in multiple pair rows were deduped by groupBy;
     # duplicate annotations (same span twice) collapse here, whereas the
     # reference keys by object identity — duplicates are unsupported
     # input for overlap measures.
-    agg = [F.sum("credit").alias("credit")]
+    agg = [F.sum(F.when(F.col("_ref") == ref, credit[mode]))
+           .alias(f"{ref}_credit") for ref, mode in modes.items()]
     return (per_ref.groupBy(*gcols).agg(*agg)
             if gcols else per_ref.agg(*agg))
 
@@ -174,14 +181,9 @@ def overlap_contingency(
     params = spec.agg[len("overlap-"):]
     gold_mode, sys_mode = params[:3], params[3:]
 
-    pairs = _pair_overlaps(sys_df, gold_df, spec, gcols)
-    pairs = pairs.localCheckpoint(eager=False)  # reused by both sides
     keycols = expand_key(tuple(f for f in spec.key if f != "span"))
-
-    s_credit = _credits(pairs, gcols, keycols, "s", sys_mode) \
-        .withColumnRenamed("credit", "s_credit")
-    g_credit = _credits(pairs, gcols, keycols, "g", gold_mode) \
-        .withColumnRenamed("credit", "g_credit")
+    credits = _credits(_pair_overlaps(sys_df, gold_df, spec, gcols),
+                       gcols, keycols, {"s": sys_mode, "g": gold_mode})
 
     def total(df, name):
         # reference denominators count the RAW annotation list — the
@@ -197,13 +199,10 @@ def overlap_contingency(
     n_gold = total(gold_df, "n_gold")
 
     if gcols:
-        out = (
-            n_sys.join(n_gold, gcols, "full_outer")
-            .join(s_credit, gcols, "left")
-            .join(g_credit, gcols, "left")
-        )
+        out = (n_sys.join(n_gold, gcols, "full_outer")
+               .join(credits, gcols, "left"))
     else:
-        out = n_sys.crossJoin(n_gold).crossJoin(s_credit).crossJoin(g_credit)
+        out = n_sys.crossJoin(n_gold).crossJoin(credits)
 
     ns = F.coalesce(F.col("n_sys"), F.lit(0.0))
     ng = F.coalesce(F.col("n_gold"), F.lit(0.0))

@@ -195,23 +195,11 @@ def run_pipeline(
     kb: DataFrame,
     out_dir: str | None = None,
     n_buckets: int | None = None,
-    markup: bool = False,
 ) -> dict:
     """Run construction end-to-end; optionally materialize triples.
 
     ``n_buckets`` defaults to :func:`~.triples.sink_buckets` of the
-    materialized mentions; the NER and markup rows share that one
-    count.
-
-    ``markup=True`` opens the SECOND entrance into the same KG:
-    publisher-embedded JSON-LD (pipeline/markup.jsonld_triples →
-    markup_as_triples) is flattened and unioned into the triple sink
-    alongside the NER-derived rows, sharing the url-hashed part_id
-    scheme so both streams land in the same partition layout.  The
-    markup pass runs over ALL pages (structured data is
-    language-independent; the lang filter only gates the NER path)
-    and is a narrow map plus one distinct on its own slice — it adds
-    no exchange to the NER stream.
+    materialized mentions.
 
     Returns {'mentions': DF, 'triples': DF, 'manifest': DF|None}.
     """
@@ -225,10 +213,6 @@ def run_pipeline(
         release_materialized(h)
     n = n_buckets or sink_buckets(mentions)
     triples = emit_triples(mentions, n_buckets=n)
-    if markup:
-        from .markup import markup_sink_rows
-
-        triples = triples.unionByName(markup_sink_rows(pages, n))
     manifest = None
     if out_dir is not None:
         from .triples import read_triples, write_triples

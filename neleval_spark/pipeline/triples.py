@@ -30,8 +30,8 @@ Shuffle: :func:`emit_triples` hashes the narrow mention projection by
 ``part_id`` once, and that exchange is also the write's: the
 aggregates and the explode above it keep the partitioning, so the
 write's own ``repartition("part_id")`` plans no second exchange.  A
-frame built any other way (compaction, the markup union, snapshots,
-streaming batches) is repartitioned by the write as before.
+frame built any other way (compaction, snapshots, streaming batches)
+is repartitioned by the write as before.
 """
 
 from __future__ import annotations

@@ -61,16 +61,11 @@ def stream_pages(spark: SparkSession, pages_dir: str,
 
 def stream_construct(pages_stream: DataFrame, kb: DataFrame,
                      out_dir: str, checkpoint_dir: str,
-                     available_now: bool = True,
-                     markup: bool = False):
+                     available_now: bool = True):
     """Run the KG-construction pipeline incrementally; returns the
     started StreamingQuery.  ``available_now=True`` drains the current
     backlog and stops (the batch-parity mode used by tests);
-    ``False`` runs continuously.  ``markup=True`` mirrors
-    ``run_pipeline(markup=True)``: each micro-batch's publisher
-    JSON-LD is flattened and unioned into the same run_id partition
-    as the batch's NER triples, so replay idempotence covers both
-    streams at once."""
+    ``False`` runs continuously."""
     from ..pipeline.canonicalize import canonicalize_nils
     from ..pipeline.run import build_mentions, release_materialized
     from ..pipeline.triples import emit_triples, sink_buckets, write_triples
@@ -102,16 +97,11 @@ def stream_construct(pages_stream: DataFrame, kb: DataFrame,
         if batch_df.isEmpty():
             return
         # the bucket count is sized from the scored-mention snapshot
-        # (a scan), as incremental_triples does, and shared by the NER
-        # and markup rows
+        # (a scan), as incremental_triples does
         linked = build_mentions(batch_df, kb, canonicalize=False)
         try:
-            n = sink_buckets(linked)
-            triples = emit_triples(canonicalize_nils(linked), n_buckets=n)
-            if markup:
-                from ..pipeline.markup import markup_sink_rows
-
-                triples = triples.unionByName(markup_sink_rows(batch_df, n))
+            triples = emit_triples(canonicalize_nils(linked),
+                                   n_buckets=sink_buckets(linked))
             # a replayed batch REPLACES its own run (data + manifest) —
             # idempotent without reading the sink, correct even if the
             # previous attempt died mid-write

@@ -554,57 +554,6 @@ def test_cli_curate_c4_clean(spark, capsys, tmp_path):
     assert funnel == {"in": 3, "after_clean": 1, "out": 1}
 
 
-def test_cli_frontier(spark, capsys, tmp_path):
-    """frontier: sitemap expansion -> robots filter -> schedule."""
-    seeds = spark.createDataFrame(
-        [(f"http://a.example/p{i}",) for i in range(4)]
-        + [("http://b.example/blocked/x",)], "url string")
-    seeds.write.parquet(str(tmp_path / "seeds"))
-    spark.createDataFrame(
-        [("http://a.example/sitemap.xml",
-          "<urlset><url><loc>http://a.example/s0</loc></url>"
-          "<url><loc>http://b.example/blocked/y</loc></url>"
-          "</urlset>")],
-        "url string, body string",
-    ).write.parquet(str(tmp_path / "sitemaps"))
-    spark.createDataFrame(
-        [("b.example", "User-agent: *\nDisallow: /blocked\n"
-          "Sitemap: http://b.example/sm.xml")],
-        "host string, body string",
-    ).write.parquet(str(tmp_path / "robots"))
-    spark.createDataFrame(
-        [("http://a.example/feed",
-          "<rss><channel><item><title>t</title>"
-          "<link>http://a.example/fresh</link></item>"
-          "</channel></rss>")],
-        "url string, body string",
-    ).write.parquet(str(tmp_path / "feeds"))
-
-    out = _run(capsys, "frontier", str(tmp_path / "seeds"),
-               "-o", str(tmp_path / "plan"),
-               "--sitemaps", str(tmp_path / "sitemaps"),
-               "--feeds", str(tmp_path / "feeds"),
-               "--robots", str(tmp_path / "robots"),
-               "--sitemap-urls-out", str(tmp_path / "smurls"),
-               "--delay", "10", "--start-ts", "50")
-    stats = json.loads(out.strip().split("\n")[-1])
-    assert stats["seed_urls"] == 5 and stats["discovered"] == 2
-    assert stats["feed_urls"] == 1
-    assert stats["sitemap_urls"] == 1
-    sm = spark.read.parquet(str(tmp_path / "smurls")).collect()
-    assert [(r["host"], r["sitemap"]) for r in sm] \
-        == [("b.example", "http://b.example/sm.xml")]
-    assert stats["allowed"] == 6  # both /blocked urls dropped
-    assert stats["hosts"] == 1
-    plan = spark.read.parquet(str(tmp_path / "plan"))
-    rows = plan.collect()
-    assert {r["url"] for r in rows} == {
-        f"http://a.example/p{i}" for i in range(4)
-    } | {"http://a.example/s0", "http://a.example/fresh"}
-    assert sorted(r["slot"] for r in rows) == [0, 1, 2, 3, 4, 5]
-    assert all(r["fetch_ts"] == 50 + r["slot"] * 10 for r in rows)
-
-
 def test_cli_curate_upsample(spark, capsys, tmp_path):
     docs = str(tmp_path / "docs")
     spark.createDataFrame(
@@ -844,52 +793,6 @@ def test_cli_rerank_coherence(spark, capsys, tmp_path):
     got = {r["mention_id"]: r["eid"]
            for r in spark.read.parquet(out_dir).collect()}
     assert got == {0: "B", 1: "C"}  # coherence flips m0 to B
-
-
-def test_cli_extract_markup(spark, capsys, tmp_path):
-    html = ('<head><meta property="og:title" content="T"/>'
-            '<script type="application/ld+json">'
-            '{"@id":"e1","@type":"Org","name":"N"}</script>'
-            '<script type="application/ld+json">{bad</script>'
-            "</head><table><tr><th>h</th></tr>"
-            "<tr><td>a</td></tr><tr><td>b</td></tr></table>"
-            '<img src="/i.png" alt="pic">'
-            '<div itemscope><i itemprop="m">w</i></div>')
-    pages = spark.createDataFrame([("u1", html)],
-                                  "url string, html string")
-    src = str(tmp_path / "pages")
-    pages.write.parquet(src)
-    out_dir = str(tmp_path / "flat")
-    meta_dir = str(tmp_path / "meta")
-    trip_dir = str(tmp_path / "trip")
-    tbl_dir = str(tmp_path / "cells")
-    can_dir = str(tmp_path / "canon")
-    cap_dir = str(tmp_path / "caps")
-    md_dir = str(tmp_path / "micro")
-    out = _run(capsys, "extract-markup", src, "-o", out_dir,
-               "--meta-out", meta_dir, "--triples-out", trip_dir,
-               "--tables-out", tbl_dir, "--canonical-out", can_dir,
-               "--captions-out", cap_dir, "--microdata-out", md_dir)
-    info = json.loads(out.strip().splitlines()[-1])
-    assert info == {"out_path": out_dir, "rows": 2, "nodes": 1,
-                    "bad_nodes": 1, "meta_rows": 1, "table_cells": 2,
-                    "caption_pairs": 1, "microdata_rows": 1}
-    md = spark.read.parquet(md_dir).collect()
-    assert [(r["pred"], r["obj"]) for r in md] == [("m", "w")]
-    caps = spark.read.parquet(cap_dir).collect()
-    assert [(r["src"], r["alt"]) for r in caps] == [("/i.png", "pic")]
-    cells = {(r["row"], r["header"], r["value"])
-             for r in spark.read.parquet(tbl_dir).collect()}
-    assert cells == {(1, "h", "a"), (2, "h", "b")}
-    canon = spark.read.parquet(can_dir).collect()
-    assert [(r["url"], r["canonical"]) for r in canon] \
-        == [("u1", "u1")]  # no canonical tag: self-fallback
-    trips = {(r["subj"], r["pred"], r["obj"])
-             for r in spark.read.parquet(trip_dir).collect()}
-    assert trips == {("e1", "@type", "Org"), ("e1", "name", "N")}
-    meta = spark.read.parquet(meta_dir).collect()
-    assert [(r["key"], r["content"]) for r in meta] == [("og:title",
-                                                         "T")]
 
 
 def test_cli_nt_roundtrip(spark, capsys, tmp_path):

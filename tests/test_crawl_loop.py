@@ -40,7 +40,6 @@ def warc_dir(spark, corpus, tmp_path_factory):
 
 
 def test_warc_transport_preserves_pages(spark, corpus, warc_dir):
-    from neleval_spark.functions.discovery import detect_charset
     from neleval_spark.sources.warc import read_warc
 
     got = read_warc(spark, warc_dir)
@@ -49,11 +48,6 @@ def test_warc_transport_preserves_pages(spark, corpus, warc_dir):
     joined = got.select("url", F.col("html").alias("rt")) \
         .join(corpus.select("url", "html"), "url")
     assert joined.where(F.col("rt") != F.col("html")).count() == 0
-    # the synthetic corpus is ascii-clean: prescan finds no
-    # declaration and falls back to utf-8 everywhere
-    cs = got.select(detect_charset(F.col("html")).alias("c")) \
-        .distinct().collect()
-    assert {r["c"] for r in cs} == {"utf-8"}
 
 
 def test_crawl_loop_triples_equal_direct_build(spark, corpus,

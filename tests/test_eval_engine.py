@@ -394,6 +394,24 @@ def test_evaluate_releases_its_barrier(spark, tac14_run):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_overlap_measures_release_their_pairs(spark, tac14_inputs):
+    """An overlap family keeps no RDD in storage once its results are
+    collected, through ``evaluate`` and through a per-doc
+    ``contingency_df`` alike."""
+    sc = spark.sparkContext
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    measure = "overlap-maxmax:is_linked:span"
+    assert _evaluate_observed(spark, *tac14_inputs,
+                              measures=[measure])[3] == set()
+    before = stored()
+    assert contingency_df(*tac14_inputs, get_measure(measure),
+                          ["docid"]).collect()
+    assert stored() - before == set()
+
+
 def test_evaluate_tac14_driver_round_trips(spark, tac14_dir, monkeypatch):
     """Reading both sides and scoring tac14 builds its plans in at
     most 4,500 py4j round trips (GC deletes aside): 11.5k while every

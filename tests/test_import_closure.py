@@ -8,6 +8,8 @@ under ``neleval_spark.functions``, for one).  Each check runs in a
 fresh interpreter, so modules that other tests imported do not
 count."""
 
+import importlib
+import inspect
 import json
 import os
 import subprocess
@@ -53,6 +55,34 @@ ALLOWED = {
     "neleval_spark.stats",
     "neleval_spark.stats.significance",
 }
+
+# The defaulted parameters of each core entry: an option added or left
+# behind by a removal fails test_core_entries_options.
+CORE_OPTIONS = {
+    "neleval_spark.pipeline.run.run_pipeline": ("out_dir", "n_buckets"),
+    "neleval_spark.pipeline.incremental.incremental_triples": (),
+    "neleval_spark.measures.evaluate": (
+        "measures", "group_by", "overall", "weighting"),
+    "neleval_spark.stats.bootstrap_confidence": (
+        "n_trials", "percentiles", "metrics", "seed", "method"),
+    "neleval_spark.stats.permutation_test": (
+        "n_trials", "metrics", "seed", "hash_mode"),
+    "neleval_spark.sources.tsv.read_annotations_tsv": (),
+    "neleval_spark.pipeline.triples.write_triples": (
+        "run_id", "overwrite_run"),
+    "neleval_spark.pipeline.triples.read_triples": ("up_to_run",),
+}
+
+
+def test_core_entries_options():
+    got = {}
+    for path in CORE_OPTIONS:
+        mod, name = path.rsplit(".", 1)
+        params = inspect.signature(
+            getattr(importlib.import_module(mod), name)).parameters
+        got[path] = tuple(n for n, p in params.items()
+                          if p.default is not p.empty)
+    assert got == CORE_OPTIONS
 
 
 PRINT_LOADED = (

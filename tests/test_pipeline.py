@@ -365,27 +365,20 @@ def test_scored_mentions_ship_once(spark, tmp_path):
 
 def test_sink_buckets_sized_from_input(spark, tmp_path):
     """The sink bucket count is derived from the input size: a small
-    run (NER and JSON-LD markup rows) lands in ONE bucket and one file,
-    every part_id falls in range(sink_buckets(mentions)), and the
-    manifest counts the rows read back.  An explicit n_buckets still
-    wins."""
+    run lands in ONE bucket and one file, every part_id falls in
+    range(sink_buckets(mentions)), and the manifest counts the rows
+    read back.  An explicit n_buckets still wins."""
     import glob
 
     from neleval_spark.pipeline.corpus import kb_table, synth_corpus
     from neleval_spark.pipeline.run import run_pipeline
     from neleval_spark.pipeline.triples import read_triples, sink_buckets
 
-    block = ('<script type="application/ld+json">'
-             '{"@id":"m1","@type":"Org"}</script>')
-    corpus = synth_corpus(spark, 30)
-    pages = corpus.withColumn("html", F.when(
-        F.col("url").endswith("0"),
-        F.concat(F.col("html").cast("string"), F.lit(block))
-        .cast("binary")).otherwise(F.col("html")))
+    pages = synth_corpus(spark, 30)
     for n_buckets, max_dirs in ((None, 1), (8, 8)):
         out = str(tmp_path / f"sink{n_buckets}")
         res = run_pipeline(pages, kb_table(spark), out_dir=out,
-                           n_buckets=n_buckets, markup=True)
+                           n_buckets=n_buckets)
         dirs = glob.glob(f"{out}/triples/run_id=*/part_id=*")
         assert 1 <= len(dirs) <= max_dirs
         n = n_buckets or sink_buckets(res["mentions"])
@@ -393,7 +386,6 @@ def test_sink_buckets_sized_from_input(spark, tmp_path):
         back = read_triples(spark, out)
         assert {r["part_id"] for r in back.select("part_id").distinct()
                 .collect()} <= set(range(n))
-        assert back.where(F.col("subj") == "m1").count() > 0
         assert res["manifest"].agg(F.sum("n_rows")).first()[0] \
             == back.count()
         if n_buckets is None:

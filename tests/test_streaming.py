@@ -494,30 +494,3 @@ def test_stream_snapshot_runs_matches_batch(spark, tmp_path):
     assert sum(1 for u, *_ in got if u == "u4") == 2
     # open runs (u2, u3, u1's last) are never emitted by the stream
     assert not any(u in ("u2", "u3") for u, *_ in got)
-
-
-def test_stream_construct_markup_parity(spark, tmp_path):
-    """markup=True in streaming lands the same markup triples the
-    batch run_pipeline(markup=True) produces, in the batch run_id."""
-    import json as _j
-
-    from neleval_spark.pipeline.corpus import kb_table, synth_corpus
-    from neleval_spark.streaming import stream_construct, stream_pages
-
-    block = ('<script type="application/ld+json">'
-             '{"@id":"sorg","sameAs":"wiki"}</script>')
-    pages = synth_corpus(spark, 20).withColumn(
-        "html", F.concat(F.col("html").cast("string"),
-                         F.lit(block)).cast("binary"))
-    src = str(tmp_path / "pages")
-    pages.write.parquet(src)
-    out = str(tmp_path / "out")
-    q = stream_construct(stream_pages(spark, src), kb_table(spark),
-                         out, str(tmp_path / "ckpt"), markup=True)
-    q.awaitTermination(300)
-    t = spark.read.parquet(os.path.join(out, "triples"))
-    mk = t.where(F.col("subj") == "sorg")
-    assert mk.count() == 20                     # one per page
-    assert mk.select("run_id").distinct().count() == 1
-    assert t.where(F.col("pred") == "mentioned_in").count() > 0
-    spark.catalog.clearCache()
